@@ -176,8 +176,14 @@ def _minhash_sig_batches(it):
     A = np.array(MINHASH_A, dtype=np.int64)[:, None]
     B = np.array(MINHASH_B, dtype=np.int64)[:, None]
     for batch in it:
-        ids = batch.column("doc_id").to_pylist()
-        texts = batch.column("text").to_pylist()
+        ids, texts = [], []
+        for doc_id, text in zip(
+            batch.column("doc_id").to_pylist(), batch.column("text").to_pylist()
+        ):
+            if text is None:  # no shingles: the oracle's UNNEST emits no row
+                continue
+            ids.append(doc_id)
+            texts.append(text)
         sigs = np.empty((len(ids), NUM_HASHES), dtype=np.int64)
         for r, text in enumerate(texts):
             grams = _py_norm_shingles(text, ws)
@@ -281,8 +287,14 @@ def _simhash_fp_batches(it):
     md5 = hashlib.md5
     bits = np.arange(SIMHASH_BITS, dtype=np.int64)
     for batch in it:
-        ids = batch.column("doc_id").to_pylist()
-        texts = batch.column("text").to_pylist()
+        ids, texts = [], []
+        for doc_id, text in zip(
+            batch.column("doc_id").to_pylist(), batch.column("text").to_pylist()
+        ):
+            if text is None:  # no shingles: the oracle's UNNEST emits no row
+                continue
+            ids.append(doc_id)
+            texts.append(text)
         fps = np.empty(len(ids), dtype=np.int64)
         for r, text in enumerate(texts):
             hs = {

@@ -402,12 +402,7 @@ def custom_sink_audit_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "source-format", "csv", "events"),
 )
 def streaming_csv_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
-    from kafka_stream_job_spark.streaming.pipeline import (
-        _drain_partitions,
-    )
+    from kafka_stream_job_spark.streaming.pipeline import run_stream_to_memory
 
     stage = _stage_csv(spark, sf_dir)
     schema = T.StructType(
@@ -434,21 +429,7 @@ def streaming_csv_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("event_id").cast("long").alias("sum_ids"),
         )
     )
-    name = f"stream_csv_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ksj-stream-csv-")
-    with _drain_partitions(spark):
-        query = (
-            rolled.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    return spark.table(name)
+    return run_stream_to_memory(spark, rolled, output_mode="complete")
 
 
 # ---------------------------------------------------------------------------

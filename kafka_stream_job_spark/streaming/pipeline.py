@@ -27,30 +27,143 @@ scheduling.
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
-from kafka_stream_job_spark.operators._portable import jvm_values_df, pround
-
-# Imported for their registration side effects BEFORE this module's
-# _register_* calls run: every streaming twin looks up its shared oracle
-# on the batch operator via REGISTRY[...], so this module must be
-# importable standalone (pytest collecting one test file, a user
-# importing only the streaming surface) — not just via all_specs()'s
-# alphabetical import order. No cycle: no batch operator module imports
-# this one at top level (formats.py does so lazily, inside functions).
-from kafka_stream_job_spark.operators import (  # noqa: F401
-    dedup as _dedup_reg,
-    pipeline as _pipeline_reg,
-    relational as _relational_reg,
-    similarity as _similarity_reg,
-    sketches as _sketches_reg,
-    text as _text_reg,
+# The operator modules imported here also register their batch queries, so
+# the REGISTRY[...].oracle lookups in this module's @register calls find
+# them whether this module is imported by all_specs() or on its own (pytest
+# collecting one test file, a user importing only the streaming surface).
+# No cycle: no batch operator module imports this one at top level
+# (formats.py does so lazily, inside functions).
+from kafka_stream_job_spark.operators._portable import idiv, jvm_values_df, pround
+from kafka_stream_job_spark.operators.dedup import (
+    _BANDS_SQL,
+    _FRONTIER_ORACLE_SQL,
+    _SHINGLES_SQL,
+    _SIGS_SQL,
+    NUM_BANDS,
+    NUM_HASHES,
+    ROWS_PER_BAND,
+    _minhash_sig_batches,
+    lsh_index_report,
 )
-from kafka_stream_job_spark.tables import SCHEMAS
+from kafka_stream_job_spark.operators.formats import (
+    TXN_VERSIONS,
+    _stage_gzip_jsonl,
+    _stage_txn_log,
+)
+from kafka_stream_job_spark.operators.multimodal import (
+    _WAV_HAAR_SCHEMA,
+    _WAV_ZCR_SCHEMA,
+    HAARW_FRAME,
+    PNG_SIG,
+    _bmp_encode_batches,
+    _gif_encode_batches,
+    _haarw_lang_oracle,
+    _png_encode_batches,
+    _wav_haar_batches,
+    _wav_haar_encode_batches,
+    _wav_zcr_batches,
+    _zcr_lang_oracle,
+    decode_bmp_real,
+    decode_gif_real,
+    decode_png_real,
+    fused_encode_decode,
+)
+from kafka_stream_job_spark.operators.pipeline import (
+    BOOT_B,
+    RATER_DRIFT_ORACLE,
+    boot_ci_assemble,
+    boot_weight_col,
+    curation_funnel_report,
+    ess_assemble,
+    leakage_counters,
+    neyman_assemble,
+    rater_ab_cols,
+    rater_drift_assemble,
+    split_leakage_assemble,
+)
+from kafka_stream_job_spark.operators.relational import (
+    _BRIER_PER_USER_SQL,
+    _COVWIN_US,
+    _INTERVAL_COVERAGE_SQL,
+    _MK_DAILY_SQL,
+    _RL_CAP,
+    _RL_ORACLE_SQL,
+    _RL_REFILL,
+    _RL_TOP_N,
+    _SPRT_A,
+    _SPRT_B,
+    _SPRT_INC0,
+    _SPRT_INC1,
+    _SRM_USERS_SQL,
+    CUPED_SPLIT,
+    DID_SPLIT,
+    HILL_K,
+    SELF_EXCITE_SEC,
+    _brier_oracle,
+    _hill_oracle,
+    _mann_kendall_oracle,
+    _srm_oracle,
+    brier_assemble,
+    ccf_assemble,
+    ccf_hourly_counts,
+    cuped_arm_col,
+    cuped_assemble,
+    did_arm_col,
+    did_assemble,
+    mann_kendall_assemble,
+    nbd_assemble,
+    perm_per_user_counts,
+    permutation_assemble,
+    power_mde_assemble,
+    runs_report,
+    srm_assemble,
+    ttfp_assemble,
+    ttfp_per_user,
+)
+from kafka_stream_job_spark.operators.similarity import (
+    _IVF_INCR_ORACLE_SQL,
+    _SEMDEDUP_ORACLE_SQL,
+    DIM,
+    SEMDEDUP_MAX_CMP,
+    SEMDEDUP_TAU,
+    _dot,
+    _ivf_incr_assign,
+    _ivf_incr_sides,
+    _l2sq,
+    _norm,
+    _semdedup_centroids,
+)
+from kafka_stream_job_spark.operators.sketches import (
+    HLL_M,
+    KMV_K,
+    KMV_NUM,
+    _kmv_hash_sql,
+)
+from kafka_stream_job_spark.operators.text import (
+    _FERTILITY_ORACLE_SQL,
+    _LOGREG_INFER_ORACLE_SQL,
+    FH_BUCKETS,
+    FH_TOP,
+    UNI_BLOCK,
+    UNI_MAX_TOK,
+    _attach_iln,
+    _logreg_feats,
+    _logreg_fit,
+    _uni_best2,
+    _uni_spine_df,
+)
+from kafka_stream_job_spark.registry import REGISTRY, register
+from kafka_stream_job_spark.streaming.heavy_hitters import StreamingHeavyHitters
+from kafka_stream_job_spark.streaming.hll import StreamingHLL
+from kafka_stream_job_spark.streaming.kmv import StreamingKMV
+from kafka_stream_job_spark.tables import load_table
 
 
 def _stage_stream_source(sf_dir: str, table: str, stage_root: str) -> tuple[str, str]:
@@ -395,7 +508,7 @@ def foreach_batch_idempotent_append(output_dir: str):
     return write_batch
 
 
-DRAIN_SHUFFLE_PARTITIONS = int(os.environ.get("KSJ_DRAIN_SHUFFLE_PARTITIONS", "8"))
+DRAIN_SHUFFLE_PARTITIONS = 8
 
 
 class _drain_partitions:
@@ -452,53 +565,56 @@ class _drain_partitions:
         return False
 
 
-def run_stream_foreach_batch(
-    spark: SparkSession, df: DataFrame, output_dir: str, checkpoint_dir: str
-) -> DataFrame:
-    """Drain a bounded stream through the idempotent foreachBatch sink and
-    return the materialized parquet output."""
+def _drain(
+    spark: SparkSession, writer: DataStreamWriter, checkpoint_dir: str | None = None
+) -> None:
+    """The one bounded drain: start ``writer``, block until all available
+    input is committed (reference Q1 barrier, KafkaAvroToIceberg.scala:104),
+    stop. Without ``checkpoint_dir`` Spark checkpoints to its own
+    ``temporary-<uuid>`` directory and deletes it on the clean ``stop()``;
+    callers pass one only when they read the checkpoint afterwards or
+    restart from it."""
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
     with _drain_partitions(spark):
-        query = (
-            df.writeStream.foreachBatch(foreach_batch_idempotent_append(output_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
+        query = writer.start()
         try:
             query.processAllAvailable()
         finally:
-            query.stop()
+            query.stop()  # bounded drain; production uses awaitTermination (Q4)
+
+
+def run_stream_foreach_batch(
+    spark: SparkSession,
+    df: DataFrame,
+    output_dir: str,
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """Drain a bounded stream through the idempotent foreachBatch sink and
+    return the materialized parquet output."""
+    writer = df.writeStream.foreachBatch(foreach_batch_idempotent_append(output_dir))
+    _drain(spark, writer, checkpoint_dir)
     return spark.read.parquet(output_dir)
 
 
 def run_stream_to_memory(
     spark: SparkSession,
     df: DataFrame,
-    name: str,
-    checkpoint_dir: str,
+    name: str | None = None,
+    checkpoint_dir: str | None = None,
     output_mode: str = "append",
 ) -> DataFrame:
-    """Drain-all helper for tests: start to a memory sink, block until all
-    available input is committed (reference Q1/Q4 pattern,
-    KafkaAvroToIceberg.scala:104,116), stop, return the materialized table.
+    """Drain-all helper: drain ``df`` into a memory sink (a unique table
+    name unless ``name`` is given) and return the materialized table.
 
     On a BOUNDED source, append-mode windowed aggs never emit their final
     windows (the watermark can't advance past them without more data), so
     aggregation tests pass ``output_mode="complete"``; append stays the
     default for stateless/dedup pipelines.
     """
-    with _drain_partitions(spark):
-        query = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode(output_mode)
-            .start()
-        )
-        try:
-            query.processAllAvailable()  # Q1 drain barrier
-            _ = query.lastProgress  # Q2 progress introspection
-        finally:
-            query.stop()  # bounded test; production uses awaitTermination (Q4)
+    name = name or f"drain_{uuid.uuid4().hex[:8]}"
+    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    _drain(spark, writer, checkpoint_dir)
     return spark.table(name)
 
 
@@ -511,33 +627,17 @@ def run_stream_to_memory(
 # emission) against DuckDB, not just the batch plan. Complete output mode
 # because a bounded replay's watermark never passes the final windows.
 # ---------------------------------------------------------------------------
-def _register_streaming_rollup() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["events_hourly_rollup"].oracle
-
-    @register(
-        "streaming_hourly_rollup",
-        oracle=oracle,
-        tags=("streaming", "window-time", "events"),
+@register(
+    "streaming_hourly_rollup",
+    oracle=REGISTRY["events_hourly_rollup"].oracle,
+    tags=("streaming", "window-time", "events"),
+)
+def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return run_stream_to_memory(
+        spark,
+        hourly_rollup_stream(stream_events(spark, sf_dir)),
+        output_mode="complete",
     )
-    def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        name = f"stream_rollup_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-rollup-")
-        return run_stream_to_memory(
-            spark,
-            hourly_rollup_stream(stream_events(spark, sf_dir)),
-            name,
-            ckpt,
-            output_mode="complete",
-        )
-
-
-_register_streaming_rollup()
 
 
 # ---------------------------------------------------------------------------
@@ -551,14 +651,9 @@ _register_streaming_rollup()
 # hour (bounded by the type vocabulary); ties break by event_type so the
 # result is deterministic and hash-checkable against the batch oracle.
 # ---------------------------------------------------------------------------
-def _register_streaming_topk_types() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_topk_types_hourly",
-        oracle="""
+@register(
+    "streaming_topk_types_hourly",
+    oracle="""
             WITH hourly AS (
                 SELECT CAST(date_trunc('hour', ts) AS VARCHAR) AS hour_ts,
                        event_type,
@@ -577,33 +672,24 @@ def _register_streaming_topk_types() -> None:
             SELECT hour_ts, event_type, n_events, CAST(rnk AS BIGINT) AS rnk
             FROM ranked WHERE rnk <= 2
         """,
-        tags=("streaming", "topk", "window-time", "events"),
+    tags=("streaming", "topk", "window-time", "events"),
+)
+def streaming_topk_types_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
+    drained = run_stream_to_memory(
+        spark,
+        hourly_rollup_stream(stream_events(spark, sf_dir)),
+        output_mode="complete",
     )
-    def streaming_topk_types_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        from pyspark.sql import Window
-
-        name = f"stream_topk_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-topk-")
-        drained = run_stream_to_memory(
-            spark,
-            hourly_rollup_stream(stream_events(spark, sf_dir)),
-            name,
-            ckpt,
-            output_mode="complete",
-        )
-        w = Window.partitionBy("hour_ts").orderBy(
-            F.col("n_events").desc(), F.col("event_type").asc()
-        )
-        return (
-            drained.select("hour_ts", "event_type", "n_events")
-            .withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= 2)
-        )
-
-
-_register_streaming_topk_types()
+    w = Window.partitionBy("hour_ts").orderBy(
+        F.col("n_events").desc(), F.col("event_type").asc()
+    )
+    return (
+        drained.select("hour_ts", "event_type", "n_events")
+        .withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= 2)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -621,30 +707,18 @@ _register_streaming_topk_types()
 # dedup-within-horizon, which is why the exact variant is the registered,
 # oracle-checked one.
 # ---------------------------------------------------------------------------
-def _register_streaming_dedup() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_dedup_events",
-        oracle="SELECT DISTINCT user_id, event_type FROM events",
-        tags=("streaming", "dedup", "stateful", "events"),
+@register(
+    "streaming_dedup_events",
+    oracle="SELECT DISTINCT user_id, event_type FROM events",
+    tags=("streaming", "dedup", "stateful", "events"),
+)
+def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    deduped = (
+        stream_events(spark, sf_dir)
+        .select("user_id", "event_type")
+        .dropDuplicates(["user_id", "event_type"])
     )
-    def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-dedup-")
-        deduped = (
-            stream_events(spark, sf_dir)
-            .select("user_id", "event_type")
-            .dropDuplicates(["user_id", "event_type"])
-        )
-        return run_stream_to_memory(spark, deduped, name, ckpt)
-
-
-_register_streaming_dedup()
+    return run_stream_to_memory(spark, deduped)
 
 
 # ---------------------------------------------------------------------------
@@ -656,47 +730,33 @@ _register_streaming_dedup()
 # bounded replay's watermark never advances past the final sessions, so
 # append mode would emit nothing.
 # ---------------------------------------------------------------------------
-def _register_streaming_session() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["session_window_rollup"].oracle
-
-    @register(
-        "streaming_session_rollup",
-        oracle=oracle,
-        tags=("streaming", "window-time", "session", "stateful", "events"),
-    )
-    def streaming_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-sess-")
-        sess = (
-            stream_events(spark, sf_dir)
-            .withWatermark("ts", "2 hours")
-            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                pround(F.sum("value"), 2).alias("sum_value"),
-            )
-            .select(
-                "user_id",
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-                    "sess_start"
-                ),
-                F.date_format("w.end", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-                    "sess_end"
-                ),
-                "n_events",
-                "sum_value",
-            )
+@register(
+    "streaming_session_rollup",
+    oracle=REGISTRY["session_window_rollup"].oracle,
+    tags=("streaming", "window-time", "session", "stateful", "events"),
+)
+def streaming_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sess = (
+        stream_events(spark, sf_dir)
+        .withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            pround(F.sum("value"), 2).alias("sum_value"),
         )
-        return run_stream_to_memory(spark, sess, name, ckpt, output_mode="complete")
-
-
-_register_streaming_session()
+        .select(
+            "user_id",
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
+                "sess_start"
+            ),
+            F.date_format("w.end", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
+                "sess_end"
+            ),
+            "n_events",
+            "sum_value",
+        )
+    )
+    return run_stream_to_memory(spark, sess, output_mode="complete")
 
 
 # ---------------------------------------------------------------------------
@@ -709,14 +769,9 @@ _register_streaming_session()
 # stateful_user_totals_stream), so the emitted totals match the batch
 # SQL bit-for-bit regardless of micro-batch partitioning.
 # ---------------------------------------------------------------------------
-def _register_streaming_stateful_totals() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_stateful_totals",
-        oracle="""
+@register(
+    "streaming_stateful_totals",
+    oracle="""
             SELECT user_id,
                    CAST(COUNT(*) AS BIGINT) AS n_events,
                    CAST(SUM(CAST(ROUND(value * 100.0) AS BIGINT)) AS BIGINT)
@@ -724,26 +779,17 @@ def _register_streaming_stateful_totals() -> None:
             FROM events
             GROUP BY user_id
         """,
-        tags=("streaming", "stateful", "pandas-udf", "events"),
+    tags=("streaming", "stateful", "pandas-udf", "events"),
+)
+def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emitted = run_stream_to_memory(
+        spark,
+        stateful_user_totals_stream(stream_events(spark, sf_dir)),
     )
-    def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        name = f"stream_totals_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-totals-")
-        emitted = run_stream_to_memory(
-            spark,
-            stateful_user_totals_stream(stream_events(spark, sf_dir)),
-            name,
-            ckpt,
-        )
-        return emitted.groupBy("user_id").agg(
-            F.max("n_events").alias("n_events"),
-            F.max_by("total_value", "n_events").alias("total_value"),
-        )
-
-
-_register_streaming_stateful_totals()
+    return emitted.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max_by("total_value", "n_events").alias("total_value"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -761,66 +807,54 @@ _register_streaming_stateful_totals()
 # drained stream reduces to max() per key — bit-identical to the batch
 # GROUP BY regardless of micro-batch partitioning.
 # ---------------------------------------------------------------------------
-def _register_streaming_stateful_type_counts() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_stateful_type_counts",
-        oracle="""
+@register(
+    "streaming_stateful_type_counts",
+    oracle="""
             SELECT user_id, event_type,
                    CAST(COUNT(*) AS BIGINT) AS n_events
             FROM events
             GROUP BY user_id, event_type
         """,
-        tags=("streaming", "stateful", "mapstate", "pandas-udf", "events"),
+    tags=("streaming", "stateful", "mapstate", "pandas-udf", "events"),
+)
+def streaming_stateful_type_counts(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def update(key, pdfs, state):
+        import pandas as pd
+
+        types, counts = state.get if state.exists else ([], [])
+        m = dict(zip(list(types), list(counts)))
+        for pdf in pdfs:
+            for etype, grp in pdf.groupby("event_type"):
+                m[etype] = m.get(etype, 0) + len(grp)
+        items = sorted(m.items())
+        state.update(([t for t, _ in items], [c for _, c in items]))
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]] * len(items),
+                "event_type": [t for t, _ in items],
+                "n_events": [c for _, c in items],
+            }
+        )
+
+    emitted_stream = (
+        stream_events(spark, sf_dir)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            update,
+            outputStructType="user_id long, event_type string, n_events long",
+            stateStructType="types array<string>, counts array<long>",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
-    def streaming_stateful_type_counts(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        def update(key, pdfs, state):
-            import pandas as pd
-
-            types, counts = state.get if state.exists else ([], [])
-            m = dict(zip(list(types), list(counts)))
-            for pdf in pdfs:
-                for etype, grp in pdf.groupby("event_type"):
-                    m[etype] = m.get(etype, 0) + len(grp)
-            items = sorted(m.items())
-            state.update(([t for t, _ in items], [c for _, c in items]))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(items),
-                    "event_type": [t for t, _ in items],
-                    "n_events": [c for _, c in items],
-                }
-            )
-
-        emitted_stream = (
-            stream_events(spark, sf_dir)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                update,
-                outputStructType="user_id long, event_type string, n_events long",
-                stateStructType="types array<string>, counts array<long>",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        name = f"stream_typecounts_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-typecounts-")
-        emitted = run_stream_to_memory(spark, emitted_stream, name, ckpt)
-        return emitted.groupBy("user_id", "event_type").agg(
-            F.max("n_events").alias("n_events")
-        )
-
-
-_register_streaming_stateful_type_counts()
+    emitted = run_stream_to_memory(spark, emitted_stream)
+    return emitted.groupBy("user_id", "event_type").agg(
+        F.max("n_events").alias("n_events")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -833,14 +867,9 @@ _register_streaming_stateful_type_counts()
 # progress. Timestamps are emitted as formatted strings so both engines
 # hash the same value type.
 # ---------------------------------------------------------------------------
-def _register_streaming_attribution() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_purchase_attribution",
-        oracle="""
+@register(
+    "streaming_purchase_attribution",
+    oracle="""
             WITH t AS (
                 SELECT user_id, ts AS touch_ts, event_id AS touch_id
                 FROM events WHERE event_type IN ('view', 'click')
@@ -859,30 +888,23 @@ def _register_streaming_attribution() -> None:
              AND t.touch_ts <= p.purchase_ts
              AND p.purchase_ts <= t.touch_ts + INTERVAL 30 MINUTE
         """,
-        tags=("streaming", "join", "stream-stream", "events"),
+    tags=("streaming", "join", "stream-stream", "events"),
+)
+def streaming_purchase_attribution(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    joined = purchase_attribution_stream(
+        stream_events(spark, sf_dir), stream_events(spark, sf_dir)
     )
-    def streaming_purchase_attribution(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        name = f"stream_attr_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-attr-")
-        joined = purchase_attribution_stream(
-            stream_events(spark, sf_dir), stream_events(spark, sf_dir)
-        )
-        out = run_stream_to_memory(spark, joined, name, ckpt)
-        fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-        return out.select(
-            "purchase_id",
-            "user_id",
-            "touch_id",
-            F.date_format("touch_ts", fmt).alias("touch_ts"),
-            F.date_format("purchase_ts", fmt).alias("purchase_ts"),
-        )
-
-
-_register_streaming_attribution()
+    out = run_stream_to_memory(spark, joined)
+    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+    return out.select(
+        "purchase_id",
+        "user_id",
+        "touch_id",
+        F.date_format("touch_ts", fmt).alias("touch_ts"),
+        F.date_format("purchase_ts", fmt).alias("purchase_ts"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -933,14 +955,13 @@ def _staged_dir(root: str, src: str, version: str, build) -> str:
     first, so the loser discards its copy.
     """
     import shutil
-    import uuid as _uuid
 
     st = os.stat(src)
     stage = os.path.join(root, f"{version}_{st.st_mtime_ns}_{st.st_size}")
     marker = os.path.join(stage, "_staged")
     if os.path.exists(marker):
         return stage
-    tmp = f"{stage}.build-{os.getpid()}-{_uuid.uuid4().hex[:8]}"
+    tmp = f"{stage}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     build(tmp)
@@ -1035,14 +1056,9 @@ def late_drop_rollup_stream(spark: SparkSession, stage: str) -> DataFrame:
     )
 
 
-def _register_streaming_late_drop() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_late_data_drop",
-        oracle=f"""
+@register(
+    "streaming_late_data_drop",
+    oracle=f"""
             WITH m AS (SELECT MAX(ts) AS maxts FROM events),
             kept AS (
                 SELECT e.* FROM events e, m
@@ -1064,24 +1080,15 @@ def _register_streaming_late_drop() -> None:
             FROM agg, m
             WHERE win_start + INTERVAL 1 HOUR <= m.maxts - INTERVAL 1 HOUR
         """,
-        tags=("streaming", "watermark", "late-data", "events"),
+    tags=("streaming", "watermark", "late-data", "events"),
+)
+def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
+    stage = _stage_late_replay(sf_dir)
+    return run_stream_to_memory(
+        spark,
+        late_drop_rollup_stream(spark, stage),
+        output_mode="append",
     )
-    def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        stage = _stage_late_replay(sf_dir)
-        name = f"stream_late_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-late-")
-        return run_stream_to_memory(
-            spark,
-            late_drop_rollup_stream(spark, stage),
-            name,
-            ckpt,
-            output_mode="append",
-        )
-
-
-_register_streaming_late_drop()
 
 
 # ---------------------------------------------------------------------------
@@ -1104,32 +1111,18 @@ def dedup_within_watermark_stream(
     )
 
 
-def _register_streaming_dedup_within_wm() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_dedup_within_watermark",
-        oracle="SELECT DISTINCT user_id, event_type FROM events",
-        tags=("streaming", "dedup", "stateful", "watermark", "events"),
+@register(
+    "streaming_dedup_within_watermark",
+    oracle="SELECT DISTINCT user_id, event_type FROM events",
+    tags=("streaming", "dedup", "stateful", "watermark", "events"),
+)
+def streaming_dedup_within_watermark(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    return run_stream_to_memory(
+        spark,
+        dedup_within_watermark_stream(stream_events(spark, sf_dir)),
     )
-    def streaming_dedup_within_watermark(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        name = f"stream_dedup_wm_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-dedup-wm-")
-        return run_stream_to_memory(
-            spark,
-            dedup_within_watermark_stream(stream_events(spark, sf_dir)),
-            name,
-            ckpt,
-        )
-
-
-_register_streaming_dedup_within_wm()
 
 
 # ---------------------------------------------------------------------------
@@ -1195,14 +1188,9 @@ def _heartbeat_stream(spark: SparkSession, stage: str) -> DataFrame:
     return stream
 
 
-def _register_streaming_outer_attribution() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_unattributed_purchases",
-        oracle="""
+@register(
+    "streaming_unattributed_purchases",
+    oracle="""
             WITH t AS (
                 SELECT user_id, ts AS touch_ts, event_id AS touch_id
                 FROM events WHERE event_type IN ('view', 'click')
@@ -1247,31 +1235,24 @@ def _register_streaming_outer_attribution() -> None:
                     AND p.purchase_ts <= t.touch_ts + INTERVAL 30 MINUTE
               )
         """,
-        tags=("streaming", "join", "stream-stream", "outer", "watermark", "events"),
+    tags=("streaming", "join", "stream-stream", "outer", "watermark", "events"),
+)
+def streaming_unattributed_purchases(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    stage = _stage_with_heartbeat(sf_dir)
+    joined = unattributed_purchases_stream(
+        _heartbeat_stream(spark, stage), _heartbeat_stream(spark, stage)
     )
-    def streaming_unattributed_purchases(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        stage = _stage_with_heartbeat(sf_dir)
-        name = f"stream_outer_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-outer-")
-        joined = unattributed_purchases_stream(
-            _heartbeat_stream(spark, stage), _heartbeat_stream(spark, stage)
-        )
-        out = run_stream_to_memory(spark, joined, name, ckpt)
-        fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-        return out.select(
-            "purchase_id",
-            "user_id",
-            F.date_format("purchase_ts", fmt).alias("purchase_ts"),
-            "touch_id",
-            F.date_format("touch_ts", fmt).alias("touch_ts"),
-        )
-
-
-_register_streaming_outer_attribution()
+    out = run_stream_to_memory(spark, joined)
+    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+    return out.select(
+        "purchase_id",
+        "user_id",
+        F.date_format("purchase_ts", fmt).alias("purchase_ts"),
+        "touch_id",
+        F.date_format("touch_ts", fmt).alias("touch_ts"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1322,14 +1303,9 @@ def chained_daily_rollup_stream(spark: SparkSession, stage: str) -> DataFrame:
     )
 
 
-def _register_streaming_chained_windows() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_chained_windows",
-        oracle="""
+@register(
+    "streaming_chained_windows",
+    oracle="""
             WITH m AS (SELECT MAX(ts) AS maxts FROM events),
             agg AS (
                 SELECT date_trunc('day', ts) AS d, event_type,
@@ -1343,24 +1319,15 @@ def _register_streaming_chained_windows() -> None:
             FROM agg, m
             WHERE d + INTERVAL 1 DAY <= m.maxts - INTERVAL 1 HOUR
         """,
-        tags=("streaming", "chained-windows", "multi-stateful", "events"),
+    tags=("streaming", "chained-windows", "multi-stateful", "events"),
+)
+def streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    stage = _stage_with_heartbeat(sf_dir)
+    return run_stream_to_memory(
+        spark,
+        chained_daily_rollup_stream(spark, stage),
+        output_mode="append",
     )
-    def streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        stage = _stage_with_heartbeat(sf_dir)
-        name = f"stream_chain_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-chain-")
-        return run_stream_to_memory(
-            spark,
-            chained_daily_rollup_stream(spark, stage),
-            name,
-            ckpt,
-            output_mode="append",
-        )
-
-
-_register_streaming_chained_windows()
 
 
 # ---------------------------------------------------------------------------
@@ -1371,14 +1338,9 @@ _register_streaming_chained_windows()
 # 30 minutes earlier) with UNION ALL, then aggregates; complete output
 # mode for the usual bounded-replay reason (the final windows never close).
 # ---------------------------------------------------------------------------
-def _register_streaming_sliding() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_sliding_rollup",
-        oracle="""
+@register(
+    "streaming_sliding_rollup",
+    oracle="""
             WITH slides AS (
                 SELECT time_bucket(INTERVAL 30 MINUTE, ts) AS win_start,
                        event_type
@@ -1394,23 +1356,14 @@ def _register_streaming_sliding() -> None:
             FROM slides
             GROUP BY 1, 2
         """,
-        tags=("streaming", "window-time", "sliding", "events"),
+    tags=("streaming", "window-time", "sliding", "events"),
+)
+def streaming_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return run_stream_to_memory(
+        spark,
+        sliding_window_stream(stream_events(spark, sf_dir)),
+        output_mode="complete",
     )
-    def streaming_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        name = f"stream_slide_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-slide-")
-        return run_stream_to_memory(
-            spark,
-            sliding_window_stream(stream_events(spark, sf_dir)),
-            name,
-            ckpt,
-            output_mode="complete",
-        )
-
-
-_register_streaming_sliding()
 
 
 # ---------------------------------------------------------------------------
@@ -1421,15 +1374,9 @@ _register_streaming_sliding()
 # dimension (hash segment per distinct user) built from the same batch
 # table, so the oracle can reconstruct it exactly in SQL.
 # ---------------------------------------------------------------------------
-def _register_streaming_static_enrich() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-    from kafka_stream_job_spark.tables import load_table as _load
-
-    @register(
-        "streaming_static_enrich",
-        oracle="""
+@register(
+    "streaming_static_enrich",
+    oracle="""
             WITH dim AS (
                 SELECT DISTINCT user_id,
                        'seg_' || CAST(user_id % 10 AS VARCHAR) AS segment
@@ -1441,36 +1388,29 @@ def _register_streaming_static_enrich() -> None:
             FROM events e JOIN dim d ON d.user_id = e.user_id
             GROUP BY 1
         """,
-        tags=("streaming", "join", "stream-static", "events"),
+    tags=("streaming", "join", "stream-static", "events"),
+)
+def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
+    users_dim = (
+        load_table(spark, sf_dir, "events")
+        .select("user_id")
+        .distinct()
+        .withColumn(
+            "segment",
+            F.concat(F.lit("seg_"), (F.col("user_id") % 10).cast("string")),
+        )
     )
-    def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        users_dim = (
-            _load(spark, sf_dir, "events")
-            .select("user_id")
-            .distinct()
-            .withColumn(
-                "segment",
-                F.concat(F.lit("seg_"), (F.col("user_id") % 10).cast("string")),
-            )
-        )
-        enriched = stream_static_enrich(
-            stream_events(spark, sf_dir), users_dim
-        ).filter(F.col("segment").isNotNull())
-        # (COUNT(DISTINCT ...) is unsupported on streaming aggregates —
-        # the dedup-then-agg composition is the dedicated
-        # streaming_dedup_events query's job.)
-        rolled = enriched.groupBy("segment").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            pround(F.sum("value"), 2).alias("sum_value"),
-        )
-        name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-enrich-")
-        return run_stream_to_memory(spark, rolled, name, ckpt, output_mode="complete")
-
-
-_register_streaming_static_enrich()
+    enriched = stream_static_enrich(
+        stream_events(spark, sf_dir), users_dim
+    ).filter(F.col("segment").isNotNull())
+    # (COUNT(DISTINCT ...) is unsupported on streaming aggregates —
+    # the dedup-then-agg composition is the dedicated
+    # streaming_dedup_events query's job.)
+    rolled = enriched.groupBy("segment").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        pround(F.sum("value"), 2).alias("sum_value"),
+    )
+    return run_stream_to_memory(spark, rolled, output_mode="complete")
 
 
 # ---------------------------------------------------------------------------
@@ -1486,14 +1426,9 @@ _register_streaming_static_enrich()
 # gate checks checkpoint mechanics against data, not against a canned
 # constant.
 # ---------------------------------------------------------------------------
-def _register_offsetlog_query() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "checkpoint_offsetlog_table",
-        oracle="""
+@register(
+    "checkpoint_offsetlog_table",
+    oracle="""
             WITH w AS (
                 SELECT (epoch_us(MAX(ts)) // 1000) - 3600000 AS wm FROM events
             )
@@ -1506,39 +1441,33 @@ def _register_offsetlog_query() -> None:
             UNION ALL
             SELECT CAST(2 AS BIGINT), CAST(2 AS BIGINT), wm FROM w
         """,
-        tags=("streaming", "checkpoint", "datasource", "sql-surface"),
+    tags=("streaming", "checkpoint", "datasource", "sql-surface"),
+)
+def checkpoint_offsetlog_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import tempfile
+
+    from kafka_stream_job_spark.sources.offsetlog import (
+        register_offsetlog_source,
     )
-    def checkpoint_offsetlog_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
 
-        from kafka_stream_job_spark.sources.offsetlog import (
-            register_offsetlog_source,
+    register_offsetlog_source(spark)
+    stage = _stage_late_replay(sf_dir)
+    ckpt = tempfile.mkdtemp(prefix="ksj-offsetlog-")
+    run_stream_to_memory(
+        spark,
+        late_drop_rollup_stream(spark, stage),
+        checkpoint_dir=ckpt,
+    )
+    return (
+        spark.read.format("ksj_offsetlog")
+        .option("path", ckpt)
+        .load()
+        .select(
+            "batch_id",
+            F.col("end_offset").alias("log_offset"),
+            "watermark_ms",
         )
-
-        register_offsetlog_source(spark)
-        stage = _stage_late_replay(sf_dir)
-        name = f"offsetlog_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-offsetlog-")
-        run_stream_to_memory(
-            spark,
-            late_drop_rollup_stream(spark, stage),
-            name,
-            ckpt,
-            output_mode="append",
-        )
-        return (
-            spark.read.format("ksj_offsetlog")
-            .option("path", ckpt)
-            .load()
-            .select(
-                "batch_id",
-                F.col("end_offset").alias("log_offset"),
-                "watermark_ms",
-            )
-        )
-
-
-_register_offsetlog_query()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1555,14 +1484,9 @@ _register_offsetlog_query()
 # commit protocol mechanics against data. Both sides are metadata-sized
 # control-plane tables; the join is a broadcast.
 # ---------------------------------------------------------------------------
-def _register_commitlog_query() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "checkpoint_commitlog_audit",
-        oracle="""
+@register(
+    "checkpoint_commitlog_audit",
+    oracle="""
             WITH w AS (
                 SELECT (epoch_us(MAX(ts)) // 1000) - 3600000 AS wm FROM events
             )
@@ -1576,56 +1500,50 @@ def _register_commitlog_query() -> None:
             UNION ALL
             SELECT CAST(2 AS BIGINT), wm, TRUE, 'v1', wm FROM w
         """,
-        tags=("streaming", "checkpoint", "datasource", "sql-surface"),
+    tags=("streaming", "checkpoint", "datasource", "sql-surface"),
+)
+def checkpoint_commitlog_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import tempfile
+
+    from kafka_stream_job_spark.sources.commitlog import (
+        register_commitlog_source,
     )
-    def checkpoint_commitlog_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
+    from kafka_stream_job_spark.sources.offsetlog import (
+        register_offsetlog_source,
+    )
 
-        from kafka_stream_job_spark.sources.commitlog import (
-            register_commitlog_source,
-        )
-        from kafka_stream_job_spark.sources.offsetlog import (
-            register_offsetlog_source,
-        )
-
-        register_offsetlog_source(spark)
-        register_commitlog_source(spark)
-        stage = _stage_late_replay(sf_dir)
-        name = f"commitlog_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-commitlog-")
-        run_stream_to_memory(
-            spark,
-            late_drop_rollup_stream(spark, stage),
-            name,
-            ckpt,
-            output_mode="append",
-        )
-        planned = (
-            spark.read.format("ksj_offsetlog")
-            .option("path", ckpt)
-            .load()
-            .select("batch_id", F.col("watermark_ms").alias("planned_wm_ms"))
-        )
-        committed = (
-            spark.read.format("ksj_commitlog")
-            .option("path", ckpt)
-            .load()
-            .select(
-                "batch_id",
-                "format_version",
-                F.col("next_watermark_ms").alias("next_wm_ms"),
-            )
-        )
-        return planned.join(F.broadcast(committed), "batch_id", "left").select(
+    register_offsetlog_source(spark)
+    register_commitlog_source(spark)
+    stage = _stage_late_replay(sf_dir)
+    ckpt = tempfile.mkdtemp(prefix="ksj-commitlog-")
+    run_stream_to_memory(
+        spark,
+        late_drop_rollup_stream(spark, stage),
+        checkpoint_dir=ckpt,
+    )
+    planned = (
+        spark.read.format("ksj_offsetlog")
+        .option("path", ckpt)
+        .load()
+        .select("batch_id", F.col("watermark_ms").alias("planned_wm_ms"))
+    )
+    committed = (
+        spark.read.format("ksj_commitlog")
+        .option("path", ckpt)
+        .load()
+        .select(
             "batch_id",
-            "planned_wm_ms",
-            F.col("format_version").isNotNull().alias("committed"),
             "format_version",
-            "next_wm_ms",
+            F.col("next_watermark_ms").alias("next_wm_ms"),
         )
-
-
-_register_commitlog_query()
+    )
+    return planned.join(F.broadcast(committed), "batch_id", "left").select(
+        "batch_id",
+        "planned_wm_ms",
+        F.col("format_version").isNotNull().alias("committed"),
+        "format_version",
+        "next_wm_ms",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1644,14 +1562,9 @@ _register_commitlog_query()
 # drain clamp pins 8 shuffle partitions, and the single AvailableNow
 # drain commits batch 0.
 # ---------------------------------------------------------------------------
-def _register_statestore_table_query() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "checkpoint_statestore_table",
-        oracle=f"""
+@register(
+    "checkpoint_statestore_table",
+    oracle=f"""
             SELECT event_type,
                    CAST(COUNT(*) AS BIGINT) AS n_events,
                    CAST(SUM(CAST(ROUND(value * 100.0) AS BIGINT)) AS BIGINT)
@@ -1662,42 +1575,38 @@ def _register_statestore_table_query() -> None:
             FROM events
             GROUP BY event_type
         """,
-        tags=("streaming", "checkpoint", "statestore", "sql-surface", "events"),
+    tags=("streaming", "checkpoint", "statestore", "sql-surface", "events"),
+)
+def checkpoint_statestore_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import tempfile
+
+    agg = stream_events(spark, sf_dir).groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(
+            F.round(F.col("value") * 100.0, 0).cast("long")
+        ).alias("sum_cents"),
     )
-    def checkpoint_statestore_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        agg = stream_events(spark, sf_dir).groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(
-                F.round(F.col("value") * 100.0, 0).cast("long")
-            ).alias("sum_cents"),
+    ckpt = tempfile.mkdtemp(prefix="ksj-statestore-")
+    run_stream_to_memory(spark, agg, checkpoint_dir=ckpt, output_mode="update")
+    state = (
+        spark.read.format("statestore")
+        .load(ckpt)
+        .select(
+            F.col("key.event_type").alias("event_type"),
+            F.col("value.count").alias("n_events"),
+            F.col("value.sum").alias("sum_cents"),
         )
-        name = f"statestore_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-statestore-")
-        run_stream_to_memory(spark, agg, name, ckpt, output_mode="update")
-        state = (
-            spark.read.format("statestore")
-            .load(ckpt)
-            .select(
-                F.col("key.event_type").alias("event_type"),
-                F.col("value.count").alias("n_events"),
-                F.col("value.sum").alias("sum_cents"),
-            )
+    )
+    meta = (
+        spark.read.format("state-metadata")
+        .load(ckpt)
+        .select(
+            F.col("operatorName").alias("operator_name"),
+            F.col("numPartitions").cast("long").alias("n_state_partitions"),
+            F.col("maxBatchId").cast("long").alias("last_committed_batch"),
         )
-        meta = (
-            spark.read.format("state-metadata")
-            .load(ckpt)
-            .select(
-                F.col("operatorName").alias("operator_name"),
-                F.col("numPartitions").cast("long").alias("n_state_partitions"),
-                F.col("maxBatchId").cast("long").alias("last_committed_batch"),
-            )
-        )
-        return state.crossJoin(F.broadcast(meta))
-
-
-_register_statestore_table_query()
+    )
+    return state.crossJoin(F.broadcast(meta))
 
 
 # ---------------------------------------------------------------------------
@@ -1710,42 +1619,26 @@ _register_statestore_table_query()
 # connector reports its full frontier statelessly so a restart can never
 # regress the committed offset — see sources/replay.py.)
 # ---------------------------------------------------------------------------
-def _register_streaming_replay_source() -> None:
-    import uuid
+@register(
+    "streaming_replay_source_rollup",
+    oracle=REGISTRY["events_hourly_rollup"].oracle,
+    tags=("streaming", "datasource", "connector", "events"),
+)
+def streaming_replay_source_rollup(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from kafka_stream_job_spark.sources.replay import register_replay_source
 
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["events_hourly_rollup"].oracle
-
-    @register(
-        "streaming_replay_source_rollup",
-        oracle=oracle,
-        tags=("streaming", "datasource", "connector", "events"),
+    register_replay_source(spark)
+    path = os.path.join(sf_dir, "events.parquet")
+    stream = (
+        spark.readStream.format("ksj_replay")
+        .option("path", path)
+        .option("n_splits", 8)
+        .load()
     )
-    def streaming_replay_source_rollup(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        from kafka_stream_job_spark.sources.replay import register_replay_source
-
-        register_replay_source(spark)
-        path = os.path.join(sf_dir, "events.parquet")
-        stream = (
-            spark.readStream.format("ksj_replay")
-            .option("path", path)
-            .option("n_splits", 8)
-            .load()
-        )
-        rolled = hourly_rollup_stream(stream)
-        name = f"stream_replay_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-replay-")
-        return run_stream_to_memory(
-            spark, rolled, name, ckpt, output_mode="complete"
-        )
-
-
-_register_streaming_replay_source()
+    rolled = hourly_rollup_stream(stream)
+    return run_stream_to_memory(spark, rolled, output_mode="complete")
 
 
 # ---------------------------------------------------------------------------
@@ -1760,52 +1653,45 @@ _register_streaming_replay_source()
 # This is K2/K3 parity (the reference's atomic Iceberg append)
 # exercised end-to-end, not just unit-tested.
 # ---------------------------------------------------------------------------
-def _register_streaming_sink_roundtrip() -> None:
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_sink_exactly_once_roundtrip",
-        oracle="""
+@register(
+    "streaming_sink_exactly_once_roundtrip",
+    oracle="""
             SELECT event_type,
                    COUNT(*)                                    AS n_events,
                    ROUND((SUM(value)) * 100.0) / 100.0 + 0.0   AS sum_value
             FROM events
             GROUP BY 1
         """,
-        tags=("streaming", "sink", "exactly-once", "events"),
+    tags=("streaming", "sink", "exactly-once", "events"),
+)
+def streaming_sink_exactly_once_roundtrip(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import tempfile
+
+    stage = _stage_late_replay(sf_dir)
+    schema = spark.read.parquet(stage).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
     )
-    def streaming_sink_exactly_once_roundtrip(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        stage = _stage_late_replay(sf_dir)
-        schema = spark.read.parquet(stage).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
+    if isinstance(schema["ts"].dataType, T.LongType):
+        stream = stream.withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000"))
         )
-        if isinstance(schema["ts"].dataType, T.LongType):
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        # the stateless decode→append shape of the reference's bronze
-        # stream; the heartbeat row is filtered out like any non-business
-        # record would be
-        stream = stream.filter(F.col("event_type") != "heartbeat")
-        out_dir = tempfile.mkdtemp(prefix="ksj-sink-rt-")
-        ckpt = tempfile.mkdtemp(prefix="ksj-sink-rt-ckpt-")
-        materialized = run_stream_foreach_batch(spark, stream, out_dir, ckpt)
-        return materialized.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            pround(F.sum("value"), 2).alias("sum_value"),
-        )
-
-
-_register_streaming_sink_roundtrip()
+    elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    # the stateless decode→append shape of the reference's bronze
+    # stream; the heartbeat row is filtered out like any non-business
+    # record would be
+    stream = stream.filter(F.col("event_type") != "heartbeat")
+    out_dir = tempfile.mkdtemp(prefix="ksj-sink-rt-")
+    materialized = run_stream_foreach_batch(spark, stream, out_dir)
+    return materialized.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        pround(F.sum("value"), 2).alias("sum_value"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1827,14 +1713,9 @@ _register_streaming_sink_roundtrip()
 # a re-emitted window row carries its cumulative count, keeping the
 # oracle arithmetic integer-exact.
 # ---------------------------------------------------------------------------
-def _register_streaming_update_mode() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_update_mode_rollup",
-        oracle=f"""
+@register(
+    "streaming_update_mode_rollup",
+    oracle=f"""
             WITH m AS (SELECT MAX(ts) AS maxts FROM events),
             kept AS (
                 SELECT e.* FROM events e, m
@@ -1855,43 +1736,34 @@ def _register_streaming_update_mode() -> None:
             FROM m JOIN batch0 b
               ON b.hour_ts = CAST(date_trunc('hour', m.maxts) AS VARCHAR)
         """,
-        tags=("streaming", "update-mode", "watermark", "events"),
+    tags=("streaming", "update-mode", "watermark", "events"),
+)
+def streaming_update_mode_rollup(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    stage = _stage_late_replay(sf_dir)
+    schema = spark.read.parquet(stage).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
     )
-    def streaming_update_mode_rollup(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        stage = _stage_late_replay(sf_dir)
-        schema = spark.read.parquet(stage).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
+    if isinstance(schema["ts"].dataType, T.LongType):
+        stream = stream.withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000"))
         )
-        if isinstance(schema["ts"].dataType, T.LongType):
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        rolled = (
-            stream.withWatermark("ts", _WM_DELAY)
-            .groupBy(F.window("ts", "1 hour").alias("win"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                F.col("win.start").cast("string").alias("hour_ts"),
-                "n_events",
-            )
+    elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    rolled = (
+        stream.withWatermark("ts", _WM_DELAY)
+        .groupBy(F.window("ts", "1 hour").alias("win"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            F.col("win.start").cast("string").alias("hour_ts"),
+            "n_events",
         )
-        name = f"stream_upd_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-upd-")
-        return run_stream_to_memory(
-            spark, rolled, name, ckpt, output_mode="update"
-        )
-
-
-_register_streaming_update_mode()
+    )
+    return run_stream_to_memory(spark, rolled, output_mode="update")
 
 
 # ---------------------------------------------------------------------------
@@ -1959,34 +1831,20 @@ def union_sources_rollup_stream(spark: SparkSession, stage: str) -> DataFrame:
     )
 
 
-def _register_streaming_union_sources() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    @register(
-        "streaming_union_sources_rollup",
-        oracle=REGISTRY["events_hourly_rollup"].oracle,
-        tags=("streaming", "multi-source", "union", "events"),
+@register(
+    "streaming_union_sources_rollup",
+    oracle=REGISTRY["events_hourly_rollup"].oracle,
+    tags=("streaming", "multi-source", "union", "events"),
+)
+def streaming_union_sources_rollup(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    stage = _stage_split_halves(sf_dir)
+    return run_stream_to_memory(
+        spark,
+        union_sources_rollup_stream(spark, stage),
+        output_mode="complete",
     )
-    def streaming_union_sources_rollup(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        stage = _stage_split_halves(sf_dir)
-        name = f"stream_union_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-union-")
-        return run_stream_to_memory(
-            spark,
-            union_sources_rollup_stream(spark, stage),
-            name,
-            ckpt,
-            output_mode="complete",
-        )
-
-
-_register_streaming_union_sources()
 
 
 # ---------------------------------------------------------------------------
@@ -2019,14 +1877,9 @@ def attribution_hourly_stream(spark: SparkSession, stage: str) -> DataFrame:
     )
 
 
-def _register_streaming_join_then_agg() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_join_then_windowed_agg",
-        oracle="""
+@register(
+    "streaming_join_then_windowed_agg",
+    oracle="""
             WITH t AS (
                 SELECT user_id, ts AS touch_ts FROM events
                 WHERE event_type IN ('view', 'click')
@@ -2055,26 +1908,17 @@ def _register_streaming_join_then_agg() -> None:
             WHERE h + INTERVAL 1 HOUR
                   <= wmbase - INTERVAL 1 HOUR - INTERVAL 30 MINUTE
         """,
-        tags=("streaming", "multi-stateful", "join", "window-time", "events"),
+    tags=("streaming", "multi-stateful", "join", "window-time", "events"),
+)
+def streaming_join_then_windowed_agg(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    stage = _stage_with_heartbeat(sf_dir)
+    return run_stream_to_memory(
+        spark,
+        attribution_hourly_stream(spark, stage),
+        output_mode="append",
     )
-    def streaming_join_then_windowed_agg(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        stage = _stage_with_heartbeat(sf_dir)
-        name = f"stream_joinagg_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-joinagg-")
-        return run_stream_to_memory(
-            spark,
-            attribution_hourly_stream(spark, stage),
-            name,
-            ckpt,
-            output_mode="append",
-        )
-
-
-_register_streaming_join_then_agg()
 
 
 # ---------------------------------------------------------------------------
@@ -2088,42 +1932,30 @@ _register_streaming_join_then_agg()
 # oracle is the batch twin — proving the self-terminating mode loses
 # nothing relative to the always-on drain.
 # ---------------------------------------------------------------------------
-def _register_streaming_available_now() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    @register(
-        "streaming_available_now_rollup",
-        oracle=REGISTRY["events_hourly_rollup"].oracle,
-        tags=("streaming", "available-now", "backfill", "events"),
-    )
-    def streaming_available_now_rollup(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        name = f"stream_avnow_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-avnow-")
-        rolled = hourly_rollup_stream(stream_events(spark, sf_dir))
-        with _drain_partitions(spark):
-            query = (
-                rolled.writeStream.format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .start()
-            )
-            # Q4 awaitTermination — the trigger self-terminates after the
-            # available backlog commits; no processAllAvailable barrier.
-            if not query.awaitTermination(300):
-                query.stop()
-                raise TimeoutError("availableNow query did not self-terminate")
-        return spark.table(name)
-
-
-_register_streaming_available_now()
+@register(
+    "streaming_available_now_rollup",
+    oracle=REGISTRY["events_hourly_rollup"].oracle,
+    tags=("streaming", "available-now", "backfill", "events"),
+)
+def streaming_available_now_rollup(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    name = f"stream_avnow_{uuid.uuid4().hex[:8]}"
+    rolled = hourly_rollup_stream(stream_events(spark, sf_dir))
+    with _drain_partitions(spark):
+        query = (
+            rolled.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .trigger(availableNow=True)
+            .start()
+        )
+        # Q4 awaitTermination — the trigger self-terminates after the
+        # available backlog commits; no processAllAvailable barrier.
+        if not query.awaitTermination(300):
+            query.stop()
+            raise TimeoutError("availableNow query did not self-terminate")
+    return spark.table(name)
 
 
 # ---------------------------------------------------------------------------
@@ -2139,14 +1971,9 @@ _register_streaming_available_now()
 # merged registers using the IDENTICAL fold/pround expressions as the
 # batch query — one fixed IEEE dag on both engines.
 # ---------------------------------------------------------------------------
-def _register_streaming_hll() -> None:
-    from kafka_stream_job_spark.operators.sketches import HLL_M
-    from kafka_stream_job_spark.registry import register
-    from kafka_stream_job_spark.streaming.hll import StreamingHLL
-
-    @register(
-        "streaming_hll_distinct_users",
-        oracle=f"""
+@register(
+    "streaming_hll_distinct_users",
+    oracle=f"""
             WITH h AS (
                 SELECT ('0x' || substr(md5('hll:' || CAST(user_id AS VARCHAR)), 1, 7))::BIGINT
                            AS hv
@@ -2180,60 +2007,45 @@ def _register_streaming_hll() -> None:
                        AS hll_estimate
             FROM est
         """,
-        tags=("streaming", "sketch", "hll", "stateful", "events"),
+    tags=("streaming", "sketch", "hll", "stateful", "events"),
+)
+def streaming_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    hll = StreamingHLL(spark, "user_id")
+    src = stream_events(spark, sf_dir).select("user_id")
+    _drain(spark, src.writeStream.foreachBatch(hll.update))
+    assert hll.batches_seen >= 1
+    regs = jvm_values_df(
+        spark, sorted(hll.registers.items()), "register INT, m_rank INT"
     )
-    def streaming_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        hll = StreamingHLL(spark, "user_id")
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-hll-")
-        src = stream_events(spark, sf_dir).select("user_id")
-        with _drain_partitions(spark):
-            query = (
-                src.writeStream.foreachBatch(hll.update)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        assert hll.batches_seen >= 1
-        regs = jvm_values_df(
-            spark, sorted(hll.registers.items()), "register INT, m_rank INT"
-        )
-        contribs = regs.select(
-            "register", F.expr("1.0D / shiftleft(1, m_rank)").alias("contrib")
-        )
-        folded = contribs.agg(
-            F.count(F.lit(1)).alias("n_present"),
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("register", "contrib"))),
-                    lambda s: s["contrib"],
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("present_sum"),
-        )
-        m = float(HLL_M)
-        raw_e = (
-            (F.lit(0.7213) / (F.lit(1.0) + F.lit(1.079) / F.lit(m)))
-            * F.lit(m)
-            * F.lit(m)
-            / (F.col("present_sum") + (F.lit(HLL_M) - F.col("n_present")) * F.lit(1.0))
-        )
-        est = F.when(
-            (raw_e <= 2.5 * m) & (F.col("n_present") < HLL_M),
-            F.lit(m) * F.log(F.lit(m) / (F.lit(HLL_M) - F.col("n_present"))),
-        ).otherwise(raw_e)
-        return folded.select(
-            F.col("n_present").cast("long").alias("n_registers_hit"),
-            pround(est, 6).alias("hll_estimate"),
-        )
-
-
-_register_streaming_hll()
+    contribs = regs.select(
+        "register", F.expr("1.0D / shiftleft(1, m_rank)").alias("contrib")
+    )
+    folded = contribs.agg(
+        F.count(F.lit(1)).alias("n_present"),
+        F.aggregate(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("register", "contrib"))),
+                lambda s: s["contrib"],
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ).alias("present_sum"),
+    )
+    m = float(HLL_M)
+    raw_e = (
+        (F.lit(0.7213) / (F.lit(1.0) + F.lit(1.079) / F.lit(m)))
+        * F.lit(m)
+        * F.lit(m)
+        / (F.col("present_sum") + (F.lit(HLL_M) - F.col("n_present")) * F.lit(1.0))
+    )
+    est = F.when(
+        (raw_e <= 2.5 * m) & (F.col("n_present") < HLL_M),
+        F.lit(m) * F.log(F.lit(m) / (F.lit(HLL_M) - F.col("n_present"))),
+    ).otherwise(raw_e)
+    return folded.select(
+        F.col("n_present").cast("long").alias("n_registers_hit"),
+        pround(est, 6).alias("hll_estimate"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2253,53 +2065,31 @@ _register_streaming_hll()
 MG_STREAM_CAPACITY = 128
 
 
-def _register_streaming_heavy_hitters() -> None:
-    from kafka_stream_job_spark.registry import register
-    from kafka_stream_job_spark.streaming.heavy_hitters import (
-        StreamingHeavyHitters,
-    )
-    from kafka_stream_job_spark.tables import load_table
-
-    @register(
-        "streaming_heavy_hitter_users",
-        oracle=f"""
+@register(
+    "streaming_heavy_hitter_users",
+    oracle=f"""
             SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events
             FROM events GROUP BY user_id
             HAVING COUNT(*) * {MG_STREAM_CAPACITY} > (SELECT COUNT(*) FROM events)
         """,
-        tags=("streaming", "sketch", "heavy-hitters", "stateful", "events"),
+    tags=("streaming", "sketch", "heavy-hitters", "stateful", "events"),
+)
+def streaming_heavy_hitter_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    mg = StreamingHeavyHitters(spark, "user_id", capacity=MG_STREAM_CAPACITY)
+    src = stream_events(spark, sf_dir).select("user_id")
+    _drain(spark, src.writeStream.foreachBatch(mg.update))
+    assert mg.batches_seen >= 1
+    candidates = [int(k) for k in mg.candidates()]
+    events = load_table(spark, sf_dir, "events")
+    total = events.agg(F.count(F.lit(1)).alias("total"))
+    return (
+        events.filter(F.col("user_id").isin(candidates))
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
+        .crossJoin(F.broadcast(total))
+        .filter(F.col("n_events") * MG_STREAM_CAPACITY > F.col("total"))
+        .select("user_id", "n_events")
     )
-    def streaming_heavy_hitter_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        mg = StreamingHeavyHitters(spark, "user_id", capacity=MG_STREAM_CAPACITY)
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-mg-")
-        src = stream_events(spark, sf_dir).select("user_id")
-        with _drain_partitions(spark):
-            query = (
-                src.writeStream.foreachBatch(mg.update)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        assert mg.batches_seen >= 1
-        candidates = [int(k) for k in mg.candidates()]
-        events = load_table(spark, sf_dir, "events")
-        total = events.agg(F.count(F.lit(1)).alias("total"))
-        return (
-            events.filter(F.col("user_id").isin(candidates))
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-            .crossJoin(F.broadcast(total))
-            .filter(F.col("n_events") * MG_STREAM_CAPACITY > F.col("total"))
-            .select("user_id", "n_events")
-        )
-
-
-_register_streaming_heavy_hitters()
 
 
 # ---------------------------------------------------------------------------
@@ -2311,18 +2101,9 @@ _register_streaming_heavy_hitters()
 # plan over the merged values with the SAME expressions as
 # kmv_distinct_users — one fixed IEEE dag on both engines.
 # ---------------------------------------------------------------------------
-def _register_streaming_kmv() -> None:
-    from kafka_stream_job_spark.operators.sketches import (
-        KMV_K,
-        KMV_NUM,
-        _kmv_hash_sql,
-    )
-    from kafka_stream_job_spark.registry import register
-    from kafka_stream_job_spark.streaming.kmv import StreamingKMV
-
-    @register(
-        "streaming_kmv_distinct_users",
-        oracle=f"""
+@register(
+    "streaming_kmv_distinct_users",
+    oracle=f"""
             WITH hv AS (
                 SELECT DISTINCT {_kmv_hash_sql("user_id")} AS hv FROM events
             ),
@@ -2339,36 +2120,21 @@ def _register_streaming_kmv() -> None:
                          * 1000000.0) / 1000000.0 + 0.0 AS kmv_estimate
             FROM agg
         """,
-        tags=("streaming", "sketch", "kmv", "stateful", "events"),
-    )
-    def streaming_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        kmv = StreamingKMV(spark, "user_id")
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-kmv-")
-        src = stream_events(spark, sf_dir).select("user_id")
-        with _drain_partitions(spark):
-            query = (
-                src.writeStream.foreachBatch(kmv.update)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        assert kmv.batches_seen >= 1
-        vals = jvm_values_df(spark, [(v,) for v in kmv.values], "hv LONG")
-        est = F.when(
-            F.col("n_sketch") < KMV_K, F.col("n_sketch").cast("double")
-        ).otherwise(F.lit(KMV_NUM) / F.col("kth_hash").cast("double"))
-        return vals.agg(
-            F.count(F.lit(1)).cast("long").alias("n_sketch"),
-            F.max("hv").alias("kth_hash"),
-        ).select("n_sketch", "kth_hash", pround(est, 6).alias("kmv_estimate"))
-
-
-_register_streaming_kmv()
+    tags=("streaming", "sketch", "kmv", "stateful", "events"),
+)
+def streaming_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    kmv = StreamingKMV(spark, "user_id")
+    src = stream_events(spark, sf_dir).select("user_id")
+    _drain(spark, src.writeStream.foreachBatch(kmv.update))
+    assert kmv.batches_seen >= 1
+    vals = jvm_values_df(spark, [(v,) for v in kmv.values], "hv LONG")
+    est = F.when(
+        F.col("n_sketch") < KMV_K, F.col("n_sketch").cast("double")
+    ).otherwise(F.lit(KMV_NUM) / F.col("kth_hash").cast("double"))
+    return vals.agg(
+        F.count(F.lit(1)).cast("long").alias("n_sketch"),
+        F.max("hv").alias("kth_hash"),
+    ).select("n_sketch", "kth_hash", pround(est, 6).alias("kmv_estimate"))
 
 
 # ---------------------------------------------------------------------------
@@ -2386,12 +2152,9 @@ _register_streaming_kmv()
 # user-keyed merge with the (user-count-sized) state table; nothing is
 # driver-side.
 # ---------------------------------------------------------------------------
-def _register_streaming_upsert_view() -> None:
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_upsert_latest_state",
-        oracle="""
+@register(
+    "streaming_upsert_latest_state",
+    oracle="""
             SELECT user_id, last_event_id,
                    ROUND((last_value) * 100.0) / 100.0 + 0.0 AS last_value
             FROM (
@@ -2402,59 +2165,46 @@ def _register_streaming_upsert_view() -> None:
                 FROM events
             ) WHERE rn = 1
         """,
-        tags=("streaming", "cdc", "upsert", "merge", "events"),
-    )
-    def streaming_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
+    tags=("streaming", "cdc", "upsert", "merge", "events"),
+)
+def streaming_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import tempfile
 
-        state_root = tempfile.mkdtemp(prefix="ksj-upsert-state-")
-        ckpt = tempfile.mkdtemp(prefix="ksj-upsert-ckpt-")
-        versions: list[str] = []
+    state_root = tempfile.mkdtemp(prefix="ksj-upsert-state-")
+    versions: list[str] = []
 
-        def latest_of(df: DataFrame) -> DataFrame:
-            pick = F.max(
-                F.struct("ts", "event_id", "value")
-            ).alias("p")
-            return df.groupBy("user_id").agg(pick).select(
-                "user_id",
-                F.col("p.ts").alias("ts"),
-                F.col("p.event_id").alias("event_id"),
-                F.col("p.value").alias("value"),
-            )
-
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_latest = latest_of(batch_df)
-            if versions:
-                prev = spark.read.parquet(versions[-1])
-                merged = latest_of(prev.unionByName(batch_latest))
-            else:
-                merged = batch_latest
-            out = os.path.join(state_root, f"v{batch_id}")
-            merged.write.mode("overwrite").parquet(out)
-            versions.append(out)
-
-        src = stream_events(spark, sf_dir).select(
-            "user_id", "ts", "event_id", "value"
-        )
-        with _drain_partitions(spark):
-            query = (
-                src.writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        assert versions, "no micro-batch committed"
-        return spark.read.parquet(versions[-1]).select(
+    def latest_of(df: DataFrame) -> DataFrame:
+        pick = F.max(
+            F.struct("ts", "event_id", "value")
+        ).alias("p")
+        return df.groupBy("user_id").agg(pick).select(
             "user_id",
-            F.col("event_id").alias("last_event_id"),
-            pround(F.col("value"), 2).alias("last_value"),
+            F.col("p.ts").alias("ts"),
+            F.col("p.event_id").alias("event_id"),
+            F.col("p.value").alias("value"),
         )
 
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_latest = latest_of(batch_df)
+        if versions:
+            prev = spark.read.parquet(versions[-1])
+            merged = latest_of(prev.unionByName(batch_latest))
+        else:
+            merged = batch_latest
+        out = os.path.join(state_root, f"v{batch_id}")
+        merged.write.mode("overwrite").parquet(out)
+        versions.append(out)
 
-_register_streaming_upsert_view()
+    src = stream_events(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "value"
+    )
+    _drain(spark, src.writeStream.foreachBatch(apply_batch))
+    assert versions, "no micro-batch committed"
+    return spark.read.parquet(versions[-1]).select(
+        "user_id",
+        F.col("event_id").alias("last_event_id"),
+        pround(F.col("value"), 2).alias("last_value"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2473,14 +2223,9 @@ _register_streaming_upsert_view()
 #   p50 = min bucket with cum*2 >= total;  p90 = min bucket with
 #   cum*10 >= total*9.
 # ---------------------------------------------------------------------------
-def _register_streaming_value_quantiles() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_value_quantiles",
-        oracle="""
+@register(
+    "streaming_value_quantiles",
+    oracle="""
             WITH hist AS (
                 SELECT event_type,
                        CAST(ROUND(value * 100.0) AS BIGINT) // 5000 AS bucket,
@@ -2505,92 +2250,85 @@ def _register_streaming_value_quantiles() -> None:
             FROM cum
             GROUP BY event_type
         """,
-        tags=("streaming", "stateful", "sketch", "quantile", "events"),
+    tags=("streaming", "stateful", "sketch", "quantile", "events"),
+)
+def streaming_value_quantiles(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from pyspark.sql import Window
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def update(key, pdfs, state):
+        import numpy as np
+        import pandas as pd
+
+        buckets, counts = state.get if state.exists else ([], [])
+        m = dict(zip(list(buckets), list(counts)))
+        for pdf in pdfs:
+            # exact integer bucket per event. Cents are derived with
+            # HALF-AWAY-FROM-ZERO rounding to match the oracle's
+            # ROUND() and the batch twin — pandas .round() is
+            # round-half-to-even and would silently diverge on any
+            # sub-cent value landing exactly on a half boundary.
+            v = pdf["value"].to_numpy(dtype="float64") * 100.0
+            cents = np.where(
+                v >= 0, np.floor(v + 0.5), np.ceil(v - 0.5)
+            ).astype("int64")
+            b = pd.Series(cents // 5000, index=pdf.index)
+            for bucket, grp in b.groupby(b):
+                m[int(bucket)] = m.get(int(bucket), 0) + int(len(grp))
+        items = sorted(m.items())
+        state.update(([b for b, _ in items], [c for _, c in items]))
+        yield pd.DataFrame(
+            {
+                "event_type": [key[0]] * len(items),
+                "bucket": [b for b, _ in items],
+                "n": [c for _, c in items],
+            }
+        )
+
+    emitted_stream = (
+        stream_events(spark, sf_dir)
+        .groupBy("event_type")
+        .applyInPandasWithState(
+            update,
+            outputStructType="event_type string, bucket long, n long",
+            stateStructType="buckets array<long>, counts array<long>",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
-    def streaming_value_quantiles(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        from pyspark.sql import Window
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        def update(key, pdfs, state):
-            import numpy as np
-            import pandas as pd
-
-            buckets, counts = state.get if state.exists else ([], [])
-            m = dict(zip(list(buckets), list(counts)))
-            for pdf in pdfs:
-                # exact integer bucket per event. Cents are derived with
-                # HALF-AWAY-FROM-ZERO rounding to match the oracle's
-                # ROUND() and the batch twin — pandas .round() is
-                # round-half-to-even and would silently diverge on any
-                # sub-cent value landing exactly on a half boundary.
-                v = pdf["value"].to_numpy(dtype="float64") * 100.0
-                cents = np.where(
-                    v >= 0, np.floor(v + 0.5), np.ceil(v - 0.5)
-                ).astype("int64")
-                b = pd.Series(cents // 5000, index=pdf.index)
-                for bucket, grp in b.groupby(b):
-                    m[int(bucket)] = m.get(int(bucket), 0) + int(len(grp))
-            items = sorted(m.items())
-            state.update(([b for b, _ in items], [c for _, c in items]))
-            yield pd.DataFrame(
-                {
-                    "event_type": [key[0]] * len(items),
-                    "bucket": [b for b, _ in items],
-                    "n": [c for _, c in items],
-                }
-            )
-
-        emitted_stream = (
-            stream_events(spark, sf_dir)
-            .groupBy("event_type")
-            .applyInPandasWithState(
-                update,
-                outputStructType="event_type string, bucket long, n long",
-                stateStructType="buckets array<long>, counts array<long>",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+    emitted = run_stream_to_memory(spark, emitted_stream)
+    # final histogram = last emission per (type, bucket) = max n
+    hist = emitted.groupBy("event_type", "bucket").agg(
+        F.max("n").cast("long").alias("n")
+    )
+    w_cum = (
+        Window.partitionBy("event_type")
+        .orderBy("bucket")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    w_all = Window.partitionBy("event_type")
+    cum = hist.select(
+        "event_type",
+        "bucket",
+        F.sum("n").over(w_cum).cast("long").alias("c"),
+        F.sum("n").over(w_all).cast("long").alias("tot"),
+    )
+    return cum.groupBy("event_type").agg(
+        F.max("tot").cast("long").alias("n_events"),
+        F.min(
+            F.when(F.col("c") * 2 >= F.col("tot"), F.col("bucket"))
         )
-        name = f"stream_valuehist_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-valuehist-")
-        emitted = run_stream_to_memory(spark, emitted_stream, name, ckpt)
-        # final histogram = last emission per (type, bucket) = max n
-        hist = emitted.groupBy("event_type", "bucket").agg(
-            F.max("n").cast("long").alias("n")
+        .cast("long")
+        .alias("p50_bucket"),
+        F.min(
+            F.when(F.col("c") * 10 >= F.col("tot") * 9, F.col("bucket"))
         )
-        w_cum = (
-            Window.partitionBy("event_type")
-            .orderBy("bucket")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        w_all = Window.partitionBy("event_type")
-        cum = hist.select(
-            "event_type",
-            "bucket",
-            F.sum("n").over(w_cum).cast("long").alias("c"),
-            F.sum("n").over(w_all).cast("long").alias("tot"),
-        )
-        return cum.groupBy("event_type").agg(
-            F.max("tot").cast("long").alias("n_events"),
-            F.min(
-                F.when(F.col("c") * 2 >= F.col("tot"), F.col("bucket"))
-            )
-            .cast("long")
-            .alias("p50_bucket"),
-            F.min(
-                F.when(F.col("c") * 10 >= F.col("tot") * 9, F.col("bucket"))
-            )
-            .cast("long")
-            .alias("p90_bucket"),
-            F.max("bucket").cast("long").alias("max_bucket"),
-        )
-
-
-_register_streaming_value_quantiles()
+        .cast("long")
+        .alias("p90_bucket"),
+        F.max("bucket").cast("long").alias("max_bucket"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2606,96 +2344,80 @@ _register_streaming_value_quantiles()
 # user's island count after merging (activity span / window), not by
 # its event count. All arithmetic is exact epoch-microsecond integers.
 # ---------------------------------------------------------------------------
-def _register_streaming_interval_coverage() -> None:
-    import uuid
+@register(
+    "streaming_interval_union_coverage",
+    oracle=_INTERVAL_COVERAGE_SQL,
+    tags=("streaming", "stateful", "gaps-and-islands", "intervals"),
+)
+def streaming_interval_union_coverage(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from kafka_stream_job_spark.operators.relational import (
-        _COVWIN_US,
-        _INTERVAL_COVERAGE_SQL,
-    )
-    from kafka_stream_job_spark.registry import register
+    def update(key, pdfs, state):
+        import pandas as pd
 
-    @register(
-        "streaming_interval_union_coverage",
-        oracle=_INTERVAL_COVERAGE_SQL,
-        tags=("streaming", "stateful", "gaps-and-islands", "intervals"),
-    )
-    def streaming_interval_union_coverage(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        def update(key, pdfs, state):
-            import pandas as pd
-
-            if state.exists:
-                starts, ends, n_events = state.get
-                intervals = list(zip(list(starts), list(ends)))
-            else:
-                intervals, n_events = [], 0
-            for pdf in pdfs:
-                # exact epoch micros — same integers as the batch twin's
-                # timestampdiff(MICROSECOND, epoch, ts) on the NTZ column
-                ts = (
-                    pdf["ts"].astype("datetime64[us]").astype("int64").tolist()
-                )
-                n_events += len(ts)
-                intervals.extend((t, t + _COVWIN_US) for t in ts)
-            intervals.sort()
-            merged: list[tuple[int, int]] = []
-            for t, e in intervals:
-                # t > prev_end opens a new island; t == prev_end fuses —
-                # identical to the batch window's strict comparison
-                if not merged or t > merged[-1][1]:
-                    merged.append((t, e))
-                elif e > merged[-1][1]:
-                    merged[-1] = (merged[-1][0], e)
-            state.update(
-                ([t for t, _ in merged], [e for _, e in merged], n_events)
+        if state.exists:
+            starts, ends, n_events = state.get
+            intervals = list(zip(list(starts), list(ends)))
+        else:
+            intervals, n_events = [], 0
+        for pdf in pdfs:
+            # exact epoch micros — same integers as the batch twin's
+            # timestampdiff(MICROSECOND, epoch, ts) on the NTZ column
+            ts = (
+                pdf["ts"].astype("datetime64[us]").astype("int64").tolist()
             )
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n_events],
-                    "n_islands": [len(merged)],
-                    "covered_us": [sum(e - t for t, e in merged)],
-                }
-            )
+            n_events += len(ts)
+            intervals.extend((t, t + _COVWIN_US) for t in ts)
+        intervals.sort()
+        merged: list[tuple[int, int]] = []
+        for t, e in intervals:
+            # t > prev_end opens a new island; t == prev_end fuses —
+            # identical to the batch window's strict comparison
+            if not merged or t > merged[-1][1]:
+                merged.append((t, e))
+            elif e > merged[-1][1]:
+                merged[-1] = (merged[-1][0], e)
+        state.update(
+            ([t for t, _ in merged], [e for _, e in merged], n_events)
+        )
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]],
+                "n_events": [n_events],
+                "n_islands": [len(merged)],
+                "covered_us": [sum(e - t for t, e in merged)],
+            }
+        )
 
-        emitted_stream = (
-            stream_events(spark, sf_dir)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                update,
-                outputStructType=(
-                    "user_id long, n_events long, n_islands long, "
+    emitted_stream = (
+        stream_events(spark, sf_dir)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            update,
+            outputStructType=(
+                "user_id long, n_events long, n_islands long, "
                     "covered_us long"
-                ),
-                stateStructType=(
-                    "starts array<long>, ends array<long>, n_events long"
-                ),
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+            ),
+            stateStructType=(
+                "starts array<long>, ends array<long>, n_events long"
+            ),
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        name = f"stream_intcov_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-intcov-")
-        emitted = run_stream_to_memory(spark, emitted_stream, name, ckpt)
-        # final answer per user = the emission with the highest (monotone)
-        # n_events; then the batch twin's deterministic top-25
-        final = emitted.groupBy("user_id").agg(
-            F.max("n_events").cast("long").alias("n_events"),
-            F.expr("max_by(n_islands, n_events)").cast("long").alias("n_islands"),
-            F.expr("max_by(covered_us, n_events)").cast("long").alias("covered_us"),
-        )
-        return final.orderBy(
-            F.col("covered_us").desc(), F.col("user_id").asc()
-        ).limit(25)
-
-
-_register_streaming_interval_coverage()
+    )
+    emitted = run_stream_to_memory(spark, emitted_stream)
+    # final answer per user = the emission with the highest (monotone)
+    # n_events; then the batch twin's deterministic top-25
+    final = emitted.groupBy("user_id").agg(
+        F.max("n_events").cast("long").alias("n_events"),
+        F.expr("max_by(n_islands, n_events)").cast("long").alias("n_islands"),
+        F.expr("max_by(covered_us, n_events)").cast("long").alias("covered_us"),
+    )
+    return final.orderBy(
+        F.col("covered_us").desc(), F.col("user_id").asc()
+    ).limit(25)
 
 
 # ---------------------------------------------------------------------------
@@ -2709,94 +2431,76 @@ _register_streaming_interval_coverage()
 # design. The final emission per user (max n_events — monotone) must
 # equal the batch/oracle answer.
 # ---------------------------------------------------------------------------
-def _register_streaming_rate_limiter() -> None:
-    import uuid
+@register(
+    "streaming_rate_limiter",
+    oracle=_RL_ORACLE_SQL,
+    tags=("streaming", "stateful", "rate-limit", "sequential-fold"),
+)
+def streaming_rate_limiter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from kafka_stream_job_spark.operators.relational import (
-        _RL_CAP,
-        _RL_ORACLE_SQL,
-        _RL_REFILL,
-        _RL_TOP_N,
-    )
-    from kafka_stream_job_spark.registry import register
+    def update(key, pdfs, state):
+        import pandas as pd
 
-    @register(
-        "streaming_rate_limiter",
-        oracle=_RL_ORACLE_SQL,
-        tags=("streaming", "stateful", "rate-limit", "sequential-fold"),
-    )
-    def streaming_rate_limiter(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        def update(key, pdfs, state):
-            import pandas as pd
-
-            if state.exists:
-                days, counts = state.get
-                hist = dict(zip(list(days), list(counts)))
-            else:
-                hist = {}
-            for pdf in pdfs:
-                # same day integers as the batch twin's datediff from epoch
-                d = (
-                    pdf["ts"]
-                    .astype("datetime64[us]")
-                    .astype("int64")
-                    .floordiv(86_400_000_000)
-                )
-                for day, grp in d.groupby(d):
-                    hist[int(day)] = hist.get(int(day), 0) + int(len(grp))
-            items = sorted(hist.items())
-            state.update(([d for d, _ in items], [n for _, n in items]))
-            tokens, throttled = _RL_CAP, 0
-            prev = None
-            for day, n_day in items:
-                if prev is not None:
-                    tokens = min(_RL_CAP, tokens + (day - prev) * _RL_REFILL)
-                served = min(n_day, tokens)
-                throttled += n_day - served
-                tokens -= served
-                prev = day
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [sum(hist.values())],
-                    "n_days": [len(hist)],
-                    "n_throttled": [throttled],
-                }
+        if state.exists:
+            days, counts = state.get
+            hist = dict(zip(list(days), list(counts)))
+        else:
+            hist = {}
+        for pdf in pdfs:
+            # same day integers as the batch twin's datediff from epoch
+            d = (
+                pdf["ts"]
+                .astype("datetime64[us]")
+                .astype("int64")
+                .floordiv(86_400_000_000)
             )
-
-        emitted_stream = (
-            stream_events(spark, sf_dir)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                update,
-                outputStructType=(
-                    "user_id long, n_events long, n_days long, n_throttled long"
-                ),
-                stateStructType="days array<long>, counts array<long>",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+            for day, grp in d.groupby(d):
+                hist[int(day)] = hist.get(int(day), 0) + int(len(grp))
+        items = sorted(hist.items())
+        state.update(([d for d, _ in items], [n for _, n in items]))
+        tokens, throttled = _RL_CAP, 0
+        prev = None
+        for day, n_day in items:
+            if prev is not None:
+                tokens = min(_RL_CAP, tokens + (day - prev) * _RL_REFILL)
+            served = min(n_day, tokens)
+            throttled += n_day - served
+            tokens -= served
+            prev = day
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]],
+                "n_events": [sum(hist.values())],
+                "n_days": [len(hist)],
+                "n_throttled": [throttled],
+            }
         )
-        name = f"stream_ratelim_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-ratelim-")
-        emitted = run_stream_to_memory(spark, emitted_stream, name, ckpt)
-        final = emitted.groupBy("user_id").agg(
-            F.max("n_events").cast("long").alias("n_events"),
-            F.expr("max_by(n_days, n_events)").cast("long").alias("n_days"),
-            F.expr("max_by(n_throttled, n_events)")
-            .cast("long")
-            .alias("n_throttled"),
+
+    emitted_stream = (
+        stream_events(spark, sf_dir)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            update,
+            outputStructType=(
+                "user_id long, n_events long, n_days long, n_throttled long"
+            ),
+            stateStructType="days array<long>, counts array<long>",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        return final.orderBy(
-            F.col("n_throttled").desc(), F.col("user_id").asc()
-        ).limit(_RL_TOP_N)
-
-
-_register_streaming_rate_limiter()
+    )
+    emitted = run_stream_to_memory(spark, emitted_stream)
+    final = emitted.groupBy("user_id").agg(
+        F.max("n_events").cast("long").alias("n_events"),
+        F.expr("max_by(n_days, n_events)").cast("long").alias("n_days"),
+        F.expr("max_by(n_throttled, n_events)")
+        .cast("long")
+        .alias("n_throttled"),
+    )
+    return final.orderBy(
+        F.col("n_throttled").desc(), F.col("user_id").asc()
+    ).limit(_RL_TOP_N)
 
 
 def stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2903,167 +2607,146 @@ def semdedup_seq_norm(vs: list[float]) -> float:
     return math.sqrt(acc)
 
 
-def _register_streaming_semdedup() -> None:
-    import uuid
+@register(
+    "streaming_semdedup",
+    oracle=_SEMDEDUP_ORACLE_SQL,
+    tags=("streaming", "stateful", "semdedup", "embeddings"),
+)
+def streaming_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from kafka_stream_job_spark.operators.similarity import (
-        _SEMDEDUP_ORACLE_SQL,
-        SEMDEDUP_MAX_CMP,
-        SEMDEDUP_TAU,
-        _dot,
-        _norm,
-        _semdedup_centroids,
+    emb = load_table(spark, sf_dir, "embeddings", rebalance=True)
+    # fixed codebook, K rows to the driver (streaming/kmeans.py
+    # precedent: driver state O(K·DIM), collected once, pre-stream)
+    cent_rows = _semdedup_centroids(emb).orderBy("cid").collect()
+    cent_ids = [int(r["cid"]) for r in cent_rows]
+    cent_embs = [[float(x) for x in r["cemb"]] for r in cent_rows]
+    cent_norms = [semdedup_seq_norm(v) for v in cent_embs]
+    assign_batches = semdedup_assign_batches_fn(
+        cent_ids, cent_embs, cent_norms
     )
-    from kafka_stream_job_spark.registry import register
-    from kafka_stream_job_spark.tables import load_table
 
-    @register(
-        "streaming_semdedup",
-        oracle=_SEMDEDUP_ORACLE_SQL,
-        tags=("streaming", "stateful", "semdedup", "embeddings"),
+    def update(key, pdfs, state):
+        import pandas as pd
+
+        if state.exists:
+            vids, coscs, n_members = state.get
+            items = list(zip(list(coscs), list(vids)))
+        else:
+            items, n_members = [], 0
+        for pdf in pdfs:
+            n_members += len(pdf)
+            items.extend(zip(pdf["cosc"].tolist(), pdf["vec_id"].tolist()))
+        # arrival-order-independent: top-k of the set seen so far
+        items.sort(key=lambda t: (-t[0], t[1]))
+        items = items[:SEMDEDUP_MAX_CMP]
+        state.update(
+            (
+                [int(v) for _, v in items],
+                [float(c) for c, _ in items],
+                n_members,
+            )
+        )
+        yield pd.DataFrame(
+            {
+                "cid": [key[0]],
+                "n_members": [n_members],
+                "proto_vec_ids": [[int(v) for _, v in items]],
+            }
+        )
+
+    emitted_stream = (
+        stream_embeddings(spark, sf_dir)
+        .mapInPandas(assign_batches, "vec_id long, cid long, cosc double")
+        .groupBy("cid")
+        .applyInPandasWithState(
+            update,
+            outputStructType="cid long, n_members long, proto_vec_ids array<long>",
+            stateStructType=(
+                "vids array<long>, coscs array<double>, n_members long"
+            ),
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
-    def streaming_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        from pyspark.sql import Window
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        emb = load_table(spark, sf_dir, "embeddings", rebalance=True)
-        # fixed codebook, K rows to the driver (streaming/kmeans.py
-        # precedent: driver state O(K·DIM), collected once, pre-stream)
-        cent_rows = _semdedup_centroids(emb).orderBy("cid").collect()
-        cent_ids = [int(r["cid"]) for r in cent_rows]
-        cent_embs = [[float(x) for x in r["cemb"]] for r in cent_rows]
-        cent_norms = [semdedup_seq_norm(v) for v in cent_embs]
-        assign_batches = semdedup_assign_batches_fn(
-            cent_ids, cent_embs, cent_norms
+    emitted = run_stream_to_memory(spark, emitted_stream)
+    # final state per cluster = emission with max (monotone) n_members
+    final = emitted.groupBy("cid").agg(
+        F.expr("max_by(proto_vec_ids, n_members)").alias("pv")
+    )
+    protos = (
+        final.select(
+            F.col("cid").alias("p_cid"),
+            F.posexplode("pv").alias("pos", "p_vec_id"),
         )
-
-        def update(key, pdfs, state):
-            import pandas as pd
-
-            if state.exists:
-                vids, coscs, n_members = state.get
-                items = list(zip(list(coscs), list(vids)))
-            else:
-                items, n_members = [], 0
-            for pdf in pdfs:
-                n_members += len(pdf)
-                items.extend(zip(pdf["cosc"].tolist(), pdf["vec_id"].tolist()))
-            # arrival-order-independent: top-k of the set seen so far
-            items.sort(key=lambda t: (-t[0], t[1]))
-            items = items[:SEMDEDUP_MAX_CMP]
-            state.update(
-                (
-                    [int(v) for _, v in items],
-                    [float(c) for c, _ in items],
-                    n_members,
-                )
-            )
-            yield pd.DataFrame(
-                {
-                    "cid": [key[0]],
-                    "n_members": [n_members],
-                    "proto_vec_ids": [[int(v) for _, v in items]],
-                }
-            )
-
-        emitted_stream = (
-            stream_embeddings(spark, sf_dir)
-            .mapInPandas(assign_batches, "vec_id long, cid long, cosc double")
-            .groupBy("cid")
-            .applyInPandasWithState(
-                update,
-                outputStructType="cid long, n_members long, proto_vec_ids array<long>",
-                stateStructType=(
-                    "vids array<long>, coscs array<double>, n_members long"
-                ),
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+        .select("p_cid", (F.col("pos") + 1).cast("long").alias("p_rnc"), "p_vec_id")
+        .join(
+            emb.select(
+                F.col("vec_id").alias("p_vec_id"),
+                F.col("embedding").alias("p_emb"),
+            ),
+            "p_vec_id",
         )
-        name = f"stream_semdedup_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-semdedup-")
-        emitted = run_stream_to_memory(spark, emitted_stream, name, ckpt)
-        # final state per cluster = emission with max (monotone) n_members
-        final = emitted.groupBy("cid").agg(
-            F.expr("max_by(proto_vec_ids, n_members)").alias("pv")
-        )
-        protos = (
-            final.select(
-                F.col("cid").alias("p_cid"),
-                F.posexplode("pv").alias("pos", "p_vec_id"),
-            )
-            .select("p_cid", (F.col("pos") + 1).cast("long").alias("p_rnc"), "p_vec_id")
-            .join(
-                emb.select(
-                    F.col("vec_id").alias("p_vec_id"),
-                    F.col("embedding").alias("p_emb"),
-                ),
-                "p_vec_id",
-            )
-        )
-        # stateless probe set: the batch assignment (same broadcast argmax)
-        cents = _semdedup_centroids(emb)
-        cosc = _dot(F.col("embedding"), F.col("cemb")) / (
-            _norm(F.col("embedding")) * _norm(F.col("cemb"))
-        )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.col("cosc").desc(), F.col("cid").asc()
-        )
-        members = (
-            emb.crossJoin(F.broadcast(cents))
-            .select("vec_id", "embedding", "cid", cosc.alias("cosc"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        own = protos.select(
-            F.col("p_vec_id").alias("o_vec_id"),
-            F.col("p_cid").alias("o_cid"),
-            F.col("p_rnc").alias("o_rnc"),
-        )
-        members_own = members.join(
-            F.broadcast(own),
-            (F.col("vec_id") == F.col("o_vec_id")) & (F.col("cid") == F.col("o_cid")),
+    )
+    # stateless probe set: the batch assignment (same broadcast argmax)
+    cents = _semdedup_centroids(emb)
+    cosc = _dot(F.col("embedding"), F.col("cemb")) / (
+        _norm(F.col("embedding")) * _norm(F.col("cemb"))
+    )
+    w = Window.partitionBy("vec_id").orderBy(
+        F.col("cosc").desc(), F.col("cid").asc()
+    )
+    members = (
+        emb.crossJoin(F.broadcast(cents))
+        .select("vec_id", "embedding", "cid", cosc.alias("cosc"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+    own = protos.select(
+        F.col("p_vec_id").alias("o_vec_id"),
+        F.col("p_cid").alias("o_cid"),
+        F.col("p_rnc").alias("o_rnc"),
+    )
+    members_own = members.join(
+        F.broadcast(own),
+        (F.col("vec_id") == F.col("o_vec_id")) & (F.col("cid") == F.col("o_cid")),
+        "left",
+    ).select(
+        "vec_id",
+        "embedding",
+        "cid",
+        "cosc",
+        F.coalesce(F.col("o_rnc"), F.lit(1 << 30).cast("long")).alias("own_rnc"),
+    )
+    sim = _dot(F.col("embedding"), F.col("p_emb")) / (
+        _norm(F.col("embedding")) * _norm(F.col("p_emb"))
+    )
+    return (
+        members_own.join(
+            F.broadcast(protos),
+            (F.col("cid") == F.col("p_cid"))
+            & (F.col("p_rnc") < F.col("own_rnc")),
             "left",
-        ).select(
+        )
+        .groupBy(
+            F.col("vec_id"),
+            F.col("cid").cast("long").alias("cluster_id"),
+            F.col("cosc").alias("cosc"),
+        )
+        .agg(
+            F.sum(
+                F.coalesce((sim > SEMDEDUP_TAU).cast("long"), F.lit(0))
+            ).alias("n_better_neardups")
+        )
+        .select(
             "vec_id",
-            "embedding",
-            "cid",
-            "cosc",
-            F.coalesce(F.col("o_rnc"), F.lit(1 << 30).cast("long")).alias("own_rnc"),
+            "cluster_id",
+            pround(F.col("cosc"), 4).alias("cos_to_centroid"),
+            (F.col("n_better_neardups") == 0).alias("kept"),
         )
-        sim = _dot(F.col("embedding"), F.col("p_emb")) / (
-            _norm(F.col("embedding")) * _norm(F.col("p_emb"))
-        )
-        return (
-            members_own.join(
-                F.broadcast(protos),
-                (F.col("cid") == F.col("p_cid"))
-                & (F.col("p_rnc") < F.col("own_rnc")),
-                "left",
-            )
-            .groupBy(
-                F.col("vec_id"),
-                F.col("cid").cast("long").alias("cluster_id"),
-                F.col("cosc").alias("cosc"),
-            )
-            .agg(
-                F.sum(
-                    F.coalesce((sim > SEMDEDUP_TAU).cast("long"), F.lit(0))
-                ).alias("n_better_neardups")
-            )
-            .select(
-                "vec_id",
-                "cluster_id",
-                pround(F.col("cosc"), 4).alias("cos_to_centroid"),
-                (F.col("n_better_neardups") == 0).alias("kept"),
-            )
-        )
-
-
-_register_streaming_semdedup()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3093,244 +2776,224 @@ _register_streaming_semdedup()
 _STREAM_IVF_MAX_CODEBOOK = 16_384
 
 
-def _register_streaming_ivf_assign() -> None:
-    import uuid
+@register(
+    "streaming_ivf_assign",
+    oracle=_IVF_INCR_ORACLE_SQL,
+    tags=("streaming", "stateful", "ivf", "incremental", "embeddings"),
+    bench_ext=True,
+)
+def streaming_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from kafka_stream_job_spark.operators._portable import idiv
-    from kafka_stream_job_spark.operators.similarity import (
-        _IVF_INCR_ORACLE_SQL,
-        DIM,
-        _ivf_incr_assign,
-        _ivf_incr_sides,
-        _l2sq,
+    base, delta, cents = _ivf_incr_sides(spark, sf_dir)
+    # Fixed codebook to the driver, sorted by cent_id so numpy
+    # argmin's first-minimum rule IS the lowest-cent_id tiebreak.
+    # Driver state is O(K·DIM) where K is the CODEBOOK size — a real
+    # IVF deployment fixes K by design (≈√N cells), but this
+    # fixture's 1-in-64 sampling rule grows K with the corpus, so
+    # the collect is guarded: past the cap it raises loudly instead
+    # of silently OOMing the driver (r8 review finding — the
+    # batch twin keeps cents distributed until its broadcast).
+    # ONE collect serves both the cap check and the codebook (r12:
+    # the former count() + collect() pair ran the centroid pipeline
+    # twice). The LIMIT cap+1 bounds driver memory BEFORE the guard:
+    # an oversized codebook pulls at most cap+1 rows, never all.
+    cent_rows = (
+        cents.orderBy("cent_id").limit(_STREAM_IVF_MAX_CODEBOOK + 1).collect()
     )
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_ivf_assign",
-        oracle=_IVF_INCR_ORACLE_SQL,
-        tags=("streaming", "stateful", "ivf", "incremental", "embeddings"),
-        bench_ext=True,
-    )
-    def streaming_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        base, delta, cents = _ivf_incr_sides(spark, sf_dir)
-        # Fixed codebook to the driver, sorted by cent_id so numpy
-        # argmin's first-minimum rule IS the lowest-cent_id tiebreak.
-        # Driver state is O(K·DIM) where K is the CODEBOOK size — a real
-        # IVF deployment fixes K by design (≈√N cells), but this
-        # fixture's 1-in-64 sampling rule grows K with the corpus, so
-        # the collect is guarded: past the cap it raises loudly instead
-        # of silently OOMing the driver (r8 review finding — the
-        # batch twin keeps cents distributed until its broadcast).
-        # ONE collect serves both the cap check and the codebook (r12:
-        # the former count() + collect() pair ran the centroid pipeline
-        # twice). The LIMIT cap+1 bounds driver memory BEFORE the guard:
-        # an oversized codebook pulls at most cap+1 rows, never all.
-        cent_rows = (
-            cents.orderBy("cent_id").limit(_STREAM_IVF_MAX_CODEBOOK + 1).collect()
-        )
-        if len(cent_rows) > _STREAM_IVF_MAX_CODEBOOK:
-            raise ValueError(
-                f"streaming_ivf_assign codebook exceeds cap "
+    if len(cent_rows) > _STREAM_IVF_MAX_CODEBOOK:
+        raise ValueError(
+            f"streaming_ivf_assign codebook exceeds cap "
                 f"{_STREAM_IVF_MAX_CODEBOOK}; fix K by design (IVF chooses "
                 "~sqrt(N) cells) before streaming at this scale"
-            )
-        cent_ids = [int(r["cent_id"]) for r in cent_rows]
-        cent_embs = [[int(x) for x in r["c_emb"]] for r in cent_rows]
-
-        incr_hash = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("ivfincr:"), F.col("vec_id").cast("string"))
-                ),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("long")
-        quantized = F.transform(
-            "embedding",
-            lambda x: F.round(x.cast("double") * 10000.0, 0),  # KMEANS_SCALE
         )
+    cent_ids = [int(r["cent_id"]) for r in cent_rows]
+    cent_embs = [[int(x) for x in r["c_emb"]] for r in cent_rows]
 
-        def assign_batches(it):
-            import numpy as np
-            import pandas as pd
+    incr_hash = F.conv(
+        F.substring(
+            F.md5(
+                F.concat(F.lit("ivfincr:"), F.col("vec_id").cast("string"))
+            ),
+            1,
+            7,
+        ),
+        16,
+        10,
+    ).cast("long")
+    quantized = F.transform(
+        "embedding",
+        lambda x: F.round(x.cast("double") * 10000.0, 0),  # KMEANS_SCALE
+    )
 
-            C = np.array(cent_embs, dtype=np.int64)
-            cid_arr = np.array(cent_ids, dtype=np.int64)
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                E = np.array(
-                    [np.asarray(v, dtype=np.int64) for v in pdf["emb"]]
-                )
-                # exact integer L2² per (vector, cell); argmin returns the
-                # FIRST minimum → lowest cent_id (C sorted by cent_id)
-                d2 = (
-                    (E[:, None, :] - C[None, :, :]).astype(np.int64) ** 2
-                ).sum(axis=2)
-                best = np.argmin(d2, axis=1)
-                yield pd.DataFrame(
-                    {
-                        "cell": cid_arr[best],
-                        "is_delta": pdf["is_delta"].astype("int64"),
-                        "emb": pdf["emb"],
-                    }
-                )
+    def assign_batches(it):
+        import numpy as np
+        import pandas as pd
 
-        def update(key, pdfs, state):
-            import numpy as np
-            import pandas as pd
-
-            if state.exists:
-                n_base, n_delta, sums = state.get
-                acc = np.array(sums, dtype=np.int64)
-            else:
-                n_base, n_delta = 0, 0
-                acc = np.zeros(DIM, dtype=np.int64)
-            for pdf in pdfs:
-                for is_d, emb in zip(pdf["is_delta"], pdf["emb"]):
-                    acc += np.asarray(emb, dtype=np.int64)
-                    if int(is_d):
-                        n_delta += 1
-                    else:
-                        n_base += 1
-            state.update((int(n_base), int(n_delta), [int(x) for x in acc]))
+        C = np.array(cent_embs, dtype=np.int64)
+        cid_arr = np.array(cent_ids, dtype=np.int64)
+        for pdf in it:
+            if not len(pdf):
+                continue
+            E = np.array(
+                [np.asarray(v, dtype=np.int64) for v in pdf["emb"]]
+            )
+            # exact integer L2² per (vector, cell); argmin returns the
+            # FIRST minimum → lowest cent_id (C sorted by cent_id)
+            d2 = (
+                (E[:, None, :] - C[None, :, :]).astype(np.int64) ** 2
+            ).sum(axis=2)
+            best = np.argmin(d2, axis=1)
             yield pd.DataFrame(
                 {
-                    "cell": [key[0]],
-                    "n_base": [n_base],
-                    "n_delta": [n_delta],
-                    "n_total": [n_base + n_delta],
-                    "sums": [[int(x) for x in acc]],
+                    "cell": cid_arr[best],
+                    "is_delta": pdf["is_delta"].astype("int64"),
+                    "emb": pdf["emb"],
                 }
             )
 
-        emitted_stream = (
-            stream_embeddings(spark, sf_dir)
-            # single-split replay source → one input partition per batch;
-            # fan the numpy cell-assignment across cores before the
-            # Python stage (same rationale as streaming_lsh_candidate_
-            # buckets — guide §2.5, repartition after an unsplittable read)
-            .repartition(spark.sparkContext.defaultParallelism)
-            .select(
-                "vec_id",
-                quantized.alias("emb"),
-                (incr_hash % 4 == 0).cast("int").alias("is_delta"),  # IVF_INCR_MOD
-            )
-            .mapInPandas(
-                assign_batches,
-                "cell long, is_delta int, emb array<double>",
-            )
-            .groupBy("cell")
-            .applyInPandasWithState(
-                update,
-                outputStructType=(
-                    "cell long, n_base long, n_delta long, n_total long, "
+    def update(key, pdfs, state):
+        import numpy as np
+        import pandas as pd
+
+        if state.exists:
+            n_base, n_delta, sums = state.get
+            acc = np.array(sums, dtype=np.int64)
+        else:
+            n_base, n_delta = 0, 0
+            acc = np.zeros(DIM, dtype=np.int64)
+        for pdf in pdfs:
+            for is_d, emb in zip(pdf["is_delta"], pdf["emb"]):
+                acc += np.asarray(emb, dtype=np.int64)
+                if int(is_d):
+                    n_delta += 1
+                else:
+                    n_base += 1
+        state.update((int(n_base), int(n_delta), [int(x) for x in acc]))
+        yield pd.DataFrame(
+            {
+                "cell": [key[0]],
+                "n_base": [n_base],
+                "n_delta": [n_delta],
+                "n_total": [n_base + n_delta],
+                "sums": [[int(x) for x in acc]],
+            }
+        )
+
+    emitted_stream = (
+        stream_embeddings(spark, sf_dir)
+        # single-split replay source → one input partition per batch;
+        # fan the numpy cell-assignment across cores before the
+        # Python stage (same rationale as streaming_lsh_candidate_
+        # buckets — guide §2.5, repartition after an unsplittable read)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select(
+            "vec_id",
+            quantized.alias("emb"),
+            (incr_hash % 4 == 0).cast("int").alias("is_delta"),  # IVF_INCR_MOD
+        )
+        .mapInPandas(
+            assign_batches,
+            "cell long, is_delta int, emb array<double>",
+        )
+        .groupBy("cell")
+        .applyInPandasWithState(
+            update,
+            outputStructType=(
+                "cell long, n_base long, n_delta long, n_total long, "
                     "sums array<long>"
-                ),
-                stateStructType=(
-                    "n_base long, n_delta long, sums array<long>"
-                ),
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        name = f"stream_ivf_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-ivf-")
-        emitted = run_stream_to_memory(spark, emitted_stream, name, ckpt)
-        # final state per cell = emission with max (monotone) n_total
-        stats = (
-            emitted.groupBy("cell")
-            .agg(
-                F.expr(
-                    "max_by(struct(n_base, n_delta, sums), n_total)"
-                ).alias("s")
-            )
-            .select(
-                "cell",
-                F.col("s.n_base").alias("n_base"),
-                F.col("s.n_delta").alias("n_delta"),
-                F.col("s.sums").alias("sums"),
-            )
-            # no localCheckpoint: the source is the drained MEMORY
-            # table (a LocalTableScan) — recomputing this tiny agg for
-            # its two consumers is cheaper than the eager physical
-            # planning a checkpoint call pays (r12 measurement)
-        )
-        # updated centroid = ROUND(sum / n) per dim — the identical double
-        # division the batch op's ROUND(AVG(int)) performs
-        n_members = F.col("n_base") + F.col("n_delta")
-        upd = stats.select(
-            F.col("cell").alias("cent_id"),
-            F.transform(
-                "sums",
-                lambda s: F.round(s.cast("double") / n_members, 0),
-            ).alias("c_emb"),
-        )  # renew AND drift recompute from the memory table (see above)
-        # stateless post-stream verdicts on the static table (the
-        # streaming_semdedup re-fetch discipline): old/new delta cells
-        a_delta = _ivf_incr_assign(delta, cents).localCheckpoint(eager=False)
-        renew = _ivf_incr_assign(a_delta.select("vec_id", "emb"), upd)
-        stale = (
-            a_delta.select("vec_id", F.col("cent_id").alias("old_cell"))
-            .join(
-                renew.select("vec_id", F.col("cent_id").alias("new_cell")),
-                "vec_id",
-            )
-            .groupBy(F.col("old_cell").alias("cent_id"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("sn_delta"),
-                F.sum((F.col("new_cell") != F.col("old_cell")).cast("long"))
-                .cast("long")
-                .alias("n_stale"),
-            )
-        )
-        drift = cents.join(
-            upd.select(
-                F.col("cent_id").alias("u_cid"), F.col("c_emb").alias("u_emb")
             ),
-            F.col("cent_id") == F.col("u_cid"),
-        ).select(
+            stateStructType=(
+                "n_base long, n_delta long, sums array<long>"
+            ),
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+    emitted = run_stream_to_memory(spark, emitted_stream)
+    # final state per cell = emission with max (monotone) n_total
+    stats = (
+        emitted.groupBy("cell")
+        .agg(
+            F.expr(
+                "max_by(struct(n_base, n_delta, sums), n_total)"
+            ).alias("s")
+        )
+        .select(
+            "cell",
+            F.col("s.n_base").alias("n_base"),
+            F.col("s.n_delta").alias("n_delta"),
+            F.col("s.sums").alias("sums"),
+        )
+        # no localCheckpoint: the source is the drained MEMORY
+        # table (a LocalTableScan) — recomputing this tiny agg for
+        # its two consumers is cheaper than the eager physical
+        # planning a checkpoint call pays (r12 measurement)
+    )
+    # updated centroid = ROUND(sum / n) per dim — the identical double
+    # division the batch op's ROUND(AVG(int)) performs
+    n_members = F.col("n_base") + F.col("n_delta")
+    upd = stats.select(
+        F.col("cell").alias("cent_id"),
+        F.transform(
+            "sums",
+            lambda s: F.round(s.cast("double") / n_members, 0),
+        ).alias("c_emb"),
+    )  # renew AND drift recompute from the memory table (see above)
+    # stateless post-stream verdicts on the static table (the
+    # streaming_semdedup re-fetch discipline): old/new delta cells
+    a_delta = _ivf_incr_assign(delta, cents).localCheckpoint(eager=False)
+    renew = _ivf_incr_assign(a_delta.select("vec_id", "emb"), upd)
+    stale = (
+        a_delta.select("vec_id", F.col("cent_id").alias("old_cell"))
+        .join(
+            renew.select("vec_id", F.col("cent_id").alias("new_cell")),
+            "vec_id",
+        )
+        .groupBy(F.col("old_cell").alias("cent_id"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("sn_delta"),
+            F.sum((F.col("new_cell") != F.col("old_cell")).cast("long"))
+            .cast("long")
+            .alias("n_stale"),
+        )
+    )
+    drift = cents.join(
+        upd.select(
+            F.col("cent_id").alias("u_cid"), F.col("c_emb").alias("u_emb")
+        ),
+        F.col("cent_id") == F.col("u_cid"),
+    ).select(
+        "cent_id",
+        _l2sq(F.col("c_emb"), F.col("u_emb")).cast("long").alias("drift_sq"),
+    )
+    return (
+        drift.join(
+            stats.select(
+                F.col("cell").alias("cent_id"), "n_base", "n_delta"
+            ),
             "cent_id",
-            _l2sq(F.col("c_emb"), F.col("u_emb")).cast("long").alias("drift_sq"),
+            "left",
         )
-        return (
-            drift.join(
-                stats.select(
-                    F.col("cell").alias("cent_id"), "n_base", "n_delta"
+        .join(stale, "cent_id", "left")
+        .select(
+            F.col("cent_id").alias("cell"),
+            F.coalesce("n_base", F.lit(0)).cast("long").alias("n_base"),
+            F.coalesce("n_delta", F.lit(0)).cast("long").alias("n_delta"),
+            "drift_sq",
+            F.coalesce("n_stale", F.lit(0)).cast("long").alias("n_stale"),
+            F.when(
+                F.coalesce(F.col("n_delta"), F.lit(0)) > 0,
+                idiv(
+                    F.coalesce("n_stale", F.lit(0)) * 10000,
+                    F.col("n_delta"),
                 ),
-                "cent_id",
-                "left",
             )
-            .join(stale, "cent_id", "left")
-            .select(
-                F.col("cent_id").alias("cell"),
-                F.coalesce("n_base", F.lit(0)).cast("long").alias("n_base"),
-                F.coalesce("n_delta", F.lit(0)).cast("long").alias("n_delta"),
-                "drift_sq",
-                F.coalesce("n_stale", F.lit(0)).cast("long").alias("n_stale"),
-                F.when(
-                    F.coalesce(F.col("n_delta"), F.lit(0)) > 0,
-                    idiv(
-                        F.coalesce("n_stale", F.lit(0)) * 10000,
-                        F.col("n_delta"),
-                    ),
-                )
-                .otherwise(0)
-                .cast("long")
-                .alias("stale_bp"),
-            )
+            .otherwise(0)
+            .cast("long")
+            .alias("stale_bp"),
         )
-
-
-_register_streaming_ivf_assign()
+    )
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3356,109 +3019,95 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # emission equals the batch rollup, so the driver gate shares
 # _FERTILITY_ORACLE_SQL verbatim.
 # ---------------------------------------------------------------------------
-def _register_streaming_fertility_drift() -> None:
-    import uuid
+@register(
+    "streaming_fertility_drift",
+    oracle=_FERTILITY_ORACLE_SQL,
+    tags=("streaming", "stateful", "tokenizer", "drift", "documents"),
+)
+def streaming_fertility_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from kafka_stream_job_spark.operators._portable import idiv
-    from kafka_stream_job_spark.operators.text import _FERTILITY_ORACLE_SQL
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_fertility_drift",
-        oracle=_FERTILITY_ORACLE_SQL,
-        tags=("streaming", "stateful", "tokenizer", "drift", "documents"),
+    n_tokens = (
+        F.regexp_count("text", F.lit(r"[A-Za-z]+"))
+        + F.regexp_count("text", F.lit(r"[0-9]"))
+        + F.regexp_count("text", F.lit(r"[^A-Za-z0-9 ]"))
+    ).cast("long")
+    n_words = F.regexp_count(F.trim(F.col("text")), F.lit(r"[^ ]+")).cast(
+        "long"
     )
-    def streaming_fertility_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
+    per_doc = stream_documents(spark, sf_dir).select(
+        "lang",
+        n_tokens.alias("n_tokens"),
+        n_words.alias("n_words"),
+        F.length("text").cast("long").alias("n_chars"),
+    )
 
-        from pyspark.sql.streaming.state import GroupStateTimeout
+    def update(key, pdfs, state):
+        import pandas as pd
 
-        n_tokens = (
-            F.regexp_count("text", F.lit(r"[A-Za-z]+"))
-            + F.regexp_count("text", F.lit(r"[0-9]"))
-            + F.regexp_count("text", F.lit(r"[^A-Za-z0-9 ]"))
-        ).cast("long")
-        n_words = F.regexp_count(F.trim(F.col("text")), F.lit(r"[^ ]+")).cast(
-            "long"
+        if state.exists:
+            n_docs, tok, words, chars = state.get
+        else:
+            n_docs = tok = words = chars = 0
+        for pdf in pdfs:
+            n_docs += len(pdf)
+            tok += int(pdf["n_tokens"].sum())
+            words += int(pdf["n_words"].sum())
+            chars += int(pdf["n_chars"].sum())
+        state.update((n_docs, tok, words, chars))
+        yield pd.DataFrame(
+            {
+                "lang": [key[0]],
+                "n_docs": [n_docs],
+                "total_tokens": [tok],
+                "total_words": [words],
+                "total_chars": [chars],
+            }
         )
-        per_doc = stream_documents(spark, sf_dir).select(
-            "lang",
-            n_tokens.alias("n_tokens"),
-            n_words.alias("n_words"),
-            F.length("text").cast("long").alias("n_chars"),
-        )
 
-        def update(key, pdfs, state):
-            import pandas as pd
-
-            if state.exists:
-                n_docs, tok, words, chars = state.get
-            else:
-                n_docs = tok = words = chars = 0
-            for pdf in pdfs:
-                n_docs += len(pdf)
-                tok += int(pdf["n_tokens"].sum())
-                words += int(pdf["n_words"].sum())
-                chars += int(pdf["n_chars"].sum())
-            state.update((n_docs, tok, words, chars))
-            yield pd.DataFrame(
-                {
-                    "lang": [key[0]],
-                    "n_docs": [n_docs],
-                    "total_tokens": [tok],
-                    "total_words": [words],
-                    "total_chars": [chars],
-                }
-            )
-
-        emitted_stream = per_doc.groupBy("lang").applyInPandasWithState(
-            update,
-            outputStructType=(
-                "lang string, n_docs long, total_tokens long, "
+    emitted_stream = per_doc.groupBy("lang").applyInPandasWithState(
+        update,
+        outputStructType=(
+            "lang string, n_docs long, total_tokens long, "
                 "total_words long, total_chars long"
-            ),
-            stateStructType=(
-                "n_docs long, total_tokens long, total_words long, "
+        ),
+        stateStructType=(
+            "n_docs long, total_tokens long, total_words long, "
                 "total_chars long"
-            ),
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        name = f"stream_fertility_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-fertility-")
-        emitted = run_stream_to_memory(spark, emitted_stream, name, ckpt)
-        final = (
-            emitted.groupBy("lang")
-            .agg(
-                F.expr(
-                    "max_by(struct(total_tokens, total_words, total_chars),"
+        ),
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    emitted = run_stream_to_memory(spark, emitted_stream)
+    final = (
+        emitted.groupBy("lang")
+        .agg(
+            F.expr(
+                "max_by(struct(total_tokens, total_words, total_chars),"
                     " n_docs)"
-                ).alias("s"),
-                F.max("n_docs").alias("n_docs"),
-            )
-            .select(
-                "lang",
-                "n_docs",
-                F.col("s.total_tokens").alias("total_tokens"),
-                F.col("s.total_words").alias("total_words"),
-                F.col("s.total_chars").alias("total_chars"),
-            )
+            ).alias("s"),
+            F.max("n_docs").alias("n_docs"),
         )
-        return final.select(
+        .select(
             "lang",
             "n_docs",
-            "total_tokens",
-            "total_words",
-            idiv(F.col("total_tokens") * 10000, F.col("total_words")).alias(
-                "fertility_bp"
-            ),
-            idiv(F.col("total_chars") * 10000, F.col("total_tokens")).alias(
-                "chars_per_token_bp"
-            ),
+            F.col("s.total_tokens").alias("total_tokens"),
+            F.col("s.total_words").alias("total_words"),
+            F.col("s.total_chars").alias("total_chars"),
         )
-
-
-_register_streaming_fertility_drift()
+    )
+    return final.select(
+        "lang",
+        "n_docs",
+        "total_tokens",
+        "total_words",
+        idiv(F.col("total_tokens") * 10000, F.col("total_words")).alias(
+            "fertility_bp"
+        ),
+        idiv(F.col("total_chars") * 10000, F.col("total_tokens")).alias(
+            "chars_per_token_bp"
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3472,101 +3121,84 @@ _register_streaming_fertility_drift()
 # quality mid-ingest); the converged final emission equals the batch
 # histogram, sharing _LOGREG_INFER_ORACLE_SQL verbatim.
 # ---------------------------------------------------------------------------
-def _register_streaming_quality_monitor() -> None:
-    import uuid
+@register(
+    "streaming_quality_monitor",
+    oracle=_LOGREG_INFER_ORACLE_SQL,
+    tags=("streaming", "stateful", "quality", "ml-inference", "documents"),
+)
+def streaming_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from kafka_stream_job_spark.operators.text import (
-        _LOGREG_INFER_ORACLE_SQL,
-        _logreg_feats,
-        _logreg_fit,
+    # train once pre-stream on the static table; 3 doubles of driver
+    # state re-injected as literals (identical doubles → identical σ)
+    wrow = _logreg_fit(spark, _logreg_feats(spark, sf_dir)).collect()[0]
+    w0, w1, w2 = float(wrow["w0"]), float(wrow["w1"]), float(wrow["w2"])
+
+    toks = F.split(F.trim("text"), r"\s+")
+    f1_u = F.round(
+        F.lit(1e6)
+        * (
+            F.regexp_count("text", F.lit(r"\b(a|the|and|of|to|is)\b"))
+            * F.lit(1.0)
+            / F.size(toks)
+        ),
+        0,
+    ).cast("long")
+    f2_u = F.round(
+        F.lit(1e6) * (F.length("text") * F.lit(1.0) / F.size(toks)), 0
+    ).cast("long")
+    z = (
+        F.lit(w0)
+        + F.lit(w1) * (f1_u / F.lit(1e6))
+        + F.lit(w2) * (f2_u / F.lit(1e6))
     )
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_quality_monitor",
-        oracle=_LOGREG_INFER_ORACLE_SQL,
-        tags=("streaming", "stateful", "quality", "ml-inference", "documents"),
+    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+    scored = stream_documents(spark, sf_dir).select(
+        "source",
+        F.least(F.floor(p * 10.0).cast("long"), F.lit(9).cast("long"))
+        .alias("p_decile"),
+        F.when(F.col("lang") == "en", 1).otherwise(0).cast("long").alias("y"),
     )
-    def streaming_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
 
-        from pyspark.sql.streaming.state import GroupStateTimeout
+    def update(key, pdfs, state):
+        import pandas as pd
 
-        # train once pre-stream on the static table; 3 doubles of driver
-        # state re-injected as literals (identical doubles → identical σ)
-        wrow = _logreg_fit(spark, _logreg_feats(spark, sf_dir)).collect()[0]
-        w0, w1, w2 = float(wrow["w0"]), float(wrow["w1"]), float(wrow["w2"])
+        if state.exists:
+            n_docs, n_en = state.get
+        else:
+            n_docs = n_en = 0
+        for pdf in pdfs:
+            n_docs += len(pdf)
+            n_en += int(pdf["y"].sum())
+        state.update((n_docs, n_en))
+        yield pd.DataFrame(
+            {
+                "source": [key[0]],
+                "p_decile": [key[1]],
+                "n_docs": [n_docs],
+                "n_en_gold": [n_en],
+            }
+        )
 
-        toks = F.split(F.trim("text"), r"\s+")
-        f1_u = F.round(
-            F.lit(1e6)
-            * (
-                F.regexp_count("text", F.lit(r"\b(a|the|and|of|to|is)\b"))
-                * F.lit(1.0)
-                / F.size(toks)
+    emitted_stream = scored.groupBy("source", "p_decile").applyInPandasWithState(
+        update,
+        outputStructType=(
+            "source string, p_decile long, n_docs long, n_en_gold long"
+        ),
+        stateStructType="n_docs long, n_en_gold long",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    emitted = run_stream_to_memory(spark, emitted_stream)
+    return (
+        emitted.groupBy("source", "p_decile")
+        .agg(
+            F.max("n_docs").cast("long").alias("n_docs"),
+            F.expr("max_by(n_en_gold, n_docs)").cast("long").alias(
+                "n_en_gold"
             ),
-            0,
-        ).cast("long")
-        f2_u = F.round(
-            F.lit(1e6) * (F.length("text") * F.lit(1.0) / F.size(toks)), 0
-        ).cast("long")
-        z = (
-            F.lit(w0)
-            + F.lit(w1) * (f1_u / F.lit(1e6))
-            + F.lit(w2) * (f2_u / F.lit(1e6))
         )
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        scored = stream_documents(spark, sf_dir).select(
-            "source",
-            F.least(F.floor(p * 10.0).cast("long"), F.lit(9).cast("long"))
-            .alias("p_decile"),
-            F.when(F.col("lang") == "en", 1).otherwise(0).cast("long").alias("y"),
-        )
-
-        def update(key, pdfs, state):
-            import pandas as pd
-
-            if state.exists:
-                n_docs, n_en = state.get
-            else:
-                n_docs = n_en = 0
-            for pdf in pdfs:
-                n_docs += len(pdf)
-                n_en += int(pdf["y"].sum())
-            state.update((n_docs, n_en))
-            yield pd.DataFrame(
-                {
-                    "source": [key[0]],
-                    "p_decile": [key[1]],
-                    "n_docs": [n_docs],
-                    "n_en_gold": [n_en],
-                }
-            )
-
-        emitted_stream = scored.groupBy("source", "p_decile").applyInPandasWithState(
-            update,
-            outputStructType=(
-                "source string, p_decile long, n_docs long, n_en_gold long"
-            ),
-            stateStructType="n_docs long, n_en_gold long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        name = f"stream_quality_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-quality-")
-        emitted = run_stream_to_memory(spark, emitted_stream, name, ckpt)
-        return (
-            emitted.groupBy("source", "p_decile")
-            .agg(
-                F.max("n_docs").cast("long").alias("n_docs"),
-                F.expr("max_by(n_en_gold, n_docs)").cast("long").alias(
-                    "n_en_gold"
-                ),
-            )
-        )
-
-
-_register_streaming_quality_monitor()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3725,32 +3357,17 @@ def frontier_bloom_report(
 
 
 
-def _register_streaming_frontier_bloom() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.dedup import _FRONTIER_ORACLE_SQL
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_frontier_bloom",
-        oracle=_FRONTIER_ORACLE_SQL,
-        tags=("streaming", "stateful", "bloom", "frontier", "documents"),
+@register(
+    "streaming_frontier_bloom",
+    oracle=_FRONTIER_ORACLE_SQL,
+    tags=("streaming", "stateful", "bloom", "frontier", "documents"),
+)
+def streaming_frontier_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emitted = run_stream_to_memory(
+        spark,
+        frontier_bloom_emissions(stream_documents(spark, sf_dir)),
     )
-    def streaming_frontier_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        name = f"stream_frontier_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-frontier-")
-        emitted = run_stream_to_memory(
-            spark,
-            frontier_bloom_emissions(stream_documents(spark, sf_dir)),
-            name,
-            ckpt,
-        )
-        return frontier_bloom_report(spark, sf_dir, emitted)
-
-
-_register_streaming_frontier_bloom()
+    return frontier_bloom_report(spark, sf_dir, emitted)
 
 
 # ---------------------------------------------------------------------------
@@ -3764,14 +3381,9 @@ _register_streaming_frontier_bloom()
 # deterministic basenames — which the oracle predicts exactly, because
 # the three-batch replay stages exactly one batchN.parquet per batch.
 # ---------------------------------------------------------------------------
-def _register_sources_manifest_query() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "checkpoint_sources_table",
-        oracle="""
+@register(
+    "checkpoint_sources_table",
+    oracle="""
             SELECT CAST(0 AS BIGINT) AS batch_id, CAST(1 AS BIGINT) AS n_files,
                    'batch0.parquet' AS file_names, CAST(0 AS BIGINT)
                        AS manifest_batch_id
@@ -3782,51 +3394,45 @@ def _register_sources_manifest_query() -> None:
             SELECT CAST(2 AS BIGINT), CAST(1 AS BIGINT), 'batch2.parquet',
                    CAST(2 AS BIGINT)
         """,
-        tags=("streaming", "checkpoint", "sources", "sql-surface"),
+    tags=("streaming", "checkpoint", "sources", "sql-surface"),
+)
+def checkpoint_sources_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os
+    import tempfile
+
+    stage = _stage_late_replay(sf_dir)
+    ckpt = tempfile.mkdtemp(prefix="ksj-sources-tbl-")
+    run_stream_to_memory(
+        spark,
+        late_drop_rollup_stream(spark, stage),
+        checkpoint_dir=ckpt,
     )
-    def checkpoint_sources_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-        import tempfile
-
-        stage = _stage_late_replay(sf_dir)
-        name = f"sources_tbl_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-sources-tbl-")
-        run_stream_to_memory(
-            spark,
-            late_drop_rollup_stream(spark, stage),
-            name,
-            ckpt,
-            output_mode="append",
+    lines = spark.read.text(os.path.join(ckpt, "sources", "0", "*"))
+    entry = F.from_json(
+        F.col("value"),
+        "path string, timestamp long, batchId long",
+    )
+    parsed = (
+        lines.filter(F.col("value") != "v1")
+        .select(
+            F.element_at(F.split(F.input_file_name(), "/"), -1)
+            .cast("long")
+            .alias("batch_id"),
+            entry.alias("e"),
         )
-        lines = spark.read.text(os.path.join(ckpt, "sources", "0", "*"))
-        entry = F.from_json(
-            F.col("value"),
-            "path string, timestamp long, batchId long",
+        .select(
+            "batch_id",
+            F.element_at(F.split(F.col("e.path"), "/"), -1).alias("fname"),
+            F.col("e.batchId").alias("manifest_batch_id"),
         )
-        parsed = (
-            lines.filter(F.col("value") != "v1")
-            .select(
-                F.element_at(F.split(F.input_file_name(), "/"), -1)
-                .cast("long")
-                .alias("batch_id"),
-                entry.alias("e"),
-            )
-            .select(
-                "batch_id",
-                F.element_at(F.split(F.col("e.path"), "/"), -1).alias("fname"),
-                F.col("e.batchId").alias("manifest_batch_id"),
-            )
-        )
-        return parsed.groupBy("batch_id").agg(
-            F.count(F.lit(1)).cast("long").alias("n_files"),
-            F.array_join(F.array_sort(F.collect_list("fname")), ",").alias(
-                "file_names"
-            ),
-            F.min("manifest_batch_id").cast("long").alias("manifest_batch_id"),
-        )
-
-
-_register_sources_manifest_query()
+    )
+    return parsed.groupBy("batch_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_files"),
+        F.array_join(F.array_sort(F.collect_list("fname")), ",").alias(
+            "file_names"
+        ),
+        F.min("manifest_batch_id").cast("long").alias("manifest_batch_id"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3838,58 +3444,44 @@ _register_sources_manifest_query()
 # construction and the converged complete-mode emission equals the batch
 # rollup: the oracle is SHARED verbatim. State = one row per live bar.
 # ---------------------------------------------------------------------------
-def _register_streaming_ohlc_bars() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["events_ohlc_bars"].oracle
-
-    @register(
-        "streaming_ohlc_bars",
-        oracle=oracle,
-        tags=("streaming", "window-time", "ohlc", "events"),
-        bench_ext=True,
+@register(
+    "streaming_ohlc_bars",
+    oracle=REGISTRY["events_ohlc_bars"].oracle,
+    tags=("streaming", "window-time", "ohlc", "events"),
+    bench_ext=True,
+)
+def streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
+    events = stream_events(spark, sf_dir).where(F.col("value").isNotNull())
+    cents = F.round(F.col("value") * 100.0, 0).cast("long")
+    keyed = events.withWatermark("ts", "2 hours").select(
+        "event_type",
+        F.window("ts", "1 hour").alias("w"),
+        F.struct(
+            F.col("ts").alias("ts"),
+            F.col("event_id").alias("eid"),
+            cents.alias("c"),
+        ).alias("k"),
+        cents.alias("cents"),
     )
-    def streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        events = stream_events(spark, sf_dir).where(F.col("value").isNotNull())
-        cents = F.round(F.col("value") * 100.0, 0).cast("long")
-        keyed = events.withWatermark("ts", "2 hours").select(
-            "event_type",
-            F.window("ts", "1 hour").alias("w"),
-            F.struct(
-                F.col("ts").alias("ts"),
-                F.col("event_id").alias("eid"),
-                cents.alias("c"),
-            ).alias("k"),
-            cents.alias("cents"),
-        )
-        bars = keyed.groupBy("event_type", "w").agg(
-            F.count(F.lit(1)).cast("long").alias("n_ticks"),
-            F.min("k")["c"].alias("open_cents"),
-            F.max("cents").alias("high_cents"),
-            F.min("cents").alias("low_cents"),
-            F.max("k")["c"].alias("close_cents"),
-            F.sum("cents").cast("long").alias("volume_cents"),
-        )
-        out = bars.select(
-            "event_type",
-            F.col("w.start").cast("string").alias("bar_hour"),
-            "n_ticks",
-            "open_cents",
-            "high_cents",
-            "low_cents",
-            "close_cents",
-            "volume_cents",
-        )
-        name = f"stream_ohlc_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-ohlc-")
-        return run_stream_to_memory(spark, out, name, ckpt, output_mode="complete")
-
-
-_register_streaming_ohlc_bars()
+    bars = keyed.groupBy("event_type", "w").agg(
+        F.count(F.lit(1)).cast("long").alias("n_ticks"),
+        F.min("k")["c"].alias("open_cents"),
+        F.max("cents").alias("high_cents"),
+        F.min("cents").alias("low_cents"),
+        F.max("k")["c"].alias("close_cents"),
+        F.sum("cents").cast("long").alias("volume_cents"),
+    )
+    out = bars.select(
+        "event_type",
+        F.col("w.start").cast("string").alias("bar_hour"),
+        "n_ticks",
+        "open_cents",
+        "high_cents",
+        "low_cents",
+        "close_cents",
+        "volume_cents",
+    )
+    return run_stream_to_memory(spark, out, output_mode="complete")
 
 
 # ---------------------------------------------------------------------------
@@ -3977,35 +3569,19 @@ def psi_report(emitted: DataFrame) -> DataFrame:
 
 
 
-def _register_streaming_psi_drift() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["events_psi_value_drift"].oracle
-
-    @register(
-        "streaming_psi_drift",
-        oracle=oracle,
-        tags=("streaming", "stateful", "drift", "psi", "events"),
+@register(
+    "streaming_psi_drift",
+    oracle=REGISTRY["events_psi_value_drift"].oracle,
+    tags=("streaming", "stateful", "drift", "psi", "events"),
+)
+def streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    mid = psi_epoch_mid(spark, sf_dir)
+    emitted = run_stream_to_memory(
+        spark,
+        psi_binned_counts(stream_events(spark, sf_dir), mid),
+        output_mode="complete",
     )
-    def streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        mid = psi_epoch_mid(spark, sf_dir)
-        name = f"stream_psi_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-psi-")
-        emitted = run_stream_to_memory(
-            spark,
-            psi_binned_counts(stream_events(spark, sf_dir), mid),
-            name,
-            ckpt,
-            output_mode="complete",
-        )
-        return psi_report(emitted)
-
-
-_register_streaming_psi_drift()
+    return psi_report(emitted)
 
 
 # ---------------------------------------------------------------------------
@@ -4020,25 +3596,9 @@ _register_streaming_psi_drift()
 # report a live dedup pipeline joins new arrivals against. Oracle: the
 # batch shingles→sigs→bands pipeline aggregated per bucket.
 # ---------------------------------------------------------------------------
-def _register_streaming_lsh_candidate_buckets() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.dedup import (
-        MINHASH_A,
-        MINHASH_B,
-        MINHASH_P,
-        NUM_BANDS,
-        ROWS_PER_BAND,
-        _BANDS_SQL,
-        _SHINGLES_SQL,
-        _SIGS_SQL,
-        _minhash_sig_batches,
-    )
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_lsh_candidate_buckets",
-        oracle=f"""
+@register(
+    "streaming_lsh_candidate_buckets",
+    oracle=f"""
             WITH shingles AS ({_SHINGLES_SQL}),
             sigs AS ({_SIGS_SQL}),
             bands AS ({_BANDS_SQL})
@@ -4048,83 +3608,74 @@ def _register_streaming_lsh_candidate_buckets() -> None:
             FROM bands GROUP BY 1, 2
             HAVING COUNT(*) > 1
         """,
-        tags=("streaming", "stateful", "dedup", "lsh", "documents"),
-        bench_ext=True,
+    tags=("streaming", "stateful", "dedup", "lsh", "documents"),
+    bench_ext=True,
+)
+def streaming_lsh_candidate_buckets(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    # The file-replay source delivers each micro-batch as ONE input
+    # partition (single parquet split), which serializes the heavy
+    # stateless shingle→md5→minhash projection onto one core —
+    # r12-measured 4.7 s of a 5.1 s drain in that single task. A
+    # round-robin repartition ahead of the projection fans the
+    # per-row CPU across the cluster exactly like the batch side's
+    # under-split rebalance (guide §2.5 input skew: "one huge
+    # unsplittable file — repartition immediately after the read");
+    # the extra exchange moves only raw doc rows once.
+    docs = (
+        stream_documents(spark, sf_dir)
+        .where(F.col("text").isNotNull())
+        .repartition(spark.sparkContext.defaultParallelism)
     )
-    def streaming_lsh_candidate_buckets(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        # The file-replay source delivers each micro-batch as ONE input
-        # partition (single parquet split), which serializes the heavy
-        # stateless shingle→md5→minhash projection onto one core —
-        # r12-measured 4.7 s of a 5.1 s drain in that single task. A
-        # round-robin repartition ahead of the projection fans the
-        # per-row CPU across the cluster exactly like the batch side's
-        # under-split rebalance (guide §2.5 input skew: "one huge
-        # unsplittable file — repartition immediately after the read");
-        # the extra exchange moves only raw doc rows once.
-        docs = (
-            stream_documents(spark, sf_dir)
-            .where(F.col("text").isNotNull())
-            .repartition(spark.sparkContext.defaultParallelism)
-        )
-        # r13: signatures come whole from the shared Arrow body (same
-        # stage the batch minhash_signatures runs — one Python pass per
-        # doc instead of 16 interpreted array_min(transform(...)) HOF
-        # evaluations per row; stateless, so streaming semantics and the
-        # bucket-state exchange are untouched).
-        staged = docs.select("doc_id", "text").mapInArrow(
-            _minhash_sig_batches,
-            "doc_id long, "
-            + ", ".join(
-                f"h{s} long" for s in range(NUM_BANDS * ROWS_PER_BAND)
+    # r13: signatures come whole from the shared Arrow body (same
+    # stage the batch minhash_signatures runs — one Python pass per
+    # doc instead of 16 interpreted array_min(transform(...)) HOF
+    # evaluations per row; stateless, so streaming semantics and the
+    # bucket-state exchange are untouched).
+    staged = docs.select("doc_id", "text").mapInArrow(
+        _minhash_sig_batches,
+        "doc_id long, "
+        + ", ".join(
+            f"h{s} long" for s in range(NUM_BANDS * ROWS_PER_BAND)
+        ),
+    )
+    band_structs = ", ".join(
+        "struct(CAST({b} AS BIGINT) AS band_idx, md5(concat_ws('|', {hs})) AS band_sig)".format(
+            b=b,
+            hs=", ".join(
+                f"CAST(h{b * ROWS_PER_BAND + r} AS STRING)"
+                for r in range(ROWS_PER_BAND)
             ),
         )
-        band_structs = ", ".join(
-            "struct(CAST({b} AS BIGINT) AS band_idx, md5(concat_ws('|', {hs})) AS band_sig)".format(
-                b=b,
-                hs=", ".join(
-                    f"CAST(h{b * ROWS_PER_BAND + r} AS STRING)"
-                    for r in range(ROWS_PER_BAND)
-                ),
-            )
-            for b in range(NUM_BANDS)
-        )
-        banded = staged.select(
-            "doc_id",
-            F.expr(f"explode(array({band_structs}))").alias("bs"),
-        ).select("doc_id", "bs.band_idx", "bs.band_sig")
+        for b in range(NUM_BANDS)
+    )
+    banded = staged.select(
+        "doc_id",
+        F.expr(f"explode(array({band_structs}))").alias("bs"),
+    ).select("doc_id", "bs.band_idx", "bs.band_sig")
 
-        # Bucket state is (count, min) — both BUILT-IN streaming
-        # aggregates, so the state lives in the JVM state store, not in
-        # per-group pickled Python GroupState: with ~16 bucket rows per
-        # document the bucket-key cardinality is corpus-sized, and an
-        # applyInPandasWithState here paid one Python pandas call per
-        # bucket per batch (the r9 extended bench measured it at 12 s —
-        # 5x this plan). Update mode emits only buckets a batch touched;
-        # the post-stream max/min collapse is emission-order-free.
-        emitted_stream = banded.groupBy("band_idx", "band_sig").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.min("doc_id").cast("long").alias("min_doc"),
+    # Bucket state is (count, min) — both BUILT-IN streaming
+    # aggregates, so the state lives in the JVM state store, not in
+    # per-group pickled Python GroupState: with ~16 bucket rows per
+    # document the bucket-key cardinality is corpus-sized, and an
+    # applyInPandasWithState here paid one Python pandas call per
+    # bucket per batch (the r9 extended bench measured it at 12 s —
+    # 5x this plan). Update mode emits only buckets a batch touched;
+    # the post-stream max/min collapse is emission-order-free.
+    emitted_stream = banded.groupBy("band_idx", "band_sig").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.min("doc_id").cast("long").alias("min_doc"),
+    )
+    emitted = run_stream_to_memory(spark, emitted_stream, output_mode="update")
+    return (
+        emitted.groupBy("band_idx", "band_sig")
+        .agg(
+            F.max("n_docs").cast("long").alias("n_docs"),
+            F.min("min_doc").cast("long").alias("min_doc"),
         )
-        name = f"stream_lshbuckets_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-lshbuckets-")
-        emitted = run_stream_to_memory(
-            spark, emitted_stream, name, ckpt, output_mode="update"
-        )
-        return (
-            emitted.groupBy("band_idx", "band_sig")
-            .agg(
-                F.max("n_docs").cast("long").alias("n_docs"),
-                F.min("min_doc").cast("long").alias("min_doc"),
-            )
-            .filter(F.col("n_docs") > 1)
-        )
-
-
-_register_streaming_lsh_candidate_buckets()
+        .filter(F.col("n_docs") > 1)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4138,18 +3689,9 @@ _register_streaming_lsh_candidate_buckets()
 # to the final-version live file set, checked against the generative
 # model's closed-form oracle.
 # ---------------------------------------------------------------------------
-def _register_streaming_txn_log_tail() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.formats import (
-        TXN_VERSIONS,
-        _stage_txn_log,
-    )
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_txn_log_tail",
-        oracle=f"""
+@register(
+    "streaming_txn_log_tail",
+    oracle=f"""
             WITH v AS (SELECT unnest(range(0, {TXN_VERSIONS})) AS ver),
             adds AS (
                 SELECT v.ver, 'f_' || v.ver || '_' || i.i AS path,
@@ -4170,86 +3712,79 @@ def _register_streaming_txn_log_tail() -> None:
                          WHERE a.path NOT IN (SELECT path FROM removes))
                         AS BIGINT) AS live_rows
         """,
-        tags=("streaming", "stateful", "lakehouse", "txn-log"),
+    tags=("streaming", "stateful", "lakehouse", "txn-log"),
+)
+def streaming_txn_log_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    stage = _stage_txn_log(spark, sf_dir)
+    schema = T.StructType(
+        [
+            T.StructField(
+                "add",
+                T.StructType(
+                    [
+                        T.StructField("path", T.StringType()),
+                        T.StructField("rows", T.LongType()),
+                    ]
+                ),
+            ),
+            T.StructField(
+                "remove",
+                T.StructType([T.StructField("path", T.StringType())]),
+            ),
+        ]
     )
-    def streaming_txn_log_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
+    log = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "*.json")
+        .json(stage)
+    )
+    actions = log.select(
+        F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
+        F.coalesce(F.col("add.rows"), F.lit(0)).cast("long").alias("rows_"),
+        F.when(F.col("remove").isNotNull(), 1)
+        .otherwise(0)
+        .cast("long")
+        .alias("removed"),
+    )
 
-        from pyspark.sql.streaming.state import GroupStateTimeout
+    def update(key, pdfs, state):
+        import pandas as pd
 
-        stage = _stage_txn_log(spark, sf_dir)
-        schema = T.StructType(
-            [
-                T.StructField(
-                    "add",
-                    T.StructType(
-                        [
-                            T.StructField("path", T.StringType()),
-                            T.StructField("rows", T.LongType()),
-                        ]
-                    ),
-                ),
-                T.StructField(
-                    "remove",
-                    T.StructType([T.StructField("path", T.StringType())]),
-                ),
-            ]
-        )
-        log = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "*.json")
-            .json(stage)
-        )
-        actions = log.select(
-            F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-            F.coalesce(F.col("add.rows"), F.lit(0)).cast("long").alias("rows_"),
-            F.when(F.col("remove").isNotNull(), 1)
-            .otherwise(0)
-            .cast("long")
-            .alias("removed"),
+        if state.exists:
+            rows_, removed = state.get
+        else:
+            rows_, removed = 0, 0
+        for pdf in pdfs:
+            rows_ = max(rows_, int(pdf["rows_"].max()))
+            removed = max(removed, int(pdf["removed"].max()))
+        state.update((rows_, removed))
+        yield pd.DataFrame(
+            {"path": [key[0]], "rows_": [rows_], "removed": [removed]}
         )
 
-        def update(key, pdfs, state):
-            import pandas as pd
-
-            if state.exists:
-                rows_, removed = state.get
-            else:
-                rows_, removed = 0, 0
-            for pdf in pdfs:
-                rows_ = max(rows_, int(pdf["rows_"].max()))
-                removed = max(removed, int(pdf["removed"].max()))
-            state.update((rows_, removed))
-            yield pd.DataFrame(
-                {"path": [key[0]], "rows_": [rows_], "removed": [removed]}
-            )
-
-        emitted_stream = actions.groupBy("path").applyInPandasWithState(
-            update,
-            outputStructType="path string, rows_ long, removed long",
-            stateStructType="rows_ long, removed long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        name = f"stream_txnlog_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-txnlog-")
-        emitted = run_stream_to_memory(spark, emitted_stream, name, ckpt)
-        final = emitted.groupBy("path").agg(
-            F.max("rows_").cast("long").alias("rows_"),
-            F.max("removed").cast("long").alias("removed"),
-        )
-        live = F.when((F.col("rows_") > 0) & (F.col("removed") == 0), 1).otherwise(0)
-        return final.agg(
-            F.count(F.lit(1)).cast("long").alias("n_paths_seen"),
-            F.sum("removed").cast("long").alias("n_removed"),
-            F.sum(live).cast("long").alias("live_files"),
-            F.sum(F.when(live == 1, F.col("rows_")).otherwise(0))
-            .cast("long")
-            .alias("live_rows"),
-        )
-
-
-_register_streaming_txn_log_tail()
+    emitted_stream = actions.groupBy("path").applyInPandasWithState(
+        update,
+        outputStructType="path string, rows_ long, removed long",
+        stateStructType="rows_ long, removed long",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    emitted = run_stream_to_memory(spark, emitted_stream)
+    final = emitted.groupBy("path").agg(
+        F.max("rows_").cast("long").alias("rows_"),
+        F.max("removed").cast("long").alias("removed"),
+    )
+    live = F.when((F.col("rows_") > 0) & (F.col("removed") == 0), 1).otherwise(0)
+    return final.agg(
+        F.count(F.lit(1)).cast("long").alias("n_paths_seen"),
+        F.sum("removed").cast("long").alias("n_removed"),
+        F.sum(live).cast("long").alias("live_files"),
+        F.sum(F.when(live == 1, F.col("rows_")).otherwise(0))
+        .cast("long")
+        .alias("live_rows"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4263,80 +3798,63 @@ _register_streaming_txn_log_tail()
 # converged emission (the streaming_topk_types_hourly split), so the
 # oracle is SHARED verbatim with the batch twin. State ≤ |langs|·64.
 # ---------------------------------------------------------------------------
-def _register_streaming_feature_hashing_monitor() -> None:
-    import uuid
+@register(
+    "streaming_feature_hashing_monitor",
+    oracle=REGISTRY["text_feature_hashing"].oracle,
+    tags=("streaming", "stateful", "features", "hashing", "documents"),
+)
+def streaming_feature_hashing_monitor(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from pyspark.sql import Window
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from kafka_stream_job_spark.operators.text import FH_BUCKETS, FH_TOP
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["text_feature_hashing"].oracle
-
-    @register(
-        "streaming_feature_hashing_monitor",
-        oracle=oracle,
-        tags=("streaming", "stateful", "features", "hashing", "documents"),
-    )
-    def streaming_feature_hashing_monitor(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        from pyspark.sql import Window
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        docs = stream_documents(spark, sf_dir).where(F.col("text").isNotNull())
-        # Hash every token ONCE (md5 dominates this op; the previous
-        # form nested the tokenize+hash inside the per-bucket lambda and
-        # recomputed it 64x per document — 17.5 s at sf0.1, 3.5 s after),
-        # then fold the pre-hashed int array into the bounded 64-slot
-        # per-doc bucket counts.
-        hashed = docs.select(
-            "lang",
-            F.expr(
-                "transform(split(lower(trim(regexp_replace(text,"
+    docs = stream_documents(spark, sf_dir).where(F.col("text").isNotNull())
+    # Hash every token ONCE (md5 dominates this op; the previous
+    # form nested the tokenize+hash inside the per-bucket lambda and
+    # recomputed it 64x per document — 17.5 s at sf0.1, 3.5 s after),
+    # then fold the pre-hashed int array into the bounded 64-slot
+    # per-doc bucket counts.
+    hashed = docs.select(
+        "lang",
+        F.expr(
+            "transform(split(lower(trim(regexp_replace(text,"
                 " '\\\\s+', ' '))), ' '),"
                 " t -> CAST(conv(substring(md5(t), 1, 7), 16, 10) AS BIGINT)"
                 f" % {FH_BUCKETS})"
-            ).alias("hb"),
-        )
-        bucket_counts = (
-            f"filter(transform(sequence(0, {FH_BUCKETS} - 1),"
+        ).alias("hb"),
+    )
+    bucket_counts = (
+        f"filter(transform(sequence(0, {FH_BUCKETS} - 1),"
             " b -> struct(b AS bucket,"
             " size(filter(hb, x -> x = b)) AS cnt)), s -> s.cnt > 0)"
-        )
-        per_doc = hashed.select(
-            "lang", F.explode(F.expr(bucket_counts)).alias("bc")
-        ).select(
-            "lang",
-            F.col("bc.bucket").cast("long").alias("bucket"),
-            F.col("bc.cnt").cast("long").alias("cnt"),
-        )
-        # (n_tokens, n_docs) are BUILT-IN sums — JVM streaming-agg state
-        # (the streaming_lsh_candidate_buckets lesson), update mode.
-        emitted_stream = per_doc.groupBy("lang", "bucket").agg(
-            F.sum("cnt").cast("long").alias("n_tokens"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-        )
-        name = f"stream_fh_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-fh-")
-        emitted = run_stream_to_memory(
-            spark, emitted_stream, name, ckpt, output_mode="update"
-        )
-        final = emitted.groupBy("lang", "bucket").agg(
-            F.max("n_tokens").cast("long").alias("n_tokens"),
-            F.max("n_docs").cast("long").alias("n_docs"),
-        )
-        win = Window.partitionBy("lang").orderBy(
-            F.desc("n_tokens"), F.asc("bucket")
-        )
-        return (
-            final.withColumn("rnk", F.row_number().over(win).cast("long"))
-            .filter(F.col("rnk") <= FH_TOP)
-            .select("lang", "bucket", "n_tokens", "n_docs", "rnk")
-        )
-
-
-_register_streaming_feature_hashing_monitor()
+    )
+    per_doc = hashed.select(
+        "lang", F.explode(F.expr(bucket_counts)).alias("bc")
+    ).select(
+        "lang",
+        F.col("bc.bucket").cast("long").alias("bucket"),
+        F.col("bc.cnt").cast("long").alias("cnt"),
+    )
+    # (n_tokens, n_docs) are BUILT-IN sums — JVM streaming-agg state
+    # (the streaming_lsh_candidate_buckets lesson), update mode.
+    emitted_stream = per_doc.groupBy("lang", "bucket").agg(
+        F.sum("cnt").cast("long").alias("n_tokens"),
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+    )
+    emitted = run_stream_to_memory(spark, emitted_stream, output_mode="update")
+    final = emitted.groupBy("lang", "bucket").agg(
+        F.max("n_tokens").cast("long").alias("n_tokens"),
+        F.max("n_docs").cast("long").alias("n_docs"),
+    )
+    win = Window.partitionBy("lang").orderBy(
+        F.desc("n_tokens"), F.asc("bucket")
+    )
+    return (
+        final.withColumn("rnk", F.row_number().over(win).cast("long"))
+        .filter(F.col("rnk") <= FH_TOP)
+        .select("lang", "bucket", "n_tokens", "n_docs", "rnk")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4347,47 +3865,34 @@ _register_streaming_feature_hashing_monitor()
 # The non-splittable-gzip cost model is identical: one file = one task,
 # parallelism = shard count.
 # ---------------------------------------------------------------------------
-def _register_streaming_gzip_rollup() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.formats import _stage_gzip_jsonl
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_gzip_jsonl_rollup",
-        oracle="""
+@register(
+    "streaming_gzip_jsonl_rollup",
+    oracle="""
             SELECT event_type,
                    CAST(COUNT(*) AS BIGINT) AS n_rows,
                    CAST(SUM(CAST(ROUND(value * 100.0) AS BIGINT)) AS BIGINT)
                        AS sum_cents
             FROM events GROUP BY 1
         """,
-        tags=("streaming", "source-format", "gzip", "events"),
+    tags=("streaming", "source-format", "gzip", "events"),
+)
+def streaming_gzip_jsonl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    stage = _stage_gzip_jsonl(spark, sf_dir)
+    schema = (
+        "event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE"
     )
-    def streaming_gzip_jsonl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        stage = _stage_gzip_jsonl(spark, sf_dir)
-        schema = (
-            "event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE"
-        )
-        rows = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "*.jsonl.gz")
-            .json(stage)
-        )
-        agg = rows.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(F.round(F.col("value") * 100.0, 0).cast("long"))
-            .cast("long")
-            .alias("sum_cents"),
-        )
-        name = f"stream_gz_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-gz-")
-        return run_stream_to_memory(spark, agg, name, ckpt, output_mode="complete")
-
-
-_register_streaming_gzip_rollup()
+    rows = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "*.jsonl.gz")
+        .json(stage)
+    )
+    agg = rows.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_rows"),
+        F.sum(F.round(F.col("value") * 100.0, 0).cast("long"))
+        .cast("long")
+        .alias("sum_cents"),
+    )
+    return run_stream_to_memory(spark, agg, output_mode="complete")
 
 
 # ---------------------------------------------------------------------------
@@ -4398,64 +3903,48 @@ _register_streaming_gzip_rollup()
 # oracle is SHARED verbatim. The emission series is the drift alert a
 # traffic-composition monitor pages on.
 # ---------------------------------------------------------------------------
-def _register_streaming_type_entropy() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators._portable import idiv
-    from kafka_stream_job_spark.operators.text import _attach_iln
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["events_hourly_type_entropy"].oracle
-
-    @register(
-        "streaming_type_entropy_drift",
-        oracle=oracle,
-        tags=("streaming", "stateful", "entropy", "drift", "events"),
+@register(
+    "streaming_type_entropy_drift",
+    oracle=REGISTRY["events_hourly_type_entropy"].oracle,
+    tags=("streaming", "stateful", "entropy", "drift", "events"),
+)
+def streaming_type_entropy_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    events = stream_events(spark, sf_dir)
+    counted = events.groupBy(
+        F.date_trunc("hour", "ts").cast("string").alias("hour_ts"),
+        "event_type",
+    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
+    c = run_stream_to_memory(
+        spark, counted, output_mode="complete"
+    ).localCheckpoint(eager=False)  # tot and cw both branch from it
+    tot = c.groupBy("hour_ts").agg(
+        F.sum("c").cast("long").alias("n"),
+        F.count(F.lit(1)).cast("long").alias("n_types"),
     )
-    def streaming_type_entropy_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        events = stream_events(spark, sf_dir)
-        counted = events.groupBy(
-            F.date_trunc("hour", "ts").cast("string").alias("hour_ts"),
-            "event_type",
-        ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-        name = f"stream_entropy_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-entropy-")
-        c = run_stream_to_memory(
-            spark, counted, name, ckpt, output_mode="complete"
-        ).localCheckpoint(eager=False)  # tot and cw both branch from it
-        tot = c.groupBy("hour_ts").agg(
-            F.sum("c").cast("long").alias("n"),
-            F.count(F.lit(1)).cast("long").alias("n_types"),
+    cw = (
+        _attach_iln(spark, c, "c", "iln_c")
+        .groupBy("hour_ts")
+        .agg(
+            F.sum(F.col("c") * F.col("iln_c"))
+            .cast("long")
+            .alias("sum_c_iln")
         )
-        cw = (
-            _attach_iln(spark, c, "c", "iln_c")
-            .groupBy("hour_ts")
-            .agg(
-                F.sum(F.col("c") * F.col("iln_c"))
-                .cast("long")
-                .alias("sum_c_iln")
-            )
-        )
-        nw = _attach_iln(spark, tot, "n", "iln_n").select(
-            "hour_ts",
-            "n",
-            "n_types",
-            (F.col("n") * F.col("iln_n")).alias("n_iln_n"),
-        )
-        return nw.join(cw, "hour_ts").select(
-            "hour_ts",
-            F.col("n").alias("n_events"),
-            "n_types",
-            idiv(
-                (F.col("n_iln_n") - F.col("sum_c_iln")) * 2 + F.col("n"),
-                F.col("n") * 2,
-            ).alias("entropy_unats"),
-        )
-
-
-_register_streaming_type_entropy()
+    )
+    nw = _attach_iln(spark, tot, "n", "iln_n").select(
+        "hour_ts",
+        "n",
+        "n_types",
+        (F.col("n") * F.col("iln_n")).alias("n_iln_n"),
+    )
+    return nw.join(cw, "hour_ts").select(
+        "hour_ts",
+        F.col("n").alias("n_events"),
+        "n_types",
+        idiv(
+            (F.col("n_iln_n") - F.col("sum_c_iln")) * 2 + F.col("n"),
+            F.col("n") * 2,
+        ).alias("entropy_unats"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4466,69 +3955,53 @@ _register_streaming_type_entropy()
 # batch-side from the converged emission with the identical quantize-
 # then-sum discipline, so the oracle is SHARED verbatim.
 # ---------------------------------------------------------------------------
-def _register_streaming_seasonality_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["events_seasonality_strength"].oracle
-
-    @register(
-        "streaming_seasonality_monitor",
-        oracle=oracle,
-        tags=("streaming", "stateful", "seasonality", "events"),
+@register(
+    "streaming_seasonality_monitor",
+    oracle=REGISTRY["events_seasonality_strength"].oracle,
+    tags=("streaming", "stateful", "seasonality", "events"),
+)
+def streaming_seasonality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    events = stream_events(spark, sf_dir)
+    cents = F.round(F.col("value") * 100.0, 0).cast("long")
+    counted = events.select(
+        "event_type",
+        F.hour("ts").cast("long").alias("hod"),
+        cents.alias("cents"),
+    ).groupBy("event_type", "hod").agg(
+        F.count(F.lit(1)).cast("long").alias("n_g"),
+        F.sum("cents").cast("long").alias("s_g"),
+        F.sum(F.col("cents") * F.col("cents")).cast("long").alias("ss_g"),
     )
-    def streaming_seasonality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        events = stream_events(spark, sf_dir)
-        cents = F.round(F.col("value") * 100.0, 0).cast("long")
-        counted = events.select(
-            "event_type",
-            F.hour("ts").cast("long").alias("hod"),
-            cents.alias("cents"),
-        ).groupBy("event_type", "hod").agg(
-            F.count(F.lit(1)).cast("long").alias("n_g"),
-            F.sum("cents").cast("long").alias("s_g"),
-            F.sum(F.col("cents") * F.col("cents")).cast("long").alias("ss_g"),
+    g = run_stream_to_memory(spark, counted, output_mode="complete")
+    gq = g.select(
+        "event_type",
+        "n_g",
+        "s_g",
+        "ss_g",
+        F.round(
+            F.col("s_g").cast("double") * F.col("s_g") / F.col("n_g"), 0
         )
-        name = f"stream_season_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-season-")
-        g = run_stream_to_memory(
-            spark, counted, name, ckpt, output_mode="complete"
-        )
-        gq = g.select(
-            "event_type",
-            "n_g",
-            "s_g",
-            "ss_g",
-            F.round(
-                F.col("s_g").cast("double") * F.col("s_g") / F.col("n_g"), 0
-            )
-            .cast("long")
-            .alias("t_g"),
-        )
-        tot = gq.groupBy("event_type").agg(
-            F.sum("n_g").cast("long").alias("n"),
-            F.sum("s_g").cast("long").alias("s"),
-            F.sum("ss_g").cast("long").alias("ss"),
-            F.sum("t_g").cast("long").alias("sum_t"),
-            F.count(F.lit(1)).cast("long").alias("n_hours_of_day"),
-        )
-        nd = F.col("n").cast("double")
-        sd = F.col("s").cast("double")
-        eta2 = (nd * F.col("sum_t").cast("double") - sd * sd) / (
-            nd * F.col("ss").cast("double") - sd * sd
-        )
-        return tot.select(
-            "event_type",
-            "n",
-            "n_hours_of_day",
-            F.round(eta2 * 1000000.0, 0).cast("long").alias("eta2_micro"),
-        )
-
-
-_register_streaming_seasonality_monitor()
+        .cast("long")
+        .alias("t_g"),
+    )
+    tot = gq.groupBy("event_type").agg(
+        F.sum("n_g").cast("long").alias("n"),
+        F.sum("s_g").cast("long").alias("s"),
+        F.sum("ss_g").cast("long").alias("ss"),
+        F.sum("t_g").cast("long").alias("sum_t"),
+        F.count(F.lit(1)).cast("long").alias("n_hours_of_day"),
+    )
+    nd = F.col("n").cast("double")
+    sd = F.col("s").cast("double")
+    eta2 = (nd * F.col("sum_t").cast("double") - sd * sd) / (
+        nd * F.col("ss").cast("double") - sd * sd
+    )
+    return tot.select(
+        "event_type",
+        "n",
+        "n_hours_of_day",
+        F.round(eta2 * 1000000.0, 0).cast("long").alias("eta2_micro"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4541,98 +4014,75 @@ _register_streaming_seasonality_monitor()
 # decode work scales with the batch, state does not. Oracle SHARED
 # verbatim with the batch twin.
 # ---------------------------------------------------------------------------
-def _register_streaming_magic_sniffer() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.multimodal import (
-        PNG_SIG,
-        _bmp_encode_batches,
-        _gif_encode_batches,
-        _png_encode_batches,
-        decode_bmp_real,
-        decode_gif_real,
-        decode_png_real,
+@register(
+    "streaming_magic_sniffer",
+    oracle=REGISTRY["multimodal_magic_sniffer"].oracle,
+    tags=("streaming", "multimodal", "sniffing", "real-decode", "documents"),
+)
+def streaming_magic_sniffer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = (
+        stream_documents(spark, sf_dir)
+        .where(F.col("text").isNotNull())
+        .select("doc_id", "text")
+        .filter(F.length("text") > 0)
     )
-    from kafka_stream_job_spark.registry import REGISTRY, register
 
-    oracle = REGISTRY["multimodal_magic_sniffer"].oracle
+    def encode_batches(batches):
+        import pandas as pd
 
-    @register(
-        "streaming_magic_sniffer",
-        oracle=oracle,
-        tags=("streaming", "multimodal", "sniffing", "real-decode", "documents"),
+        for pdf in batches:
+            outs = []
+            for residue, enc in (
+                (0, _bmp_encode_batches),
+                (1, _png_encode_batches),
+                (2, _gif_encode_batches),
+            ):
+                sub = pdf[pdf["doc_id"] % 3 == residue]
+                if len(sub):
+                    outs.extend(enc(iter([sub])))
+            if outs:
+                yield pd.concat(outs, ignore_index=True)
+
+    def decode_batches(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = {"fmt": [], "n_pixels": [], "luma_milli": []}
+            for payload in pdf["payload"]:
+                blob = bytes(payload)
+                if blob[:2] == b"BM":
+                    got = decode_bmp_real(blob)
+                    fmt = "bmp"
+                    luma = (
+                        got["sum_r"] * 299
+                        + got["sum_g"] * 587
+                        + got["sum_b"] * 114
+                    )
+                elif blob[:8] == PNG_SIG:
+                    got = decode_png_real(blob)
+                    fmt = "png"
+                    luma = got["sum_luma"] * 1000
+                elif blob[:6] in (b"GIF87a", b"GIF89a"):
+                    got = decode_gif_real(blob)
+                    fmt = "gif"
+                    luma = got["sum_luma"] * 1000
+                else:
+                    raise ValueError(f"unknown magic {blob[:8]!r}")
+                rows["fmt"].append(fmt)
+                rows["n_pixels"].append(got["n_pixels"])
+                rows["luma_milli"].append(luma)
+            yield pd.DataFrame(rows)
+
+    blobs = docs.mapInPandas(encode_batches, "doc_id long, payload binary")
+    parsed = blobs.mapInPandas(
+        decode_batches, "fmt string, n_pixels long, luma_milli long"
     )
-    def streaming_magic_sniffer(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        docs = (
-            stream_documents(spark, sf_dir)
-            .where(F.col("text").isNotNull())
-            .select("doc_id", "text")
-            .filter(F.length("text") > 0)
-        )
-
-        def encode_batches(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                outs = []
-                for residue, enc in (
-                    (0, _bmp_encode_batches),
-                    (1, _png_encode_batches),
-                    (2, _gif_encode_batches),
-                ):
-                    sub = pdf[pdf["doc_id"] % 3 == residue]
-                    if len(sub):
-                        outs.extend(enc(iter([sub])))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        def decode_batches(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                rows = {"fmt": [], "n_pixels": [], "luma_milli": []}
-                for payload in pdf["payload"]:
-                    blob = bytes(payload)
-                    if blob[:2] == b"BM":
-                        got = decode_bmp_real(blob)
-                        fmt = "bmp"
-                        luma = (
-                            got["sum_r"] * 299
-                            + got["sum_g"] * 587
-                            + got["sum_b"] * 114
-                        )
-                    elif blob[:8] == PNG_SIG:
-                        got = decode_png_real(blob)
-                        fmt = "png"
-                        luma = got["sum_luma"] * 1000
-                    elif blob[:6] in (b"GIF87a", b"GIF89a"):
-                        got = decode_gif_real(blob)
-                        fmt = "gif"
-                        luma = got["sum_luma"] * 1000
-                    else:
-                        raise ValueError(f"unknown magic {blob[:8]!r}")
-                    rows["fmt"].append(fmt)
-                    rows["n_pixels"].append(got["n_pixels"])
-                    rows["luma_milli"].append(luma)
-                yield pd.DataFrame(rows)
-
-        blobs = docs.mapInPandas(encode_batches, "doc_id long, payload binary")
-        parsed = blobs.mapInPandas(
-            decode_batches, "fmt string, n_pixels long, luma_milli long"
-        )
-        agg = parsed.groupBy("fmt").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_pixels").cast("long").alias("total_pixels"),
-            F.sum("luma_milli").cast("long").alias("total_luma_milli"),
-        )
-        name = f"stream_sniff_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-sniff-")
-        return run_stream_to_memory(spark, agg, name, ckpt, output_mode="complete")
-
-
-_register_streaming_magic_sniffer()
+    agg = parsed.groupBy("fmt").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("n_pixels").cast("long").alias("total_pixels"),
+        F.sum("luma_milli").cast("long").alias("total_luma_milli"),
+    )
+    return run_stream_to_memory(spark, agg, output_mode="complete")
 
 
 # ---------------------------------------------------------------------------
@@ -4645,78 +4095,63 @@ _register_streaming_magic_sniffer()
 # converged emission, sharing the batch oracle verbatim. A live tail
 # monitor is how a marketplace notices whale behavior shifting.
 # ---------------------------------------------------------------------------
-def _register_streaming_hill_monitor() -> None:
-    import uuid
+@register(
+    "streaming_hill_tail_monitor",
+    oracle=_hill_oracle(),
+    tags=("streaming", "stateful", "heavy-tail", "order-stats", "events"),
+)
+def streaming_hill_tail_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from kafka_stream_job_spark.operators._portable import idiv
-    from kafka_stream_job_spark.operators.relational import HILL_K, _hill_oracle
-    from kafka_stream_job_spark.operators.text import _attach_iln
-    from kafka_stream_job_spark.registry import register
+    def update(key, pdfs, state):
+        import numpy as np
+        import pandas as pd
 
-    @register(
-        "streaming_hill_tail_monitor",
-        oracle=_hill_oracle(),
-        tags=("streaming", "stateful", "heavy-tail", "order-stats", "events"),
+        (top,) = state.get if state.exists else ([],)
+        top = list(top)
+        for pdf in pdfs:
+            v = pdf["value"].to_numpy(dtype="float64") * 100.0
+            cents = np.where(
+                v >= 0, np.floor(v + 0.5), np.ceil(v - 0.5)
+            ).astype("int64")
+            top.extend(int(c) for c in cents)
+            top.sort(reverse=True)
+            del top[HILL_K:]
+        state.update((top,))
+        yield pd.DataFrame({"k": [len(top)], "top": [top]})
+
+    emitted_stream = (
+        stream_events(spark, sf_dir)
+        .select(F.lit(0).alias("g"), "value")
+        .groupBy("g")
+        .applyInPandasWithState(
+            update,
+            outputStructType="k long, top array<long>",
+            stateStructType="top array<long>",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
-    def streaming_hill_tail_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        def update(key, pdfs, state):
-            import numpy as np
-            import pandas as pd
-
-            (top,) = state.get if state.exists else ([],)
-            top = list(top)
-            for pdf in pdfs:
-                v = pdf["value"].to_numpy(dtype="float64") * 100.0
-                cents = np.where(
-                    v >= 0, np.floor(v + 0.5), np.ceil(v - 0.5)
-                ).astype("int64")
-                top.extend(int(c) for c in cents)
-                top.sort(reverse=True)
-                del top[HILL_K:]
-            state.update((top,))
-            yield pd.DataFrame({"k": [len(top)], "top": [top]})
-
-        emitted_stream = (
-            stream_events(spark, sf_dir)
-            .select(F.lit(0).alias("g"), "value")
-            .groupBy("g")
-            .applyInPandasWithState(
-                update,
-                outputStructType="k long, top array<long>",
-                stateStructType="top array<long>",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        name = f"stream_hill_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-hill-")
-        emitted = run_stream_to_memory(spark, emitted_stream, name, ckpt)
-        final = (
-            emitted.agg(F.expr("max_by(top, k)").alias("top"))
-            .select(F.explode("top").alias("cents"))
-        )
-        w = _attach_iln(spark, final, "cents", "iln_c")
-        return w.agg(
-            F.count(F.lit(1)).cast("long").alias("k"),
-            F.min("cents").cast("long").alias("x_k_cents"),
-            F.sum("iln_c").cast("long").alias("_s"),
-            F.min("iln_c").cast("long").alias("_m"),
-            F.count(F.lit(1)).cast("long").alias("_n"),
-        ).select(
-            "k",
-            "x_k_cents",
-            idiv(
-                (F.col("_s") - F.col("_n") * F.col("_m")) * 2 + F.col("_n"),
-                F.col("_n") * 2,
-            ).alias("hill_unats"),
-        )
-
-
-_register_streaming_hill_monitor()
+    emitted = run_stream_to_memory(spark, emitted_stream)
+    final = (
+        emitted.agg(F.expr("max_by(top, k)").alias("top"))
+        .select(F.explode("top").alias("cents"))
+    )
+    w = _attach_iln(spark, final, "cents", "iln_c")
+    return w.agg(
+        F.count(F.lit(1)).cast("long").alias("k"),
+        F.min("cents").cast("long").alias("x_k_cents"),
+        F.sum("iln_c").cast("long").alias("_s"),
+        F.min("iln_c").cast("long").alias("_m"),
+        F.count(F.lit(1)).cast("long").alias("_n"),
+    ).select(
+        "k",
+        "x_k_cents",
+        idiv(
+            (F.col("_s") - F.col("_n") * F.col("_m")) * 2 + F.col("_n"),
+            F.col("_n") * 2,
+        ).alias("hill_unats"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4730,15 +4165,9 @@ _register_streaming_hill_monitor()
 # ">= gap", unlike the batch twin's "> gap" islands), so the gate pins
 # the built-in operator's real behavior, not an approximation of it.
 # ---------------------------------------------------------------------------
-def _register_streaming_bounce_rate() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators._portable import idiv
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_bounce_rate",
-        oracle="""
+@register(
+    "streaming_bounce_rate",
+    oracle="""
             WITH s AS (
                 SELECT user_id, ts, event_id, event_type,
                        CASE WHEN lag(ts) OVER w IS NULL
@@ -4772,52 +4201,43 @@ def _register_streaming_bounce_rate() -> None:
                         // (2 * COUNT(*)) AS BIGINT) AS bounce_bp
             FROM sess GROUP BY 1
         """,
-        tags=("streaming", "session-window", "bounce", "events"),
+    tags=("streaming", "session-window", "bounce", "events"),
+)
+def streaming_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    events = stream_events(spark, sf_dir)
+    sessions = (
+        events.withWatermark("ts", "2 hours")
+        .groupBy("user_id", F.session_window("ts", "30 minutes"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_events"),
+            F.min(
+                F.struct(
+                    F.col("ts").alias("ts"),
+                    F.col("event_id").alias("eid"),
+                    F.col("event_type").alias("t"),
+                )
+            )["t"].alias("entry_type"),
+        )
     )
-    def streaming_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        events = stream_events(spark, sf_dir)
-        sessions = (
-            events.withWatermark("ts", "2 hours")
-            .groupBy("user_id", F.session_window("ts", "30 minutes"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_events"),
-                F.min(
-                    F.struct(
-                        F.col("ts").alias("ts"),
-                        F.col("event_id").alias("eid"),
-                        F.col("event_type").alias("t"),
-                    )
-                )["t"].alias("entry_type"),
-            )
+    sess = run_stream_to_memory(spark, sessions, output_mode="complete")
+    return (
+        sess.groupBy("entry_type")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_sessions"),
+            F.sum(F.when(F.col("n_events") == 1, 1).otherwise(0))
+            .cast("long")
+            .alias("n_bounces"),
         )
-        name = f"stream_bounce_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-bounce-")
-        sess = run_stream_to_memory(
-            spark, sessions, name, ckpt, output_mode="complete"
+        .select(
+            "entry_type",
+            "n_sessions",
+            "n_bounces",
+            idiv(
+                F.col("n_bounces") * 2 * 10000 + F.col("n_sessions"),
+                F.col("n_sessions") * 2,
+            ).alias("bounce_bp"),
         )
-        return (
-            sess.groupBy("entry_type")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_sessions"),
-                F.sum(F.when(F.col("n_events") == 1, 1).otherwise(0))
-                .cast("long")
-                .alias("n_bounces"),
-            )
-            .select(
-                "entry_type",
-                "n_sessions",
-                "n_bounces",
-                idiv(
-                    F.col("n_bounces") * 2 * 10000 + F.col("n_sessions"),
-                    F.col("n_sessions") * 2,
-                ).alias("bounce_bp"),
-            )
-        )
-
-
-_register_streaming_bounce_rate()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4838,89 +4258,73 @@ _register_streaming_bounce_rate()
 # sort would fold out of event-time order at scale. Memory stays bounded
 # by per-user-per-batch volume (4 small columns), not corpus size.
 # ---------------------------------------------------------------------------
-def _register_streaming_self_excitation() -> None:
-    import uuid
+@register(
+    "streaming_self_excitation",
+    oracle=REGISTRY["events_self_excitation_ratio"].oracle,
+    tags=("streaming", "stateful", "point-process", "burst", "events"),
+)
+def streaming_self_excitation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from kafka_stream_job_spark.operators._portable import idiv
-    from kafka_stream_job_spark.operators.relational import SELF_EXCITE_SEC
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["events_self_excitation_ratio"].oracle
-
-    @register(
-        "streaming_self_excitation",
-        oracle=oracle,
-        tags=("streaming", "stateful", "point-process", "burst", "events"),
+    per_user = stream_events(spark, sf_dir).select(
+        "user_id",
+        "event_id",
+        "event_type",
+        F.unix_micros(F.col("ts")).alias("ts_us"),
     )
-    def streaming_self_excitation(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
+    horizon_us = SELF_EXCITE_SEC * 1_000_000
 
-        from pyspark.sql.streaming.state import GroupStateTimeout
+    def update(key, pdfs, state):
+        import pandas as pd
 
-        per_user = stream_events(spark, sf_dir).select(
-            "user_id",
-            "event_id",
-            "event_type",
-            F.unix_micros(F.col("ts")).alias("ts_us"),
-        )
-        horizon_us = SELF_EXCITE_SEC * 1_000_000
-
-        def update(key, pdfs, state):
-            import pandas as pd
-
-            last_ts, last_eid = state.get if state.exists else (None, None)
-            types: list[str] = []
-            trig: list[int] = []
-            chunks = [pdf for pdf in pdfs if len(pdf)]
-            if chunks:
-                batch = (
-                    chunks[0]
-                    if len(chunks) == 1
-                    else pd.concat(chunks, ignore_index=True)
-                )
-                batch = batch.sort_values(["ts_us", "event_id"])
-                for ts_us, eid, etype in zip(
-                    batch["ts_us"], batch["event_id"], batch["event_type"]
-                ):
-                    ts_us, eid = int(ts_us), int(eid)
-                    triggered = int(
-                        last_ts is not None and ts_us - last_ts <= horizon_us
-                    )
-                    types.append(etype)
-                    trig.append(triggered)
-                    last_ts, last_eid = ts_us, eid
-            if last_ts is not None:
-                state.update((int(last_ts), int(last_eid)))
-            yield pd.DataFrame(
-                {"event_type": types, "n": [1] * len(types), "triggered": trig}
+        last_ts, last_eid = state.get if state.exists else (None, None)
+        types: list[str] = []
+        trig: list[int] = []
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if chunks:
+            batch = (
+                chunks[0]
+                if len(chunks) == 1
+                else pd.concat(chunks, ignore_index=True)
             )
-
-        deltas = per_user.groupBy("user_id").applyInPandasWithState(
-            update,
-            outputStructType="event_type string, n long, triggered long",
-            stateStructType="last_ts_us long, last_event_id long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        name = f"stream_excite_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-excite-")
-        emitted = run_stream_to_memory(spark, deltas, name, ckpt)
-        agg = emitted.groupBy("event_type").agg(
-            F.sum("n").cast("long").alias("n_events"),
-            F.sum("triggered").cast("long").alias("n_triggered"),
-        )
-        return agg.select(
-            "event_type",
-            "n_events",
-            "n_triggered",
-            idiv(
-                F.col("n_triggered") * 2 * 10000 + F.col("n_events"),
-                F.col("n_events") * 2,
-            ).alias("triggered_bp"),
+            batch = batch.sort_values(["ts_us", "event_id"])
+            for ts_us, eid, etype in zip(
+                batch["ts_us"], batch["event_id"], batch["event_type"]
+            ):
+                ts_us, eid = int(ts_us), int(eid)
+                triggered = int(
+                    last_ts is not None and ts_us - last_ts <= horizon_us
+                )
+                types.append(etype)
+                trig.append(triggered)
+                last_ts, last_eid = ts_us, eid
+        if last_ts is not None:
+            state.update((int(last_ts), int(last_eid)))
+        yield pd.DataFrame(
+            {"event_type": types, "n": [1] * len(types), "triggered": trig}
         )
 
-
-_register_streaming_self_excitation()
+    deltas = per_user.groupBy("user_id").applyInPandasWithState(
+        update,
+        outputStructType="event_type string, n long, triggered long",
+        stateStructType="last_ts_us long, last_event_id long",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    emitted = run_stream_to_memory(spark, deltas)
+    agg = emitted.groupBy("event_type").agg(
+        F.sum("n").cast("long").alias("n_events"),
+        F.sum("triggered").cast("long").alias("n_triggered"),
+    )
+    return agg.select(
+        "event_type",
+        "n_events",
+        "n_triggered",
+        idiv(
+            F.col("n_triggered") * 2 * 10000 + F.col("n_events"),
+            F.col("n_events") * 2,
+        ).alias("triggered_bp"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4934,56 +4338,40 @@ _register_streaming_self_excitation()
 # vocabulary whose token-brand association shifts mid-ingest flags a
 # catalog pipeline regression before it lands in training data.
 # ---------------------------------------------------------------------------
-def _register_streaming_brand_mi_drift() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["part_name_brand_mi"].oracle
-
-    @register(
-        "streaming_brand_mi_drift",
-        oracle=oracle,
-        tags=("streaming", "stateful", "drift", "mutual-information", "part"),
+@register(
+    "streaming_brand_mi_drift",
+    oracle=REGISTRY["part_name_brand_mi"].oracle,
+    tags=("streaming", "stateful", "drift", "mutual-information", "part"),
+)
+def streaming_brand_mi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from kafka_stream_job_spark.operators.relational import (
+        name_brand_mi_assemble,
     )
-    def streaming_brand_mi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
 
-        from kafka_stream_job_spark.operators.relational import (
-            name_brand_mi_assemble,
+    src, stage = _stage_stream_source(
+        sf_dir, "part", "/tmp/ksj_stream_stage_part"
+    )
+    raw_schema = spark.read.parquet(src).schema
+    parts = spark.readStream.schema(raw_schema).parquet(stage)
+    counted = (
+        parts.select(
+            F.explode(F.split("p_name", " ")).alias("token"), "p_brand"
         )
-
-        src, stage = _stage_stream_source(
-            sf_dir, "part", "/tmp/ksj_stream_stage_part"
-        )
-        raw_schema = spark.read.parquet(src).schema
-        parts = spark.readStream.schema(raw_schema).parquet(stage)
-        counted = (
-            parts.select(
-                F.explode(F.split("p_name", " ")).alias("token"), "p_brand"
-            )
-            .groupBy("token", "p_brand")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        )
-        name = f"stream_brandmi_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-brandmi-")
-        emitted = run_stream_to_memory(
-            spark, counted, name, ckpt, output_mode="update"
-        )
-        # update-mode emissions: later batches supersede earlier rows for
-        # the same key; counts are monotone, so max(c) per key converges.
-        # localCheckpoint pins the converged counts: the assembly reads
-        # c_tb on BOTH sides of its marginal joins, and the memory-table
-        # lineage trips Spark's conflicting-reference resolution without it.
-        c_tb = (
-            emitted.groupBy("token", "p_brand")
-            .agg(F.max("c").cast("long").alias("c"))
-            .localCheckpoint(eager=False)
-        )
-        return name_brand_mi_assemble(spark, c_tb)
-
-
-_register_streaming_brand_mi_drift()
+        .groupBy("token", "p_brand")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
+    emitted = run_stream_to_memory(spark, counted, output_mode="update")
+    # update-mode emissions: later batches supersede earlier rows for
+    # the same key; counts are monotone, so max(c) per key converges.
+    # localCheckpoint pins the converged counts: the assembly reads
+    # c_tb on BOTH sides of its marginal joins, and the memory-table
+    # lineage trips Spark's conflicting-reference resolution without it.
+    c_tb = (
+        emitted.groupBy("token", "p_brand")
+        .agg(F.max("c").cast("long").alias("c"))
+        .localCheckpoint(eager=False)
+    )
+    return name_brand_mi_assemble(spark, c_tb)
 
 
 # ---------------------------------------------------------------------------
@@ -4997,64 +4385,43 @@ _register_streaming_brand_mi_drift()
 # frozen-threshold weight draw are shared verbatim with the batch op,
 # as is the oracle.
 # ---------------------------------------------------------------------------
-def _register_streaming_bootstrap_ci() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.pipeline import (
-        BOOT_B,
-        boot_ci_assemble,
-        boot_weight_col,
+@register(
+    "streaming_bootstrap_ci",
+    oracle=REGISTRY["orders_mean_value_bootstrap_ci"].oracle,
+    tags=("streaming", "stateful", "bootstrap", "statistics", "orders"),
+)
+def streaming_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
+    src, stage = _stage_stream_source(
+        sf_dir, "orders", "/tmp/ksj_stream_stage_orders"
     )
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["orders_mean_value_bootstrap_ci"].oracle
-
-    @register(
-        "streaming_bootstrap_ci",
-        oracle=oracle,
-        tags=("streaming", "stateful", "bootstrap", "statistics", "orders"),
+    raw_schema = spark.read.parquet(src).schema
+    orders = spark.readStream.schema(raw_schema).parquet(stage)
+    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
+    r = orders.select(
+        cents.alias("cents"),
+        *[
+            boot_weight_col(b, F.col("o_orderkey")).alias(f"w_{b}")
+            for b in range(BOOT_B)
+        ],
     )
-    def streaming_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        src, stage = _stage_stream_source(
-            sf_dir, "orders", "/tmp/ksj_stream_stage_orders"
-        )
-        raw_schema = spark.read.parquet(src).schema
-        orders = spark.readStream.schema(raw_schema).parquet(stage)
-        cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-        r = orders.select(
-            cents.alias("cents"),
-            *[
-                boot_weight_col(b, F.col("o_orderkey")).alias(f"w_{b}")
-                for b in range(BOOT_B)
-            ],
-        )
-        agg = r.groupBy().agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("cents").cast("long").alias("sum_cents"),
-            *[
-                x
-                for b in range(BOOT_B)
-                for x in (
-                    F.sum(F.col(f"w_{b}")).cast("long").alias(f"sw_{b}"),
-                    F.sum(F.col(f"w_{b}") * F.col("cents"))
-                    .cast("long")
-                    .alias(f"swx_{b}"),
-                )
-            ],
-        )
-        name = f"stream_bootci_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-bootci-")
-        emitted = run_stream_to_memory(
-            spark, agg, name, ckpt, output_mode="complete"
-        )
-        # complete-mode re-emissions: the converged row has max n
-        converged = emitted.orderBy(F.col("n").desc()).limit(1)
-        return boot_ci_assemble(converged)
-
-
-_register_streaming_bootstrap_ci()
+    agg = r.groupBy().agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("cents").cast("long").alias("sum_cents"),
+        *[
+            x
+            for b in range(BOOT_B)
+            for x in (
+                F.sum(F.col(f"w_{b}")).cast("long").alias(f"sw_{b}"),
+                F.sum(F.col(f"w_{b}") * F.col("cents"))
+                .cast("long")
+                .alias(f"swx_{b}"),
+            )
+        ],
+    )
+    emitted = run_stream_to_memory(spark, agg, output_mode="complete")
+    # complete-mode re-emissions: the converged row has max n
+    converged = emitted.orderBy(F.col("n").desc()).limit(1)
+    return boot_ci_assemble(converged)
 
 
 # ---------------------------------------------------------------------------
@@ -5068,54 +4435,35 @@ _register_streaming_bootstrap_ci()
 # McNemar skew flags rater-calibration drift mid-ingest, before a
 # poisoned label batch reaches training.
 # ---------------------------------------------------------------------------
-def _register_streaming_rater_drift() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.pipeline import (
-        RATER_DRIFT_ORACLE,
-        rater_ab_cols,
-        rater_drift_assemble,
+@register(
+    "streaming_rater_drift_monitor",
+    oracle=RATER_DRIFT_ORACLE,
+    tags=("streaming", "stateful", "agreement", "annotation",
+          "documents"),
+)
+def streaming_rater_drift_monitor(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    src, stage = _stage_stream_source(
+        sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
     )
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_rater_drift_monitor",
-        oracle=RATER_DRIFT_ORACLE,
-        tags=("streaming", "stateful", "agreement", "annotation",
-              "documents"),
+    raw_schema = spark.read.parquet(src).schema
+    docs = spark.readStream.schema(raw_schema).parquet(stage)
+    a, b = rater_ab_cols()
+    r = docs.select(a.alias("a"), b.alias("b"))
+    agg = r.groupBy().agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum(F.col("a") * F.col("b")).cast("long").alias("n11"),
+        F.sum(F.col("a") * (1 - F.col("b"))).cast("long").alias("n10"),
+        F.sum((1 - F.col("a")) * F.col("b")).cast("long").alias("n01"),
+        F.sum((1 - F.col("a")) * (1 - F.col("b")))
+        .cast("long")
+        .alias("n00"),
     )
-    def streaming_rater_drift_monitor(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        src, stage = _stage_stream_source(
-            sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
-        )
-        raw_schema = spark.read.parquet(src).schema
-        docs = spark.readStream.schema(raw_schema).parquet(stage)
-        a, b = rater_ab_cols()
-        r = docs.select(a.alias("a"), b.alias("b"))
-        agg = r.groupBy().agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.col("a") * F.col("b")).cast("long").alias("n11"),
-            F.sum(F.col("a") * (1 - F.col("b"))).cast("long").alias("n10"),
-            F.sum((1 - F.col("a")) * F.col("b")).cast("long").alias("n01"),
-            F.sum((1 - F.col("a")) * (1 - F.col("b")))
-            .cast("long")
-            .alias("n00"),
-        )
-        name = f"stream_raterdrift_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-raterdrift-")
-        emitted = run_stream_to_memory(
-            spark, agg, name, ckpt, output_mode="complete"
-        )
-        # complete-mode re-emissions: the converged row has max n
-        converged = emitted.orderBy(F.col("n").desc()).limit(1)
-        return rater_drift_assemble(converged)
-
-
-_register_streaming_rater_drift()
+    emitted = run_stream_to_memory(spark, agg, output_mode="complete")
+    # complete-mode re-emissions: the converged row has max n
+    converged = emitted.orderBy(F.col("n").desc()).limit(1)
+    return rater_drift_assemble(converged)
 
 
 # ---------------------------------------------------------------------------
@@ -5128,58 +4476,41 @@ _register_streaming_rater_drift()
 # keeps shifting mid-ingest means stratum variances have not converged
 # and labeling should wait.
 # ---------------------------------------------------------------------------
-def _register_streaming_neyman_allocation() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.pipeline import neyman_assemble
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["neyman_allocation_plan"].oracle
-
-    @register(
-        "streaming_neyman_allocation",
-        oracle=oracle,
-        tags=("streaming", "stateful", "sampling", "stratified",
-              "documents"),
+@register(
+    "streaming_neyman_allocation",
+    oracle=REGISTRY["neyman_allocation_plan"].oracle,
+    tags=("streaming", "stateful", "sampling", "stratified",
+          "documents"),
+)
+def streaming_neyman_allocation(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    src, stage = _stage_stream_source(
+        sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
     )
-    def streaming_neyman_allocation(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        src, stage = _stage_stream_source(
-            sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
+    raw_schema = spark.read.parquet(src).schema
+    docs = spark.readStream.schema(raw_schema).parquet(stage)
+    ln = F.length("text").cast("long")
+    m = docs.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum(ln).cast("long").alias("sum_len"),
+        F.sum(ln * ln).cast("long").alias("sum_len_sq"),
+    )
+    emitted = run_stream_to_memory(spark, m, output_mode="update")
+    # update-mode emissions: later batches supersede earlier rows for
+    # the same lang; all three moments are monotone, so max per key
+    # converges. localCheckpoint pins the converged moments — the
+    # assembly broadcasts their total back against the same lineage.
+    converged = (
+        emitted.groupBy("lang")
+        .agg(
+            F.max("n_docs").cast("long").alias("n_docs"),
+            F.max("sum_len").cast("long").alias("sum_len"),
+            F.max("sum_len_sq").cast("long").alias("sum_len_sq"),
         )
-        raw_schema = spark.read.parquet(src).schema
-        docs = spark.readStream.schema(raw_schema).parquet(stage)
-        ln = F.length("text").cast("long")
-        m = docs.groupBy("lang").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(ln).cast("long").alias("sum_len"),
-            F.sum(ln * ln).cast("long").alias("sum_len_sq"),
-        )
-        name = f"stream_neyman_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-neyman-")
-        emitted = run_stream_to_memory(
-            spark, m, name, ckpt, output_mode="update"
-        )
-        # update-mode emissions: later batches supersede earlier rows for
-        # the same lang; all three moments are monotone, so max per key
-        # converges. localCheckpoint pins the converged moments — the
-        # assembly broadcasts their total back against the same lineage.
-        converged = (
-            emitted.groupBy("lang")
-            .agg(
-                F.max("n_docs").cast("long").alias("n_docs"),
-                F.max("sum_len").cast("long").alias("sum_len"),
-                F.max("sum_len_sq").cast("long").alias("sum_len_sq"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        return neyman_assemble(converged)
-
-
-_register_streaming_neyman_allocation()
+        .localCheckpoint(eager=False)
+    )
+    return neyman_assemble(converged)
 
 
 # ---------------------------------------------------------------------------
@@ -5195,71 +4526,53 @@ _register_streaming_neyman_allocation()
 # re-ingesting duplicated content and the effective corpus has stopped
 # growing.
 # ---------------------------------------------------------------------------
-def _register_streaming_ess_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators._portable import idiv
-    from kafka_stream_job_spark.operators.pipeline import ess_assemble
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["corpus_weights_ess"].oracle
-
-    @register(
-        "streaming_ess_monitor",
-        oracle=oracle,
-        tags=("streaming", "stateful", "dedup", "weights", "documents"),
+@register(
+    "streaming_ess_monitor",
+    oracle=REGISTRY["corpus_weights_ess"].oracle,
+    tags=("streaming", "stateful", "dedup", "weights", "documents"),
+)
+def streaming_ess_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    src, stage = _stage_stream_source(
+        sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
     )
-    def streaming_ess_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        src, stage = _stage_stream_source(
-            sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
-        )
-        raw_schema = spark.read.parquet(src).schema
-        docs = spark.readStream.schema(raw_schema).parquet(stage)
-        fp = docs.select(
-            "source",
-            F.md5(
-                F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
-            ).alias("fingerprint"),
-        )
-        counted = fp.groupBy("fingerprint", "source").agg(
-            F.count(F.lit(1)).cast("long").alias("c_fs")
-        )
-        name = f"stream_ess_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-ess-")
-        emitted = run_stream_to_memory(
-            spark, counted, name, ckpt, output_mode="update"
-        )
-        # update-mode emissions converge per key at max(c_fs);
-        # localCheckpoint pins them — sizes joins the table against
-        # itself (per-fingerprint totals vs per-(fp, source) groups).
-        c_fs = (
-            emitted.groupBy("fingerprint", "source")
-            .agg(F.max("c_fs").cast("long").alias("c_fs"))
-            .localCheckpoint(eager=False)
-        )
-        sizes = c_fs.groupBy("fingerprint").agg(
-            F.sum("c_fs").cast("long").alias("c")
-        )
-        w = c_fs.join(sizes, "fingerprint").select(
-            "source",
-            "c_fs",
-            idiv(F.lit(1_000_000), F.col("c")).alias("w_ppm"),
-        )
-        g = w.groupBy("source").agg(
-            F.sum("c_fs").cast("long").alias("n_docs"),
-            F.sum(F.col("c_fs") * F.col("w_ppm"))
-            .cast("long")
-            .alias("sum_w_ppm"),
-            F.sum(F.col("c_fs") * F.col("w_ppm") * F.col("w_ppm"))
-            .cast("long")
-            .alias("sum_w2"),
-        )
-        return ess_assemble(g)
-
-
-_register_streaming_ess_monitor()
+    raw_schema = spark.read.parquet(src).schema
+    docs = spark.readStream.schema(raw_schema).parquet(stage)
+    fp = docs.select(
+        "source",
+        F.md5(
+            F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
+        ).alias("fingerprint"),
+    )
+    counted = fp.groupBy("fingerprint", "source").agg(
+        F.count(F.lit(1)).cast("long").alias("c_fs")
+    )
+    emitted = run_stream_to_memory(spark, counted, output_mode="update")
+    # update-mode emissions converge per key at max(c_fs);
+    # localCheckpoint pins them — sizes joins the table against
+    # itself (per-fingerprint totals vs per-(fp, source) groups).
+    c_fs = (
+        emitted.groupBy("fingerprint", "source")
+        .agg(F.max("c_fs").cast("long").alias("c_fs"))
+        .localCheckpoint(eager=False)
+    )
+    sizes = c_fs.groupBy("fingerprint").agg(
+        F.sum("c_fs").cast("long").alias("c")
+    )
+    w = c_fs.join(sizes, "fingerprint").select(
+        "source",
+        "c_fs",
+        idiv(F.lit(1_000_000), F.col("c")).alias("w_ppm"),
+    )
+    g = w.groupBy("source").agg(
+        F.sum("c_fs").cast("long").alias("n_docs"),
+        F.sum(F.col("c_fs") * F.col("w_ppm"))
+        .cast("long")
+        .alias("sum_w_ppm"),
+        F.sum(F.col("c_fs") * F.col("w_ppm") * F.col("w_ppm"))
+        .cast("long")
+        .alias("sum_w2"),
+    )
+    return ess_assemble(g)
 
 
 # ---------------------------------------------------------------------------
@@ -5275,121 +4588,98 @@ _register_streaming_ess_monitor()
 # A rising live fertility for one lang means the incoming mix is
 # drifting away from what the tokenizer was fit on.
 # ---------------------------------------------------------------------------
-def _register_streaming_unigram_fertility() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators._portable import idiv
-    from kafka_stream_job_spark.operators.text import (
-        UNI_BLOCK,
-        UNI_MAX_TOK,
-        _uni_best2,
-        _uni_spine_df,
+@register(
+    "streaming_unigram_fertility",
+    oracle=REGISTRY["tokenizer_unigram_fertility"].oracle,
+    tags=("streaming", "stateful", "tokenizer", "unigram", "documents"),
+)
+def streaming_unigram_fertility(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    src, stage = _stage_stream_source(
+        sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
     )
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["tokenizer_unigram_fertility"].oracle
-
-    @register(
-        "streaming_unigram_fertility",
-        oracle=oracle,
-        tags=("streaming", "stateful", "tokenizer", "unigram", "documents"),
-    )
-    def streaming_unigram_fertility(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        src, stage = _stage_stream_source(
-            sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
-        )
-        raw_schema = spark.read.parquet(src).schema
-        docs = spark.readStream.schema(raw_schema).parquet(stage)
-        norm = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
-        toks = docs.select(
-            "lang", F.explode(F.split(norm, " ")).alias("tok")
-        ).filter(F.col("tok") != "")
-        n_blocks = (
-            F.least(F.length("tok"), F.lit(UNI_MAX_TOK)) - 1
-        ) / UNI_BLOCK
-        blc_stream = (
-            toks.select(
-                "lang",
-                F.explode(F.sequence(F.lit(0), n_blocks.cast("int"))).alias(
-                    "k"
-                ),
-                "tok",
-            )
-            .select(
-                "lang",
-                F.col("k"),
-                F.col("tok")
-                .substr(F.col("k") * UNI_BLOCK + 1, F.lit(UNI_BLOCK))
-                .alias("block"),
-            )
-            .groupBy("lang", "block")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("c"),
-                # k=0 blocks are 1:1 with tokens — the same state row
-                # carries the per-lang token count, no second stream.
-                F.sum(F.when(F.col("k") == 0, 1).otherwise(0))
-                .cast("long")
-                .alias("c_tok"),
-            )
-        )
-        name = f"stream_unifert_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-unifert-")
-        emitted = run_stream_to_memory(
-            spark, blc_stream, name, ckpt, output_mode="update"
-        )
-        # update-mode emissions converge per key at max; localCheckpoint
-        # pins them — everything below joins this table against itself.
-        blc = (
-            emitted.groupBy("lang", "block")
-            .agg(
-                F.max("c").cast("long").alias("c"),
-                F.max("c_tok").cast("long").alias("c_tok"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        bcnt = blc.groupBy("block").agg(F.sum("c").cast("long").alias("c"))
-        spine = _uni_spine_df(spark)
-        _cands, _v0, best2 = _uni_best2(spark, bcnt, spine)
-        sp = spine.withColumnRenamed("mask", "s_mask")
-        ppb = (
-            best2.join(
-                F.broadcast(sp),
-                (F.length("block") == F.col("blen"))
-                & (F.col("mask") == F.col("s_mask")),
-            )
-            .groupBy("block")
-            .agg(F.count(F.lit(1)).cast("long").alias("np"))
-        )
-        langtok = blc.groupBy("lang").agg(
-            F.sum("c_tok").cast("long").alias("n_tokens")
-        )
-        langpieces = (
-            blc.join(ppb, "block")
-            .groupBy("lang")
-            .agg(
-                F.sum("c").cast("long").alias("n_blocks"),
-                F.sum(F.col("c") * F.col("np"))
-                .cast("long")
-                .alias("n_pieces"),
-            )
-        )
-        return langtok.join(langpieces, "lang").select(
+    raw_schema = spark.read.parquet(src).schema
+    docs = spark.readStream.schema(raw_schema).parquet(stage)
+    norm = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
+    toks = docs.select(
+        "lang", F.explode(F.split(norm, " ")).alias("tok")
+    ).filter(F.col("tok") != "")
+    n_blocks = (
+        F.least(F.length("tok"), F.lit(UNI_MAX_TOK)) - 1
+    ) / UNI_BLOCK
+    blc_stream = (
+        toks.select(
             "lang",
-            "n_tokens",
-            "n_blocks",
-            "n_pieces",
-            idiv(
-                F.col("n_pieces") * 2 * 10000 + F.col("n_tokens"),
-                2 * F.col("n_tokens"),
-            ).alias("fertility_bp"),
+            F.explode(F.sequence(F.lit(0), n_blocks.cast("int"))).alias(
+                "k"
+            ),
+            "tok",
         )
-
-
-_register_streaming_unigram_fertility()
+        .select(
+            "lang",
+            F.col("k"),
+            F.col("tok")
+            .substr(F.col("k") * UNI_BLOCK + 1, F.lit(UNI_BLOCK))
+            .alias("block"),
+        )
+        .groupBy("lang", "block")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("c"),
+            # k=0 blocks are 1:1 with tokens — the same state row
+            # carries the per-lang token count, no second stream.
+            F.sum(F.when(F.col("k") == 0, 1).otherwise(0))
+            .cast("long")
+            .alias("c_tok"),
+        )
+    )
+    emitted = run_stream_to_memory(spark, blc_stream, output_mode="update")
+    # update-mode emissions converge per key at max; localCheckpoint
+    # pins them — everything below joins this table against itself.
+    blc = (
+        emitted.groupBy("lang", "block")
+        .agg(
+            F.max("c").cast("long").alias("c"),
+            F.max("c_tok").cast("long").alias("c_tok"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    bcnt = blc.groupBy("block").agg(F.sum("c").cast("long").alias("c"))
+    spine = _uni_spine_df(spark)
+    _cands, _v0, best2 = _uni_best2(spark, bcnt, spine)
+    sp = spine.withColumnRenamed("mask", "s_mask")
+    ppb = (
+        best2.join(
+            F.broadcast(sp),
+            (F.length("block") == F.col("blen"))
+            & (F.col("mask") == F.col("s_mask")),
+        )
+        .groupBy("block")
+        .agg(F.count(F.lit(1)).cast("long").alias("np"))
+    )
+    langtok = blc.groupBy("lang").agg(
+        F.sum("c_tok").cast("long").alias("n_tokens")
+    )
+    langpieces = (
+        blc.join(ppb, "block")
+        .groupBy("lang")
+        .agg(
+            F.sum("c").cast("long").alias("n_blocks"),
+            F.sum(F.col("c") * F.col("np"))
+            .cast("long")
+            .alias("n_pieces"),
+        )
+    )
+    return langtok.join(langpieces, "lang").select(
+        "lang",
+        "n_tokens",
+        "n_blocks",
+        "n_pieces",
+        idiv(
+            F.col("n_pieces") * 2 * 10000 + F.col("n_tokens"),
+            2 * F.col("n_tokens"),
+        ).alias("fertility_bp"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5403,79 +4693,56 @@ _register_streaming_unigram_fertility()
 # keeps moving mid-ingest means the experiment has not converged and a
 # ship decision would be premature.
 # ---------------------------------------------------------------------------
-def _register_streaming_cuped_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators._portable import idiv
-    from kafka_stream_job_spark.operators.relational import (
-        CUPED_SPLIT,
-        cuped_arm_col,
-        cuped_assemble,
+@register(
+    "streaming_cuped_monitor",
+    oracle=REGISTRY["orders_cuped_adjustment"].oracle,
+    tags=("streaming", "stateful", "experimentation", "cuped",
+          "orders"),
+)
+def streaming_cuped_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    src, stage = _stage_stream_source(
+        sf_dir, "orders", "/tmp/ksj_stream_stage_orders"
     )
-    from kafka_stream_job_spark.registry import REGISTRY, register
-    from kafka_stream_job_spark.tables import load_table
-
-    oracle = REGISTRY["orders_cuped_adjustment"].oracle
-
-    @register(
-        "streaming_cuped_monitor",
-        oracle=oracle,
-        tags=("streaming", "stateful", "experimentation", "cuped",
-              "orders"),
+    raw_schema = spark.read.parquet(src).schema
+    orders = spark.readStream.schema(raw_schema).parquet(stage)
+    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
+    split = F.lit(CUPED_SPLIT).cast("timestamp_ntz")
+    spend_stream = orders.groupBy(
+        F.col("o_custkey").alias("k")
+    ).agg(
+        F.sum(F.when(F.col("o_orderdate") < split, cents).otherwise(0))
+        .cast("long")
+        .alias("xc"),
+        F.sum(F.when(F.col("o_orderdate") >= split, cents).otherwise(0))
+        .cast("long")
+        .alias("yc"),
     )
-    def streaming_cuped_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        src, stage = _stage_stream_source(
-            sf_dir, "orders", "/tmp/ksj_stream_stage_orders"
+    emitted = run_stream_to_memory(spark, spend_stream, output_mode="update")
+    # update-mode emissions converge per key at max (cent sums are
+    # monotone); the whole-dollar quantization happens on the
+    # CONVERGED totals, exactly like the batch op.
+    spend = (
+        emitted.groupBy("k")
+        .agg(
+            F.max("xc").cast("long").alias("xc"),
+            F.max("yc").cast("long").alias("yc"),
         )
-        raw_schema = spark.read.parquet(src).schema
-        orders = spark.readStream.schema(raw_schema).parquet(stage)
-        cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-        split = F.lit(CUPED_SPLIT).cast("timestamp_ntz")
-        spend_stream = orders.groupBy(
-            F.col("o_custkey").alias("k")
-        ).agg(
-            F.sum(F.when(F.col("o_orderdate") < split, cents).otherwise(0))
-            .cast("long")
-            .alias("xc"),
-            F.sum(F.when(F.col("o_orderdate") >= split, cents).otherwise(0))
-            .cast("long")
-            .alias("yc"),
+        .select(
+            "k",
+            idiv(F.col("xc"), 100).alias("x"),
+            idiv(F.col("yc"), 100).alias("y"),
         )
-        name = f"stream_cuped_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-cuped-")
-        emitted = run_stream_to_memory(
-            spark, spend_stream, name, ckpt, output_mode="update"
-        )
-        # update-mode emissions converge per key at max (cent sums are
-        # monotone); the whole-dollar quantization happens on the
-        # CONVERGED totals, exactly like the batch op.
-        spend = (
-            emitted.groupBy("k")
-            .agg(
-                F.max("xc").cast("long").alias("xc"),
-                F.max("yc").cast("long").alias("yc"),
-            )
-            .select(
-                "k",
-                idiv(F.col("xc"), 100).alias("x"),
-                idiv(F.col("yc"), 100).alias("y"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        customer = load_table(spark, sf_dir, "customer")
-        u = customer.join(
-            spend, customer["c_custkey"] == spend["k"], "left"
-        ).select(
-            cuped_arm_col().alias("arm"),
-            F.coalesce(F.col("x"), F.lit(0)).alias("x"),
-            F.coalesce(F.col("y"), F.lit(0)).alias("y"),
-        )
-        return cuped_assemble(u)
-
-
-_register_streaming_cuped_monitor()
+        .localCheckpoint(eager=False)
+    )
+    customer = load_table(spark, sf_dir, "customer")
+    u = customer.join(
+        spend, customer["c_custkey"] == spend["k"], "left"
+    ).select(
+        cuped_arm_col().alias("arm"),
+        F.coalesce(F.col("x"), F.lit(0)).alias("x"),
+        F.coalesce(F.col("y"), F.lit(0)).alias("y"),
+    )
+    return cuped_assemble(u)
 
 
 # ---------------------------------------------------------------------------
@@ -5541,110 +4808,90 @@ def _sprt_fold_ordered(st, batch, a, b, inc0, inc1):
     return (idx, llr, first_up, first_down, n_succ, last_ts, last_eid)
 
 
-def _register_streaming_sprt_monitor() -> None:
-    import uuid
+@register(
+    "streaming_sprt_monitor",
+    oracle=REGISTRY["events_sprt_monitor"].oracle,
+    tags=("streaming", "stateful", "experimentation", "sprt", "events"),
+)
+def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from kafka_stream_job_spark.operators.relational import (
-        _SPRT_A,
-        _SPRT_B,
-        _SPRT_INC0,
-        _SPRT_INC1,
+    obs = stream_events(spark, sf_dir).select(
+        F.lit(0).alias("g"),
+        F.unix_micros(F.col("ts")).alias("ts_us"),
+        "event_id",
+        F.when(F.col("event_type") == "purchase", 1)
+        .otherwise(0)
+        .alias("x"),
     )
-    from kafka_stream_job_spark.registry import REGISTRY, register
 
-    oracle = REGISTRY["events_sprt_monitor"].oracle
+    def update(key, pdfs, state):
+        import pandas as pd
 
-    @register(
-        "streaming_sprt_monitor",
-        oracle=oracle,
-        tags=("streaming", "stateful", "experimentation", "sprt", "events"),
-    )
-    def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        obs = stream_events(spark, sf_dir).select(
-            F.lit(0).alias("g"),
-            F.unix_micros(F.col("ts")).alias("ts_us"),
-            "event_id",
-            F.when(F.col("event_type") == "purchase", 1)
-            .otherwise(0)
-            .alias("x"),
+        st = (
+            tuple(state.get)
+            if state.exists
+            else (0, 0, 0, 0, 0, -(1 << 62), -(1 << 62))
+        )
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if chunks:
+            batch = (
+                chunks[0]
+                if len(chunks) == 1
+                else pd.concat(chunks, ignore_index=True)
+            )
+            st = _sprt_fold_ordered(
+                st, batch, _SPRT_A, _SPRT_B, _SPRT_INC0, _SPRT_INC1
+            )
+        state.update(tuple(int(v) for v in st))
+        idx, llr, first_up, first_down, n_succ = st[:5]
+        yield pd.DataFrame(
+            {
+                "n_events": [idx],
+                "n_success": [n_succ],
+                "llr_final_milli": [llr],
+                "first_up_idx": [first_up],
+                "first_down_idx": [first_down],
+            }
         )
 
-        def update(key, pdfs, state):
-            import pandas as pd
-
-            st = (
-                tuple(state.get)
-                if state.exists
-                else (0, 0, 0, 0, 0, -(1 << 62), -(1 << 62))
-            )
-            chunks = [pdf for pdf in pdfs if len(pdf)]
-            if chunks:
-                batch = (
-                    chunks[0]
-                    if len(chunks) == 1
-                    else pd.concat(chunks, ignore_index=True)
-                )
-                st = _sprt_fold_ordered(
-                    st, batch, _SPRT_A, _SPRT_B, _SPRT_INC0, _SPRT_INC1
-                )
-            state.update(tuple(int(v) for v in st))
-            idx, llr, first_up, first_down, n_succ = st[:5]
-            yield pd.DataFrame(
-                {
-                    "n_events": [idx],
-                    "n_success": [n_succ],
-                    "llr_final_milli": [llr],
-                    "first_up_idx": [first_up],
-                    "first_down_idx": [first_down],
-                }
-            )
-
-        walked = obs.groupBy("g").applyInPandasWithState(
-            update,
-            outputStructType=(
-                "n_events long, n_success long, llr_final_milli long, "
+    walked = obs.groupBy("g").applyInPandasWithState(
+        update,
+        outputStructType=(
+            "n_events long, n_success long, llr_final_milli long, "
                 "first_up_idx long, first_down_idx long"
-            ),
-            stateStructType=(
-                "idx long, llr long, first_up long, first_down long, "
+        ),
+        stateStructType=(
+            "idx long, llr long, first_up long, first_down long, "
                 "n_succ long, last_ts long, last_eid long"
+        ),
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    emitted = run_stream_to_memory(spark, walked)
+    # each micro-batch emits one cumulative row; the converged one
+    # has max n_events
+    final = emitted.orderBy(F.col("n_events").desc()).limit(1)
+    return final.select(
+        "n_events",
+        "n_success",
+        "llr_final_milli",
+        F.lit(_SPRT_A).cast("long").alias("upper_milli"),
+        F.lit(_SPRT_B).cast("long").alias("lower_milli"),
+        "first_up_idx",
+        "first_down_idx",
+        F.when(
+            (F.col("first_up_idx") > 0)
+            & (
+                (F.col("first_down_idx") == 0)
+                | (F.col("first_down_idx") > F.col("first_up_idx"))
             ),
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+            F.lit("accept_h1"),
         )
-        name = f"stream_sprt_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-sprt-")
-        emitted = run_stream_to_memory(spark, walked, name, ckpt)
-        # each micro-batch emits one cumulative row; the converged one
-        # has max n_events
-        final = emitted.orderBy(F.col("n_events").desc()).limit(1)
-        return final.select(
-            "n_events",
-            "n_success",
-            "llr_final_milli",
-            F.lit(_SPRT_A).cast("long").alias("upper_milli"),
-            F.lit(_SPRT_B).cast("long").alias("lower_milli"),
-            "first_up_idx",
-            "first_down_idx",
-            F.when(
-                (F.col("first_up_idx") > 0)
-                & (
-                    (F.col("first_down_idx") == 0)
-                    | (F.col("first_down_idx") > F.col("first_up_idx"))
-                ),
-                F.lit("accept_h1"),
-            )
-            .when(F.col("first_down_idx") > 0, F.lit("accept_h0"))
-            .otherwise(F.lit("continue"))
-            .alias("decision"),
-        )
-
-
-_register_streaming_sprt_monitor()
+        .when(F.col("first_down_idx") > 0, F.lit("accept_h0"))
+        .otherwise(F.lit("continue"))
+        .alias("decision"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5659,67 +4906,45 @@ _register_streaming_sprt_monitor()
 # job would ever see it. Oracle composed from the same
 # _haarw_level_sql pieces as the per-doc batch oracle.
 # ---------------------------------------------------------------------------
-def _register_streaming_wav_haar_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.multimodal import (
-        _WAV_HAAR_SCHEMA,
-        _haarw_lang_oracle,
-        _wav_haar_batches,
-        _wav_haar_encode_batches,
-        fused_encode_decode,
-        HAARW_FRAME,
+@register(
+    "streaming_wav_haar_monitor",
+    oracle=_haarw_lang_oracle(),
+    tags=("streaming", "stateful", "multimodal", "audio", "wavelet",
+          "documents"),
+)
+def streaming_wav_haar_monitor(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    src, stage = _stage_stream_source(
+        sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
     )
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_wav_haar_monitor",
-        oracle=_haarw_lang_oracle(),
-        tags=("streaming", "stateful", "multimodal", "audio", "wavelet",
-              "documents"),
+    raw_schema = spark.read.parquet(src).schema
+    docs = (
+        spark.readStream.schema(raw_schema)
+        .parquet(stage)
+        .select("doc_id", "lang", "text")
+        .filter(F.length("text") >= HAARW_FRAME)
     )
-    def streaming_wav_haar_monitor(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        src, stage = _stage_stream_source(
-            sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
-        )
-        raw_schema = spark.read.parquet(src).schema
-        docs = (
-            spark.readStream.schema(raw_schema)
-            .parquet(stage)
-            .select("doc_id", "lang", "text")
-            .filter(F.length("text") >= HAARW_FRAME)
-        )
-        per_doc = fused_encode_decode(
-            docs, _wav_haar_encode_batches, _wav_haar_batches, _WAV_HAAR_SCHEMA
-        )
-        rollup = per_doc.groupBy("lang").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_frames").cast("long").alias("n_frames"),
-            F.sum("e1").cast("long").alias("e1"),
-            F.sum("e2").cast("long").alias("e2"),
-            F.sum("e3").cast("long").alias("e3"),
-        )
-        name = f"stream_wavhaar_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-wavhaar-")
-        emitted = run_stream_to_memory(
-            spark, rollup, name, ckpt, output_mode="update"
-        )
-        # update-mode emissions converge per key at max (all five sums
-        # are monotone)
-        return emitted.groupBy("lang").agg(
-            F.max("n_docs").cast("long").alias("n_docs"),
-            F.max("n_frames").cast("long").alias("n_frames"),
-            F.max("e1").cast("long").alias("e1"),
-            F.max("e2").cast("long").alias("e2"),
-            F.max("e3").cast("long").alias("e3"),
-        )
-
-
-_register_streaming_wav_haar_monitor()
+    per_doc = fused_encode_decode(
+        docs, _wav_haar_encode_batches, _wav_haar_batches, _WAV_HAAR_SCHEMA
+    )
+    rollup = per_doc.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("n_frames").cast("long").alias("n_frames"),
+        F.sum("e1").cast("long").alias("e1"),
+        F.sum("e2").cast("long").alias("e2"),
+        F.sum("e3").cast("long").alias("e3"),
+    )
+    emitted = run_stream_to_memory(spark, rollup, output_mode="update")
+    # update-mode emissions converge per key at max (all five sums
+    # are monotone)
+    return emitted.groupBy("lang").agg(
+        F.max("n_docs").cast("long").alias("n_docs"),
+        F.max("n_frames").cast("long").alias("n_frames"),
+        F.max("e1").cast("long").alias("e1"),
+        F.max("e2").cast("long").alias("e2"),
+        F.max("e3").cast("long").alias("e3"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5730,74 +4955,52 @@ _register_streaming_wav_haar_monitor()
 # state. The rate is computed on the CONVERGED totals (summed pair
 # counts, not a mean of per-doc rates), exactly like the batch rollup.
 # ---------------------------------------------------------------------------
-def _register_streaming_wav_zcr_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators._portable import idiv
-    from kafka_stream_job_spark.operators.multimodal import (
-        _WAV_ZCR_SCHEMA,
-        _wav_haar_encode_batches,
-        _wav_zcr_batches,
-        _zcr_lang_oracle,
-        fused_encode_decode,
+@register(
+    "streaming_wav_zcr_monitor",
+    oracle=_zcr_lang_oracle(),
+    tags=("streaming", "stateful", "multimodal", "audio", "zcr",
+          "documents"),
+)
+def streaming_wav_zcr_monitor(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    src, stage = _stage_stream_source(
+        sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
     )
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_wav_zcr_monitor",
-        oracle=_zcr_lang_oracle(),
-        tags=("streaming", "stateful", "multimodal", "audio", "zcr",
-              "documents"),
+    raw_schema = spark.read.parquet(src).schema
+    docs = (
+        spark.readStream.schema(raw_schema)
+        .parquet(stage)
+        .select("doc_id", "lang", "text")
+        .filter(F.length("text") >= 2)
     )
-    def streaming_wav_zcr_monitor(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        src, stage = _stage_stream_source(
-            sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
-        )
-        raw_schema = spark.read.parquet(src).schema
-        docs = (
-            spark.readStream.schema(raw_schema)
-            .parquet(stage)
-            .select("doc_id", "lang", "text")
-            .filter(F.length("text") >= 2)
-        )
-        per_doc = fused_encode_decode(
-            docs, _wav_haar_encode_batches, _wav_zcr_batches, _WAV_ZCR_SCHEMA
-        )
-        rollup = per_doc.groupBy("lang").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_samples").cast("long").alias("n_samples"),
-            F.sum("n_crossings").cast("long").alias("n_crossings"),
-            F.sum(F.col("n_samples") - 1).cast("long").alias("n_pairs"),
-        )
-        name = f"stream_wavzcr_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-wavzcr-")
-        emitted = run_stream_to_memory(
-            spark, rollup, name, ckpt, output_mode="update"
-        )
-        # update-mode emissions converge per key at max (all four sums
-        # are monotone)
-        converged = emitted.groupBy("lang").agg(
-            F.max("n_docs").cast("long").alias("n_docs"),
-            F.max("n_samples").cast("long").alias("n_samples"),
-            F.max("n_crossings").cast("long").alias("n_crossings"),
-            F.max("n_pairs").cast("long").alias("n_pairs"),
-        )
-        return converged.select(
-            "lang",
-            "n_docs",
-            "n_samples",
-            "n_crossings",
-            idiv(F.col("n_crossings") * 10000, F.col("n_pairs")).alias(
-                "zcr_bp"
-            ),
-        )
-
-
-_register_streaming_wav_zcr_monitor()
+    per_doc = fused_encode_decode(
+        docs, _wav_haar_encode_batches, _wav_zcr_batches, _WAV_ZCR_SCHEMA
+    )
+    rollup = per_doc.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("n_samples").cast("long").alias("n_samples"),
+        F.sum("n_crossings").cast("long").alias("n_crossings"),
+        F.sum(F.col("n_samples") - 1).cast("long").alias("n_pairs"),
+    )
+    emitted = run_stream_to_memory(spark, rollup, output_mode="update")
+    # update-mode emissions converge per key at max (all four sums
+    # are monotone)
+    converged = emitted.groupBy("lang").agg(
+        F.max("n_docs").cast("long").alias("n_docs"),
+        F.max("n_samples").cast("long").alias("n_samples"),
+        F.max("n_crossings").cast("long").alias("n_crossings"),
+        F.max("n_pairs").cast("long").alias("n_pairs"),
+    )
+    return converged.select(
+        "lang",
+        "n_docs",
+        "n_samples",
+        "n_crossings",
+        idiv(F.col("n_crossings") * 10000, F.col("n_pairs")).alias(
+            "zcr_bp"
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5808,67 +5011,45 @@ _register_streaming_wav_zcr_monitor()
 # assembles post-stream through the SAME did_assemble as the batch op.
 # Oracle verbatim from the batch op.
 # ---------------------------------------------------------------------------
-def _register_streaming_did_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators._portable import idiv
-    from kafka_stream_job_spark.operators.relational import (
-        DID_SPLIT,
-        did_arm_col,
-        did_assemble,
+@register(
+    "streaming_did_monitor",
+    oracle=REGISTRY["orders_did_estimator"].oracle,
+    tags=("streaming", "stateful", "experimentation", "did", "orders"),
+)
+def streaming_did_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    src, stage = _stage_stream_source(
+        sf_dir, "orders", "/tmp/ksj_stream_stage_orders"
     )
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["orders_did_estimator"].oracle
-
-    @register(
-        "streaming_did_monitor",
-        oracle=oracle,
-        tags=("streaming", "stateful", "experimentation", "did", "orders"),
+    raw_schema = spark.read.parquet(src).schema
+    orders = spark.readStream.schema(raw_schema).parquet(stage)
+    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
+    split = F.lit(DID_SPLIT).cast("timestamp_ntz")
+    per_order = orders.select(
+        did_arm_col().alias("arm"),
+        F.when(F.col("o_orderdate") < split, "pre")
+        .otherwise("post")
+        .alias("period"),
+        cents.alias("cents"),
+        idiv(cents, 100).alias("d"),
     )
-    def streaming_did_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        src, stage = _stage_stream_source(
-            sf_dir, "orders", "/tmp/ksj_stream_stage_orders"
+    cells_stream = per_order.groupBy("arm", "period").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("cents").cast("long").alias("sum_cents"),
+        F.sum("d").cast("long").alias("sum_d"),
+        F.sum(F.col("d") * F.col("d")).cast("long").alias("sum_d2"),
+    )
+    emitted = run_stream_to_memory(spark, cells_stream, output_mode="update")
+    cells = (
+        emitted.groupBy("arm", "period")
+        .agg(
+            F.max("n").cast("long").alias("n"),
+            F.max("sum_cents").cast("long").alias("sum_cents"),
+            F.max("sum_d").cast("long").alias("sum_d"),
+            F.max("sum_d2").cast("long").alias("sum_d2"),
         )
-        raw_schema = spark.read.parquet(src).schema
-        orders = spark.readStream.schema(raw_schema).parquet(stage)
-        cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-        split = F.lit(DID_SPLIT).cast("timestamp_ntz")
-        per_order = orders.select(
-            did_arm_col().alias("arm"),
-            F.when(F.col("o_orderdate") < split, "pre")
-            .otherwise("post")
-            .alias("period"),
-            cents.alias("cents"),
-            idiv(cents, 100).alias("d"),
-        )
-        cells_stream = per_order.groupBy("arm", "period").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("cents").cast("long").alias("sum_cents"),
-            F.sum("d").cast("long").alias("sum_d"),
-            F.sum(F.col("d") * F.col("d")).cast("long").alias("sum_d2"),
-        )
-        name = f"stream_did_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-did-")
-        emitted = run_stream_to_memory(
-            spark, cells_stream, name, ckpt, output_mode="update"
-        )
-        cells = (
-            emitted.groupBy("arm", "period")
-            .agg(
-                F.max("n").cast("long").alias("n"),
-                F.max("sum_cents").cast("long").alias("sum_cents"),
-                F.max("sum_d").cast("long").alias("sum_d"),
-                F.max("sum_d2").cast("long").alias("sum_d2"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        return did_assemble(cells)
-
-
-_register_streaming_did_monitor()
+        .localCheckpoint(eager=False)
+    )
+    return did_assemble(cells)
 
 
 # ---------------------------------------------------------------------------
@@ -5879,47 +5060,28 @@ _register_streaming_did_monitor()
 # (monotone), and the whole decomposition assembles post-stream through
 # the SAME brier_assemble. Oracle verbatim from the batch op.
 # ---------------------------------------------------------------------------
-def _register_streaming_brier_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.relational import (
-        _BRIER_PER_USER_SQL,
-        _brier_oracle,
-        brier_assemble,
+@register(
+    "streaming_brier_monitor",
+    oracle=_brier_oracle(_BRIER_PER_USER_SQL),
+    tags=("streaming", "stateful", "ml", "calibration", "brier",
+          "events"),
+)
+def streaming_brier_monitor(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    events = stream_events(spark, sf_dir)
+    per_user_stream = events.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum((F.col("event_type") == "purchase").cast("long"))
+        .cast("long")
+        .alias("k"),
     )
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_brier_monitor",
-        oracle=_brier_oracle(_BRIER_PER_USER_SQL),
-        tags=("streaming", "stateful", "ml", "calibration", "brier",
-              "events"),
+    emitted = run_stream_to_memory(spark, per_user_stream, output_mode="update")
+    per_user = emitted.groupBy("user_id").agg(
+        F.max("n").cast("long").alias("n"),
+        F.max("k").cast("long").alias("k"),
     )
-    def streaming_brier_monitor(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        events = stream_events(spark, sf_dir)
-        per_user_stream = events.groupBy("user_id").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum((F.col("event_type") == "purchase").cast("long"))
-            .cast("long")
-            .alias("k"),
-        )
-        name = f"stream_brier_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-brier-")
-        emitted = run_stream_to_memory(
-            spark, per_user_stream, name, ckpt, output_mode="update"
-        )
-        per_user = emitted.groupBy("user_id").agg(
-            F.max("n").cast("long").alias("n"),
-            F.max("k").cast("long").alias("k"),
-        )
-        return brier_assemble(per_user)
-
-
-_register_streaming_brier_monitor()
+    return brier_assemble(per_user)
 
 
 # ---------------------------------------------------------------------------
@@ -5929,49 +5091,30 @@ _register_streaming_brier_monitor()
 # S / tie-corrected variance / z assembly runs post-stream through the
 # SAME mann_kendall_assemble as the batch op. Oracle verbatim.
 # ---------------------------------------------------------------------------
-def _register_streaming_mann_kendall_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.relational import (
-        _MK_DAILY_SQL,
-        _mann_kendall_oracle,
-        mann_kendall_assemble,
-    )
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_mann_kendall_monitor",
-        oracle=_mann_kendall_oracle(_MK_DAILY_SQL),
-        tags=("streaming", "stateful", "timeseries", "mann-kendall",
-              "events"),
-    )
-    def streaming_mann_kendall_monitor(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        events = stream_events(spark, sf_dir)
-        daily_stream = events.groupBy(
-            "event_type",
-            F.expr(
-                "datediff(cast(date_trunc('day', ts) as date), "
+@register(
+    "streaming_mann_kendall_monitor",
+    oracle=_mann_kendall_oracle(_MK_DAILY_SQL),
+    tags=("streaming", "stateful", "timeseries", "mann-kendall",
+          "events"),
+)
+def streaming_mann_kendall_monitor(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    events = stream_events(spark, sf_dir)
+    daily_stream = events.groupBy(
+        "event_type",
+        F.expr(
+            "datediff(cast(date_trunc('day', ts) as date), "
                 "date'1970-01-01')"
-            ).alias("d"),
-        ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-        name = f"stream_mk_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-mk-")
-        emitted = run_stream_to_memory(
-            spark, daily_stream, name, ckpt, output_mode="update"
-        )
-        daily = (
-            emitted.groupBy("event_type", "d")
-            .agg(F.max("c").cast("long").alias("c"))
-            .localCheckpoint(eager=False)
-        )
-        return mann_kendall_assemble(daily)
-
-
-_register_streaming_mann_kendall_monitor()
+        ).alias("d"),
+    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
+    emitted = run_stream_to_memory(spark, daily_stream, output_mode="update")
+    daily = (
+        emitted.groupBy("event_type", "d")
+        .agg(F.max("c").cast("long").alias("c"))
+        .localCheckpoint(eager=False)
+    )
+    return mann_kendall_assemble(daily)
 
 
 # ---------------------------------------------------------------------------
@@ -6059,33 +5202,18 @@ def runs_walk_emissions(events: DataFrame) -> DataFrame:
     )
 
 
-def _register_streaming_runs_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.relational import runs_report
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["events_runs_test"].oracle
-
-    @register(
-        "streaming_runs_monitor",
-        oracle=oracle,
-        tags=("streaming", "stateful", "stats", "runs-test", "events"),
-    )
-    def streaming_runs_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        walked = runs_walk_emissions(stream_events(spark, sf_dir))
-        name = f"stream_runs_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-runs-")
-        emitted = run_stream_to_memory(spark, walked, name, ckpt)
-        # each micro-batch emits one cumulative row; the converged one
-        # has max n
-        final = emitted.orderBy(F.col("n").desc()).limit(1)
-        return runs_report(final)
-
-
-_register_streaming_runs_monitor()
+@register(
+    "streaming_runs_monitor",
+    oracle=REGISTRY["events_runs_test"].oracle,
+    tags=("streaming", "stateful", "stats", "runs-test", "events"),
+)
+def streaming_runs_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    walked = runs_walk_emissions(stream_events(spark, sf_dir))
+    emitted = run_stream_to_memory(spark, walked)
+    # each micro-batch emits one cumulative row; the converged one
+    # has max n
+    final = emitted.orderBy(F.col("n").desc()).limit(1)
+    return runs_report(final)
 
 
 # ---------------------------------------------------------------------------
@@ -6096,38 +5224,19 @@ _register_streaming_runs_monitor()
 # broken randomizer while the experiment is still filling, not at
 # readout. Oracle verbatim from the batch op.
 # ---------------------------------------------------------------------------
-def _register_streaming_srm_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.relational import (
-        _SRM_USERS_SQL,
-        _srm_oracle,
-        srm_assemble,
+@register(
+    "streaming_srm_monitor",
+    oracle=_srm_oracle(_SRM_USERS_SQL),
+    tags=("streaming", "stateful", "experimentation", "srm", "events"),
+)
+def streaming_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    events = stream_events(spark, sf_dir)
+    per_user = events.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n")
     )
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "streaming_srm_monitor",
-        oracle=_srm_oracle(_SRM_USERS_SQL),
-        tags=("streaming", "stateful", "experimentation", "srm", "events"),
-    )
-    def streaming_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        events = stream_events(spark, sf_dir)
-        per_user = events.groupBy("user_id").agg(
-            F.count(F.lit(1)).cast("long").alias("n")
-        )
-        name = f"stream_srm_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-srm-")
-        emitted = run_stream_to_memory(
-            spark, per_user, name, ckpt, output_mode="update"
-        )
-        users = emitted.select("user_id").distinct()
-        return srm_assemble(users)
-
-
-_register_streaming_srm_monitor()
+    emitted = run_stream_to_memory(spark, per_user, output_mode="update")
+    users = emitted.select("user_id").distinct()
+    return srm_assemble(users)
 
 
 # ---------------------------------------------------------------------------
@@ -6138,43 +5247,23 @@ _register_streaming_srm_monitor()
 # shared permutation_assemble; nothing replica-specific ever enters the
 # state). Oracle verbatim from the batch op.
 # ---------------------------------------------------------------------------
-def _register_streaming_permutation_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.relational import (
-        perm_per_user_counts,
-        permutation_assemble,
+@register(
+    "streaming_permutation_monitor",
+    oracle=REGISTRY["events_permutation_test"].oracle,
+    tags=("streaming", "stateful", "experimentation", "permutation",
+          "events"),
+)
+def streaming_permutation_monitor(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    events = stream_events(spark, sf_dir)
+    per_user_stream = perm_per_user_counts(events)
+    emitted = run_stream_to_memory(spark, per_user_stream, output_mode="update")
+    per_user = emitted.groupBy("user_id").agg(
+        F.max("e").cast("long").alias("e"),
+        F.max("p").cast("long").alias("p"),
     )
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["events_permutation_test"].oracle
-
-    @register(
-        "streaming_permutation_monitor",
-        oracle=oracle,
-        tags=("streaming", "stateful", "experimentation", "permutation",
-              "events"),
-    )
-    def streaming_permutation_monitor(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        events = stream_events(spark, sf_dir)
-        per_user_stream = perm_per_user_counts(events)
-        name = f"stream_perm_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-perm-")
-        emitted = run_stream_to_memory(
-            spark, per_user_stream, name, ckpt, output_mode="update"
-        )
-        per_user = emitted.groupBy("user_id").agg(
-            F.max("e").cast("long").alias("e"),
-            F.max("p").cast("long").alias("p"),
-        )
-        return permutation_assemble(per_user)
-
-
-_register_streaming_permutation_monitor()
+    return permutation_assemble(per_user)
 
 
 # ---------------------------------------------------------------------------
@@ -6184,47 +5273,28 @@ _register_streaming_permutation_monitor()
 # FAR" while it is still filling. Shared power_mde_assemble; oracle
 # verbatim from the batch op.
 # ---------------------------------------------------------------------------
-def _register_streaming_power_mde_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.relational import (
-        power_mde_assemble,
+@register(
+    "streaming_power_mde_monitor",
+    oracle=REGISTRY["events_power_mde_plan"].oracle,
+    tags=("streaming", "stateful", "experimentation", "power",
+          "events"),
+)
+def streaming_power_mde_monitor(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    events = stream_events(spark, sf_dir)
+    counts_stream = events.groupBy(F.lit(0).alias("g")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_events"),
+        F.sum((F.col("event_type") == "purchase").cast("long"))
+        .cast("long")
+        .alias("n_purch"),
     )
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["events_power_mde_plan"].oracle
-
-    @register(
-        "streaming_power_mde_monitor",
-        oracle=oracle,
-        tags=("streaming", "stateful", "experimentation", "power",
-              "events"),
+    emitted = run_stream_to_memory(spark, counts_stream, output_mode="update")
+    c = emitted.agg(
+        F.max("n_events").cast("long").alias("n_events"),
+        F.max("n_purch").cast("long").alias("n_purch"),
     )
-    def streaming_power_mde_monitor(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        events = stream_events(spark, sf_dir)
-        counts_stream = events.groupBy(F.lit(0).alias("g")).agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum((F.col("event_type") == "purchase").cast("long"))
-            .cast("long")
-            .alias("n_purch"),
-        )
-        name = f"stream_mde_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-mde-")
-        emitted = run_stream_to_memory(
-            spark, counts_stream, name, ckpt, output_mode="update"
-        )
-        c = emitted.agg(
-            F.max("n_events").cast("long").alias("n_events"),
-            F.max("n_purch").cast("long").alias("n_purch"),
-        )
-        return power_mde_assemble(c)
-
-
-_register_streaming_power_mde_monitor()
+    return power_mde_assemble(c)
 
 
 # ---------------------------------------------------------------------------
@@ -6237,45 +5307,25 @@ _register_streaming_power_mde_monitor()
 # leaked eval document is detectable the moment its twin lands in a
 # different split, not at corpus-freeze time. Oracle verbatim.
 # ---------------------------------------------------------------------------
-def _register_streaming_split_leakage_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.pipeline import (
-        leakage_counters,
-        split_leakage_assemble,
+@register(
+    "streaming_split_leakage_monitor",
+    oracle=REGISTRY["split_leakage_audit"].oracle,
+    tags=("streaming", "stateful", "llm-pipeline", "leakage",
+          "documents"),
+)
+def streaming_split_leakage_monitor(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    docs = stream_documents(spark, sf_dir)
+    fps3_stream = leakage_counters(docs)
+    emitted = run_stream_to_memory(spark, fps3_stream, output_mode="update")
+    fps3 = emitted.groupBy("fp").agg(
+        *[
+            F.max(f"n_{s}").cast("long").alias(f"n_{s}")
+            for s in ("train", "val", "test")
+        ]
     )
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["split_leakage_audit"].oracle
-
-    @register(
-        "streaming_split_leakage_monitor",
-        oracle=oracle,
-        tags=("streaming", "stateful", "llm-pipeline", "leakage",
-              "documents"),
-    )
-    def streaming_split_leakage_monitor(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        docs = stream_documents(spark, sf_dir)
-        fps3_stream = leakage_counters(docs)
-        name = f"stream_leak_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-leak-")
-        emitted = run_stream_to_memory(
-            spark, fps3_stream, name, ckpt, output_mode="update"
-        )
-        fps3 = emitted.groupBy("fp").agg(
-            *[
-                F.max(f"n_{s}").cast("long").alias(f"n_{s}")
-                for s in ("train", "val", "test")
-            ]
-        )
-        return split_leakage_assemble(fps3)
-
-
-_register_streaming_split_leakage_monitor()
+    return split_leakage_assemble(fps3)
 
 
 # ---------------------------------------------------------------------------
@@ -6286,42 +5336,25 @@ _register_streaming_split_leakage_monitor()
 # nbd_assemble. The purchase-frequency model refreshes while orders are
 # still arriving. Oracle verbatim from the batch op.
 # ---------------------------------------------------------------------------
-def _register_streaming_nbd_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.relational import nbd_assemble
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["basket_size_nbd_fit"].oracle
-
-    @register(
-        "streaming_nbd_monitor",
-        oracle=oracle,
-        tags=("streaming", "stateful", "nbd", "stats", "orders"),
+@register(
+    "streaming_nbd_monitor",
+    oracle=REGISTRY["basket_size_nbd_fit"].oracle,
+    tags=("streaming", "stateful", "nbd", "stats", "orders"),
+)
+def streaming_nbd_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    src, stage = _stage_stream_source(
+        sf_dir, "orders", "/tmp/ksj_stream_stage_orders"
     )
-    def streaming_nbd_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        src, stage = _stage_stream_source(
-            sf_dir, "orders", "/tmp/ksj_stream_stage_orders"
-        )
-        raw_schema = spark.read.parquet(src).schema
-        orders = spark.readStream.schema(raw_schema).parquet(stage)
-        per_cust = orders.groupBy("o_custkey").agg(
-            F.count(F.lit(1)).cast("long").alias("k")
-        )
-        name = f"stream_nbd_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-nbd-")
-        emitted = run_stream_to_memory(
-            spark, per_cust, name, ckpt, output_mode="update"
-        )
-        k = emitted.groupBy("o_custkey").agg(
-            F.max("k").cast("long").alias("k")
-        )
-        return nbd_assemble(k)
-
-
-_register_streaming_nbd_monitor()
+    raw_schema = spark.read.parquet(src).schema
+    orders = spark.readStream.schema(raw_schema).parquet(stage)
+    per_cust = orders.groupBy("o_custkey").agg(
+        F.count(F.lit(1)).cast("long").alias("k")
+    )
+    emitted = run_stream_to_memory(spark, per_cust, output_mode="update")
+    k = emitted.groupBy("o_custkey").agg(
+        F.max("k").cast("long").alias("k")
+    )
+    return nbd_assemble(k)
 
 
 # ---------------------------------------------------------------------------
@@ -6334,41 +5367,21 @@ _register_streaming_nbd_monitor()
 # min hour, so the stream never needs a global min mid-flight. Oracle
 # verbatim from the batch op.
 # ---------------------------------------------------------------------------
-def _register_streaming_ccf_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.relational import (
-        ccf_assemble,
-        ccf_hourly_counts,
+@register(
+    "streaming_ccf_monitor",
+    oracle=REGISTRY["events_ccf_count_value"].oracle,
+    tags=("streaming", "stateful", "timeseries", "correlation",
+          "events"),
+)
+def streaming_ccf_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    events = stream_events(spark, sf_dir)
+    spine = ccf_hourly_counts(events)
+    emitted = run_stream_to_memory(spark, spine, output_mode="update")
+    hourly = emitted.groupBy("event_type", "hour_us").agg(
+        F.max("c").cast("long").alias("c"),
+        F.max("s").cast("long").alias("s"),
     )
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["events_ccf_count_value"].oracle
-
-    @register(
-        "streaming_ccf_monitor",
-        oracle=oracle,
-        tags=("streaming", "stateful", "timeseries", "correlation",
-              "events"),
-    )
-    def streaming_ccf_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        events = stream_events(spark, sf_dir)
-        spine = ccf_hourly_counts(events)
-        name = f"stream_ccf_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-ccf-")
-        emitted = run_stream_to_memory(
-            spark, spine, name, ckpt, output_mode="update"
-        )
-        hourly = emitted.groupBy("event_type", "hour_us").agg(
-            F.max("c").cast("long").alias("c"),
-            F.max("s").cast("long").alias("s"),
-        )
-        return ccf_assemble(spark, hourly)
-
-
-_register_streaming_ccf_monitor()
+    return ccf_assemble(spark, hourly)
 
 
 # ---------------------------------------------------------------------------
@@ -6381,40 +5394,20 @@ _register_streaming_ccf_monitor()
 # assemble post-stream through the SAME ttfp_assemble. Oracle verbatim
 # from the batch op.
 # ---------------------------------------------------------------------------
-def _register_streaming_ttfp_monitor() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.relational import (
-        ttfp_assemble,
-        ttfp_per_user,
+@register(
+    "streaming_ttfp_monitor",
+    oracle=REGISTRY["user_time_to_first_purchase"].oracle,
+    tags=("streaming", "stateful", "funnel", "activation", "events"),
+)
+def streaming_ttfp_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    events = stream_events(spark, sf_dir)
+    per_user = ttfp_per_user(events)
+    emitted = run_stream_to_memory(spark, per_user, output_mode="update")
+    u = emitted.groupBy("user_id").agg(
+        F.min("first_us").alias("first_us"),
+        F.min("first_p_us").alias("first_p_us"),
     )
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["user_time_to_first_purchase"].oracle
-
-    @register(
-        "streaming_ttfp_monitor",
-        oracle=oracle,
-        tags=("streaming", "stateful", "funnel", "activation", "events"),
-    )
-    def streaming_ttfp_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
-        events = stream_events(spark, sf_dir)
-        per_user = ttfp_per_user(events)
-        name = f"stream_ttfp_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-ttfp-")
-        emitted = run_stream_to_memory(
-            spark, per_user, name, ckpt, output_mode="update"
-        )
-        u = emitted.groupBy("user_id").agg(
-            F.min("first_us").alias("first_us"),
-            F.min("first_p_us").alias("first_p_us"),
-        )
-        return ttfp_assemble(u)
-
-
-_register_streaming_ttfp_monitor()
+    return ttfp_assemble(u)
 
 
 # ---------------------------------------------------------------------------
@@ -6437,14 +5430,9 @@ _register_streaming_ttfp_monitor()
 RETAIN_N = 2  # minBatchesToRetain for the audit policy
 
 
-def _register_checkpoint_retention_audit() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.registry import register
-
-    @register(
-        "checkpoint_retention_audit",
-        oracle=f"""
+@register(
+    "checkpoint_retention_audit",
+    oracle=f"""
             WITH w AS (
                 SELECT (epoch_us(MAX(ts)) // 1000) - 3600000 AS wm FROM events
             ),
@@ -6463,80 +5451,74 @@ def _register_checkpoint_retention_audit() -> None:
                        OVER (ORDER BY batch_id), -1) AS wm_advanced
             FROM b
         """,
-        tags=("streaming", "checkpoint", "maintenance", "retention"),
+    tags=("streaming", "checkpoint", "maintenance", "retention"),
+)
+def checkpoint_retention_audit(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import tempfile
+
+    from pyspark.sql import Window
+
+    from kafka_stream_job_spark.sources.commitlog import (
+        register_commitlog_source,
     )
-    def checkpoint_retention_audit(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
+    from kafka_stream_job_spark.sources.offsetlog import (
+        register_offsetlog_source,
+    )
 
-        from pyspark.sql import Window
-
-        from kafka_stream_job_spark.sources.commitlog import (
-            register_commitlog_source,
+    register_offsetlog_source(spark)
+    register_commitlog_source(spark)
+    stage = _stage_late_replay(sf_dir)
+    ckpt = tempfile.mkdtemp(prefix="ksj-retention-")
+    run_stream_to_memory(
+        spark,
+        late_drop_rollup_stream(spark, stage),
+        checkpoint_dir=ckpt,
+    )
+    planned = (
+        spark.read.format("ksj_offsetlog")
+        .option("path", ckpt)
+        .load()
+        .select("batch_id", F.col("watermark_ms").alias("planned_wm_ms"))
+    )
+    committed = (
+        spark.read.format("ksj_commitlog")
+        .option("path", ckpt)
+        .load()
+        .select("batch_id", F.lit(True).alias("committed"))
+    )
+    joined = planned.join(F.broadcast(committed), "batch_id", "left")
+    frontier = joined.agg(
+        F.max(F.when(F.col("committed"), F.col("batch_id"))).alias(
+            "last_committed"
         )
-        from kafka_stream_job_spark.sources.offsetlog import (
-            register_offsetlog_source,
+    )
+    keep_from = F.col("last_committed") - RETAIN_N + 1
+    return (
+        joined.crossJoin(F.broadcast(frontier))
+        .select(
+            "batch_id",
+            F.coalesce(F.col("committed"), F.lit(False)).alias(
+                "committed"
+            ),
+            "planned_wm_ms",
+            (F.col("batch_id") == F.col("last_committed")).alias(
+                "is_resume_point"
+            ),
+            (F.col("batch_id") >= keep_from).alias("retained"),
+            (F.col("batch_id") < keep_from).alias("purgeable"),
+            (
+                F.col("planned_wm_ms")
+                > F.coalesce(
+                    F.lag("planned_wm_ms").over(
+                        Window.orderBy("batch_id")
+                    ),
+                    F.lit(-1),
+                )
+            ).alias("wm_advanced"),
         )
-
-        register_offsetlog_source(spark)
-        register_commitlog_source(spark)
-        stage = _stage_late_replay(sf_dir)
-        name = f"retention_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-retention-")
-        run_stream_to_memory(
-            spark,
-            late_drop_rollup_stream(spark, stage),
-            name,
-            ckpt,
-            output_mode="append",
-        )
-        planned = (
-            spark.read.format("ksj_offsetlog")
-            .option("path", ckpt)
-            .load()
-            .select("batch_id", F.col("watermark_ms").alias("planned_wm_ms"))
-        )
-        committed = (
-            spark.read.format("ksj_commitlog")
-            .option("path", ckpt)
-            .load()
-            .select("batch_id", F.lit(True).alias("committed"))
-        )
-        joined = planned.join(F.broadcast(committed), "batch_id", "left")
-        frontier = joined.agg(
-            F.max(F.when(F.col("committed"), F.col("batch_id"))).alias(
-                "last_committed"
-            )
-        )
-        keep_from = F.col("last_committed") - RETAIN_N + 1
-        return (
-            joined.crossJoin(F.broadcast(frontier))
-            .select(
-                "batch_id",
-                F.coalesce(F.col("committed"), F.lit(False)).alias(
-                    "committed"
-                ),
-                "planned_wm_ms",
-                (F.col("batch_id") == F.col("last_committed")).alias(
-                    "is_resume_point"
-                ),
-                (F.col("batch_id") >= keep_from).alias("retained"),
-                (F.col("batch_id") < keep_from).alias("purgeable"),
-                (
-                    F.col("planned_wm_ms")
-                    > F.coalesce(
-                        F.lag("planned_wm_ms").over(
-                            Window.orderBy("batch_id")
-                        ),
-                        F.lit(-1),
-                    )
-                ).alias("wm_advanced"),
-            )
-        )
-
-
-_register_checkpoint_retention_audit()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -6549,68 +5531,44 @@ _register_checkpoint_retention_audit()
 # streaming dedup service runs while documents are still arriving.
 # Oracle verbatim from the batch op.
 # ---------------------------------------------------------------------------
-def _register_streaming_lsh_index_maintenance() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.dedup import (
-        MINHASH_A,
-        MINHASH_B,
-        MINHASH_P,
-        NUM_HASHES,
+@register(
+    "streaming_lsh_index_maintenance",
+    oracle=REGISTRY["dedup_lsh_index_maintenance"].oracle,
+    tags=("streaming", "stateful", "dedup", "lsh", "index", "documents"),
+)
+def streaming_lsh_index_maintenance(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    # repartition after the single-split replay source: the heavy
+    # shingle→md5 explode otherwise serializes in one task (same fix
+    # as streaming_lsh_candidate_buckets — guide §2.5)
+    docs = stream_documents(spark, sf_dir).repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    # r13: per-doc signatures from the shared Arrow body; the
+    # stateful doc-keyed aggregate keeps its replay semantics (min
+    # distributes: min across appearances of finished sigs == min
+    # over the union of shingle hashes the old explode carried).
+    staged = docs.where(F.col("text").isNotNull()).select(
+        "doc_id", "text"
+    ).mapInArrow(
         _minhash_sig_batches,
-        lsh_index_report,
+        "doc_id long, " + ", ".join(f"h{s} long" for s in range(NUM_HASHES)),
     )
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["dedup_lsh_index_maintenance"].oracle
-
-    @register(
-        "streaming_lsh_index_maintenance",
-        oracle=oracle,
-        tags=("streaming", "stateful", "dedup", "lsh", "index", "documents"),
+    per_doc = staged.groupBy("doc_id").agg(
+        *[F.min(f"h{s}").alias(f"h{s}") for s in range(NUM_HASHES)]
     )
-    def streaming_lsh_index_maintenance(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        # repartition after the single-split replay source: the heavy
-        # shingle→md5 explode otherwise serializes in one task (same fix
-        # as streaming_lsh_candidate_buckets — guide §2.5)
-        docs = stream_documents(spark, sf_dir).repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        # r13: per-doc signatures from the shared Arrow body; the
-        # stateful doc-keyed aggregate keeps its replay semantics (min
-        # distributes: min across appearances of finished sigs == min
-        # over the union of shingle hashes the old explode carried).
-        staged = docs.where(F.col("text").isNotNull()).select(
-            "doc_id", "text"
-        ).mapInArrow(
-            _minhash_sig_batches,
-            "doc_id long, " + ", ".join(f"h{s} long" for s in range(NUM_HASHES)),
-        )
-        per_doc = staged.groupBy("doc_id").agg(
-            *[F.min(f"h{s}").alias(f"h{s}") for s in range(NUM_HASHES)]
-        )
-        name = f"stream_lshidx_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-lshidx-")
-        emitted = run_stream_to_memory(
-            spark, per_doc, name, ckpt, output_mode="update"
-        )
-        # eager checkpoint: the report self-joins several branches of
-        # this frame; a memory-sink lineage trips Catalyst's conflicting-
-        # references guard, a materialized LogicalRDD (same shape as the
-        # batch op's table scan) does not
-        sigs = emitted.groupBy("doc_id").agg(
-            *[F.min(f"h{s}").alias(f"h{s}") for s in range(NUM_HASHES)]
-        ).localCheckpoint()
-        # null-text docs emit no signature and no postings on either
-        # engine, so the signature doc_ids ARE the relevant universe
-        return lsh_index_report(sigs, sigs.select("doc_id"))
-
-
-_register_streaming_lsh_index_maintenance()
+    emitted = run_stream_to_memory(spark, per_doc, output_mode="update")
+    # eager checkpoint: the report self-joins several branches of
+    # this frame; a memory-sink lineage trips Catalyst's conflicting-
+    # references guard, a materialized LogicalRDD (same shape as the
+    # batch op's table scan) does not
+    sigs = emitted.groupBy("doc_id").agg(
+        *[F.min(f"h{s}").alias(f"h{s}") for s in range(NUM_HASHES)]
+    ).localCheckpoint()
+    # null-text docs emit no signature and no postings on either
+    # engine, so the signature doc_ids ARE the relevant universe
+    return lsh_index_report(sigs, sigs.select("doc_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -6622,42 +5580,23 @@ _register_streaming_lsh_index_maintenance()
 # curation_funnel_report. The corpus-hygiene dashboard refreshes while
 # the crawl is still landing. Oracle verbatim from the batch op.
 # ---------------------------------------------------------------------------
-def _register_streaming_curation_funnel() -> None:
-    import uuid
-
-    from kafka_stream_job_spark.operators.pipeline import (
-        curation_funnel_report,
+@register(
+    "streaming_curation_funnel",
+    oracle=REGISTRY["text_curation_funnel"].oracle,
+    tags=("streaming", "stateful", "text", "funnel", "curation",
+          "documents"),
+)
+def streaming_curation_funnel(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    docs = stream_documents(spark, sf_dir)
+    per_doc = docs.groupBy("doc_id").agg(
+        F.max("text").alias("text"), F.max("lang").alias("lang")
     )
-    from kafka_stream_job_spark.registry import REGISTRY, register
-
-    oracle = REGISTRY["text_curation_funnel"].oracle
-
-    @register(
-        "streaming_curation_funnel",
-        oracle=oracle,
-        tags=("streaming", "stateful", "text", "funnel", "curation",
-              "documents"),
-    )
-    def streaming_curation_funnel(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import tempfile
-
-        docs = stream_documents(spark, sf_dir)
-        per_doc = docs.groupBy("doc_id").agg(
-            F.max("text").alias("text"), F.max("lang").alias("lang")
-        )
-        name = f"stream_curate_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ksj-stream-curate-")
-        emitted = run_stream_to_memory(
-            spark, per_doc, name, ckpt, output_mode="update"
-        )
-        # eager checkpoint — same conflicting-references guard note as
-        # the LSH index twin above
-        converged = emitted.groupBy("doc_id").agg(
-            F.max("text").alias("text"), F.max("lang").alias("lang")
-        ).localCheckpoint()
-        return curation_funnel_report(converged)
-
-
-_register_streaming_curation_funnel()
+    emitted = run_stream_to_memory(spark, per_doc, output_mode="update")
+    # eager checkpoint — same conflicting-references guard note as
+    # the LSH index twin above
+    converged = emitted.groupBy("doc_id").agg(
+        F.max("text").alias("text"), F.max("lang").alias("lang")
+    ).localCheckpoint()
+    return curation_funnel_report(converged)

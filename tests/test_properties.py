@@ -5337,6 +5337,14 @@ def _shingle_test_docs(spark):
     return df.unionAll(real)
 
 
+def _with_null_text(spark, df):
+    """``df`` plus one NULL-text document: the Arrow bodies must drop it
+    (a NULL text has no shingles, so the DuckDB oracle emits no row for
+    it) and leave every other row unchanged."""
+    null_doc = spark.createDataFrame([(900007, None)], "doc_id long, text string")
+    return df.unionAll(null_doc)
+
+
 def test_minhash_arrow_sigs_match_jvm(spark):
     from pyspark.sql import functions as F
 
@@ -5352,7 +5360,7 @@ def test_minhash_arrow_sigs_match_jvm(spark):
     df = _shingle_test_docs(spark).where(F.col("text").isNotNull())
     got = {
         r["doc_id"]: tuple(r[f"h{s}"] for s in range(NUM_HASHES))
-        for r in df.mapInArrow(
+        for r in _with_null_text(spark, df).mapInArrow(
             _minhash_sig_batches,
             "doc_id long, " + ", ".join(f"h{s} long" for s in range(NUM_HASHES)),
         ).collect()
@@ -5417,7 +5425,7 @@ def test_simhash_arrow_fp_match_jvm(spark):
     df = _shingle_test_docs(spark).where(F.col("text").isNotNull())
     got = {
         r["doc_id"]: r["fp"]
-        for r in df.select("doc_id", "text")
+        for r in _with_null_text(spark, df.select("doc_id", "text"))
         .mapInArrow(_simhash_fp_batches, "doc_id long, fp long")
         .collect()
     }

@@ -115,22 +115,41 @@ def test_session_window_stream_runs_and_bounds_sessions(spark, tmp_path):
             assert s2 >= e1
 
 
-def test_stream_static_enrich(spark, tmp_path):
+def test_stream_static_enrich(spark):
     users = (
         load_table(spark, SF_SMOKE, "events")
         .select("user_id")
         .distinct()
         .withColumn("user_tag", F.concat(F.lit("u"), F.col("user_id")))
     )
+    # no name, no checkpoint: a generated sink name and Spark's own
+    # temporary checkpoint
     out = run_stream_to_memory(
-        spark,
-        stream_static_enrich(stream_events(spark, SF_SMOKE), users),
-        "enrich_stream",
-        str(tmp_path / "ckpt"),
+        spark, stream_static_enrich(stream_events(spark, SF_SMOKE), users)
     )
     total = load_table(spark, SF_SMOKE, "events").count()
     assert out.count() == total
     assert out.filter(F.col("user_tag").isNull()).count() == 0
+
+
+def test_registry_twin_leaves_no_checkpoint_behind(spark):
+    """A streaming twin drains through Spark's temporary checkpoint, which
+    the clean stop() deletes: no checkpoint directory outlives the query."""
+    import tempfile
+
+    from kafka_stream_job_spark.registry import REGISTRY
+
+    tmp = tempfile.gettempdir()
+
+    def checkpoints() -> set[str]:
+        return {
+            n for n in os.listdir(tmp) if n.startswith(("ksj-stream-", "temporary-"))
+        }
+
+    before = checkpoints()
+    out = REGISTRY["streaming_dedup_events"].fn(spark, SF_SMOKE)
+    assert out.count() > 0
+    assert checkpoints() - before == set()
 
 
 def test_update_mode_emits_final_counts(spark, tmp_path):

@@ -6,6 +6,10 @@ Usage::
 
     python tools/time_queries.py <query> [query ...]
     SIM_SF=/root/testdata/sf0.1 python tools/time_queries.py q1_pricing_summary
+
+Specs tagged ``streaming`` print with a ``[streaming]`` mark: their ``fn``
+runs the whole drain while it builds the DataFrame, so their time is not
+comparable with a batch spec's.
 """
 
 from __future__ import annotations
@@ -42,7 +46,8 @@ def main() -> int:
             t0 = time.perf_counter()
             spec.fn(spark, sf_dir).count()
             best = min(best, time.perf_counter() - t0)
-        print(f"{n}: {best:.3f}s")
+        mark = " [streaming]" if "streaming" in spec.tags else ""
+        print(f"{n}: {best:.3f}s{mark}")
     spark.stop()
     return 0
 
