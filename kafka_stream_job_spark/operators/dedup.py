@@ -321,6 +321,12 @@ def _shingles(df: DataFrame) -> DataFrame:
     The Jaccard verify stage and the funnel/decontamination joins
     consume the same rows as before, bit for bit
     (test_shingle_rows_arrow_match_jvm).
+
+    Precondition: ``df`` holds ONE row per ``doc_id``. The Arrow body
+    dedups shingles within a row only, so since the global ``.distinct()``
+    was dropped the output is unique per (doc_id, shingle) only because
+    the input is unique per doc_id (true of ``documents``, whose key is
+    doc_id, and of every caller's filtered/projected view of it).
     """
     return df.select("doc_id", "text").mapInArrow(
         _shingle_rows_batches, "doc_id long, shingle string"

@@ -81,8 +81,18 @@ def fused_encode_decode(docs: DataFrame, encode, decode, schema) -> DataFrame:
     full Arrow serialization round trip of the heaviest column.
     """
 
+    def checked(frames):
+        # the decoder's contract is (doc_id, payload) frames; a fixture
+        # encoder that renames or drops one fails here, not as a KeyError
+        # deep inside the decode body.
+        for pdf in frames:
+            missing = {"doc_id", "payload"}.difference(pdf.columns)
+            if missing:
+                raise ValueError(f"encode frame lacks {sorted(missing)}")
+            yield pdf
+
     def fused(batches):
-        yield from decode(encode(batches))
+        yield from decode(checked(encode(batches)))
 
     return docs.mapInPandas(fused, schema)
 

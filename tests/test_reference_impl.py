@@ -1280,6 +1280,34 @@ def test_wav_pcm_samples_guards(spark):
         _wav_pcm_samples(mono, {**meta, "n_samples": 99})
 
 
+def test_fused_encode_decode_rejects_frame_without_payload(spark):
+    """fused_encode_decode hands the decoder (doc_id, payload) frames: an
+    encoder frame missing either column fails with a ValueError naming it,
+    and a well-formed frame passes through untouched."""
+    import pandas as pd
+
+    from kafka_stream_job_spark.operators.multimodal import fused_encode_decode
+
+    docs = spark.range(3).withColumnRenamed("id", "doc_id")
+
+    def encode_ok(batches):
+        for pdf in batches:
+            yield pdf.assign(payload=[b"x"] * len(pdf))
+
+    def encode_bad(batches):
+        for pdf in batches:
+            yield pdf.assign(blob=[b"x"] * len(pdf))
+
+    def decode(frames):
+        for pdf in frames:
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "n": pdf["payload"].map(len)})
+
+    ok = fused_encode_decode(docs, encode_ok, decode, "doc_id long, n long")
+    assert sorted(r["n"] for r in ok.collect()) == [1, 1, 1]
+    with pytest.raises(Exception, match=r"encode frame lacks \['payload'\]"):
+        fused_encode_decode(docs, encode_bad, decode, "doc_id long, n long").collect()
+
+
 def _mk_emb_dir(tmp_path, vecs, labels):
     tbl = pa.table(
         {

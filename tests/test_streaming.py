@@ -396,6 +396,28 @@ def test_stateful_user_totals_stream(spark, tmp_path):
         assert abs(ftot - tot) < 1e-6
 
 
+def test_drain_runs_drain_shuffle_partitions_state_stores(spark, tmp_path):
+    """The bounded drain runs DRAIN_SHUFFLE_PARTITIONS state-store
+    instances whatever the session's shuffle partitions (it sets the conf,
+    so it can raise it as well as lower it), and restores the session
+    value afterwards."""
+    from kafka_stream_job_spark.streaming.pipeline import DRAIN_SHUFFLE_PARTITIONS
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        ckpt = str(tmp_path / "ckpt")
+        agg = stream_events(spark, SF_SMOKE).groupBy("event_type").count()
+        out = run_stream_to_memory(spark, agg, checkpoint_dir=ckpt, output_mode="update")
+        assert out.count() > 0
+        meta = spark.read.format("state-metadata").load(ckpt).collect()
+        assert [r["numPartitions"] for r in meta] == [DRAIN_SHUFFLE_PARTITIONS]
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, saved)
+
+
 def test_transform_with_state_type_counts(spark, tmp_path):
     """transformWithStateInPandas (MapState per user): final emitted counts
     per (user, event_type) must equal the batch groupBy. Requires the

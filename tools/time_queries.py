@@ -7,9 +7,13 @@ Usage::
     python tools/time_queries.py <query> [query ...]
     SIM_SF=/root/testdata/sf0.1 python tools/time_queries.py q1_pricing_summary
 
-Specs tagged ``streaming`` print with a ``[streaming]`` mark: their ``fn``
-runs the whole drain while it builds the DataFrame, so their time is not
-comparable with a batch spec's.
+Each line splits the best pass into ``build`` (``spec.fn``: plan
+assembly, plus any work the spec does eagerly while building) and
+``exec`` (the ``count()`` action). Specs that work at build time show as
+build-heavy: the streaming drains and the ``localCheckpoint(eager=True)``
+paths. Specs tagged ``streaming`` also print with a ``[streaming]`` mark:
+their ``fn`` runs the whole drain, so their time is not comparable with a
+batch spec's.
 """
 
 from __future__ import annotations
@@ -41,13 +45,17 @@ def main() -> int:
     for n in names:
         spec = specs[n]
         spec.fn(spark, sf_dir).count()  # warmup
-        best = float("inf")
+        best = (float("inf"), 0.0, 0.0)  # (total, build, exec)
         for _ in range(2):
             t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).count()
-            best = min(best, time.perf_counter() - t0)
+            df = spec.fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            df.count()
+            t2 = time.perf_counter()
+            best = min(best, (t2 - t0, t1 - t0, t2 - t1))
         mark = " [streaming]" if "streaming" in spec.tags else ""
-        print(f"{n}: {best:.3f}s{mark}")
+        total, build, exec_ = best
+        print(f"{n}: {total:.3f}s (build {build:.3f}s, exec {exec_:.3f}s){mark}")
     spark.stop()
     return 0
 
