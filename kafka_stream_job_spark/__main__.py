@@ -88,9 +88,8 @@ def _cmd_checkpoint(args) -> int:
     committed, and the watermark carried in the batch metadata. The last
     offsets batch without a commit file is the in-flight batch a recovery
     will re-run (exactly-once replay point)."""
-    import os
-
     from kafka_stream_job_spark.checkpoint import (
+        list_commit_batches,
         list_offset_batches,
         read_offsets_file,
     )
@@ -99,12 +98,7 @@ def _cmd_checkpoint(args) -> int:
     if not batches:
         print(f"no offsets batches under {args.checkpoint_dir!r}", file=sys.stderr)
         return 2
-    commits_dir = os.path.join(args.checkpoint_dir, "commits")
-    committed = (
-        {int(n) for n in os.listdir(commits_dir) if n.isdigit()}
-        if os.path.isdir(commits_dir)
-        else set()
-    )
+    committed = {b for b, _ in list_commit_batches(args.checkpoint_dir)}
     rows = []
     for batch_id, path in batches:
         meta, offsets = read_offsets_file(path)

@@ -3,8 +3,7 @@ must handle beyond clean parquet: malformed-record-tolerant CSV reads
 (PERMISSIVE + corrupt-record column) and schema evolution across parquet
 file generations (mergeSchema). Each stages a deterministic derived copy
 of the events table under the race-free ``_staged_dir`` discipline from
-streaming/pipeline.py, so the driver's oracle can predict every count
-exactly.
+tables.py, so the driver's oracle can predict every count exactly.
 """
 
 from __future__ import annotations
@@ -17,17 +16,7 @@ from pyspark.sql import types as T
 
 from kafka_stream_job_spark.operators._portable import jvm_values_df
 from kafka_stream_job_spark.registry import register
-from kafka_stream_job_spark.tables import load_table
-
-def _staged_dir(*args, **kwargs):
-    # lazy: streaming.pipeline registers queries whose oracles reference
-    # relational entries; importing it at module load would run before
-    # relational registration in all_specs()'s alphabetical import order
-    from kafka_stream_job_spark.streaming.pipeline import (
-        _staged_dir as impl,
-    )
-
-    return impl(*args, **kwargs)
+from kafka_stream_job_spark.tables import _staged_dir, load_table
 
 CSV_CORRUPT_MOD = 500  # events with event_id % 500 == 0 are malformed
 

@@ -15026,9 +15026,6 @@ def gmv_walk_forward_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # index) grid bounded by the time domain; three grouped reduces, each
 # halving the grid.
 # ---------------------------------------------------------------------------
-HAAR_LEVELS = 3
-
-
 @register(
     "events_haar_wavelet_energy",
     oracle=f"""

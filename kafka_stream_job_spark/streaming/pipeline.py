@@ -11,6 +11,14 @@ registry so correctness is oracle-checked; tests additionally assert
 stream-vs-batch equivalence by draining the file stream with
 ``processAllAvailable()`` (reference Q1, KafkaAvroToIceberg.scala:104).
 
+Every parquet file stream goes through ``_file_stream``, which reads its
+files where they are. A table streams straight from the table directory:
+``pathGlobFilter`` narrows the listing to the table's one parquet file
+(TESTDATA.md: one file per table), so no stage directory or symlink is
+needed. Derived replays (late rows, a heartbeat, split halves) are
+written once under a content-keyed ``tables._staged_dir`` and streamed
+from there.
+
 Scale notes: every stateful op is watermarked — unbounded state is the #1
 streaming failure at scale; on a cluster you'd add the RocksDB state store
 (`spark.sql.streaming.stateStore.providerClass`) which is config, not code.
@@ -164,61 +172,52 @@ from kafka_stream_job_spark.registry import REGISTRY, register
 from kafka_stream_job_spark.streaming.heavy_hitters import StreamingHeavyHitters
 from kafka_stream_job_spark.streaming.hll import StreamingHLL
 from kafka_stream_job_spark.streaming.kmv import StreamingKMV
-from kafka_stream_job_spark.tables import load_table
+from kafka_stream_job_spark.tables import _staged_dir, load_table
 
 
-def _stage_stream_source(sf_dir: str, table: str, stage_root: str) -> tuple[str, str]:
-    """Stage one parquet table for a file-source stream; returns
-    (source file path, stage directory). File sources need a *directory*;
-    the test data is a single file, so it is symlinked once into a per-sf
-    stage dir under ``stage_root`` (one root per table, so two streams
-    never read each other's table).
+def _file_stream(
+    spark: SparkSession,
+    directory: str,
+    pattern: str | None = None,
+    files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The one parquet file-stream source: the files under ``directory``
+    (only those matching ``pattern``, as ``pathGlobFilter``, when given),
+    at most ``files_per_trigger`` of them per micro-batch when given.
 
-    lexists, not exists: a broken/stale symlink (e.g. regenerated test
-    data) must be detected and replaced, or the stream silently replays
-    old rows from the persistent /tmp stage dir. The replace goes through
-    a pid-unique temp symlink + atomic os.replace so concurrent processes
-    (parallel pytest, the driver) never observe a missing link or race
-    each other's create.
+    File sources need an explicit schema (no inference mid-stream); it is
+    taken from a batch read of the same files. An event-time ``ts`` column
+    is normalized to TIMESTAMP, the type watermarks demand, whichever way
+    the data was generated: timestamp[us] reads as TIMESTAMP_NTZ and is
+    cast (the session tz is pinned to UTC, session.py, so the cast is
+    deterministic); the round-1 TIMESTAMP(NANOS) layout reads as LONG
+    nanos under nanosAsLong and is truncated to µs as in
+    tables.load_table.
     """
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    stage = os.path.join(stage_root, sf_dir.strip("/").replace("/", "_"))
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, f"{table}.parquet")
-    if (not os.path.lexists(link)) or os.path.realpath(link) != os.path.realpath(src):
-        tmp_link = f"{link}.tmp-{os.getpid()}"
-        try:
-            os.symlink(src, tmp_link)
-            os.replace(tmp_link, link)
-        except OSError:
-            if os.path.realpath(link) != os.path.realpath(src):
-                raise
-    return src, stage
+    batch, stream = spark.read, spark.readStream
+    if pattern is not None:
+        batch = batch.option("pathGlobFilter", pattern)
+        stream = stream.option("pathGlobFilter", pattern)
+    if files_per_trigger is not None:
+        stream = stream.option("maxFilesPerTrigger", files_per_trigger)
+    schema = batch.parquet(directory).schema
+    df = stream.schema(schema).parquet(directory)
+    ts = schema["ts"].dataType if "ts" in schema.fieldNames() else None
+    if isinstance(ts, T.LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif isinstance(ts, T.TimestampNTZType):
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
-def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source replay of the events table as an unbounded stream.
-
-    File sources need (a) an explicit schema — no inference mid-stream —
-    and (b) a *directory*; the test data is a single parquet file, so it
-    is staged once into a per-sf link directory. The schema (and any
-    timestamp conversion) is taken from a one-off batch read of the same
-    file, so stream and batch agree whether the driver generated ``ts``
-    as timestamp[us] (read as TIMESTAMP_NTZ) or as the round-1
-    TIMESTAMP(NANOS) layout (read as long via nanosAsLong, converted in
-    tables.load_table).
-    """
-    src, stage = _stage_stream_source(sf_dir, "events", "/tmp/ksj_stream_stage")
-    raw_schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(raw_schema).parquet(stage)
-    if isinstance(raw_schema["ts"].dataType, T.LongType):
-        # round-1 layout: TIMESTAMP(NANOS) read as long under nanosAsLong.
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(raw_schema["ts"].dataType, T.TimestampNTZType):
-        # Watermarks demand TIMESTAMP (with local tz); the session tz is
-        # pinned to UTC (session.py), so the cast is deterministic.
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-source replay of one table as an unbounded stream, read in
+    place. A file source lists a directory, and ``pathGlobFilter`` narrows
+    the table directory to ``{table}.parquet``, the table's one file
+    (TESTDATA.md). So there is no stage: the stream replays the immutable
+    table file itself, deterministically, and leaves nothing under /tmp
+    that a regenerated table could make stale."""
+    return _file_stream(spark, sf_dir, f"{table}.parquet")
 
 
 def hourly_rollup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -658,7 +657,7 @@ def run_stream_to_memory(
 def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(
         spark,
-        hourly_rollup_stream(stream_events(spark, sf_dir)),
+        hourly_rollup_stream(stream_table(spark, sf_dir, "events")),
         output_mode="complete",
     )
 
@@ -702,7 +701,7 @@ def streaming_topk_types_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     drained = run_stream_to_memory(
         spark,
-        hourly_rollup_stream(stream_events(spark, sf_dir)),
+        hourly_rollup_stream(stream_table(spark, sf_dir, "events")),
         output_mode="complete",
     )
     w = Window.partitionBy("hour_ts").orderBy(
@@ -737,7 +736,7 @@ def streaming_topk_types_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = (
-        stream_events(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
@@ -760,7 +759,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sess = (
-        stream_events(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .withWatermark("ts", "2 hours")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
@@ -807,7 +806,7 @@ def streaming_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted = run_stream_to_memory(
         spark,
-        stateful_user_totals_stream(stream_events(spark, sf_dir)),
+        stateful_user_totals_stream(stream_table(spark, sf_dir, "events")),
     )
     return emitted.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
@@ -864,7 +863,7 @@ def streaming_stateful_type_counts(
         )
 
     emitted_stream = (
-        stream_events(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
@@ -917,7 +916,8 @@ def streaming_purchase_attribution(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     joined = purchase_attribution_stream(
-        stream_events(spark, sf_dir), stream_events(spark, sf_dir)
+        stream_table(spark, sf_dir, "events"),
+        stream_table(spark, sf_dir, "events"),
     )
     out = run_stream_to_memory(spark, joined)
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -965,43 +965,33 @@ _LATE_MOD = 8  # ... restricted to event_id % _LATE_MOD == 0
 _WM_DELAY = "1 hour"
 
 
-def _staged_dir(root: str, src: str, version: str, build) -> str:
-    """Race-free /tmp staging: the stage dir is keyed by the SOURCE file's
-    (mtime_ns, size) so a regenerated source maps to a NEW directory, and a
-    completed stage dir is immutable — never rmtree'd while another process
-    (parallel pytest, the external driver) may be streaming its files.
-    Builders write into an attempt-unique temp dir (pid + random token:
-    two THREADS of one process can race the same build — e.g. the two
-    gzip-jsonl queries under a parallel verify run — and must not share
-    a directory) and atomically ``os.rename`` it into place; losing the
-    rename race just means another builder finished the identical build
-    first, so the loser discards its copy.
-    """
-    import shutil
+def _copy_heartbeat(con, path: str) -> None:
+    """Write the heartbeat file: one events row at max(ts) (``con`` has
+    the events as view ``ev``). Staged as its own file, it is a micro-batch
+    of its own, whose job is to run one more watermark advance and
+    eviction pass after the data; its own windows end past the final
+    watermark, so append-mode aggregates never emit them."""
+    con.execute(
+        "COPY (SELECT CAST(-1 AS BIGINT) AS event_id,"
+        " (SELECT MAX(ts) FROM ev) AS ts,"
+        " CAST(-1 AS BIGINT) AS user_id,"
+        " CAST('heartbeat' AS VARCHAR) AS event_type,"
+        " CAST(0.0 AS DOUBLE) AS value,"
+        " CAST(NULL AS VARCHAR) AS props)"
+        f" TO '{path}' (FORMAT PARQUET)"
+    )
 
-    st = os.stat(src)
-    stage = os.path.join(root, f"{version}_{st.st_mtime_ns}_{st.st_size}")
-    marker = os.path.join(stage, "_staged")
-    if os.path.exists(marker):
-        return stage
-    tmp = f"{stage}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    build(tmp)
-    with open(os.path.join(tmp, "_staged"), "w"):
-        pass
-    try:
-        os.rename(tmp, stage)
-    except OSError:
-        if os.path.exists(marker):  # lost the race to an identical build
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:  # stale partial dir from a crashed builder — replace it
-            shutil.rmtree(stage, ignore_errors=True)
-            try:
-                os.rename(tmp, stage)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    return stage
+
+def _order_batches(stage: str, names: list[str]) -> None:
+    """A file source takes new files oldest modification time first: set
+    the staged files' mtimes a minute apart, in ``names`` order, so that
+    with one file per trigger each file is one micro-batch in that order."""
+    import time
+
+    now = time.time()
+    for i, name in enumerate(reversed(names)):
+        t = now - 60 * i
+        os.utime(os.path.join(stage, name), (t, t))
 
 
 def _stage_late_replay(sf_dir: str) -> str:
@@ -1012,8 +1002,6 @@ def _stage_late_replay(sf_dir: str) -> str:
     src = os.path.join(sf_dir, "events.parquet")
 
     def build(stage: str) -> None:
-        import time as _time
-
         con = duckdb.connect()
         con.execute(f"CREATE VIEW ev AS SELECT * FROM read_parquet('{src}')")
         pred = (
@@ -1024,28 +1012,17 @@ def _stage_late_replay(sf_dir: str) -> str:
             f"COPY (SELECT * FROM ev WHERE NOT {pred}) TO '{stage}/batch0.parquet'"
             " (FORMAT PARQUET)"
         )
-        # heartbeat: one row at max(ts) whose window is never emitted — its
-        # only job is to advance watermarkForLateEvents past batch 0's data
-        # before the late rows arrive (see module comment above).
-        con.execute(
-            "COPY (SELECT CAST(-1 AS BIGINT) AS event_id,"
-            " (SELECT MAX(ts) FROM ev) AS ts,"
-            " CAST(-1 AS BIGINT) AS user_id,"
-            " CAST('heartbeat' AS VARCHAR) AS event_type,"
-            " CAST(0.0 AS DOUBLE) AS value,"
-            " CAST(NULL AS VARCHAR) AS props)"
-            f" TO '{stage}/batch1.parquet' (FORMAT PARQUET)"
-        )
+        # the heartbeat batch advances watermarkForLateEvents past batch
+        # 0's data before the late rows arrive (see module comment above)
+        _copy_heartbeat(con, f"{stage}/batch1.parquet")
         con.execute(
             f"COPY (SELECT * FROM ev WHERE {pred}) TO '{stage}/batch2.parquet'"
             " (FORMAT PARQUET)"
         )
         con.close()
-        now = _time.time()
-        # file-source ordering key: modification time (oldest first)
-        os.utime(os.path.join(stage, "batch0.parquet"), (now - 120, now - 120))
-        os.utime(os.path.join(stage, "batch1.parquet"), (now - 60, now - 60))
-        os.utime(os.path.join(stage, "batch2.parquet"), (now, now))
+        _order_batches(
+            stage, ["batch0.parquet", "batch1.parquet", "batch2.parquet"]
+        )
 
     return _staged_dir("/tmp/ksj_late_stage", src, "v3", build)
 
@@ -1053,16 +1030,7 @@ def _stage_late_replay(sf_dir: str) -> str:
 def late_drop_rollup_stream(spark: SparkSession, stage: str) -> DataFrame:
     """Hourly rollup over the staged three-batch replay, one file per
     micro-batch, 1-hour watermark — batch 2's rows are all late."""
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    if isinstance(schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = _file_stream(spark, stage, files_per_trigger=1)
     return (
         stream.withWatermark("ts", _WM_DELAY)
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
@@ -1144,7 +1112,7 @@ def streaming_dedup_within_watermark(
 ) -> DataFrame:
     return run_stream_to_memory(
         spark,
-        dedup_within_watermark_stream(stream_events(spark, sf_dir)),
+        dedup_within_watermark_stream(stream_table(spark, sf_dir, "events")),
     )
 
 
@@ -1173,42 +1141,20 @@ def _stage_with_heartbeat(sf_dir: str) -> str:
     src = os.path.join(sf_dir, "events.parquet")
 
     def build(stage: str) -> None:
-        import time as _time
-
         con = duckdb.connect()
         con.execute(f"CREATE VIEW ev AS SELECT * FROM read_parquet('{src}')")
         con.execute(
             f"COPY (SELECT * FROM ev) TO '{stage}/batch0.parquet' (FORMAT PARQUET)"
         )
-        con.execute(
-            "COPY (SELECT CAST(-1 AS BIGINT) AS event_id,"
-            " (SELECT MAX(ts) FROM ev) AS ts,"
-            " CAST(-1 AS BIGINT) AS user_id,"
-            " CAST('heartbeat' AS VARCHAR) AS event_type,"
-            " CAST(0.0 AS DOUBLE) AS value,"
-            " CAST(NULL AS VARCHAR) AS props)"
-            f" TO '{stage}/batch1.parquet' (FORMAT PARQUET)"
-        )
+        _copy_heartbeat(con, f"{stage}/batch1.parquet")
         con.close()
-        now = _time.time()
-        os.utime(os.path.join(stage, "batch0.parquet"), (now - 60, now - 60))
-        os.utime(os.path.join(stage, "batch1.parquet"), (now, now))
+        _order_batches(stage, ["batch0.parquet", "batch1.parquet"])
 
     return _staged_dir("/tmp/ksj_heartbeat_stage", src, "v2", build)
 
 
 def _heartbeat_stream(spark: SparkSession, stage: str) -> DataFrame:
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    if isinstance(schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return _file_stream(spark, stage, files_per_trigger=1)
 
 
 @register(
@@ -1295,16 +1241,7 @@ def streaming_unattributed_purchases(
 # the final watermark and are never emitted.
 # ---------------------------------------------------------------------------
 def chained_daily_rollup_stream(spark: SparkSession, stage: str) -> DataFrame:
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    if isinstance(schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = _file_stream(spark, stage, files_per_trigger=1)
     hourly = (
         stream.withWatermark("ts", _WM_DELAY)
         .groupBy(F.window("ts", "1 hour").alias("hwin"), "event_type")
@@ -1384,7 +1321,7 @@ def streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(
         spark,
-        sliding_window_stream(stream_events(spark, sf_dir)),
+        sliding_window_stream(stream_table(spark, sf_dir, "events")),
         output_mode="complete",
     )
 
@@ -1424,7 +1361,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     enriched = stream_static_enrich(
-        stream_events(spark, sf_dir), users_dim
+        stream_table(spark, sf_dir, "events"), users_dim
     ).filter(F.col("segment").isNotNull())
     # (COUNT(DISTINCT ...) is unsupported on streaming aggregates —
     # the dedup-then-agg composition is the dedicated
@@ -1603,7 +1540,7 @@ def checkpoint_commitlog_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def checkpoint_statestore_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    agg = stream_events(spark, sf_dir).groupBy("event_type").agg(
+    agg = stream_table(spark, sf_dir, "events").groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(
             F.round(F.col("value") * 100.0, 0).cast("long")
@@ -1692,19 +1629,7 @@ def streaming_sink_exactly_once_roundtrip(
 ) -> DataFrame:
     import tempfile
 
-    stage = _stage_late_replay(sf_dir)
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    if isinstance(schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = _file_stream(spark, _stage_late_replay(sf_dir), files_per_trigger=1)
     # the stateless decode→append shape of the reference's bronze
     # stream; the heartbeat row is filtered out like any non-business
     # record would be
@@ -1764,19 +1689,7 @@ def streaming_sink_exactly_once_roundtrip(
 def streaming_update_mode_rollup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    stage = _stage_late_replay(sf_dir)
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    if isinstance(schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = _file_stream(spark, _stage_late_replay(sf_dir), files_per_trigger=1)
     rolled = (
         stream.withWatermark("ts", _WM_DELAY)
         .groupBy(F.window("ts", "1 hour").alias("win"))
@@ -1827,17 +1740,9 @@ def _stage_split_halves(sf_dir: str) -> str:
 
 
 def union_sources_rollup_stream(spark: SparkSession, stage: str) -> DataFrame:
-    schema = spark.read.parquet(os.path.join(stage, "even")).schema
-
-    def source(sub: str) -> DataFrame:
-        s = spark.readStream.schema(schema).parquet(os.path.join(stage, sub))
-        if isinstance(schema["ts"].dataType, T.LongType):
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
-            s = s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return s
-
-    unioned = source("even").unionByName(source("odd"))
+    unioned = _file_stream(spark, os.path.join(stage, "even")).unionByName(
+        _file_stream(spark, os.path.join(stage, "odd"))
+    )
     return (
         unioned.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
@@ -1964,7 +1869,7 @@ def streaming_available_now_rollup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     name = f"stream_avnow_{uuid.uuid4().hex[:8]}"
-    rolled = hourly_rollup_stream(stream_events(spark, sf_dir))
+    rolled = hourly_rollup_stream(stream_table(spark, sf_dir, "events"))
     with _drain_partitions(spark):
         query = (
             rolled.writeStream.format("memory")
@@ -2034,7 +1939,7 @@ def streaming_available_now_rollup(
 )
 def streaming_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     hll = StreamingHLL(spark, "user_id")
-    src = stream_events(spark, sf_dir).select("user_id")
+    src = stream_table(spark, sf_dir, "events").select("user_id")
     _drain(spark, src.writeStream.foreachBatch(hll.update))
     assert hll.batches_seen >= 1
     regs = jvm_values_df(
@@ -2099,7 +2004,7 @@ MG_STREAM_CAPACITY = 128
 )
 def streaming_heavy_hitter_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     mg = StreamingHeavyHitters(spark, "user_id", capacity=MG_STREAM_CAPACITY)
-    src = stream_events(spark, sf_dir).select("user_id")
+    src = stream_table(spark, sf_dir, "events").select("user_id")
     _drain(spark, src.writeStream.foreachBatch(mg.update))
     assert mg.batches_seen >= 1
     candidates = [int(k) for k in mg.candidates()]
@@ -2147,7 +2052,7 @@ def streaming_heavy_hitter_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     kmv = StreamingKMV(spark, "user_id")
-    src = stream_events(spark, sf_dir).select("user_id")
+    src = stream_table(spark, sf_dir, "events").select("user_id")
     _drain(spark, src.writeStream.foreachBatch(kmv.update))
     assert kmv.batches_seen >= 1
     vals = jvm_values_df(spark, [(v,) for v in kmv.values], "hv LONG")
@@ -2218,7 +2123,7 @@ def streaming_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame
         merged.write.mode("overwrite").parquet(out)
         versions.append(out)
 
-    src = stream_events(spark, sf_dir).select(
+    src = stream_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "value"
     )
     _drain(spark, src.writeStream.foreachBatch(apply_batch))
@@ -2311,7 +2216,7 @@ def streaming_value_quantiles(
         )
 
     emitted_stream = (
-        stream_events(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .groupBy("event_type")
         .applyInPandasWithState(
             update,
@@ -2415,7 +2320,7 @@ def streaming_interval_union_coverage(
         )
 
     emitted_stream = (
-        stream_events(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
@@ -2501,7 +2406,7 @@ def streaming_rate_limiter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     emitted_stream = (
-        stream_events(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
@@ -2524,18 +2429,6 @@ def streaming_rate_limiter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return final.orderBy(
         F.col("n_throttled").desc(), F.col("user_id").asc()
     ).limit(_RL_TOP_N)
-
-
-def stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source replay of the embeddings table as an unbounded stream —
-    same staging discipline as stream_events (shared `_stage_stream_source`:
-    explicit schema, per-sf symlink directory, atomic replace), separate
-    stage root so the two file sources never read each other's table."""
-    src, stage = _stage_stream_source(
-        sf_dir, "embeddings", "/tmp/ksj_stream_stage_embeddings"
-    )
-    raw_schema = spark.read.parquet(src).schema
-    return spark.readStream.schema(raw_schema).parquet(stage)
 
 
 # ---------------------------------------------------------------------------
@@ -2680,7 +2573,7 @@ def streaming_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     emitted_stream = (
-        stream_embeddings(spark, sf_dir)
+        stream_table(spark, sf_dir, "embeddings")
         .mapInPandas(assign_batches, "vec_id long, cid long, cosc double")
         .groupBy("cid")
         .applyInPandasWithState(
@@ -2904,7 +2797,7 @@ def streaming_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     emitted_stream = (
-        stream_embeddings(spark, sf_dir)
+        stream_table(spark, sf_dir, "embeddings")
         # single-split replay source → one input partition per batch;
         # fan the numpy cell-assignment across cores before the
         # Python stage (same rationale as streaming_lsh_candidate_
@@ -3019,16 +2912,6 @@ def streaming_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source replay of the documents table as an unbounded stream —
-    same staging discipline as stream_events/stream_embeddings."""
-    src, stage = _stage_stream_source(
-        sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
-    )
-    raw_schema = spark.read.parquet(src).schema
-    return spark.readStream.schema(raw_schema).parquet(stage)
-
-
 # ---------------------------------------------------------------------------
 # STREAMING TOKENIZER-FERTILITY DRIFT MONITOR — the live twin of
 # bpe_fertility_by_lang: documents arrive as a stream, per-language state
@@ -3058,7 +2941,7 @@ def streaming_fertility_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_words = F.regexp_count(F.trim(F.col("text")), F.lit(r"[^ ]+")).cast(
         "long"
     )
-    per_doc = stream_documents(spark, sf_dir).select(
+    per_doc = stream_table(spark, sf_dir, "documents").select(
         "lang",
         n_tokens.alias("n_tokens"),
         n_words.alias("n_words"),
@@ -3176,7 +3059,7 @@ def streaming_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.lit(w2) * (f2_u / F.lit(1e6))
     )
     p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-    scored = stream_documents(spark, sf_dir).select(
+    scored = stream_table(spark, sf_dir, "documents").select(
         "source",
         F.least(F.floor(p * 10.0).cast("long"), F.lit(9).cast("long"))
         .alias("p_decile"),
@@ -3388,7 +3271,7 @@ def frontier_bloom_report(
 def streaming_frontier_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted = run_stream_to_memory(
         spark,
-        frontier_bloom_emissions(stream_documents(spark, sf_dir)),
+        frontier_bloom_emissions(stream_table(spark, sf_dir, "documents")),
     )
     return frontier_bloom_report(spark, sf_dir, emitted)
 
@@ -3474,7 +3357,7 @@ def checkpoint_sources_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench_ext=True,
 )
 def streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = stream_events(spark, sf_dir).where(F.col("value").isNotNull())
+    events = stream_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     cents = F.round(F.col("value") * 100.0, 0).cast("long")
     keyed = events.withWatermark("ts", "2 hours").select(
         "event_type",
@@ -3601,7 +3484,7 @@ def streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid = psi_epoch_mid(spark, sf_dir)
     emitted = run_stream_to_memory(
         spark,
-        psi_binned_counts(stream_events(spark, sf_dir), mid),
+        psi_binned_counts(stream_table(spark, sf_dir, "events"), mid),
         output_mode="complete",
     )
     return psi_report(emitted)
@@ -3647,7 +3530,7 @@ def streaming_lsh_candidate_buckets(
     # unsplittable file — repartition immediately after the read");
     # the extra exchange moves only raw doc rows once.
     docs = (
-        stream_documents(spark, sf_dir)
+        stream_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
         .repartition(spark.sparkContext.defaultParallelism)
     )
@@ -3832,7 +3715,7 @@ def streaming_feature_hashing_monitor(
     from pyspark.sql import Window
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    docs = stream_documents(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = stream_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     # Hash every token ONCE (md5 dominates this op; the previous
     # form nested the tokenize+hash inside the per-bucket lambda and
     # recomputed it 64x per document — 17.5 s at sf0.1, 3.5 s after),
@@ -3932,7 +3815,7 @@ def streaming_gzip_jsonl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "entropy", "drift", "events"),
 )
 def streaming_type_entropy_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     counted = events.groupBy(
         F.date_trunc("hour", "ts").cast("string").alias("hour_ts"),
         "event_type",
@@ -3984,7 +3867,7 @@ def streaming_type_entropy_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "seasonality", "events"),
 )
 def streaming_seasonality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100.0, 0).cast("long")
     counted = events.select(
         "event_type",
@@ -4044,7 +3927,7 @@ def streaming_seasonality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def streaming_magic_sniffer(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (
-        stream_documents(spark, sf_dir)
+        stream_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
         .select("doc_id", "text")
         .filter(F.length("text") > 0)
@@ -4144,7 +4027,7 @@ def streaming_hill_tail_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         yield pd.DataFrame({"k": [len(top)], "top": [top]})
 
     emitted_stream = (
-        stream_events(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .select(F.lit(0).alias("g"), "value")
         .groupBy("g")
         .applyInPandasWithState(
@@ -4227,7 +4110,7 @@ def streaming_hill_tail_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "session-window", "bounce", "events"),
 )
 def streaming_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     sessions = (
         events.withWatermark("ts", "2 hours")
         .groupBy("user_id", F.session_window("ts", "30 minutes"))
@@ -4289,7 +4172,7 @@ def streaming_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_self_excitation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    per_user = stream_events(spark, sf_dir).select(
+    per_user = stream_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         "event_type",
@@ -4371,11 +4254,7 @@ def streaming_brand_mi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         name_brand_mi_assemble,
     )
 
-    src, stage = _stage_stream_source(
-        sf_dir, "part", "/tmp/ksj_stream_stage_part"
-    )
-    raw_schema = spark.read.parquet(src).schema
-    parts = spark.readStream.schema(raw_schema).parquet(stage)
+    parts = stream_table(spark, sf_dir, "part")
     counted = (
         parts.select(
             F.explode(F.split("p_name", " ")).alias("token"), "p_brand"
@@ -4414,11 +4293,7 @@ def streaming_brand_mi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "bootstrap", "statistics", "orders"),
 )
 def streaming_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src, stage = _stage_stream_source(
-        sf_dir, "orders", "/tmp/ksj_stream_stage_orders"
-    )
-    raw_schema = spark.read.parquet(src).schema
-    orders = spark.readStream.schema(raw_schema).parquet(stage)
+    orders = stream_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     r = orders.select(
         cents.alias("cents"),
@@ -4441,10 +4316,10 @@ def streaming_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ],
     )
+    # complete mode: the memory sink keeps only the last trigger's
+    # result, so the drained table is the one converged row
     emitted = run_stream_to_memory(spark, agg, output_mode="complete")
-    # complete-mode re-emissions: the converged row has max n
-    converged = emitted.orderBy(F.col("n").desc()).limit(1)
-    return boot_ci_assemble(converged)
+    return boot_ci_assemble(emitted)
 
 
 # ---------------------------------------------------------------------------
@@ -4467,11 +4342,7 @@ def streaming_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_rater_drift_monitor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    src, stage = _stage_stream_source(
-        sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
-    )
-    raw_schema = spark.read.parquet(src).schema
-    docs = spark.readStream.schema(raw_schema).parquet(stage)
+    docs = stream_table(spark, sf_dir, "documents")
     a, b = rater_ab_cols()
     r = docs.select(a.alias("a"), b.alias("b"))
     agg = r.groupBy().agg(
@@ -4483,10 +4354,10 @@ def streaming_rater_drift_monitor(
         .cast("long")
         .alias("n00"),
     )
+    # complete mode: the memory sink keeps only the last trigger's
+    # result, so the drained table is the one converged row
     emitted = run_stream_to_memory(spark, agg, output_mode="complete")
-    # complete-mode re-emissions: the converged row has max n
-    converged = emitted.orderBy(F.col("n").desc()).limit(1)
-    return rater_drift_assemble(converged)
+    return rater_drift_assemble(emitted)
 
 
 # ---------------------------------------------------------------------------
@@ -4508,11 +4379,7 @@ def streaming_rater_drift_monitor(
 def streaming_neyman_allocation(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    src, stage = _stage_stream_source(
-        sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
-    )
-    raw_schema = spark.read.parquet(src).schema
-    docs = spark.readStream.schema(raw_schema).parquet(stage)
+    docs = stream_table(spark, sf_dir, "documents")
     ln = F.length("text").cast("long")
     m = docs.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -4555,11 +4422,7 @@ def streaming_neyman_allocation(
     tags=("streaming", "stateful", "dedup", "weights", "documents"),
 )
 def streaming_ess_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src, stage = _stage_stream_source(
-        sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
-    )
-    raw_schema = spark.read.parquet(src).schema
-    docs = spark.readStream.schema(raw_schema).parquet(stage)
+    docs = stream_table(spark, sf_dir, "documents")
     fp = docs.select(
         "source",
         F.md5(
@@ -4619,11 +4482,7 @@ def streaming_ess_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_unigram_fertility(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    src, stage = _stage_stream_source(
-        sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
-    )
-    raw_schema = spark.read.parquet(src).schema
-    docs = spark.readStream.schema(raw_schema).parquet(stage)
+    docs = stream_table(spark, sf_dir, "documents")
     norm = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
     toks = docs.select(
         "lang", F.explode(F.split(norm, " ")).alias("tok")
@@ -4723,11 +4582,7 @@ def streaming_unigram_fertility(
           "orders"),
 )
 def streaming_cuped_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src, stage = _stage_stream_source(
-        sf_dir, "orders", "/tmp/ksj_stream_stage_orders"
-    )
-    raw_schema = spark.read.parquet(src).schema
-    orders = spark.readStream.schema(raw_schema).parquet(stage)
+    orders = stream_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     split = F.lit(CUPED_SPLIT).cast("timestamp_ntz")
     spend_stream = orders.groupBy(
@@ -4839,7 +4694,7 @@ def _sprt_fold_ordered(st, batch, a, b, inc0, inc1):
 def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    obs = stream_events(spark, sf_dir).select(
+    obs = stream_table(spark, sf_dir, "events").select(
         F.lit(0).alias("g"),
         F.unix_micros(F.col("ts")).alias("ts_us"),
         "event_id",
@@ -4938,13 +4793,8 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_wav_haar_monitor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    src, stage = _stage_stream_source(
-        sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
-    )
-    raw_schema = spark.read.parquet(src).schema
     docs = (
-        spark.readStream.schema(raw_schema)
-        .parquet(stage)
+        stream_table(spark, sf_dir, "documents")
         .select("doc_id", "lang", "text")
         .filter(F.length("text") >= HAARW_FRAME)
     )
@@ -4987,13 +4837,8 @@ def streaming_wav_haar_monitor(
 def streaming_wav_zcr_monitor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    src, stage = _stage_stream_source(
-        sf_dir, "documents", "/tmp/ksj_stream_stage_documents"
-    )
-    raw_schema = spark.read.parquet(src).schema
     docs = (
-        spark.readStream.schema(raw_schema)
-        .parquet(stage)
+        stream_table(spark, sf_dir, "documents")
         .select("doc_id", "lang", "text")
         .filter(F.length("text") >= 2)
     )
@@ -5040,11 +4885,7 @@ def streaming_wav_zcr_monitor(
     tags=("streaming", "stateful", "experimentation", "did", "orders"),
 )
 def streaming_did_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src, stage = _stage_stream_source(
-        sf_dir, "orders", "/tmp/ksj_stream_stage_orders"
-    )
-    raw_schema = spark.read.parquet(src).schema
-    orders = spark.readStream.schema(raw_schema).parquet(stage)
+    orders = stream_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     split = F.lit(DID_SPLIT).cast("timestamp_ntz")
     per_order = orders.select(
@@ -5092,7 +4933,7 @@ def streaming_did_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_brier_monitor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     per_user_stream = events.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum((F.col("event_type") == "purchase").cast("long"))
@@ -5123,7 +4964,7 @@ def streaming_brier_monitor(
 def streaming_mann_kendall_monitor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     daily_stream = events.groupBy(
         "event_type",
         F.expr(
@@ -5231,7 +5072,7 @@ def runs_walk_emissions(events: DataFrame) -> DataFrame:
     tags=("streaming", "stateful", "stats", "runs-test", "events"),
 )
 def streaming_runs_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    walked = runs_walk_emissions(stream_events(spark, sf_dir))
+    walked = runs_walk_emissions(stream_table(spark, sf_dir, "events"))
     emitted = run_stream_to_memory(spark, walked)
     # each micro-batch emits one cumulative row; the converged one
     # has max n
@@ -5253,7 +5094,7 @@ def streaming_runs_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "experimentation", "srm", "events"),
 )
 def streaming_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     per_user = events.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
@@ -5279,7 +5120,7 @@ def streaming_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_permutation_monitor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     per_user_stream = perm_per_user_counts(events)
     emitted = run_stream_to_memory(spark, per_user_stream, output_mode="update")
     per_user = emitted.groupBy("user_id").agg(
@@ -5305,7 +5146,7 @@ def streaming_permutation_monitor(
 def streaming_power_mde_monitor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     counts_stream = events.groupBy(F.lit(0).alias("g")).agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.sum((F.col("event_type") == "purchase").cast("long"))
@@ -5339,7 +5180,7 @@ def streaming_power_mde_monitor(
 def streaming_split_leakage_monitor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    docs = stream_documents(spark, sf_dir)
+    docs = stream_table(spark, sf_dir, "documents")
     fps3_stream = leakage_counters(docs)
     emitted = run_stream_to_memory(spark, fps3_stream, output_mode="update")
     fps3 = emitted.groupBy("fp").agg(
@@ -5365,11 +5206,7 @@ def streaming_split_leakage_monitor(
     tags=("streaming", "stateful", "nbd", "stats", "orders"),
 )
 def streaming_nbd_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src, stage = _stage_stream_source(
-        sf_dir, "orders", "/tmp/ksj_stream_stage_orders"
-    )
-    raw_schema = spark.read.parquet(src).schema
-    orders = spark.readStream.schema(raw_schema).parquet(stage)
+    orders = stream_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
         F.count(F.lit(1)).cast("long").alias("k")
     )
@@ -5397,7 +5234,7 @@ def streaming_nbd_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
           "events"),
 )
 def streaming_ccf_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     spine = ccf_hourly_counts(events)
     emitted = run_stream_to_memory(spark, spine, output_mode="update")
     hourly = emitted.groupBy("event_type", "hour_us").agg(
@@ -5423,7 +5260,7 @@ def streaming_ccf_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "funnel", "activation", "events"),
 )
 def streaming_ttfp_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = stream_events(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     per_user = ttfp_per_user(events)
     emitted = run_stream_to_memory(spark, per_user, output_mode="update")
     u = emitted.groupBy("user_id").agg(
@@ -5565,7 +5402,7 @@ def streaming_lsh_index_maintenance(
     # repartition after the single-split replay source: the heavy
     # shingle→md5 explode otherwise serializes in one task (same fix
     # as streaming_lsh_candidate_buckets — guide §2.5)
-    docs = stream_documents(spark, sf_dir).repartition(
+    docs = stream_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
     # r13: per-doc signatures from the shared Arrow body; the
@@ -5612,7 +5449,7 @@ def streaming_lsh_index_maintenance(
 def streaming_curation_funnel(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    docs = stream_documents(spark, sf_dir)
+    docs = stream_table(spark, sf_dir, "documents")
     per_doc = docs.groupBy("doc_id").agg(
         F.max("text").alias("text"), F.max("lang").alias("lang")
     )

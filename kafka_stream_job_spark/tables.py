@@ -14,6 +14,8 @@ pushdown / column pruning / partition pruning; never cache or collect here.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -228,3 +230,40 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     against the same names the DuckDB oracle uses."""
     for name in TABLE_NAMES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+def _staged_dir(root: str, src: str, version: str, build) -> str:
+    """Race-free /tmp staging: the stage dir is keyed by the SOURCE file's
+    (mtime_ns, size) so a regenerated source maps to a NEW directory, and a
+    completed stage dir is immutable — never rmtree'd while another process
+    (parallel pytest, the external driver) may be streaming its files.
+    Builders write into an attempt-unique temp dir (pid + random token:
+    two THREADS of one process can race the same build — e.g. the two
+    gzip-jsonl queries under a parallel verify run — and must not share
+    a directory) and atomically ``os.rename`` it into place; losing the
+    rename race just means another builder finished the identical build
+    first, so the loser discards its copy.
+    """
+    st = os.stat(src)
+    stage = os.path.join(root, f"{version}_{st.st_mtime_ns}_{st.st_size}")
+    marker = os.path.join(stage, "_staged")
+    if os.path.exists(marker):
+        return stage
+    tmp = f"{stage}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    build(tmp)
+    with open(os.path.join(tmp, "_staged"), "w"):
+        pass
+    try:
+        os.rename(tmp, stage)
+    except OSError:
+        if os.path.exists(marker):  # lost the race to an identical build
+            shutil.rmtree(tmp, ignore_errors=True)
+        else:  # stale partial dir from a crashed builder — replace it
+            shutil.rmtree(stage, ignore_errors=True)
+            try:
+                os.rename(tmp, stage)
+            except OSError:
+                shutil.rmtree(tmp, ignore_errors=True)
+    return stage

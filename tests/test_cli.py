@@ -95,6 +95,13 @@ def test_cli_checkpoint_inspection(tmp_path, capsys):
     text = capsys.readouterr().out
     assert "IN-FLIGHT" in text and "committed" in text
 
+    # the URI form of the same checkpoint reports the same commits
+    assert main(["checkpoint", "file://" + ckpt, "--json"]) == 0
+    out_uri = [
+        _json.loads(ln) for ln in capsys.readouterr().out.strip().splitlines()
+    ]
+    assert out_uri == out
+
 
 def test_registry_ordering_names_all_exist():
     """Names steering the driver-pass ordering (cost_order list,

@@ -12,7 +12,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_stream_job_spark.bronze import decode_events, _EVENT_PAYLOAD_STRUCT
-from kafka_stream_job_spark.checkpoint import list_offset_batches, read_offsets_file
+from kafka_stream_job_spark.checkpoint import (
+    list_commit_batches,
+    list_offset_batches,
+    read_offsets_file,
+)
 from kafka_stream_job_spark.monitors import LiveDataLossMonitor
 from kafka_stream_job_spark.operators.relational import events_hourly_rollup
 from kafka_stream_job_spark.streaming.pipeline import (
@@ -22,8 +26,8 @@ from kafka_stream_job_spark.streaming.pipeline import (
     run_stream_to_memory,
     session_window_stream,
     stateful_user_totals_stream,
-    stream_events,
     stream_static_enrich,
+    stream_table,
 )
 from kafka_stream_job_spark.tables import load_table
 
@@ -35,7 +39,7 @@ def test_hourly_rollup_stream_equals_batch(spark, tmp_path):
     rollup once the bounded input drains (complete mode)."""
     out = run_stream_to_memory(
         spark,
-        hourly_rollup_stream(stream_events(spark, SF_SMOKE)),
+        hourly_rollup_stream(stream_table(spark, SF_SMOKE, "events")),
         "hourly_stream",
         str(tmp_path / "ckpt"),
         output_mode="complete",
@@ -71,7 +75,7 @@ def test_sliding_window_stream_equals_batch(spark, tmp_path):
 
     out = run_stream_to_memory(
         spark,
-        sliding_window_stream(stream_events(spark, SF_SMOKE)),
+        sliding_window_stream(stream_table(spark, SF_SMOKE, "events")),
         "sliding_stream",
         str(tmp_path / "ckpt"),
         output_mode="complete",
@@ -96,7 +100,9 @@ def test_sliding_window_stream_equals_batch(spark, tmp_path):
 def test_session_window_stream_runs_and_bounds_sessions(spark, tmp_path):
     out = run_stream_to_memory(
         spark,
-        session_window_stream(stream_events(spark, SF_SMOKE), gap="30 minutes"),
+        session_window_stream(
+            stream_table(spark, SF_SMOKE, "events"), gap="30 minutes"
+        ),
         "sessions_stream",
         str(tmp_path / "ckpt"),
         output_mode="complete",
@@ -125,7 +131,7 @@ def test_stream_static_enrich(spark):
     # no name, no checkpoint: a generated sink name and Spark's own
     # temporary checkpoint
     out = run_stream_to_memory(
-        spark, stream_static_enrich(stream_events(spark, SF_SMOKE), users)
+        spark, stream_static_enrich(stream_table(spark, SF_SMOKE, "events"), users)
     )
     total = load_table(spark, SF_SMOKE, "events").count()
     assert out.count() == total
@@ -156,7 +162,7 @@ def test_update_mode_emits_final_counts(spark, tmp_path):
     """Update output mode (the third mode next to append/complete): only
     changed aggregate rows are emitted per batch; taking the LAST emission
     per key reconstructs the final aggregate exactly."""
-    counted = stream_events(spark, SF_SMOKE).groupBy("event_type").count()
+    counted = stream_table(spark, SF_SMOKE, "events").groupBy("event_type").count()
     query = (
         counted.writeStream.format("memory")
         .queryName("update_counts")
@@ -230,7 +236,7 @@ def test_available_now_trigger_bounded_backfill(spark, tmp_path):
     """Trigger.AvailableNow: process everything currently available in
     bounded micro-batches, then stop on its own — the backfill/catch-up
     mode (vs processAllAvailable which needs an external stop)."""
-    counted = stream_events(spark, SF_SMOKE).groupBy("event_type").count()
+    counted = stream_table(spark, SF_SMOKE, "events").groupBy("event_type").count()
     query = (
         counted.writeStream.format("memory")
         .queryName("avail_now")
@@ -262,7 +268,7 @@ def test_foreach_batch_idempotent_append(spark, tmp_path):
     out_dir = str(tmp_path / "out")
     out = run_stream_foreach_batch(
         spark,
-        stream_events(spark, SF_SMOKE),
+        stream_table(spark, SF_SMOKE, "events"),
         out_dir,
         str(tmp_path / "ckpt"),
     )
@@ -309,25 +315,51 @@ def test_foreach_batch_partial_write_is_rewritten(spark, tmp_path):
     assert spark.read.parquet(part_dir).count() == 17
 
 
-def test_stream_stage_stale_symlink_refreshed(spark, tmp_path):
-    """stream_events must replace a broken/stale staging symlink instead
-    of crashing (os.path.exists is False for a broken link) or silently
-    replaying old data."""
-    import os
+def _fingerprint(df):
+    """(row count, order-independent hash sum) over all columns as text."""
+    cols = [F.col(c).cast("string") for c in sorted(df.columns)]
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.hash(*cols).cast("long")).alias("h"),
+    ).first()
+    return row["n"], row["h"]
 
-    src = os.path.join(SF_SMOKE, "events.parquet")
-    stage = os.path.join(
-        "/tmp/ksj_stream_stage", SF_SMOKE.strip("/").replace("/", "_")
+
+def test_stream_table_reads_in_place(spark, tmp_path):
+    """stream_table streams the table file where it lives (pathGlobFilter
+    over the read-only table directory), row-for-row equal to the batch
+    table, with no stage directory under /tmp; a two-file file stream
+    drained one file per trigger in complete mode leaves exactly the last
+    trigger's row in the memory sink."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafka_stream_job_spark.streaming.pipeline import _file_stream
+
+    stages_before = set(glob.glob("/tmp/ksj_stream_stage*"))
+    for table in ("events", "documents"):
+        drained = run_stream_to_memory(spark, stream_table(spark, SF_SMOKE, table))
+        batch = load_table(spark, SF_SMOKE, table)
+        assert _fingerprint(drained) == _fingerprint(batch), table
+    assert set(glob.glob("/tmp/ksj_stream_stage*")) == stages_before
+
+    # two files, LONG-nanos ts (the round-1 layout): one micro-batch each
+    src = tmp_path / "src"
+    src.mkdir()
+    for i, name in enumerate(("a.parquet", "b.parquet")):
+        pq.write_table(
+            pa.table({"ts": [10**18 + i * 10**9], "v": [i]}), str(src / name)
+        )
+    stream = _file_stream(spark, str(src), files_per_trigger=1)
+    assert dict(stream.dtypes)["ts"] == "timestamp"
+    ckpt = str(tmp_path / "ckpt")
+    out = run_stream_to_memory(
+        spark, stream.groupBy().count(), checkpoint_dir=ckpt, output_mode="complete"
     )
-    link = os.path.join(stage, "events.parquet")
-    os.makedirs(stage, exist_ok=True)
-    if os.path.lexists(link):
-        os.remove(link)
-    os.symlink(str(tmp_path / "gone.parquet"), link)  # broken + stale
-
-    df = stream_events(spark, SF_SMOKE)
-    assert df.isStreaming
-    assert os.path.realpath(link) == os.path.realpath(src)
+    assert [b for b, _ in list_commit_batches(ckpt)] == [0, 1]
+    assert [r["count"] for r in out.collect()] == [2]
 
 
 def test_purchase_attribution_stream_equals_batch(spark, tmp_path):
@@ -336,7 +368,8 @@ def test_purchase_attribution_stream_equals_batch(spark, tmp_path):
     out = run_stream_to_memory(
         spark,
         purchase_attribution_stream(
-            stream_events(spark, SF_SMOKE), stream_events(spark, SF_SMOKE)
+            stream_table(spark, SF_SMOKE, "events"),
+            stream_table(spark, SF_SMOKE, "events"),
         ),
         "attribution_stream",
         str(tmp_path / "ckpt"),
@@ -371,7 +404,7 @@ def test_stateful_user_totals_stream(spark, tmp_path):
     user must equal the batch groupBy totals once the input drains."""
     out = run_stream_to_memory(
         spark,
-        stateful_user_totals_stream(stream_events(spark, SF_SMOKE)),
+        stateful_user_totals_stream(stream_table(spark, SF_SMOKE, "events")),
         "stateful_totals_stream",
         str(tmp_path / "ckpt"),
         output_mode="append",
@@ -408,7 +441,7 @@ def test_drain_runs_drain_shuffle_partitions_state_stores(spark, tmp_path):
     spark.conf.set(key, "7")
     try:
         ckpt = str(tmp_path / "ckpt")
-        agg = stream_events(spark, SF_SMOKE).groupBy("event_type").count()
+        agg = stream_table(spark, SF_SMOKE, "events").groupBy("event_type").count()
         out = run_stream_to_memory(spark, agg, checkpoint_dir=ckpt, output_mode="update")
         assert out.count() > 0
         meta = spark.read.format("state-metadata").load(ckpt).collect()
@@ -437,7 +470,7 @@ def test_transform_with_state_type_counts(spark, tmp_path):
     try:
         out = run_stream_to_memory(
             spark,
-            transform_with_state_type_counts(stream_events(spark, SF_SMOKE)),
+            transform_with_state_type_counts(stream_table(spark, SF_SMOKE, "events")),
             "tws_type_counts",
             str(tmp_path / "ckpt"),
             output_mode="append",
@@ -518,7 +551,8 @@ def test_left_outer_stream_stream_join_emits_unmatched(spark, tmp_path):
 
     query = (
         unattributed_purchases_stream(
-            stream_events(spark, SF_SMOKE), stream_events(spark, SF_SMOKE)
+            stream_table(spark, SF_SMOKE, "events"),
+            stream_table(spark, SF_SMOKE, "events"),
         )
         .writeStream.format("memory")
         .queryName("unattributed_stream")
@@ -592,7 +626,7 @@ def test_trigger_available_now_drains_and_self_terminates(spark, tmp_path):
     process everything available in rate-limited micro-batches, then stop
     on its own. The query must self-terminate AND deliver exactly the
     batch row count."""
-    df = stream_events(spark, SF_SMOKE)
+    df = stream_table(spark, SF_SMOKE, "events")
     q = (
         df.writeStream.format("memory")
         .queryName("avnow_drain")
@@ -612,7 +646,7 @@ def test_observed_metrics_surface_in_progress(spark, tmp_path):
     per-batch data-quality accounting without a second scan."""
     from kafka_stream_job_spark.monitors import observe_rows
 
-    df = observe_rows(stream_events(spark, SF_SMOKE), "events_metrics")
+    df = observe_rows(stream_table(spark, SF_SMOKE, "events"), "events_metrics")
     q = (
         df.writeStream.format("memory")
         .queryName("observed_stream")
@@ -831,7 +865,7 @@ def test_rocksdb_state_store_provider_rollup_equals_batch(spark, tmp_path):
     try:
         out = run_stream_to_memory(
             spark,
-            hourly_rollup_stream(stream_events(spark, SF_SMOKE)),
+            hourly_rollup_stream(stream_table(spark, SF_SMOKE, "events")),
             "rocksdb_rollup_stream",
             str(tmp_path / "ckpt"),
             output_mode="complete",

@@ -91,7 +91,7 @@ elif twin == "brandmi":
     )
     mode = "update"
 else:
-    # same NTZ->TIMESTAMP normalization stream_events applies (session
+    # same NTZ->TIMESTAMP normalization stream_table applies (session
     # tz pinned UTC, so the cast is deterministic)
     stream = stream.withColumn("ts", stream["ts"].cast("timestamp"))
     mid = sp.psi_epoch_mid(spark, sf_dir)
