@@ -347,6 +347,7 @@ def xml_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def custom_sink_audit_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
+    import shutil
     import tempfile
 
     from kafka_stream_job_spark.sources.auditsink import AuditDataSource
@@ -355,15 +356,17 @@ def custom_sink_audit_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(AuditDataSource)
     except Exception:
         pass  # already registered in this session
-    path = os.path.join(
-        tempfile.mkdtemp(prefix="ksj-audit-sink-"), "audit.json"
-    )
-    events = load_table(spark, sf_dir, "events").select("event_id")
-    events.write.format("ksj_audit").option("path", path).mode(
-        "append"
-    ).save()
-    with open(path) as f:
-        audit = json.load(f)
+    audit_dir = tempfile.mkdtemp(prefix="ksj-audit-sink-")
+    path = os.path.join(audit_dir, "audit.json")
+    try:
+        events = load_table(spark, sf_dir, "events").select("event_id")
+        events.write.format("ksj_audit").option("path", path).mode(
+            "append"
+        ).save()
+        with open(path) as f:
+            audit = json.load(f)
+    finally:
+        shutil.rmtree(audit_dir, ignore_errors=True)
     return jvm_values_df(
         spark, [(int(audit["n_rows"]), int(audit["id_sum"]))], "n_rows LONG, id_sum LONG"
     )

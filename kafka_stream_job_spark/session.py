@@ -8,13 +8,42 @@ Scale posture: the defaults below are what we would ship to a 1000-executor
 cluster modulo sizing knobs — AQE on (runtime re-plan, skew-join splitting,
 partition coalescing), explicit broadcast threshold, shuffle partitions
 sized by ``SPARK_GRAFT_CPUS`` locally and by cluster cores in production.
+
+Local sessions get a fork-free local Hadoop FileSystem
+(``jvm/NioLocalFs.java``). pip PySpark ships no ``libhadoop``, so stock
+Hadoop starts a ``chmod`` child process for every local file or directory
+it creates and a ``readlink`` for every ``FileContext.rename``: every
+offsets/commits/sources log entry, state delta file and ``.crc`` sidecar a
+micro-batch writes. That was most of the bounded-drain per-batch floor.
+The shim does both calls in-process with ``java.nio`` and otherwise is
+the stock ``LocalFileSystem`` / ``LocalFs`` stack, so checkpoint
+checksums, ``.crc`` files and FileContext's atomic rename-without-overwrite
+are unchanged. ``get_spark`` compiles the source once per checkout (a
+content-hashed class directory, one ``javac`` per process at most) and
+installs it only for ``local``/``local[N]`` masters, whose executors share
+the driver JVM. It keeps stock Hadoop, and logs one line saying why, where
+there is no ``javac``, the master is not local, the caller set
+``fs.file.impl`` itself, or an already-running JVM cannot load the class.
+Production clusters keep their own FileSystem (HDFS, S3A, or a native
+``libhadoop``); ``local_fs_mode`` reports which path a session uses.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import logging
 import os
+import re
+import shutil
+import subprocess
+import tempfile
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 #: Confs we always set. Mirrors the operational conf the reference pins in
 #: its captured checkpoint (test/checkpoint-offset.json:12-15) where still
@@ -81,6 +110,103 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
 
 
+_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+_NIO_SOURCE = os.path.join(_JVM_DIR, "NioLocalFs.java")
+_NIO_FS = "kafka_stream_job_spark.jvm.NioLocalFs$Local"
+_NIO_AFS = "kafka_stream_job_spark.jvm.NioLocalFs$LocalFs"
+_FS_KEYS = ("spark.hadoop.fs.file.impl", "spark.hadoop.fs.AbstractFileSystem.file.impl")
+#: Masters whose executors run in the driver JVM (``local-cluster`` does not).
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+#: Spark home → (class directory or None, why not): javac runs once per process.
+_compiled: dict[str, tuple[str | None, str]] = {}
+#: Why the last ``get_spark`` left stock Hadoop in place (None: it did not).
+_stock_reason: str | None = None
+
+
+def _javac() -> str | None:
+    java_home = os.environ.get("JAVA_HOME", "")
+    javac = os.path.join(java_home, "bin", "javac")
+    return javac if java_home and os.access(javac, os.X_OK) else shutil.which("javac")
+
+
+def _nio_classes(spark_home: str) -> tuple[str | None, str]:
+    """Compile ``NioLocalFs.java`` against the Spark home's Hadoop client
+    API into a content-hashed class directory: next to the source, or
+    under the temp dir when the package is read-only. Returns the
+    directory, or None and the reason it could not be built."""
+    if spark_home in _compiled:
+        return _compiled[spark_home]
+    jars = sorted(glob.glob(os.path.join(spark_home, "jars", "hadoop-client-api-*.jar")))
+    javac = _javac()
+    if javac is None:
+        result: tuple[str | None, str] = (None, "no javac")
+    elif not jars:
+        result = (None, f"no hadoop-client-api jar in {spark_home}/jars")
+    else:
+        with open(_NIO_SOURCE, "rb") as fh:
+            key = hashlib.sha256(fh.read() + os.path.basename(jars[-1]).encode())
+        root = _JVM_DIR if os.access(_JVM_DIR, os.W_OK) else tempfile.gettempdir()
+        out = os.path.join(root, f".classes-{key.hexdigest()[:16]}")
+        result = (out, "")
+        if not os.path.isdir(out):
+            tmp = tempfile.mkdtemp(prefix=".classes-tmp-", dir=root)
+            proc = subprocess.run(
+                [javac, "--release", "17", "-nowarn", "-cp", jars[-1], "-d", tmp, _NIO_SOURCE],
+                capture_output=True,
+                text=True,
+            )
+            if proc.returncode:
+                shutil.rmtree(tmp, ignore_errors=True)
+                err = (proc.stderr.strip().splitlines() or ["?"])[0]
+                result = (None, f"javac failed: {err}")
+            else:
+                try:
+                    os.rename(tmp, out)
+                except OSError:  # a concurrent compile got there first
+                    shutil.rmtree(tmp, ignore_errors=True)
+    _compiled[spark_home] = result
+    return result
+
+
+def _local_fs_conf(master: str, conf: dict[str, str]) -> dict[str, str]:
+    """The confs that install ``NioLocalFs`` for a session with ``master``
+    and user ``conf``, or {} (logging why) where stock Hadoop stays."""
+    global _stock_reason
+    classes, reason = None, ""
+    if not _LOCAL_MASTER.fullmatch(master):
+        reason = f"non-local master {master}"
+    elif any(key in conf for key in _FS_KEYS):
+        reason = "user-set fs.file.impl"
+    else:
+        classes, reason = _nio_classes(_find_spark_home())
+        jvm = SparkContext._jvm  # noqa: SLF001 — set once a JVM is running
+        if classes and jvm is not None:
+            try:
+                jvm.java.lang.Class.forName(_NIO_FS)
+            except Exception:  # noqa: BLE001 — py4j wraps ClassNotFoundException
+                reason = "the running JVM cannot load the shim"
+    if reason:
+        _stock_reason = reason
+        _log.info("local FileSystem: hadoop-stock (%s)", reason)
+        return {}
+    _stock_reason = None
+    user_cp = conf.get("spark.driver.extraClassPath")
+    return {
+        "spark.driver.extraClassPath": f"{user_cp}{os.pathsep}{classes}" if user_cp else classes,
+        _FS_KEYS[0]: _NIO_FS,
+        _FS_KEYS[1]: _NIO_AFS,
+    }
+
+
+def local_fs_mode(spark: SparkSession) -> str:
+    """``"nio"`` when ``spark`` writes local files through ``NioLocalFs``,
+    else ``"hadoop-stock: <reason>"``."""
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
+    if hconf.get("fs.file.impl") == _NIO_FS and hconf.get("fs.AbstractFileSystem.file.impl") == _NIO_AFS:
+        return "nio"
+    return f"hadoop-stock: {_stock_reason or 'session not built by get_spark'}"
+
+
 def get_spark(
     app_name: str = "kafka-stream-job-spark",
     master: str | None = None,
@@ -91,11 +217,12 @@ def get_spark(
 
     ``properties_file`` plays the role of the reference's
     ``spark-defaults.properties`` (SparkConfigLoader.scala:9-24); explicit
-    ``extra_conf`` wins over it, which wins over ``ENGINE_DEFAULTS``.
+    ``extra_conf`` wins over it, which wins over ``ENGINE_DEFAULTS``. Local
+    masters also get the ``NioLocalFs`` confs (module docstring).
     """
     cpus = default_parallelism()
-    builder = SparkSession.builder.appName(app_name)
-    builder = builder.master(master or f"local[{cpus}]")
+    master = master or f"local[{cpus}]"
+    builder = SparkSession.builder.appName(app_name).master(master)
 
     conf = dict(ENGINE_DEFAULTS)
     # Shuffle width: locally, match cores so every reduce slot is busy
@@ -107,6 +234,7 @@ def get_spark(
         conf.update(load_properties(properties_file))
     if extra_conf:
         conf.update(extra_conf)
+    conf.update(_local_fs_conf(conf.get("spark.master", master), conf))
     for key, value in conf.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

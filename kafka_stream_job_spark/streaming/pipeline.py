@@ -30,12 +30,19 @@ replays here can carry exact oracles — while the per-batch fixed cost
 that the bounded-drain shuffle-partition setting below
 (``DRAIN_SHUFFLE_PARTITIONS``, one state-store instance per executor slot
 on a 4-core session) keeps down is the overhead Drizzle (SOSP'17)
-measures and amortizes with group scheduling.
+measures and amortizes with group scheduling. On local sessions most of
+that cost used to be process starts: without ``libhadoop`` stock Hadoop
+forks a ``chmod`` for every checkpoint, state-delta and ``.crc`` file and
+a ``readlink`` for every rename. ``session.get_spark`` installs a
+fork-free local FileSystem that removes them (see ``session.py``).
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -525,8 +532,13 @@ class _drain_partitions:
     sizes the conf to the core count, and on a 4-core session the old
     value of 8 raised 4 → 8. Shuffle partitions fix the number of
     state-store instances per stateful operator, and every instance pays
-    per-micro-batch create/commit overhead (~100 ms per commit) — at
-    test-data scale that fixed cost dominates. Evidence:
+    per-micro-batch create/commit overhead — at test-data scale that fixed
+    cost dominates. It was ~100 ms per commit, most of it process starts
+    (stock Hadoop's forked ``chmod`` per delta/``.crc`` file and
+    ``readlink`` per rename); with ``session.get_spark``'s fork-free local
+    FileSystem it is ~9 ms (traced stateful_replay, seed 5, 4 instances:
+    state commit p50 390 → 35 ms per micro-batch). Evidence for the
+    partition count, measured before that change:
 
     - 32-core host, 32 → 8 partitions: a stream-stream join drain drops
       ~11 s → ~2 s.
@@ -638,6 +650,23 @@ def run_stream_to_memory(
     writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     _drain(spark, writer, checkpoint_dir)
     return spark.table(name)
+
+
+@contextlib.contextmanager
+def _scratch_checkpoint(prefix: str):
+    """A checkpoint directory for a drain the caller reads back, removed on
+    exit: whatever the caller returns must be collected inside the block."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _collected(df: DataFrame) -> DataFrame:
+    """``df``'s rows as a local relation: a metadata-sized result read from
+    a checkpoint that is about to be removed."""
+    return df.sparkSession.createDataFrame(df.collect(), df.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1404,30 +1433,28 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "checkpoint", "datasource", "sql-surface"),
 )
 def checkpoint_offsetlog_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from kafka_stream_job_spark.sources.offsetlog import (
         register_offsetlog_source,
     )
 
     register_offsetlog_source(spark)
     stage = _stage_late_replay(sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="ksj-offsetlog-")
-    run_stream_to_memory(
-        spark,
-        late_drop_rollup_stream(spark, stage),
-        checkpoint_dir=ckpt,
-    )
-    return (
-        spark.read.format("ksj_offsetlog")
-        .option("path", ckpt)
-        .load()
-        .select(
-            "batch_id",
-            F.col("end_offset").alias("log_offset"),
-            "watermark_ms",
+    with _scratch_checkpoint("ksj-offsetlog-") as ckpt:
+        run_stream_to_memory(
+            spark,
+            late_drop_rollup_stream(spark, stage),
+            checkpoint_dir=ckpt,
         )
-    )
+        return _collected(
+            spark.read.format("ksj_offsetlog")
+            .option("path", ckpt)
+            .load()
+            .select(
+                "batch_id",
+                F.col("end_offset").alias("log_offset"),
+                "watermark_ms",
+            )
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -1463,8 +1490,6 @@ def checkpoint_offsetlog_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "checkpoint", "datasource", "sql-surface"),
 )
 def checkpoint_commitlog_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from kafka_stream_job_spark.sources.commitlog import (
         register_commitlog_source,
     )
@@ -1475,35 +1500,37 @@ def checkpoint_commitlog_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_offsetlog_source(spark)
     register_commitlog_source(spark)
     stage = _stage_late_replay(sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="ksj-commitlog-")
-    run_stream_to_memory(
-        spark,
-        late_drop_rollup_stream(spark, stage),
-        checkpoint_dir=ckpt,
-    )
-    planned = (
-        spark.read.format("ksj_offsetlog")
-        .option("path", ckpt)
-        .load()
-        .select("batch_id", F.col("watermark_ms").alias("planned_wm_ms"))
-    )
-    committed = (
-        spark.read.format("ksj_commitlog")
-        .option("path", ckpt)
-        .load()
-        .select(
-            "batch_id",
-            "format_version",
-            F.col("next_watermark_ms").alias("next_wm_ms"),
+    with _scratch_checkpoint("ksj-commitlog-") as ckpt:
+        run_stream_to_memory(
+            spark,
+            late_drop_rollup_stream(spark, stage),
+            checkpoint_dir=ckpt,
         )
-    )
-    return planned.join(F.broadcast(committed), "batch_id", "left").select(
-        "batch_id",
-        "planned_wm_ms",
-        F.col("format_version").isNotNull().alias("committed"),
-        "format_version",
-        "next_wm_ms",
-    )
+        planned = (
+            spark.read.format("ksj_offsetlog")
+            .option("path", ckpt)
+            .load()
+            .select("batch_id", F.col("watermark_ms").alias("planned_wm_ms"))
+        )
+        committed = (
+            spark.read.format("ksj_commitlog")
+            .option("path", ckpt)
+            .load()
+            .select(
+                "batch_id",
+                "format_version",
+                F.col("next_watermark_ms").alias("next_wm_ms"),
+            )
+        )
+        return _collected(
+            planned.join(F.broadcast(committed), "batch_id", "left").select(
+                "batch_id",
+                "planned_wm_ms",
+                F.col("format_version").isNotNull().alias("committed"),
+                "format_version",
+                "next_wm_ms",
+            )
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -1538,35 +1565,33 @@ def checkpoint_commitlog_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "checkpoint", "statestore", "sql-surface", "events"),
 )
 def checkpoint_statestore_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     agg = stream_table(spark, sf_dir, "events").groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(
             F.round(F.col("value") * 100.0, 0).cast("long")
         ).alias("sum_cents"),
     )
-    ckpt = tempfile.mkdtemp(prefix="ksj-statestore-")
-    run_stream_to_memory(spark, agg, checkpoint_dir=ckpt, output_mode="update")
-    state = (
-        spark.read.format("statestore")
-        .load(ckpt)
-        .select(
-            F.col("key.event_type").alias("event_type"),
-            F.col("value.count").alias("n_events"),
-            F.col("value.sum").alias("sum_cents"),
+    with _scratch_checkpoint("ksj-statestore-") as ckpt:
+        run_stream_to_memory(spark, agg, checkpoint_dir=ckpt, output_mode="update")
+        state = (
+            spark.read.format("statestore")
+            .load(ckpt)
+            .select(
+                F.col("key.event_type").alias("event_type"),
+                F.col("value.count").alias("n_events"),
+                F.col("value.sum").alias("sum_cents"),
+            )
         )
-    )
-    meta = (
-        spark.read.format("state-metadata")
-        .load(ckpt)
-        .select(
-            F.col("operatorName").alias("operator_name"),
-            F.col("numPartitions").cast("long").alias("n_state_partitions"),
-            F.col("maxBatchId").cast("long").alias("last_committed_batch"),
+        meta = (
+            spark.read.format("state-metadata")
+            .load(ckpt)
+            .select(
+                F.col("operatorName").alias("operator_name"),
+                F.col("numPartitions").cast("long").alias("n_state_partitions"),
+                F.col("maxBatchId").cast("long").alias("last_committed_batch"),
+            )
         )
-    )
-    return state.crossJoin(F.broadcast(meta))
+        return _collected(state.crossJoin(F.broadcast(meta)))
 
 
 # ---------------------------------------------------------------------------
@@ -1627,8 +1652,6 @@ def streaming_replay_source_rollup(
 def streaming_sink_exactly_once_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import tempfile
-
     stream = _file_stream(spark, _stage_late_replay(sf_dir), files_per_trigger=1)
     # the stateless decode→append shape of the reference's bronze
     # stream; the heartbeat row is filtered out like any non-business
@@ -2096,8 +2119,6 @@ def streaming_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "cdc", "upsert", "merge", "events"),
 )
 def streaming_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     state_root = tempfile.mkdtemp(prefix="ksj-upsert-state-")
     versions: list[str] = []
 
@@ -3303,42 +3324,41 @@ def streaming_frontier_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "checkpoint", "sources", "sql-surface"),
 )
 def checkpoint_sources_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     stage = _stage_late_replay(sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="ksj-sources-tbl-")
-    run_stream_to_memory(
-        spark,
-        late_drop_rollup_stream(spark, stage),
-        checkpoint_dir=ckpt,
-    )
-    lines = spark.read.text(os.path.join(ckpt, "sources", "0", "*"))
-    entry = F.from_json(
-        F.col("value"),
-        "path string, timestamp long, batchId long",
-    )
-    parsed = (
-        lines.filter(F.col("value") != "v1")
-        .select(
-            F.element_at(F.split(F.input_file_name(), "/"), -1)
-            .cast("long")
-            .alias("batch_id"),
-            entry.alias("e"),
+    with _scratch_checkpoint("ksj-sources-tbl-") as ckpt:
+        run_stream_to_memory(
+            spark,
+            late_drop_rollup_stream(spark, stage),
+            checkpoint_dir=ckpt,
         )
-        .select(
-            "batch_id",
-            F.element_at(F.split(F.col("e.path"), "/"), -1).alias("fname"),
-            F.col("e.batchId").alias("manifest_batch_id"),
+        lines = spark.read.text(os.path.join(ckpt, "sources", "0", "*"))
+        entry = F.from_json(
+            F.col("value"),
+            "path string, timestamp long, batchId long",
         )
-    )
-    return parsed.groupBy("batch_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_files"),
-        F.array_join(F.array_sort(F.collect_list("fname")), ",").alias(
-            "file_names"
-        ),
-        F.min("manifest_batch_id").cast("long").alias("manifest_batch_id"),
-    )
+        parsed = (
+            lines.filter(F.col("value") != "v1")
+            .select(
+                F.element_at(F.split(F.input_file_name(), "/"), -1)
+                .cast("long")
+                .alias("batch_id"),
+                entry.alias("e"),
+            )
+            .select(
+                "batch_id",
+                F.element_at(F.split(F.col("e.path"), "/"), -1).alias("fname"),
+                F.col("e.batchId").alias("manifest_batch_id"),
+            )
+        )
+        return _collected(
+            parsed.groupBy("batch_id").agg(
+                F.count(F.lit(1)).cast("long").alias("n_files"),
+                F.array_join(F.array_sort(F.collect_list("fname")), ",").alias(
+                    "file_names"
+                ),
+                F.min("manifest_batch_id").cast("long").alias("manifest_batch_id"),
+            )
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -5316,8 +5336,6 @@ RETAIN_N = 2  # minBatchesToRetain for the audit policy
 def checkpoint_retention_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import Window
 
     from kafka_stream_job_spark.sources.commitlog import (
@@ -5330,25 +5348,25 @@ def checkpoint_retention_audit(
     register_offsetlog_source(spark)
     register_commitlog_source(spark)
     stage = _stage_late_replay(sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="ksj-retention-")
-    run_stream_to_memory(
-        spark,
-        late_drop_rollup_stream(spark, stage),
-        checkpoint_dir=ckpt,
-    )
-    planned = (
-        spark.read.format("ksj_offsetlog")
-        .option("path", ckpt)
-        .load()
-        .select("batch_id", F.col("watermark_ms").alias("planned_wm_ms"))
-    )
-    committed = (
-        spark.read.format("ksj_commitlog")
-        .option("path", ckpt)
-        .load()
-        .select("batch_id", F.lit(True).alias("committed"))
-    )
-    joined = planned.join(F.broadcast(committed), "batch_id", "left")
+    with _scratch_checkpoint("ksj-retention-") as ckpt:
+        run_stream_to_memory(
+            spark,
+            late_drop_rollup_stream(spark, stage),
+            checkpoint_dir=ckpt,
+        )
+        planned = (
+            spark.read.format("ksj_offsetlog")
+            .option("path", ckpt)
+            .load()
+            .select("batch_id", F.col("watermark_ms").alias("planned_wm_ms"))
+        )
+        committed = (
+            spark.read.format("ksj_commitlog")
+            .option("path", ckpt)
+            .load()
+            .select("batch_id", F.lit(True).alias("committed"))
+        )
+        joined = _collected(planned.join(F.broadcast(committed), "batch_id", "left"))
     frontier = joined.agg(
         F.max(F.when(F.col("committed"), F.col("batch_id"))).alias(
             "last_committed"

@@ -140,22 +140,35 @@ def test_stream_static_enrich(spark):
 
 def test_registry_twin_leaves_no_checkpoint_behind(spark):
     """A streaming twin drains through Spark's temporary checkpoint, which
-    the clean stop() deletes: no checkpoint directory outlives the query."""
+    the clean stop() deletes: no checkpoint directory outlives the query.
+    The twins that read their own checkpoint (or sink audit) back collect
+    the metadata-sized result and remove the directory themselves."""
     import tempfile
 
     from kafka_stream_job_spark.registry import REGISTRY
 
     tmp = tempfile.gettempdir()
+    prefixes = (
+        "ksj-stream-", "temporary-", "ksj-offsetlog-", "ksj-commitlog-",
+        "ksj-statestore-", "ksj-sources-tbl-", "ksj-retention-", "ksj-audit-sink-",
+    )
 
     def checkpoints() -> set[str]:
-        return {
-            n for n in os.listdir(tmp) if n.startswith(("ksj-stream-", "temporary-"))
-        }
+        return {n for n in os.listdir(tmp) if n.startswith(prefixes)}
 
-    before = checkpoints()
-    out = REGISTRY["streaming_dedup_events"].fn(spark, SF_SMOKE)
-    assert out.count() > 0
-    assert checkpoints() - before == set()
+    for name in (
+        "streaming_dedup_events",
+        "checkpoint_offsetlog_table",
+        "checkpoint_commitlog_audit",
+        "checkpoint_statestore_table",
+        "checkpoint_sources_table",
+        "checkpoint_retention_audit",
+        "custom_sink_audit_roundtrip",
+    ):
+        before = checkpoints()
+        out = REGISTRY[name].fn(spark, SF_SMOKE)
+        assert out.count() > 0, name
+        assert checkpoints() - before == set(), name
 
 
 def test_update_mode_emits_final_counts(spark, tmp_path):

@@ -13,7 +13,9 @@ assembly, plus any work the spec does eagerly while building) and
 build-heavy: the streaming drains and the ``localCheckpoint(eager=True)``
 paths. Specs tagged ``streaming`` also print with a ``[streaming]`` mark:
 their ``fn`` runs the whole drain, so their time is not comparable with a
-batch spec's.
+batch spec's. The header line names the local FileSystem path the timings
+measured (``session.local_fs_mode``): the drains' checkpoint writes are
+several times slower on stock Hadoop.
 """
 
 from __future__ import annotations
@@ -33,10 +35,11 @@ def main() -> int:
         return 2
 
     from kafka_stream_job_spark.registry import all_specs
-    from kafka_stream_job_spark.session import get_spark
+    from kafka_stream_job_spark.session import get_spark, local_fs_mode
 
     spark = get_spark(app_name="time-queries")
     spark.sparkContext.setLogLevel("ERROR")
+    print(f"# sf_dir={sf_dir} local_fs={local_fs_mode(spark)}")
     specs = all_specs()
     for n in names:
         if n not in specs:
