@@ -2065,10 +2065,13 @@ def _anchored_gram_batches(it):
       the Unicode whitespace TRIM keeps. ASCII lowercase agrees across
       engines.
     - md5 over UTF-8 bytes, leading 7 hex digits as the anchor integer —
-      identical to conv(substring(md5(g),1,7),16,10).
-    - the `seen` set dedups per document over ALL positions; selection
-      by a deterministic function of the gram makes that equivalent to
-      the former filter-then-array_distinct (duplicates select alike).
+      identical to conv(substring(md5(g),1,7),16,10). Those 28 bits are
+      the digest's first 4 bytes shifted right by 4, so no hex string is
+      built.
+    - the `seen` set dedups per document over the anchored grams only;
+      selection is a deterministic function of the gram, so that equals
+      the former filter-then-array_distinct (duplicates select alike),
+      first occurrences in the same order.
     """
     import hashlib
     import re
@@ -2089,14 +2092,9 @@ def _anchored_gram_batches(it):
             seen = set()
             for i in range(length - GRAM_LEN + 1):
                 g = norm[i : i + GRAM_LEN]
-                if g in seen:
-                    continue
-                seen.add(g)
-                if (
-                    int(md5(g.encode("utf-8")).hexdigest()[:7], 16)
-                    % GRAM_STRIDE
-                    == 0
-                ):
+                anchor = int.from_bytes(md5(g.encode("utf-8")).digest()[:4], "big") >> 4
+                if anchor % GRAM_STRIDE == 0 and g not in seen:
+                    seen.add(g)
                     o_id.append(did)
                     o_gram.append(g)
         yield pa.RecordBatch.from_arrays(

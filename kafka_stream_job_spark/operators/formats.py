@@ -1395,14 +1395,10 @@ COMPACT_DEMO_FILES = 16
     tags=("maintenance", "compaction", "bronze", "events"),
 )
 def bronze_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from kafka_stream_job_spark.maintenance import compact_parquet_dir
-    from kafka_stream_job_spark.tables import load_table
+    from kafka_stream_job_spark.tables import _session_dir, load_table
 
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="ksj-compact-demo-"), "bronze_events"
-    )
+    table = os.path.join(_session_dir("ksj-compact-demo-"), "bronze_events")
     (
         load_table(spark, sf_dir, "events")
         .select("event_id", "event_type", "value")
@@ -1425,8 +1421,8 @@ def bronze_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sum_cents"),
     )
     # materialize the 1-row report NOW so the data-scale demo table can
-    # be deleted before returning (a per-run /tmp copy of events must
-    # not outlive the query — sweeps run this hundreds of times)
+    # be deleted before returning (a per-run copy of events must not
+    # outlive the query — sweeps run this hundreds of times)
     report = report.localCheckpoint()
     import shutil
 

@@ -179,7 +179,7 @@ from kafka_stream_job_spark.registry import REGISTRY, register
 from kafka_stream_job_spark.streaming.heavy_hitters import StreamingHeavyHitters
 from kafka_stream_job_spark.streaming.hll import StreamingHLL
 from kafka_stream_job_spark.streaming.kmv import StreamingKMV
-from kafka_stream_job_spark.tables import _staged_dir, load_table
+from kafka_stream_job_spark.tables import _session_dir, _staged_dir, load_table
 
 
 def _file_stream(
@@ -1657,7 +1657,7 @@ def streaming_sink_exactly_once_roundtrip(
     # stream; the heartbeat row is filtered out like any non-business
     # record would be
     stream = stream.filter(F.col("event_type") != "heartbeat")
-    out_dir = tempfile.mkdtemp(prefix="ksj-sink-rt-")
+    out_dir = _session_dir("ksj-sink-rt-")
     materialized = run_stream_foreach_batch(spark, stream, out_dir)
     return materialized.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -2119,7 +2119,7 @@ def streaming_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "cdc", "upsert", "merge", "events"),
 )
 def streaming_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    state_root = tempfile.mkdtemp(prefix="ksj-upsert-state-")
+    state_root = _session_dir("ksj-upsert-state-")
     versions: list[str] = []
 
     def latest_of(df: DataFrame) -> DataFrame:

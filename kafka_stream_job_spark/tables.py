@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -230,6 +231,15 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     against the same names the DuckDB oracle uses."""
     for name in TABLE_NAMES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+def _session_dir(prefix: str) -> str:
+    """A fresh directory under the driver's SparkFiles root, which Spark
+    deletes at ``stop()``: for data-sized files that a returned lazy
+    DataFrame still reads, so no copy outlives the session."""
+    from pyspark import SparkFiles
+
+    return tempfile.mkdtemp(prefix=prefix, dir=SparkFiles.getRootDirectory())
 
 
 def _staged_dir(root: str, src: str, version: str, build) -> str:

@@ -138,37 +138,83 @@ def test_stream_static_enrich(spark):
     assert out.filter(F.col("user_tag").isNull()).count() == 0
 
 
-def test_registry_twin_leaves_no_checkpoint_behind(spark):
+def test_registry_twin_leaves_no_checkpoint_behind(spark, tmp_path, monkeypatch):
     """A streaming twin drains through Spark's temporary checkpoint, which
     the clean stop() deletes: no checkpoint directory outlives the query.
     The twins that read their own checkpoint (or sink audit) back collect
-    the metadata-sized result and remove the directory themselves."""
+    the metadata-sized result and remove the directory themselves.
+
+    Each drained query's own resolved checkpoint root is checked, and the
+    twins' ``ksj-*`` dirs go to ``tmp_path``, so other processes sharing
+    the temp dir cannot fail the test."""
     import tempfile
+
+    from pyspark.sql.streaming import DataStreamWriter
 
     from kafka_stream_job_spark.registry import REGISTRY
 
-    tmp = tempfile.gettempdir()
-    prefixes = (
-        "ksj-stream-", "temporary-", "ksj-offsetlog-", "ksj-commitlog-",
-        "ksj-statestore-", "ksj-sources-tbl-", "ksj-retention-", "ksj-audit-sink-",
-    )
+    roots: list[str] = []
+    start = DataStreamWriter.start
 
-    def checkpoints() -> set[str]:
-        return {n for n in os.listdir(tmp) if n.startswith(prefixes)}
+    def recording_start(self, *args, **kwargs):
+        query = start(self, *args, **kwargs)
+        root = query._jsq.streamingQuery().resolvedCheckpointRoot()
+        roots.append(spark._jvm.org.apache.hadoop.fs.Path(root).toUri().getPath())
+        return query
 
-    for name in (
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    drained = (
         "streaming_dedup_events",
         "checkpoint_offsetlog_table",
         "checkpoint_commitlog_audit",
         "checkpoint_statestore_table",
         "checkpoint_sources_table",
         "checkpoint_retention_audit",
-        "custom_sink_audit_roundtrip",
-    ):
-        before = checkpoints()
+    )
+    for name in (*drained, "custom_sink_audit_roundtrip"):
+        roots.clear()
         out = REGISTRY[name].fn(spark, SF_SMOKE)
         assert out.count() > 0, name
-        assert checkpoints() - before == set(), name
+        assert bool(roots) == (name in drained), name
+        assert [r for r in roots if os.path.exists(r)] == [], name
+        assert [n for n in os.listdir(tmp_path) if n.startswith("ksj-")] == [], name
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_sink_exactly_once_roundtrip",
+        "streaming_upsert_latest_state",
+        "bronze_compaction_roundtrip",
+    ],
+)
+def test_data_sized_twin_dirs_live_under_spark_files_root(spark, tmp_path, monkeypatch, name):
+    """The twins whose lazy result reads files they wrote make them under
+    the driver's SparkFiles root, which ``stop()`` deletes, never in the
+    temp dir."""
+    import tempfile
+
+    from pyspark import SparkFiles
+
+    from kafka_stream_job_spark.registry import REGISTRY
+
+    made: list[str] = []
+    mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        made.append(mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = REGISTRY[name].fn(spark, SF_SMOKE)
+    assert out.count() > 0
+    assert [n for n in os.listdir(tempfile.gettempdir()) if n.startswith("ksj-")] == []
+    root = SparkFiles.getRootDirectory()
+    twin_dirs = [d for d in made if os.path.basename(d).startswith("ksj-")]
+    assert twin_dirs
+    assert all(os.path.dirname(d) == root for d in twin_dirs), (root, twin_dirs)
 
 
 def test_update_mode_emits_final_counts(spark, tmp_path):

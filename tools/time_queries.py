@@ -15,7 +15,10 @@ paths. Specs tagged ``streaming`` also print with a ``[streaming]`` mark:
 their ``fn`` runs the whole drain, so their time is not comparable with a
 batch spec's. The header line names the local FileSystem path the timings
 measured (``session.local_fs_mode``): the drains' checkpoint writes are
-several times slower on stock Hadoop.
+several times slower on stock Hadoop. It also names the Python worker
+daemon (``spark.python.daemon.module``): under the stock
+``pyspark.daemon`` every Python task re-reads ``pyspark.zip``'s directory
+about 16 times before its body runs.
 """
 
 from __future__ import annotations
@@ -39,7 +42,8 @@ def main() -> int:
 
     spark = get_spark(app_name="time-queries")
     spark.sparkContext.setLogLevel("ERROR")
-    print(f"# sf_dir={sf_dir} local_fs={local_fs_mode(spark)}")
+    daemon = spark.sparkContext.getConf().get("spark.python.daemon.module", "pyspark.daemon")
+    print(f"# sf_dir={sf_dir} local_fs={local_fs_mode(spark)} python_daemon={daemon}")
     specs = all_specs()
     for n in names:
         if n not in specs:
