@@ -3396,8 +3396,8 @@ def dedup_lsh_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lsh_index_report(sigs: DataFrame, docs: DataFrame) -> DataFrame:
     """Index-append report from converged (doc_id, h0..h15) signatures
     plus the doc_id universe — shared verbatim by the batch query and
-    its streaming twin (per-doc signature mins converge in update-mode
-    keyed JVM agg state; this assembles post-stream)."""
+    its streaming twin (which drains the per-doc signature mins in
+    complete mode; this assembles post-stream)."""
     incr = (
         F.conv(
             F.substring(

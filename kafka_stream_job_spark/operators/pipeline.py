@@ -3288,8 +3288,8 @@ def text_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def curation_funnel_report(docs: DataFrame) -> DataFrame:
     """Funnel report from a (doc_id, text, lang, ...) documents frame —
     shared verbatim by the batch query and its streaming twin (per-doc
-    rows replay-dedupe in update-mode keyed agg state; this assembles
-    post-stream)."""
+    rows replay-dedupe in keyed agg state drained in complete mode; this
+    assembles post-stream)."""
     from kafka_stream_job_spark.operators.dedup import _norm_text
     from kafka_stream_job_spark.operators.text import LANG_MARKERS
 

@@ -15389,8 +15389,8 @@ def basket_size_nbd_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def nbd_assemble(k: DataFrame) -> DataFrame:
     """NBD method-of-moments report from per-customer (o_custkey, k)
     order counts — shared verbatim by the batch query and its streaming
-    twin (the per-customer counts converge in update-mode keyed JVM agg
-    state; this assembles post-stream)."""
+    twin (which drains the per-customer counts in complete mode; this
+    assembles post-stream)."""
     mo = k.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("k").cast("long").alias("s"),
@@ -15541,8 +15541,8 @@ def ccf_hourly_counts(events: DataFrame) -> DataFrame:
     """Per-(event_type, absolute hour) count + exact cent sum — the one
     definition of the CCF's series spine, shared verbatim by the batch
     query and its streaming twin (the keyed agg state is time-domain x
-    type-vocabulary bounded; counts and non-negative cent sums are
-    monotone, so update-mode emissions converge via max)."""
+    type-vocabulary bounded; the twin drains it in complete mode, so the
+    drained table is the converged spine)."""
     hour_us = F.unix_micros(
         F.date_trunc("hour", F.col("ts").cast("timestamp"))
     )
@@ -15734,8 +15734,8 @@ def user_time_to_first_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ttfp_per_user(events: DataFrame) -> DataFrame:
     """Per-user (first_us, first_p_us) min timestamps — the one
     definition of the activation spine, shared verbatim by the batch
-    query and its streaming twin (mins are monotone under accumulation,
-    so update-mode keyed agg emissions converge via min)."""
+    query and its streaming twin (which drains it in complete mode, one
+    converged row per user)."""
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     return events.groupBy("user_id").agg(
         F.min(ts_us).alias("first_us"),

@@ -641,15 +641,34 @@ def run_stream_to_memory(
     """Drain-all helper: drain ``df`` into a memory sink (a unique table
     name unless ``name`` is given) and return the materialized table.
 
-    On a BOUNDED source, append-mode windowed aggs never emit their final
-    windows (the watermark can't advance past them without more data), so
-    aggregation tests pass ``output_mode="complete"``; append stays the
-    default for stateless/dedup pipelines.
+    ``output_mode="complete"`` is how a caller reads converged keyed
+    state: the memory sink truncates on every complete-mode trigger, so
+    after the drain the table holds exactly one row per key, the state
+    the aggregation ended with, whatever the values did batch to batch.
+    Update mode appends each batch's changed rows, so keys repeat with
+    stale values. On a BOUNDED source, append-mode windowed aggs never
+    emit their final windows (the watermark can't advance past them
+    without more data); append stays the default for stateless/dedup
+    pipelines.
+
+    The returned frame keeps the sink's rows alive; its temp view is
+    dropped, so the session catalog does not hold every drain's rows for
+    the life of the session. The sink's plan is not re-instanced, so a
+    self-join of the result fails with conflicting references: a caller
+    that self-joins it pins it first with a lazy ``localCheckpoint``.
     """
     name = name or f"drain_{uuid.uuid4().hex[:8]}"
     writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     _drain(spark, writer, checkpoint_dir)
-    return spark.table(name)
+    return _detached_table(spark, name)
+
+
+def _detached_table(spark: SparkSession, name: str) -> DataFrame:
+    """The memory-sink table ``name`` as a frame, with its temp view
+    dropped from the session catalog (the frame still reads the rows)."""
+    df = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return df
 
 
 @contextlib.contextmanager
@@ -1906,7 +1925,7 @@ def streaming_available_now_rollup(
         if not query.awaitTermination(300):
             query.stop()
             raise TimeoutError("availableNow query did not self-terminate")
-    return spark.table(name)
+    return _detached_table(spark, name)
 
 
 # ---------------------------------------------------------------------------
@@ -3587,21 +3606,14 @@ def streaming_lsh_candidate_buckets(
     # document the bucket-key cardinality is corpus-sized, and an
     # applyInPandasWithState here paid one Python pandas call per
     # bucket per batch (the r9 extended bench measured it at 12 s —
-    # 5x this plan). Update mode emits only buckets a batch touched;
-    # the post-stream max/min collapse is emission-order-free.
+    # 5x this plan). Complete mode: the drained table is the converged
+    # state, one row per bucket.
     emitted_stream = banded.groupBy("band_idx", "band_sig").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.min("doc_id").cast("long").alias("min_doc"),
     )
-    emitted = run_stream_to_memory(spark, emitted_stream, output_mode="update")
-    return (
-        emitted.groupBy("band_idx", "band_sig")
-        .agg(
-            F.max("n_docs").cast("long").alias("n_docs"),
-            F.min("min_doc").cast("long").alias("min_doc"),
-        )
-        .filter(F.col("n_docs") > 1)
-    )
+    converged = run_stream_to_memory(spark, emitted_stream, output_mode="complete")
+    return converged.filter(F.col("n_docs") > 1)
 
 
 # ---------------------------------------------------------------------------
@@ -3763,16 +3775,12 @@ def streaming_feature_hashing_monitor(
         F.col("bc.cnt").cast("long").alias("cnt"),
     )
     # (n_tokens, n_docs) are BUILT-IN sums — JVM streaming-agg state
-    # (the streaming_lsh_candidate_buckets lesson), update mode.
+    # (the streaming_lsh_candidate_buckets lesson), complete mode.
     emitted_stream = per_doc.groupBy("lang", "bucket").agg(
         F.sum("cnt").cast("long").alias("n_tokens"),
         F.count(F.lit(1)).cast("long").alias("n_docs"),
     )
-    emitted = run_stream_to_memory(spark, emitted_stream, output_mode="update")
-    final = emitted.groupBy("lang", "bucket").agg(
-        F.max("n_tokens").cast("long").alias("n_tokens"),
-        F.max("n_docs").cast("long").alias("n_docs"),
-    )
+    final = run_stream_to_memory(spark, emitted_stream, output_mode="complete")
     win = Window.partitionBy("lang").orderBy(
         F.desc("n_tokens"), F.asc("bucket")
     )
@@ -3840,9 +3848,10 @@ def streaming_type_entropy_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", "ts").cast("string").alias("hour_ts"),
         "event_type",
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
+    # pinned: tot and cw, both branches of c, join (conflicting references)
     c = run_stream_to_memory(
         spark, counted, output_mode="complete"
-    ).localCheckpoint(eager=False)  # tot and cw both branch from it
+    ).localCheckpoint(eager=False)
     tot = c.groupBy("hour_ts").agg(
         F.sum("c").cast("long").alias("n"),
         F.count(F.lit(1)).cast("long").alias("n_types"),
@@ -4282,17 +4291,10 @@ def streaming_brand_mi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token", "p_brand")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    emitted = run_stream_to_memory(spark, counted, output_mode="update")
-    # update-mode emissions: later batches supersede earlier rows for
-    # the same key; counts are monotone, so max(c) per key converges.
-    # localCheckpoint pins the converged counts: the assembly reads
-    # c_tb on BOTH sides of its marginal joins, and the memory-table
-    # lineage trips Spark's conflicting-reference resolution without it.
-    c_tb = (
-        emitted.groupBy("token", "p_brand")
-        .agg(F.max("c").cast("long").alias("c"))
-        .localCheckpoint(eager=False)
-    )
+    # pinned: the MI assembly self-joins c_tb (conflicting references)
+    c_tb = run_stream_to_memory(
+        spark, counted, output_mode="complete"
+    ).localCheckpoint(eager=False)
     return name_brand_mi_assemble(spark, c_tb)
 
 
@@ -4406,21 +4408,9 @@ def streaming_neyman_allocation(
         F.sum(ln).cast("long").alias("sum_len"),
         F.sum(ln * ln).cast("long").alias("sum_len_sq"),
     )
-    emitted = run_stream_to_memory(spark, m, output_mode="update")
-    # update-mode emissions: later batches supersede earlier rows for
-    # the same lang; all three moments are monotone, so max per key
-    # converges. localCheckpoint pins the converged moments — the
-    # assembly broadcasts their total back against the same lineage.
-    converged = (
-        emitted.groupBy("lang")
-        .agg(
-            F.max("n_docs").cast("long").alias("n_docs"),
-            F.max("sum_len").cast("long").alias("sum_len"),
-            F.max("sum_len_sq").cast("long").alias("sum_len_sq"),
-        )
-        .localCheckpoint(eager=False)
+    return neyman_assemble(
+        run_stream_to_memory(spark, m, output_mode="complete")
     )
-    return neyman_assemble(converged)
 
 
 # ---------------------------------------------------------------------------
@@ -4452,15 +4442,10 @@ def streaming_ess_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted = fp.groupBy("fingerprint", "source").agg(
         F.count(F.lit(1)).cast("long").alias("c_fs")
     )
-    emitted = run_stream_to_memory(spark, counted, output_mode="update")
-    # update-mode emissions converge per key at max(c_fs);
-    # localCheckpoint pins them — sizes joins the table against
-    # itself (per-fingerprint totals vs per-(fp, source) groups).
-    c_fs = (
-        emitted.groupBy("fingerprint", "source")
-        .agg(F.max("c_fs").cast("long").alias("c_fs"))
-        .localCheckpoint(eager=False)
-    )
+    # pinned: c_fs joins its own per-fingerprint sizes (conflicting refs)
+    c_fs = run_stream_to_memory(
+        spark, counted, output_mode="complete"
+    ).localCheckpoint(eager=False)
     sizes = c_fs.groupBy("fingerprint").agg(
         F.sum("c_fs").cast("long").alias("c")
     )
@@ -4535,17 +4520,10 @@ def streaming_unigram_fertility(
             .alias("c_tok"),
         )
     )
-    emitted = run_stream_to_memory(spark, blc_stream, output_mode="update")
-    # update-mode emissions converge per key at max; localCheckpoint
-    # pins them — everything below joins this table against itself.
-    blc = (
-        emitted.groupBy("lang", "block")
-        .agg(
-            F.max("c").cast("long").alias("c"),
-            F.max("c_tok").cast("long").alias("c_tok"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    # pinned: blc joins its own rollups below (conflicting references)
+    blc = run_stream_to_memory(
+        spark, blc_stream, output_mode="complete"
+    ).localCheckpoint(eager=False)
     bcnt = blc.groupBy("block").agg(F.sum("c").cast("long").alias("c"))
     spine = _uni_spine_df(spark)
     _cands, _v0, best2 = _uni_best2(spark, bcnt, spine)
@@ -4587,7 +4565,7 @@ def streaming_unigram_fertility(
 # ---------------------------------------------------------------------------
 # STREAMING CUPED MONITOR — the live twin of orders_cuped_adjustment:
 # per-customer pre/post cent sums accumulate in BUILT-IN JVM agg state
-# (update mode; both sums are monotone, so max-per-key converges), and
+# (complete mode, so the drained table is the converged sums), and
 # the whole-dollar quantization + pooled-theta assembly run post-stream
 # against the STATIC customer universe via the shared cuped_arm_col /
 # cuped_assemble — oracle verbatim from the batch op. The emission
@@ -4615,22 +4593,14 @@ def streaming_cuped_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("yc"),
     )
-    emitted = run_stream_to_memory(spark, spend_stream, output_mode="update")
-    # update-mode emissions converge per key at max (cent sums are
-    # monotone); the whole-dollar quantization happens on the
-    # CONVERGED totals, exactly like the batch op.
-    spend = (
-        emitted.groupBy("k")
-        .agg(
-            F.max("xc").cast("long").alias("xc"),
-            F.max("yc").cast("long").alias("yc"),
-        )
-        .select(
-            "k",
-            idiv(F.col("xc"), 100).alias("x"),
-            idiv(F.col("yc"), 100).alias("y"),
-        )
-        .localCheckpoint(eager=False)
+    # the whole-dollar quantization happens on the CONVERGED totals,
+    # exactly like the batch op
+    spend = run_stream_to_memory(
+        spark, spend_stream, output_mode="complete"
+    ).select(
+        "k",
+        idiv(F.col("xc"), 100).alias("x"),
+        idiv(F.col("yc"), 100).alias("y"),
     )
     customer = load_table(spark, sf_dir, "customer")
     u = customer.join(
@@ -4828,23 +4798,14 @@ def streaming_wav_haar_monitor(
         F.sum("e2").cast("long").alias("e2"),
         F.sum("e3").cast("long").alias("e3"),
     )
-    emitted = run_stream_to_memory(spark, rollup, output_mode="update")
-    # update-mode emissions converge per key at max (all five sums
-    # are monotone)
-    return emitted.groupBy("lang").agg(
-        F.max("n_docs").cast("long").alias("n_docs"),
-        F.max("n_frames").cast("long").alias("n_frames"),
-        F.max("e1").cast("long").alias("e1"),
-        F.max("e2").cast("long").alias("e2"),
-        F.max("e3").cast("long").alias("e3"),
-    )
+    return run_stream_to_memory(spark, rollup, output_mode="complete")
 
 
 # ---------------------------------------------------------------------------
 # STREAMING WAV ZERO-CROSSING MONITOR — the live twin of
 # multimodal_wav_zcr_real: real WAV decode inside the stream (the SAME
 # module-level encode/ZCR mapInPandas stages as the batch op), then
-# per-lang (n_docs, n_samples, n_crossings) sums in update-mode JVM agg
+# per-lang (n_docs, n_samples, n_crossings) sums in complete-mode JVM agg
 # state. The rate is computed on the CONVERGED totals (summed pair
 # counts, not a mean of per-doc rates), exactly like the batch rollup.
 # ---------------------------------------------------------------------------
@@ -4871,15 +4832,7 @@ def streaming_wav_zcr_monitor(
         F.sum("n_crossings").cast("long").alias("n_crossings"),
         F.sum(F.col("n_samples") - 1).cast("long").alias("n_pairs"),
     )
-    emitted = run_stream_to_memory(spark, rollup, output_mode="update")
-    # update-mode emissions converge per key at max (all four sums
-    # are monotone)
-    converged = emitted.groupBy("lang").agg(
-        F.max("n_docs").cast("long").alias("n_docs"),
-        F.max("n_samples").cast("long").alias("n_samples"),
-        F.max("n_crossings").cast("long").alias("n_crossings"),
-        F.max("n_pairs").cast("long").alias("n_pairs"),
-    )
+    converged = run_stream_to_memory(spark, rollup, output_mode="complete")
     return converged.select(
         "lang",
         "n_docs",
@@ -4893,10 +4846,9 @@ def streaming_wav_zcr_monitor(
 
 # ---------------------------------------------------------------------------
 # STREAMING DiD MONITOR — the live twin of orders_did_estimator: the
-# four (arm, period) cell moments accumulate in update-mode keyed JVM
-# agg state as orders stream in (counts and sums of nonnegative ints —
-# monotone, so emissions converge per key at max), and the report
-# assembles post-stream through the SAME did_assemble as the batch op.
+# four (arm, period) cell moments accumulate in complete-mode keyed JVM
+# agg state as orders stream in, and the report assembles post-stream
+# over the drained cells through the SAME did_assemble as the batch op.
 # Oracle verbatim from the batch op.
 # ---------------------------------------------------------------------------
 @register(
@@ -4922,27 +4874,18 @@ def streaming_did_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("d").cast("long").alias("sum_d"),
         F.sum(F.col("d") * F.col("d")).cast("long").alias("sum_d2"),
     )
-    emitted = run_stream_to_memory(spark, cells_stream, output_mode="update")
-    cells = (
-        emitted.groupBy("arm", "period")
-        .agg(
-            F.max("n").cast("long").alias("n"),
-            F.max("sum_cents").cast("long").alias("sum_cents"),
-            F.max("sum_d").cast("long").alias("sum_d"),
-            F.max("sum_d2").cast("long").alias("sum_d2"),
-        )
-        .localCheckpoint(eager=False)
+    return did_assemble(
+        run_stream_to_memory(spark, cells_stream, output_mode="complete")
     )
-    return did_assemble(cells)
 
 
 # ---------------------------------------------------------------------------
 # STREAMING BRIER MONITOR — the live twin of brier_score_decomposition,
 # possible in ONE streaming pass because the batch op's scored set
 # collapses to per-user (n_events, n_purchases): those two counts
-# accumulate in update-mode keyed JVM agg state, converge at max
-# (monotone), and the whole decomposition assembles post-stream through
-# the SAME brier_assemble. Oracle verbatim from the batch op.
+# accumulate in complete-mode keyed JVM agg state, and the whole
+# decomposition assembles post-stream through the SAME brier_assemble.
+# Oracle verbatim from the batch op.
 # ---------------------------------------------------------------------------
 @register(
     "streaming_brier_monitor",
@@ -4960,20 +4903,17 @@ def streaming_brier_monitor(
         .cast("long")
         .alias("k"),
     )
-    emitted = run_stream_to_memory(spark, per_user_stream, output_mode="update")
-    per_user = emitted.groupBy("user_id").agg(
-        F.max("n").cast("long").alias("n"),
-        F.max("k").cast("long").alias("k"),
+    return brier_assemble(
+        run_stream_to_memory(spark, per_user_stream, output_mode="complete")
     )
-    return brier_assemble(per_user)
 
 
 # ---------------------------------------------------------------------------
 # STREAMING MANN-KENDALL MONITOR — the live twin of
 # events_mann_kendall_trend: per-(type, day) counts accumulate in
-# update-mode keyed JVM agg state (converging at max), and the full
-# S / tie-corrected variance / z assembly runs post-stream through the
-# SAME mann_kendall_assemble as the batch op. Oracle verbatim.
+# complete-mode keyed JVM agg state, and the full S / tie-corrected
+# variance / z assembly runs post-stream through the SAME
+# mann_kendall_assemble as the batch op. Oracle verbatim.
 # ---------------------------------------------------------------------------
 @register(
     "streaming_mann_kendall_monitor",
@@ -4992,12 +4932,10 @@ def streaming_mann_kendall_monitor(
                 "date'1970-01-01')"
         ).alias("d"),
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    emitted = run_stream_to_memory(spark, daily_stream, output_mode="update")
-    daily = (
-        emitted.groupBy("event_type", "d")
-        .agg(F.max("c").cast("long").alias("c"))
-        .localCheckpoint(eager=False)
-    )
+    # pinned: the Mann-Kendall assembly self-joins daily (conflicting refs)
+    daily = run_stream_to_memory(
+        spark, daily_stream, output_mode="complete"
+    ).localCheckpoint(eager=False)
     return mann_kendall_assemble(daily)
 
 
@@ -5102,7 +5040,7 @@ def streaming_runs_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # STREAMING SRM MONITOR — the live twin of events_srm_check: the unit
-# universe (distinct users) accumulates as per-user rows in update-mode
+# universe (distinct users) accumulates as per-user rows in complete-mode
 # keyed JVM agg state, and the chi² verdict assembles post-stream
 # through the SAME srm_assemble. This is the monitor that catches a
 # broken randomizer while the experiment is still filling, not at
@@ -5118,15 +5056,15 @@ def streaming_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = events.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
-    emitted = run_stream_to_memory(spark, per_user, output_mode="update")
-    users = emitted.select("user_id").distinct()
-    return srm_assemble(users)
+    return srm_assemble(
+        run_stream_to_memory(spark, per_user, output_mode="complete")
+    )
 
 
 # ---------------------------------------------------------------------------
 # STREAMING PERMUTATION MONITOR — the live twin of
 # events_permutation_test: per-user (n_events, n_purchases) converge in
-# update-mode keyed JVM agg state (the brier-twin shape — the replica
+# complete-mode keyed JVM agg state (the brier-twin shape — the replica
 # arms are hash bits of user_id, so they derive POST-stream in the
 # shared permutation_assemble; nothing replica-specific ever enters the
 # state). Oracle verbatim from the batch op.
@@ -5142,17 +5080,14 @@ def streaming_permutation_monitor(
 ) -> DataFrame:
     events = stream_table(spark, sf_dir, "events")
     per_user_stream = perm_per_user_counts(events)
-    emitted = run_stream_to_memory(spark, per_user_stream, output_mode="update")
-    per_user = emitted.groupBy("user_id").agg(
-        F.max("e").cast("long").alias("e"),
-        F.max("p").cast("long").alias("p"),
+    return permutation_assemble(
+        run_stream_to_memory(spark, per_user_stream, output_mode="complete")
     )
-    return permutation_assemble(per_user)
 
 
 # ---------------------------------------------------------------------------
 # STREAMING POWER/MDE MONITOR — the live twin of events_power_mde_plan:
-# two global int64 counts in update-mode JVM agg state answer "what
+# two global int64 counts in complete-mode JVM agg state answer "what
 # uplift could this experiment detect with the traffic collected SO
 # FAR" while it is still filling. Shared power_mde_assemble; oracle
 # verbatim from the batch op.
@@ -5173,18 +5108,15 @@ def streaming_power_mde_monitor(
         .cast("long")
         .alias("n_purch"),
     )
-    emitted = run_stream_to_memory(spark, counts_stream, output_mode="update")
-    c = emitted.agg(
-        F.max("n_events").cast("long").alias("n_events"),
-        F.max("n_purch").cast("long").alias("n_purch"),
+    return power_mde_assemble(
+        run_stream_to_memory(spark, counts_stream, output_mode="complete")
     )
-    return power_mde_assemble(c)
 
 
 # ---------------------------------------------------------------------------
 # STREAMING SPLIT-LEAKAGE MONITOR — the live twin of
 # split_leakage_audit: per-fingerprint (n_train, n_val, n_test)
-# counters converge in update-mode keyed JVM agg state as documents
+# counters converge in complete-mode keyed JVM agg state as documents
 # stream in, and the whole report (per-split doc counts, distinct-fp
 # counts, leaked mass, global leaked-fp total) assembles post-stream
 # from that one table through the SAME split_leakage_assemble — a
@@ -5202,23 +5134,17 @@ def streaming_split_leakage_monitor(
 ) -> DataFrame:
     docs = stream_table(spark, sf_dir, "documents")
     fps3_stream = leakage_counters(docs)
-    emitted = run_stream_to_memory(spark, fps3_stream, output_mode="update")
-    fps3 = emitted.groupBy("fp").agg(
-        *[
-            F.max(f"n_{s}").cast("long").alias(f"n_{s}")
-            for s in ("train", "val", "test")
-        ]
+    return split_leakage_assemble(
+        run_stream_to_memory(spark, fps3_stream, output_mode="complete")
     )
-    return split_leakage_assemble(fps3)
 
 
 # ---------------------------------------------------------------------------
 # STREAMING NBD MONITOR — the live twin of basket_size_nbd_fit: the
-# per-customer order counts converge in update-mode keyed JVM agg state
-# (counts are monotone, so max over emissions is the converged value),
-# and the method-of-moments fit assembles post-stream through the SAME
-# nbd_assemble. The purchase-frequency model refreshes while orders are
-# still arriving. Oracle verbatim from the batch op.
+# per-customer order counts converge in complete-mode keyed JVM agg
+# state, and the method-of-moments fit assembles post-stream through
+# the SAME nbd_assemble. The purchase-frequency model refreshes while
+# orders are still arriving. Oracle verbatim from the batch op.
 # ---------------------------------------------------------------------------
 @register(
     "streaming_nbd_monitor",
@@ -5230,21 +5156,18 @@ def streaming_nbd_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_cust = orders.groupBy("o_custkey").agg(
         F.count(F.lit(1)).cast("long").alias("k")
     )
-    emitted = run_stream_to_memory(spark, per_cust, output_mode="update")
-    k = emitted.groupBy("o_custkey").agg(
-        F.max("k").cast("long").alias("k")
+    return nbd_assemble(
+        run_stream_to_memory(spark, per_cust, output_mode="complete")
     )
-    return nbd_assemble(k)
 
 
 # ---------------------------------------------------------------------------
 # STREAMING CCF MONITOR — the live twin of events_ccf_count_value: the
-# per-(type, hour) count/cent-sum spine converges in update-mode keyed
-# JVM agg state (time-domain x type-vocabulary bounded; counts and
-# non-negative cent sums are monotone, so max over emissions converges),
-# and the lag pairing + Pearson moments assemble post-stream through the
-# SAME ccf_assemble — the hour index derives from the converged spine's
-# min hour, so the stream never needs a global min mid-flight. Oracle
+# per-(type, hour) count/cent-sum spine converges in complete-mode keyed
+# JVM agg state (time-domain x type-vocabulary bounded), and the lag
+# pairing + Pearson moments assemble post-stream through the SAME
+# ccf_assemble — the hour index derives from the converged spine's min
+# hour, so the stream never needs a global min mid-flight. Oracle
 # verbatim from the batch op.
 # ---------------------------------------------------------------------------
 @register(
@@ -5256,23 +5179,18 @@ def streaming_nbd_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_ccf_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = stream_table(spark, sf_dir, "events")
     spine = ccf_hourly_counts(events)
-    emitted = run_stream_to_memory(spark, spine, output_mode="update")
-    hourly = emitted.groupBy("event_type", "hour_us").agg(
-        F.max("c").cast("long").alias("c"),
-        F.max("s").cast("long").alias("s"),
+    return ccf_assemble(
+        spark, run_stream_to_memory(spark, spine, output_mode="complete")
     )
-    return ccf_assemble(spark, hourly)
 
 
 # ---------------------------------------------------------------------------
 # STREAMING TIME-TO-FIRST-PURCHASE MONITOR — the live twin of
 # user_time_to_first_purchase: per-user first-event / first-purchase
-# minimum timestamps converge in update-mode keyed JVM agg state (mins
-# are monotone decreasing under accumulation, so min over emissions
-# converges; a user's purchase min stays NULL until their first
-# purchase arrives, exactly as in batch), and the activation bands
-# assemble post-stream through the SAME ttfp_assemble. Oracle verbatim
-# from the batch op.
+# minimum timestamps converge in complete-mode keyed JVM agg state (a
+# user's purchase min stays NULL until their first purchase arrives,
+# exactly as in batch), and the activation bands assemble post-stream
+# through the SAME ttfp_assemble. Oracle verbatim from the batch op.
 # ---------------------------------------------------------------------------
 @register(
     "streaming_ttfp_monitor",
@@ -5282,12 +5200,9 @@ def streaming_ccf_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_ttfp_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = stream_table(spark, sf_dir, "events")
     per_user = ttfp_per_user(events)
-    emitted = run_stream_to_memory(spark, per_user, output_mode="update")
-    u = emitted.groupBy("user_id").agg(
-        F.min("first_us").alias("first_us"),
-        F.min("first_p_us").alias("first_p_us"),
+    return ttfp_assemble(
+        run_stream_to_memory(spark, per_user, output_mode="complete")
     )
-    return ttfp_assemble(u)
 
 
 # ---------------------------------------------------------------------------
@@ -5402,12 +5317,11 @@ def checkpoint_retention_audit(
 # ---------------------------------------------------------------------------
 # STREAMING LSH INDEX MAINTENANCE — the live twin of
 # dedup_lsh_index_maintenance: per-document MinHash signature mins
-# accumulate in update-mode keyed JVM agg state (16 universal-hash mins
-# per doc — constant width, monotone decreasing, so min over emissions
-# converges), and the frozen-index append report assembles post-stream
-# through the SAME lsh_index_report. This is the state-sizing monitor a
-# streaming dedup service runs while documents are still arriving.
-# Oracle verbatim from the batch op.
+# accumulate in complete-mode keyed JVM agg state (16 universal-hash
+# mins per doc — constant width), and the frozen-index append report
+# assembles post-stream through the SAME lsh_index_report. This is the
+# state-sizing monitor a streaming dedup service runs while documents
+# are still arriving. Oracle verbatim from the batch op.
 # ---------------------------------------------------------------------------
 @register(
     "streaming_lsh_index_maintenance",
@@ -5436,14 +5350,10 @@ def streaming_lsh_index_maintenance(
     per_doc = staged.groupBy("doc_id").agg(
         *[F.min(f"h{s}").alias(f"h{s}") for s in range(NUM_HASHES)]
     )
-    emitted = run_stream_to_memory(spark, per_doc, output_mode="update")
-    # eager checkpoint: the report self-joins several branches of
-    # this frame; a memory-sink lineage trips Catalyst's conflicting-
-    # references guard, a materialized LogicalRDD (same shape as the
-    # batch op's table scan) does not
-    sigs = emitted.groupBy("doc_id").agg(
-        *[F.min(f"h{s}").alias(f"h{s}") for s in range(NUM_HASHES)]
-    ).localCheckpoint()
+    # pinned: lsh_index_report self-joins sigs (conflicting references)
+    sigs = run_stream_to_memory(
+        spark, per_doc, output_mode="complete"
+    ).localCheckpoint(eager=False)
     # null-text docs emit no signature and no postings on either
     # engine, so the signature doc_ids ARE the relevant universe
     return lsh_index_report(sigs, sigs.select("doc_id"))
@@ -5451,9 +5361,9 @@ def streaming_lsh_index_maintenance(
 
 # ---------------------------------------------------------------------------
 # STREAMING CURATION FUNNEL MONITOR — the live twin of
-# text_curation_funnel: per-document rows replay-dedupe in update-mode
-# keyed agg state (documents are immutable, so max over emissions is
-# the row itself — the magic-sniffer replay-dedupe shape), and the
+# text_curation_funnel: per-document rows replay-dedupe in complete-mode
+# keyed agg state (documents are immutable, so max per doc_id is the
+# row itself — the magic-sniffer replay-dedupe shape), and the
 # five-stage attributed funnel assembles post-stream through the SAME
 # curation_funnel_report. The corpus-hygiene dashboard refreshes while
 # the crawl is still landing. Oracle verbatim from the batch op.
@@ -5471,10 +5381,6 @@ def streaming_curation_funnel(
     per_doc = docs.groupBy("doc_id").agg(
         F.max("text").alias("text"), F.max("lang").alias("lang")
     )
-    emitted = run_stream_to_memory(spark, per_doc, output_mode="update")
-    # eager checkpoint — same conflicting-references guard note as
-    # the LSH index twin above
-    converged = emitted.groupBy("doc_id").agg(
-        F.max("text").alias("text"), F.max("lang").alias("lang")
-    ).localCheckpoint()
-    return curation_funnel_report(converged)
+    return curation_funnel_report(
+        run_stream_to_memory(spark, per_doc, output_mode="complete")
+    )

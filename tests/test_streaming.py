@@ -421,6 +421,78 @@ def test_stream_table_reads_in_place(spark, tmp_path):
     assert [r["count"] for r in out.collect()] == [2]
 
 
+def test_complete_mode_drain_reads_converged_keyed_state(spark, tmp_path):
+    """A keyed sum drained in complete mode over two micro-batches leaves
+    one memory row per key, equal to the batch sum over both files, even
+    though the second batch LOWERS key "a" (running sum 5, then -2): a max
+    over update-mode emissions would keep the stale 5."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafka_stream_job_spark.streaming.pipeline import _file_stream
+
+    src = tmp_path / "src"
+    src.mkdir()
+    files = {
+        "a.parquet": {"k": ["a", "b"], "v": [5, 3]},
+        "b.parquet": {"k": ["a", "c"], "v": [-7, 2]},
+    }
+    for i, (name, cols) in enumerate(files.items()):
+        pq.write_table(pa.table(cols), str(src / name))
+        # the file source orders files by mtime: a.parquet is batch 0
+        os.utime(src / name, (1_000_000 + i, 1_000_000 + i))
+    stream = _file_stream(spark, str(src), files_per_trigger=1)
+    ckpt = str(tmp_path / "ckpt")
+    out = run_stream_to_memory(
+        spark,
+        stream.groupBy("k").agg(F.sum("v").alias("s")),
+        checkpoint_dir=ckpt,
+        output_mode="complete",
+    )
+    assert [b for b, _ in list_commit_batches(ckpt)] == [0, 1]
+    batch = spark.read.parquet(str(src)).groupBy("k").agg(F.sum("v").alias("s"))
+    want = sorted((r["k"], r["s"]) for r in batch.collect())
+    assert want == [("a", -2), ("b", 3), ("c", 2)]
+    assert sorted((r["k"], r["s"]) for r in out.collect()) == want
+
+
+def test_drains_leave_no_temp_view_behind(spark):
+    """A drain drops its memory sink's temp view, so the session catalog
+    does not keep every drained row for the life of the session: neither a
+    registry twin (``drain_*``), the availableNow rollup (``stream_avnow_*``)
+    nor a plain run_stream_to_memory call leaves a view. The returned frame
+    still reads its rows, and self-joins once pinned."""
+    from kafka_stream_job_spark.registry import REGISTRY
+
+    def drain_views():
+        return {
+            t.name
+            for t in spark.catalog.listTables()
+            if t.name.startswith(("drain_", "stream_avnow_"))
+        }
+
+    before = drain_views()
+    for name in ("streaming_mann_kendall_monitor", "streaming_available_now_rollup"):
+        assert REGISTRY[name].fn(spark, SF_SMOKE).count() > 0, name
+    counts = run_stream_to_memory(
+        spark,
+        stream_table(spark, SF_SMOKE, "events").groupBy("event_type").count(),
+        output_mode="complete",
+    )
+    assert drain_views() == before
+
+    pinned = counts.localCheckpoint(eager=False)
+    joined = pinned.join(
+        pinned.select("event_type", F.col("count").alias("again")), "event_type"
+    )
+    want = {
+        r["event_type"]: r["count"]
+        for r in load_table(spark, SF_SMOKE, "events").groupBy("event_type").count().collect()
+    }
+    assert {r["event_type"]: r["count"] for r in counts.collect()} == want
+    assert {r["event_type"]: r["again"] for r in joined.collect()} == want
+
+
 def test_purchase_attribution_stream_equals_batch(spark, tmp_path):
     """Stream-stream join result must equal the same join run as batch
     once the bounded input drains."""

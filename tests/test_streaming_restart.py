@@ -18,9 +18,10 @@ One representative per state machinery — the full quartet:
 - dropDuplicates           — StreamingDeduplicationExec state, with
   phase 2 deliberately re-sending phase-1 rows;
 - streaming_brand_mi_drift — built-in UPDATE-mode keyed aggregation
-  state with post-stream assembly over the converged max-per-key
-  emissions (the r9-era twin shape: streaming_brand_mi_drift,
-  streaming_bootstrap_ci, streaming_neyman_allocation, ...).
+  state (the mode checkpoint_statestore_table drains in) over the twin's
+  (token, p_brand) counts, checked against the twin's oracle. The twin
+  itself drains in complete mode; the max-per-key read of phase 2 is
+  this test's, not the twin's.
 
 Each phase runs in its OWN OS process (subprocess → new JVM + new state
 store provider cache), so recovery genuinely exercises the on-disk
@@ -79,8 +80,8 @@ elif twin == "dedup":
     emitted_stream = stream.dropDuplicates(["event_id"])
     mode = "append"
 elif twin == "brandmi":
-    # update-mode keyed JVM agg state: later emissions supersede
-    # earlier rows per key; phase 2 must resume the phase-1 counts
+    # update-mode keyed JVM agg state (the checkpoint_statestore_table
+    # shape): phase 2 must resume the phase-1 counts
     from pyspark.sql import functions as _F
     emitted_stream = (
         stream.select(
@@ -136,9 +137,9 @@ if phase == "2":
         final = all_emitted.drop("_batch").orderBy(F.col("n").desc()).limit(1)
         result = runs_report(final)
     elif twin == "brandmi":
-        # update mode: counts are monotone per key, so the converged
-        # table is max(c) per key — lost agg state would restart the
-        # phase-2 counts from zero and undershoot
+        # update mode appends each batch's changed rows; these counts
+        # only grow, so max(c) per key is the resumed count. Lost agg
+        # state would restart the phase-2 counts from zero and undershoot
         from kafka_stream_job_spark.operators.relational import (
             name_brand_mi_assemble,
         )
