@@ -1,20 +1,22 @@
 """Multimodal-column plumbing: opaque ``binary`` payloads with typed
-metadata, decoded / feature-extracted via Arrow-batched Pandas UDFs
-(north star; SURVEY.md §7.3 step 5; decode pattern mirrors the reference's
-binary→struct T1 decode, KafkaAvroToIceberg.scala:67-71).
+metadata, decoded / feature-extracted through ONE per-row Arrow boundary,
+``map_rows`` (north star; SURVEY.md §7.3 step 5; decode pattern mirrors the
+reference's binary→struct T1 decode, KafkaAvroToIceberg.scala:67-71).
 
 The sandbox has no image/audio libraries and the test tables carry no real
 media, so: the binary payload is derived from ``documents.text`` (UTF-8
 bytes), and the generic *decode* step is a clearly-marked deterministic
 fake (md5-derived pseudo-features) — everything Spark-side (schema, Arrow
-batch shape, ``mapInPandas`` signature, partitioning) is real and tested.
-WAV (``decode_wav_real``) and BMP (``decode_bmp_real`` /
-``decode_bmp_luma_grid``) are the exceptions: both are header-parseable
-without media libraries and carry GENUINE parsers, so only video and
-compressed-image codecs remain an environmental seam. Swapping the fake
-for `PIL.Image.open`/`librosa.load` changes one function.
+batch shape, the ``mapInArrow`` stage, partitioning) is real and tested.
+WAV, BMP, PNG, GIF and AVI are the exceptions: each has a per-row fixture
+encoder and a GENUINE pure-Python parser (``decode_wav_real``,
+``decode_bmp_real`` / ``decode_bmp_luma_grid``, ``decode_png_real``,
+``decode_gif_real``, ``decode_avi_real``), so only DCT/entropy-coded
+codecs (JPEG, MP3/AAC, H.264-class video) remain an environmental seam.
+Swapping the fake for `PIL.Image.open`/`librosa.load` changes one row
+function.
 
-Scale notes: ``mapInPandas`` streams Arrow batches executor→Python worker;
+Scale notes: ``map_rows`` streams Arrow batches executor→Python worker;
 feature extraction is embarrassingly parallel (no shuffle). Batch size is
 bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a 100 TB
 binary column never materializes a partition in one Python list.
@@ -22,8 +24,7 @@ binary column never materializes a partition in one Python list.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
+import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,9 +33,6 @@ from pyspark.sql import types as T
 from kafka_stream_job_spark.operators._portable import pround
 from kafka_stream_job_spark.registry import register
 from kafka_stream_job_spark.tables import load_table
-
-if TYPE_CHECKING:
-    import pandas as pd
 
 N_FAKE_FEATURES = 8
 
@@ -48,6 +46,16 @@ DECODE_SCHEMA = T.StructType(
         T.StructField("features", T.ArrayType(T.IntegerType())),
     ]
 )
+
+
+def _schema(ddl: str) -> T.StructType:
+    """``"name type, ..."`` over atomic type names (``long``, ``integer``,
+    ``string``) → StructType, built in Python at import: a DDL string
+    handed to Spark is parsed in the JVM on every build."""
+    schema = T.StructType()
+    for field in ddl.split(","):
+        schema.add(*field.split())
+    return schema
 
 
 def with_binary_payload(docs: DataFrame) -> DataFrame:
@@ -65,64 +73,64 @@ def with_binary_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def fused_encode_decode(docs: DataFrame, encode, decode, schema) -> DataFrame:
-    """ONE mapInPandas stage composing a fixture ENCODE generator and a
-    blind DECODE generator inside the same Python worker.
+def map_rows(df: DataFrame, fn, schema: T.StructType) -> DataFrame:
+    """ONE ``mapInArrow`` stage running a per-row Python function — the
+    multimodal family's one Arrow boundary.
 
-    The encode→decode pairs used to run as two chained mapInPandas
-    stages; each stage is a separate ArrowEvalPython pipeline, so the
-    payload bytes crossed the JVM↔Python boundary twice more than
-    needed (py→JVM→py in the middle of one stage). Composing the
-    generators keeps the decoder blind to the encoder's layout (it
-    still sees only (doc_id, payload) frames) while the payload column
-    never re-enters the JVM — guide §4.1: you control how many times
-    columns cross the boundary. r13 measured ~0.35 s/query at sf0.1
-    (two ArrowEvalPython pipelines → one), and at scale it removes one
-    full Arrow serialization round trip of the heaviest column.
+    ``fn`` receives one input row's column values as Python objects
+    (``to_pylist``: bytes, str, int, or None for a NULL) and returns that
+    row's output rows: zero, one or many tuples in ``schema`` order. Each
+    output RecordBatch is built with ``schema``'s Arrow types, converted
+    once here on the driver. A fixture op composes ``decode(doc_id,
+    encode(doc_id, text))`` inside ``fn``, so the payload is built and
+    decoded in the same Python worker and never re-enters the JVM: one
+    Arrow round trip per query instead of two (r13 measured ~0.35 s/query
+    at sf0.1 for the second one).
     """
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def checked(frames):
-        # the decoder's contract is (doc_id, payload) frames; a fixture
-        # encoder that renames or drops one fails here, not as a KeyError
-        # deep inside the decode body.
-        for pdf in frames:
-            missing = {"doc_id", "payload"}.difference(pdf.columns)
-            if missing:
-                raise ValueError(f"encode frame lacks {sorted(missing)}")
-            yield pdf
+    arrow_schema = to_arrow_schema(schema)
 
-    def fused(batches):
-        yield from decode(checked(encode(batches)))
+    def row_batches(batches):
+        import pyarrow as pa
 
-    return docs.mapInPandas(fused, schema)
+        for batch in batches:
+            out = [
+                r
+                for row in zip(*(col.to_pylist() for col in batch.columns))
+                for r in fn(*row)
+            ]
+            cols = list(zip(*out)) if out else [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return df.mapInArrow(row_batches, schema)
 
 
-def decode_payload_batches(
-    batches: Iterator["pd.DataFrame"],
-) -> Iterator["pd.DataFrame"]:
-    """mapInPandas decoder. DETERMINISTIC FAKE: a real deployment replaces
+def _decoded_row(doc_id: int, parsed: dict, schema: T.StructType) -> list:
+    """One output row: ``doc_id``, then the decoder's fields named by the
+    rest of ``schema``."""
+    return [(doc_id, *(parsed[k] for k in schema.names[1:]))]
+
+
+def decode_payload_rows(doc_id: int, payload: bytes | None, mime: str) -> list:
+    """``map_rows`` decoder. DETERMINISTIC FAKE: a real deployment replaces
     the body with e.g. PIL/librosa decoding of ``payload``; the Arrow
     plumbing, schema, and batch iteration are production-shaped.
 
     Fake features: first N hex digits of md5(payload), each mapped to its
     ascii code — engine-portable, so even this stub is oracle-checkable.
+    A NULL payload (NULL text) has NULL size and features, as the
+    oracle's octet_length and md5 of NULL are NULL.
     """
-    import hashlib
-
-    import pandas as pd
-
-    for pdf in batches:
-        digests = [hashlib.md5(p).hexdigest() for p in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_bytes": [len(p) for p in pdf["payload"]],
-                "mime": [m["mime"] for m in pdf["meta"]],
-                "features": [
-                    [ord(c) for c in d[:N_FAKE_FEATURES]] for d in digests
-                ],
-            }
-        )
+    if payload is None:
+        return [(doc_id, None, mime, None)]
+    digest = hashlib.md5(payload).hexdigest()
+    return [
+        (doc_id, len(payload), mime, [ord(c) for c in digest[:N_FAKE_FEATURES]])
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -153,9 +161,10 @@ def multimodal_metadata_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Decode + feature extraction through the Pandas-UDF path, then a feature
-# rollup. The md5-derived fake features are reproduced exactly in the
-# DuckDB oracle, so this checks the whole Arrow round-trip bit-for-bit.
+# Decode + feature extraction through the per-row Arrow path (map_rows),
+# then a feature rollup. The md5-derived fake features are reproduced
+# exactly in the DuckDB oracle, so this checks the whole Arrow round-trip
+# bit-for-bit.
 # ---------------------------------------------------------------------------
 @register(
     "multimodal_decode_features",
@@ -173,7 +182,11 @@ def multimodal_metadata_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = with_binary_payload(load_table(spark, sf_dir, "documents"))
-    decoded = docs.mapInPandas(decode_payload_batches, schema=DECODE_SCHEMA)
+    decoded = map_rows(
+        docs.select("doc_id", "payload", "meta.mime"),
+        decode_payload_rows,
+        DECODE_SCHEMA,
+    )
     return decoded.select(
         "doc_id",
         "n_bytes",
@@ -190,6 +203,9 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # batches bounded.
 # ---------------------------------------------------------------------------
 RESIZE_CHARS = 256
+_RESIZE_SCHEMA = _schema(
+    "doc_id long, orig_bytes integer, resized_bytes integer, resized_md5 string"
+)
 
 
 @register(
@@ -207,38 +223,25 @@ RESIZE_CHARS = 256
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def resize_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
+    def resize_row(doc_id, text):
+        if text is None:  # the oracle's octet_length and md5 of NULL
+            return [(doc_id, None, None, None)]
+        small = text[:RESIZE_CHARS].encode("utf-8")
+        md5 = hashlib.md5(small).hexdigest()
+        return [(doc_id, len(text.encode("utf-8")), len(small), md5)]
 
-        import pandas as pd
-
-        for pdf in batches:
-            small = [t[:RESIZE_CHARS] for t in pdf["text"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "orig_bytes": [len(t.encode("utf-8")) for t in pdf["text"]],
-                    "resized_bytes": [len(s.encode("utf-8")) for s in small],
-                    "resized_md5": [
-                        hashlib.md5(s.encode("utf-8")).hexdigest() for s in small
-                    ],
-                }
-            )
-
-    return docs.mapInPandas(
-        resize_batches,
-        schema="doc_id long, orig_bytes int, resized_bytes int, resized_md5 string",
-    )
+    return map_rows(docs, resize_row, _RESIZE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
 # "Frame sample": split each payload into fixed-width frames and keep every
 # SAMPLE_EVERY-th — the video-frame-sampling stand-in, and the 1-row-in →
-# N-rows-out mapInPandas shape (batch iterator may emit more rows than it
-# consumed; Arrow re-chunks downstream).
+# N-rows-out shape (a row function may emit more rows than it consumed;
+# Arrow re-chunks downstream).
 # ---------------------------------------------------------------------------
 FRAME_CHARS = 64
 SAMPLE_EVERY = 4
+_FRAME_SAMPLE_SCHEMA = _schema("doc_id long, frame_idx long, frame_md5 string")
 
 
 @register(
@@ -260,26 +263,14 @@ SAMPLE_EVERY = 4
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def sample_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
+    def sample_rows(doc_id, text):
+        if text is None:  # the oracle's UNNEST(range(0, NULL)) emits no frame
+            return
+        for i in range(0, -(-len(text) // FRAME_CHARS), SAMPLE_EVERY):
+            frame = text[i * FRAME_CHARS : (i + 1) * FRAME_CHARS]
+            yield doc_id, i, hashlib.md5(frame.encode("utf-8")).hexdigest()
 
-        import pandas as pd
-
-        for pdf in batches:
-            ids, idxs, hashes = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                for i in range(0, -(-len(text) // FRAME_CHARS), SAMPLE_EVERY):
-                    frame = text[i * FRAME_CHARS : (i + 1) * FRAME_CHARS]
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    hashes.append(hashlib.md5(frame.encode("utf-8")).hexdigest())
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame_md5": hashes}
-            )
-
-    return docs.mapInPandas(
-        sample_batches, schema="doc_id long, frame_idx bigint, frame_md5 string"
-    )
+    return map_rows(docs, sample_rows, _FRAME_SAMPLE_SCHEMA)
 
 
 def _wav_pcm_samples(blob: bytes, meta: dict):
@@ -381,34 +372,6 @@ def decode_wav_real(payload: bytes) -> dict:
     }
 
 
-def decode_media_real(payload_format: str):
-    """Real media decoding dispatch. WAV, BMP, PNG, GIF and AVI (RIFF
-    containers with uncompressed DIB frames) are implemented in pure
-    Python — header-parseable / losslessly-coded formats need no media
-    libraries (`decode_wav_real`, `decode_bmp_real`, `decode_png_real`,
-    `decode_gif_real`, `decode_avi_real`). Only DCT/entropy-coded codecs
-    (JPEG, MP3/AAC, H.264-class video) remain an explicit environmental
-    seam. The Spark-side contract either way is
-    `decode_payload_batches`-shaped mapInPandas.
-    """
-    if payload_format == "wav":
-        return decode_wav_real
-    if payload_format == "bmp":
-        return decode_bmp_real
-    if payload_format == "png":
-        return decode_png_real
-    if payload_format == "gif":
-        return decode_gif_real
-    if payload_format == "avi":
-        return decode_avi_real
-    raise NotImplementedError(
-        f"real {payload_format} decoding requires media libraries not present "
-        "in this environment (only DCT/entropy-coded codecs remain a seam — "
-        "WAV, BMP, PNG, GIF and AVI/DIB parse natively); "
-        "decode_payload_batches shows the Arrow plumbing"
-    )
-
-
 # ---------------------------------------------------------------------------
 # "Audio" frame energy: interpret the payload bytes as a PCM-ish sample
 # stream, window it into fixed AUDIO_FRAME-sample frames, and emit each
@@ -455,8 +418,9 @@ def multimodal_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame
     """Per-frame RMS energy over the payload's byte stream.
 
     Reference parity: none (SURVEY.md §2.7); north-star audio-modality
-    extension. All JVM-side array algebra (no Pandas UDF needed for this
-    one — the samples are already numeric after `ascii`), zero shuffles.
+    extension. All JVM-side array algebra (no Python stage needed for
+    this one — the samples are already numeric after `ascii`), zero
+    shuffles.
     """
     docs = load_table(spark, sf_dir, "documents", rebalance=True).select(
         "doc_id", "text"
@@ -496,21 +460,52 @@ def multimodal_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # ---------------------------------------------------------------------------
 # WAV stats over REAL decoded payloads — unlike the "deterministic fake"
-# decoders above, the parse here is genuine: stage 1 (fixture writer)
-# packs each document into a complete RIFF/WAVE container — PCM16 mono,
+# decoders above, the parse here is genuine: the fixture encoder packs
+# each document into a complete RIFF/WAVE container — PCM16 mono,
 # per-doc sample rate 8000/12000/16000 Hz, samples (byte-128)·256, plus
 # a LIST/INFO chunk BEFORE fmt so the parser must actually walk chunks —
-# and stage 2 runs `decode_wav_real`, a chunk-walking header+PCM parser
-# that knows nothing about stage 1's layout. Only the audio CONTENT is
+# and `decode_wav_real`, a chunk-walking header+PCM parser, knows
+# nothing about the encoder's layout. Only the audio CONTENT is
 # synthetic (derived from text bytes, which is what lets DuckDB compute
 # the expected stats from the generative model); the decode is the real
 # thing a production pipeline would run on stored .wav payloads.
 #
-# Scale shape: two chained mapInPandas stages (Arrow-batched, no Python
-# row loop at the boundary, no shuffle anywhere); duration/rms finish
-# JVM-side from the parser's exact-integer (n_samples, sq_sum).
+# Scale shape: one map_rows stage (encode and decode in the same Python
+# worker, no shuffle anywhere); duration/rms finish JVM-side from the
+# parser's exact-integer (n_samples, sq_sum).
 # ---------------------------------------------------------------------------
 WAV_BASE_RATE = 8_000  # per-doc rate: 8000 + (doc_id % 3) * 4000
+_WAV_INFO = b"INFOISFT\x0c\x00\x00\x00ksj-fixture\x00"  # LIST body, even length
+_WAV_STATS_SCHEMA = _schema(
+    "doc_id long, sample_rate long, n_channels long, "
+    "bits_per_sample long, n_samples long, sq_sum long"
+)
+
+
+def _wav_encode(doc_id: int, text: str, info: bytes = b"") -> bytes:
+    """Fixture encoder of every WAV op: a complete RIFF/WAVE container,
+    PCM16 mono at 8000 + (doc_id % 3)·4000 Hz. A non-empty ``info``
+    becomes a LIST chunk BEFORE fmt, so the parser must walk chunks."""
+    import struct
+
+    rate = WAV_BASE_RATE + (doc_id % 3) * 4000
+    # CHARACTER-based samples (codepoint mod 256), matching the oracles'
+    # ascii() term-for-term — byte-based encoding would silently diverge
+    # on any non-ASCII fixture text, since length(text)/ascii() count
+    # characters, not UTF-8 bytes. Identical to the byte form on today's
+    # ASCII corpus.
+    samples = [((ord(c) % 256) - 128) * 256 for c in text]
+    data = struct.pack(f"<{len(samples)}h", *samples)
+    chunks = (
+        (b"LIST" + struct.pack("<I", len(info)) + info if info else b"")
+        + b"fmt "
+        + struct.pack("<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16)
+        + b"data"
+        + struct.pack("<I", len(data))
+        + data
+        + (b"\x00" if len(data) & 1 else b"")
+    )
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
 @register(
@@ -555,67 +550,14 @@ def multimodal_wav_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length("text") > 0)
     )
 
-    def encode_batches(batches):
-        import struct
-
-        import pandas as pd
-
-        info = b"INFOISFT\x0c\x00\x00\x00ksj-fixture\x00"  # LIST body
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                rate = WAV_BASE_RATE + (int(doc_id) % 3) * 4000
-                # CHARACTER-based samples (codepoint mod 256), matching the
-                # oracle's ascii() term-for-term — byte-based encoding would
-                # silently diverge on any non-ASCII fixture text, since
-                # length(text)/ascii() count characters, not UTF-8 bytes.
-                # Identical to the byte form on today's ASCII corpus.
-                samples = [((ord(c) % 256) - 128) * 256 for c in text]
-                data = struct.pack(f"<{len(samples)}h", *samples)
-                chunks = (
-                    b"LIST"
-                    + struct.pack("<I", len(info))
-                    + info
-                    + b"fmt "
-                    + struct.pack("<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16)
-                    + b"data"
-                    + struct.pack("<I", len(data))
-                    + data
-                    + (b"\x00" if len(data) & 1 else b"")
-                )
-                payloads.append(
-                    b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    def decode_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "sample_rate": [],
-                "n_channels": [],
-                "bits_per_sample": [],
-                "n_samples": [],
-                "sq_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                parsed = decode_wav_real(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                rows["sample_rate"].append(parsed["sample_rate"])
-                rows["n_channels"].append(parsed["n_channels"])
-                rows["bits_per_sample"].append(parsed["bits_per_sample"])
-                rows["n_samples"].append(parsed["n_samples"])
-                rows["sq_sum"].append(parsed["sq_sum"])
-            yield pd.DataFrame(rows)
-
-    parsed = fused_encode_decode(
+    parsed = map_rows(
         docs,
-        encode_batches,
-        decode_batches,
-        "doc_id long, sample_rate long, n_channels long, "
-        "bits_per_sample long, n_samples long, sq_sum long",
+        lambda doc_id, text: _decoded_row(
+            doc_id,
+            decode_wav_real(_wav_encode(doc_id, text, _WAV_INFO)),
+            _WAV_STATS_SCHEMA,
+        ),
+        _WAV_STATS_SCHEMA,
     )
     return parsed.select(
         "doc_id",
@@ -764,7 +706,7 @@ def multimodal_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (> the report threshold 6) — the oracle computes the brute-force a<b
 # pair set, so the correctness gate also certifies the banding.
 #
-# The hash runs inside mapInPandas (Arrow batches) — the decode seam a
+# The hash runs inside map_rows (Arrow batches) — the decode seam a
 # real image aHash (PIL resize 8×8 + mean) drops into without touching
 # the plan around it.
 # Scale: banded equi-join over 8·N rows, never all-pairs; the verify
@@ -785,39 +727,34 @@ AHASH_SCHEMA = T.StructType(
 )
 
 
-def ahash_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    """mapInPandas body: payload bytes → 64-bit aHash (PACKED into one
+def ahash_rows(doc_id: int, payload: bytes | None) -> list:
+    """``map_rows`` body: payload bytes → 64-bit aHash (PACKED into one
     int64, sign-wrapped — hamming is then a single bit_count(xor), and
     the candidate distinct shuffles 3 longs per row instead of a 64-int
     array; the r9 extended audit measured the array form at 26 s vs 6 s
     at sf0.1) → 8 banded rows per document. Pure-integer arithmetic —
-    engine-portable."""
-    import pandas as pd
-
-    for pdf in batches:
-        out: dict[str, list] = {"doc_id": [], "bits64": [], "band_idx": [], "band_val": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(payload)
-            n = len(b)
-            tot = sum(b)
-            bits = [
-                1 if b[(j * n) // AHASH_BITS] * n >= tot else 0
-                for j in range(AHASH_BITS)
-            ]
-            packed = 0
-            for j in range(AHASH_BITS):
-                packed |= bits[j] << j
-            if packed >= 1 << 63:  # int64 sign wrap, exact
-                packed -= 1 << 64
-            step = AHASH_BITS // AHASH_BANDS
-            for k in range(AHASH_BANDS):
-                out["doc_id"].append(int(doc_id))
-                out["bits64"].append(packed)
-                out["band_idx"].append(k)
-                out["band_val"].append(
-                    "".join(map(str, bits[k * step : (k + 1) * step]))
-                )
-        yield pd.DataFrame(out)
+    engine-portable. A NULL payload (NULL text) hashes to 0: every
+    ``sample·n >= tot`` compare is NULL in SQL, so the oracle sets no
+    bit."""
+    if payload is None:
+        bits = [0] * AHASH_BITS
+    else:
+        n = len(payload)
+        tot = sum(payload)
+        bits = [
+            1 if payload[(j * n) // AHASH_BITS] * n >= tot else 0
+            for j in range(AHASH_BITS)
+        ]
+    packed = 0
+    for j in range(AHASH_BITS):
+        packed |= bits[j] << j
+    if packed >= 1 << 63:  # int64 sign wrap, exact
+        packed -= 1 << 64
+    step = AHASH_BITS // AHASH_BANDS
+    return [
+        (doc_id, packed, k, "".join(map(str, bits[k * step : (k + 1) * step])))
+        for k in range(AHASH_BANDS)
+    ]
 
 
 @register(
@@ -867,12 +804,9 @@ def multimodal_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Python aHash decode onto one core (r12 measured a 1.2 s one-task
     # stage); at production scan widths the repartition is a no-op
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    hashed = (
-        with_binary_payload(docs)
-        .select("doc_id", "payload")
-        .mapInPandas(ahash_batches, AHASH_SCHEMA)
-        .localCheckpoint(eager=False)  # band join + two verify probes
-    )
+    hashed = map_rows(
+        with_binary_payload(docs).select("doc_id", "payload"), ahash_rows, AHASH_SCHEMA
+    ).localCheckpoint(eager=False)  # band join + two verify probes
     a = hashed.select(
         F.col("doc_id").alias("doc_a"),
         F.col("bits64").alias("bits_a"),
@@ -983,12 +917,9 @@ def multimodal_ahash_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame
     # rebalance: same single-task Python-decode fix as
     # multimodal_ahash_neardup (no-op at production scan widths)
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    hashed = (
-        with_binary_payload(docs)
-        .select("doc_id", "payload")
-        .mapInPandas(ahash_batches, AHASH_SCHEMA)
-        .localCheckpoint(eager=False)
-    )
+    hashed = map_rows(
+        with_binary_payload(docs).select("doc_id", "payload"), ahash_rows, AHASH_SCHEMA
+    ).localCheckpoint(eager=False)
     a = hashed.select(
         F.col("doc_id").alias("doc_a"),
         F.col("bits64").alias("bits_a"),
@@ -1336,7 +1267,7 @@ def _parse_bmp_header(payload: bytes) -> tuple:
     return pixel_off, width, n_rows, row_size, height < 0
 
 
-def _bmp_encode_batches(batches):
+def _bmp_encode(doc_id: int, text: str) -> bytes:
     """Shared fixture encoder for the BMP ops (ONE generative model, so
     the two oracles cannot desynchronize — r8 review): a complete 24bpp
     bottom-up BMP per document, width 7+doc_id%5 (four of the five
@@ -1345,36 +1276,30 @@ def _bmp_encode_batches(batches):
     = text byte at (3p+c) mod len."""
     import struct
 
-    import pandas as pd
-
-    for pdf in batches:
-        payloads = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            w = 7 + int(doc_id) % 5
-            h = 6 + int(doc_id) % 3
-            tb = [ord(c) % 256 for c in text]
-            n = len(tb)
-            row_size = ((w * 3 + 3) // 4) * 4
-            pad = b"\x00" * (row_size - w * 3)
-            rows = []
-            # bottom-up: image row h-1 is stored first
-            for y in range(h - 1, -1, -1):
-                row = bytearray()
-                for x in range(w):
-                    p = y * w + x
-                    row += bytes(tb[(3 * p + c) % n] for c in range(3))
-                rows.append(bytes(row) + pad)
-            pixels = b"".join(rows)
-            header = (
-                b"BM"
-                + struct.pack("<IHHI", 54 + len(pixels), 0, 0, 54)
-                + struct.pack(
-                    "<IiiHHIIiiII",
-                    40, w, h, 1, 24, 0, len(pixels), 2835, 2835, 0, 0,
-                )
-            )
-            payloads.append(header + pixels)
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    w = 7 + doc_id % 5
+    h = 6 + doc_id % 3
+    tb = [ord(c) % 256 for c in text]
+    n = len(tb)
+    row_size = ((w * 3 + 3) // 4) * 4
+    pad = b"\x00" * (row_size - w * 3)
+    rows = []
+    # bottom-up: image row h-1 is stored first
+    for y in range(h - 1, -1, -1):
+        row = bytearray()
+        for x in range(w):
+            p = y * w + x
+            row += bytes(tb[(3 * p + c) % n] for c in range(3))
+        rows.append(bytes(row) + pad)
+    pixels = b"".join(rows)
+    header = (
+        b"BM"
+        + struct.pack("<IHHI", 54 + len(pixels), 0, 0, 54)
+        + struct.pack(
+            "<IiiHHIIiiII",
+            40, w, h, 1, 24, 0, len(pixels), 2835, 2835, 0, 0,
+        )
+    )
+    return header + pixels
 
 
 def decode_bmp_real(payload: bytes) -> dict:
@@ -1411,18 +1336,24 @@ def decode_bmp_real(payload: bytes) -> dict:
 
 # ---------------------------------------------------------------------------
 # BMP stats over REAL decoded payloads — the image half of the WAV
-# precedent above, closing the r7 judge's item 6: stage 1 packs each
-# document into a complete 24bpp bottom-up BMP (width 7+doc_id%5 — four
-# of the five widths force real row padding the parser must skip, while
-# w=8 rows are pad-free, exercising both paths;
+# precedent above, closing the r7 judge's item 6: the fixture encoder
+# packs each document into a complete 24bpp bottom-up BMP (width
+# 7+doc_id%5 — four of the five widths force real row padding the parser
+# must skip, while w=8 rows are pad-free, exercising both paths;
 # height 6+doc_id%3; channel byte of pixel p, channel c = text byte at
-# (3p+c) mod len), stage 2 runs `decode_bmp_real`, which knows nothing
-# about stage 1's layout. Only the pixel CONTENT is synthetic (that is
+# (3p+c) mod len), and `decode_bmp_real` knows nothing about the
+# encoder's layout. Only the pixel CONTENT is synthetic (that is
 # what lets DuckDB recompute the expected sums from the generative
 # model); the decode is the real thing. Per-channel sums are exact
 # integers and order-invariant, so bottom-up row order cannot matter.
 # Mean luma finishes JVM-side as integer milli-units (BT.601 weights).
 # ---------------------------------------------------------------------------
+_BMP_STATS_SCHEMA = _schema(
+    "doc_id long, width long, height long, bits_per_pixel long, "
+    "n_pixels long, sum_r long, sum_g long, sum_b long"
+)
+
+
 def _bmp_channel_sum_sql(k: int) -> str:
     return (
         "list_sum(list_transform("
@@ -1468,36 +1399,12 @@ def multimodal_bmp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length("text") > 0)
     )
 
-    def decode_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "width": [],
-                "height": [],
-                "bits_per_pixel": [],
-                "n_pixels": [],
-                "sum_r": [],
-                "sum_g": [],
-                "sum_b": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                parsed = decode_bmp_real(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                for k in (
-                    "width", "height", "bits_per_pixel", "n_pixels",
-                    "sum_r", "sum_g", "sum_b",
-                ):
-                    rows[k].append(parsed[k])
-            yield pd.DataFrame(rows)
-
-    parsed = fused_encode_decode(
+    parsed = map_rows(
         docs,
-        _bmp_encode_batches,
-        decode_batches,
-        "doc_id long, width long, height long, bits_per_pixel long, "
-        "n_pixels long, sum_r long, sum_g long, sum_b long",
+        lambda doc_id, text: _decoded_row(
+            doc_id, decode_bmp_real(_bmp_encode(doc_id, text)), _BMP_STATS_SCHEMA
+        ),
+        _BMP_STATS_SCHEMA,
     )
     return parsed.select(
         "doc_id",
@@ -1551,6 +1458,7 @@ def decode_bmp_luma_grid(payload: bytes, grid: int = 8) -> dict:
 # generative model in pure SQL.
 # ---------------------------------------------------------------------------
 _AHASH_GRID = 8
+_BMP_AHASH_SCHEMA = _schema("doc_id long, ahash64 string")
 
 
 def _bmp_luma_sql() -> str:
@@ -1605,25 +1513,16 @@ def multimodal_bmp_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length("text") > 0)
     )
 
-    def ahash_batches(batches):
-        import pandas as pd
+    def hash_row(doc_id, payload):
+        lumas = decode_bmp_luma_grid(payload)["lumas"]
+        total = sum(lumas)
+        n = len(lumas)
+        return [(doc_id, "".join("1" if x * n > total else "0" for x in lumas))]
 
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                grid = decode_bmp_luma_grid(bytes(payload))
-                lumas = grid["lumas"]
-                total = sum(lumas)
-                n = len(lumas)
-                bits = "".join(
-                    "1" if x * n > total else "0" for x in lumas
-                )
-                ids.append(int(doc_id))
-                hashes.append(bits)
-            yield pd.DataFrame({"doc_id": ids, "ahash64": hashes})
-
-    hashed = fused_encode_decode(
-        docs, _bmp_encode_batches, ahash_batches, "doc_id long, ahash64 string"
+    hashed = map_rows(
+        docs,
+        lambda doc_id, text: hash_row(doc_id, _bmp_encode(doc_id, text)),
+        _BMP_AHASH_SCHEMA,
     )
     return hashed.groupBy(
         F.substring("ahash64", 1, 16).alias("bucket16")
@@ -1648,9 +1547,13 @@ def multimodal_bmp_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lossy codecs remain environmental seams.
 # ---------------------------------------------------------------------------
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
+_PNG_STATS_SCHEMA = _schema(
+    "doc_id long, width long, height long, bit_depth long, "
+    "n_pixels long, sum_luma long"
+)
 
 
-def _png_encode_batches(batches):
+def _png_encode(doc_id: int, text: str) -> bytes:
     """Generative fixture: grayscale 8-bit PNG per document, width
     9+doc_id%4, height 5+doc_id%3, pixel (y,x) = text byte at
     (y*w + x) mod len; row y is written with filter type
@@ -1658,8 +1561,6 @@ def _png_encode_batches(batches):
     enough, so the decoder's reconstruction of each is load-bearing."""
     import struct
     import zlib
-
-    import pandas as pd
 
     def chunk(typ: bytes, data: bytes) -> bytes:
         return (
@@ -1669,46 +1570,42 @@ def _png_encode_batches(batches):
             + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
         )
 
-    for pdf in batches:
-        payloads = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            w = 9 + int(doc_id) % 4
-            h = 5 + int(doc_id) % 3
-            tb = [ord(c) % 256 for c in text]
-            n = len(tb)
-            raw = bytearray()
-            prev = [0] * w
-            for y in range(h):
-                cur = [tb[(y * w + x) % n] for x in range(w)]
-                ft = (int(doc_id) + y) % 5
-                raw.append(ft)
-                for x in range(w):
-                    a = cur[x - 1] if x > 0 else 0
-                    b = prev[x]
-                    c = prev[x - 1] if x > 0 else 0
-                    if ft == 0:
-                        v = cur[x]
-                    elif ft == 1:
-                        v = (cur[x] - a) % 256
-                    elif ft == 2:
-                        v = (cur[x] - b) % 256
-                    elif ft == 3:
-                        v = (cur[x] - (a + b) // 2) % 256
-                    else:  # Paeth
-                        p = a + b - c
-                        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                        pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                        v = (cur[x] - pr) % 256
-                    raw.append(v)
-                prev = cur
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-            payloads.append(
-                PNG_SIG
-                + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(bytes(raw)))
-                + chunk(b"IEND", b"")
-            )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    w = 9 + doc_id % 4
+    h = 5 + doc_id % 3
+    tb = [ord(c) % 256 for c in text]
+    n = len(tb)
+    raw = bytearray()
+    prev = [0] * w
+    for y in range(h):
+        cur = [tb[(y * w + x) % n] for x in range(w)]
+        ft = (doc_id + y) % 5
+        raw.append(ft)
+        for x in range(w):
+            a = cur[x - 1] if x > 0 else 0
+            b = prev[x]
+            c = prev[x - 1] if x > 0 else 0
+            if ft == 0:
+                v = cur[x]
+            elif ft == 1:
+                v = (cur[x] - a) % 256
+            elif ft == 2:
+                v = (cur[x] - b) % 256
+            elif ft == 3:
+                v = (cur[x] - (a + b) // 2) % 256
+            else:  # Paeth
+                p = a + b - c
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+                v = (cur[x] - pr) % 256
+            raw.append(v)
+        prev = cur
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+    return (
+        PNG_SIG
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(bytes(raw)))
+        + chunk(b"IEND", b"")
+    )
 
 
 def decode_png_real(payload: bytes) -> dict:
@@ -1837,8 +1734,8 @@ def decode_png_real(payload: bytes) -> dict:
 def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dimensions and exact luma sums from an actual PNG parse
     (CRC-checked chunk walk → inflate → per-filter-type scanline
-    reconstruction). Two chained Arrow-batched mapInPandas stages —
-    encode, then a decode that knows nothing about the encoder's layout.
+    reconstruction). One map_rows stage: the fixture encoder, then a
+    decode that knows nothing about the encoder's layout.
 
     Reference parity: none (SURVEY.md §2.7); the binary→struct decode
     shape mirrors T1 (KafkaAvroToIceberg.scala:67-71) with a real codec.
@@ -1851,31 +1748,12 @@ def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length("text") > 0)
     )
 
-    def decode_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "width": [],
-                "height": [],
-                "bit_depth": [],
-                "n_pixels": [],
-                "sum_luma": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                parsed = decode_png_real(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                for k in ("width", "height", "bit_depth", "n_pixels", "sum_luma"):
-                    rows[k].append(parsed[k])
-            yield pd.DataFrame(rows)
-
-    parsed = fused_encode_decode(
+    parsed = map_rows(
         docs,
-        _png_encode_batches,
-        decode_batches,
-        "doc_id long, width long, height long, bit_depth long, "
-        "n_pixels long, sum_luma long",
+        lambda doc_id, text: _decoded_row(
+            doc_id, decode_png_real(_png_encode(doc_id, text)), _PNG_STATS_SCHEMA
+        ),
+        _PNG_STATS_SCHEMA,
     )
     return parsed.select(
         "doc_id",
@@ -1903,6 +1781,10 @@ def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from the pixel model alone.
 # ---------------------------------------------------------------------------
 GIF_MIN_CODE = 8  # 256-entry grayscale palette
+_GIF_STATS_SCHEMA = _schema(
+    "doc_id long, width long, height long, n_pixels long, "
+    "palette_size long, sum_luma long"
+)
 
 
 def _lzw_encode(indices, min_code_size: int = GIF_MIN_CODE) -> bytes:
@@ -2012,42 +1894,39 @@ def _lzw_decode(data: bytes, min_code_size: int = GIF_MIN_CODE) -> list:
         prev = entry
 
 
-def _gif_encode_batches(batches):
+#: 256-entry grayscale global color table: index i → r=g=b=i
+_GIF_GRAY_GCT = bytes(v for i in range(256) for v in (i, i, i))
+
+
+def _gif_encode(doc_id: int, text: str) -> bytes:
     """Generative fixture: GIF87a per document, width 6+doc_id%5,
     height 4+doc_id%4, 256-entry grayscale palette (index i → r=g=b=i),
     pixel (y,x) = text byte at (y*w + x) mod len; real LZW data packed
     into ≤255-byte sub-blocks."""
     import struct
 
-    import pandas as pd
-
-    gct = bytes(v for i in range(256) for v in (i, i, i))
-    for pdf in batches:
-        payloads = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            w = 6 + int(doc_id) % 5
-            h = 4 + int(doc_id) % 4
-            tb = [ord(c) % 256 for c in text]
-            n = len(tb)
-            idx = [tb[(y * w + x) % n] for y in range(h) for x in range(w)]
-            lzw = _lzw_encode(idx)
-            blocks = bytearray()
-            for i in range(0, len(lzw), 255):
-                chunk = lzw[i : i + 255]
-                blocks.append(len(chunk))
-                blocks += chunk
-            blocks.append(0)
-            payloads.append(
-                b"GIF87a"
-                + struct.pack("<HHBBB", w, h, 0xF7, 0, 0)  # GCT flag, 8-bit
-                + gct
-                + b"\x2c"
-                + struct.pack("<HHHHB", 0, 0, w, h, 0)
-                + bytes([GIF_MIN_CODE])
-                + bytes(blocks)
-                + b"\x3b"
-            )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    w = 6 + doc_id % 5
+    h = 4 + doc_id % 4
+    tb = [ord(c) % 256 for c in text]
+    n = len(tb)
+    idx = [tb[(y * w + x) % n] for y in range(h) for x in range(w)]
+    lzw = _lzw_encode(idx)
+    blocks = bytearray()
+    for i in range(0, len(lzw), 255):
+        chunk = lzw[i : i + 255]
+        blocks.append(len(chunk))
+        blocks += chunk
+    blocks.append(0)
+    return (
+        b"GIF87a"
+        + struct.pack("<HHBBB", w, h, 0xF7, 0, 0)  # GCT flag, 8-bit
+        + _GIF_GRAY_GCT
+        + b"\x2c"
+        + struct.pack("<HHHHB", 0, 0, w, h, 0)
+        + bytes([GIF_MIN_CODE])
+        + bytes(blocks)
+        + b"\x3b"
+    )
 
 
 def decode_gif_real(payload: bytes) -> dict:
@@ -2140,31 +2019,12 @@ def multimodal_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length("text") > 0)
     )
 
-    def decode_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "width": [],
-                "height": [],
-                "n_pixels": [],
-                "palette_size": [],
-                "sum_luma": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                parsed = decode_gif_real(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                for k in ("width", "height", "n_pixels", "palette_size", "sum_luma"):
-                    rows[k].append(parsed[k])
-            yield pd.DataFrame(rows)
-
-    return fused_encode_decode(
+    return map_rows(
         docs,
-        _gif_encode_batches,
-        decode_batches,
-        "doc_id long, width long, height long, n_pixels long, "
-        "palette_size long, sum_luma long",
+        lambda doc_id, text: _decoded_row(
+            doc_id, decode_gif_real(_gif_encode(doc_id, text)), _GIF_STATS_SCHEMA
+        ),
+        _GIF_STATS_SCHEMA,
     )
 
 
@@ -2172,13 +2032,46 @@ def multimodal_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MAGIC-BYTE SNIFFING INGEST — the dispatch layer a mixed multimodal
 # lake actually needs: payloads arrive with NO format column (each
 # document is packed by doc_id % 3 into BMP, PNG, or GIF via the SAME
-# generative encoders the per-format ops use), and the decode stage
-# routes each blob purely by its magic bytes to the matching REAL
-# decoder, unifying the three codecs' outputs into one luma-milli
-# schema. A wrong sniff or a cross-codec decode raises loudly. The
-# oracle recomputes every per-format rollup from the three pixel models
-# — one branch per residue class.
+# generative encoders the per-format ops use), and the decoder routes
+# each blob purely by its magic bytes to the matching REAL decoder,
+# unifying the three codecs' outputs into one luma-milli schema. A
+# wrong sniff or a cross-codec decode raises loudly. The oracle
+# recomputes every per-format rollup from the three pixel models — one
+# branch per residue class.
 # ---------------------------------------------------------------------------
+MAGIC_SNIFFER_SCHEMA = _schema(
+    "doc_id long, fmt string, n_pixels long, luma_milli long"
+)
+#: the fixture format of a document, by doc_id % 3
+_SNIFFER_ENCODERS = (_bmp_encode, _png_encode, _gif_encode)
+
+
+def _sniff_decode(doc_id: int, payload: bytes) -> list:
+    """Route one blob by its magic bytes to the matching REAL decoder:
+    [(doc_id, fmt, n_pixels, luma_milli)]."""
+    if payload[:2] == b"BM":
+        got = decode_bmp_real(payload)
+        fmt = "bmp"
+        luma = got["sum_r"] * 299 + got["sum_g"] * 587 + got["sum_b"] * 114
+    elif payload[:8] == PNG_SIG:
+        got = decode_png_real(payload)
+        fmt = "png"
+        luma = got["sum_luma"] * 1000
+    elif payload[:6] in (b"GIF87a", b"GIF89a"):
+        got = decode_gif_real(payload)
+        fmt = "gif"
+        luma = got["sum_luma"] * 1000
+    else:
+        raise ValueError(f"unknown magic {payload[:8]!r} for doc {doc_id}")
+    return [(doc_id, fmt, got["n_pixels"], luma)]
+
+
+def magic_sniffer_rows(doc_id: int, text: str) -> list:
+    """``map_rows`` body of multimodal_magic_sniffer and its streaming
+    twin: encode by doc_id % 3, then sniff and decode blind."""
+    return _sniff_decode(doc_id, _SNIFFER_ENCODERS[doc_id % 3](doc_id, text))
+
+
 def _sniffer_luma_sql(width_sql: str, height_sql: str) -> str:
     return (
         "CAST(list_sum(list_transform(range(0, ("
@@ -2227,67 +2120,7 @@ def multimodal_magic_sniffer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .filter(F.length("text") > 0)
     )
-
-    def encode_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            outs = []
-            for residue, enc in (
-                (0, _bmp_encode_batches),
-                (1, _png_encode_batches),
-                (2, _gif_encode_batches),
-            ):
-                sub = pdf[pdf["doc_id"] % 3 == residue]
-                if len(sub):
-                    outs.extend(enc(iter([sub])))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    def decode_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "fmt": [],
-                "n_pixels": [],
-                "luma_milli": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                blob = bytes(payload)
-                if blob[:2] == b"BM":
-                    got = decode_bmp_real(blob)
-                    fmt = "bmp"
-                    luma = (
-                        got["sum_r"] * 299
-                        + got["sum_g"] * 587
-                        + got["sum_b"] * 114
-                    )
-                elif blob[:8] == PNG_SIG:
-                    got = decode_png_real(blob)
-                    fmt = "png"
-                    luma = got["sum_luma"] * 1000
-                elif blob[:6] in (b"GIF87a", b"GIF89a"):
-                    got = decode_gif_real(blob)
-                    fmt = "gif"
-                    luma = got["sum_luma"] * 1000
-                else:
-                    raise ValueError(
-                        f"unknown magic {blob[:8]!r} for doc {doc_id}"
-                    )
-                rows["doc_id"].append(int(doc_id))
-                rows["fmt"].append(fmt)
-                rows["n_pixels"].append(got["n_pixels"])
-                rows["luma_milli"].append(luma)
-            yield pd.DataFrame(rows)
-
-    parsed = fused_encode_decode(
-        docs,
-        encode_batches,
-        decode_batches,
-        "doc_id long, fmt string, n_pixels long, luma_milli long",
-    )
+    parsed = map_rows(docs, magic_sniffer_rows, MAGIC_SNIFFER_SCHEMA)
     return parsed.groupBy("fmt").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_pixels").cast("long").alias("total_pixels"),
@@ -2307,6 +2140,7 @@ def multimodal_magic_sniffer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 SILR_FRAME = 32  # samples per frame
 SILR_MS_T = 40_000_000  # mean-square silence threshold (exact int compare)
+_SILR_SCHEMA = _schema("doc_id long, n_frames long, n_silent long")
 
 
 @register(
@@ -2356,55 +2190,20 @@ def multimodal_wav_silence_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length("text") >= SILR_FRAME)
     )
 
-    def encode_batches(batches):
-        import struct
+    def silence_row(doc_id, payload):
+        meta = decode_wav_real(payload)  # full container validation
+        samples = _wav_pcm_samples(payload, meta)
+        n_frames = len(samples) // SILR_FRAME
+        frames = samples[: n_frames * SILR_FRAME].reshape(-1, SILR_FRAME)
+        n_silent = int(
+            ((frames * frames).sum(axis=1) < SILR_MS_T * SILR_FRAME).sum()
+        )
+        return [(doc_id, n_frames, n_silent)]
 
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                rate = WAV_BASE_RATE + (int(doc_id) % 3) * 4000
-                samples = [((ord(c) % 256) - 128) * 256 for c in text]
-                data = struct.pack(f"<{len(samples)}h", *samples)
-                chunks = (
-                    b"fmt "
-                    + struct.pack("<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16)
-                    + b"data"
-                    + struct.pack("<I", len(data))
-                    + data
-                    + (b"\x00" if len(data) & 1 else b"")
-                )
-                payloads.append(
-                    b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    def decode_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"doc_id": [], "n_frames": [], "n_silent": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                blob = bytes(payload)
-                meta = decode_wav_real(blob)  # full container validation
-                samples = _wav_pcm_samples(blob, meta)
-                n_frames = len(samples) // SILR_FRAME
-                frames = samples[: n_frames * SILR_FRAME].reshape(
-                    -1, SILR_FRAME
-                )
-                n_silent = int(
-                    ((frames * frames).sum(axis=1)
-                     < SILR_MS_T * SILR_FRAME).sum()
-                )
-                rows["doc_id"].append(int(doc_id))
-                rows["n_frames"].append(n_frames)
-                rows["n_silent"].append(n_silent)
-            yield pd.DataFrame(rows)
-
-    parsed = fused_encode_decode(
-        docs, encode_batches, decode_batches,
-        "doc_id long, n_frames long, n_silent long",
+    parsed = map_rows(
+        docs,
+        lambda doc_id, text: silence_row(doc_id, _wav_encode(doc_id, text)),
+        _SILR_SCHEMA,
     )
     return parsed.select(
         "doc_id",
@@ -2421,21 +2220,25 @@ def multimodal_wav_silence_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 # REAL AVI (RIFF) CONTAINER WALK + UNCOMPRESSED-FRAME STATS — the video
 # seam narrowed to its honest core: container demux and raw-frame pixel
 # math are header-parseable (same discipline as the WAV/BMP/PNG/GIF
-# decoders above); only DCT/entropy-coded codecs remain environmental
-# (multimodal.py decode_media_real). Stage 1 packs each document into a
-# complete AVI: LIST/hdrl (avih main header + LIST/strl with a 'vids'
-# stream header and a BITMAPINFOHEADER strf), LIST/movi with one '00db'
-# uncompressed 8x8 24-bit bottom-up DIB frame per 64 characters of text
-# (grayscale: B=G=R=codepoint%256, zero-padded final frame), and an
-# idx1 index with one entry per frame. Stage 2 runs `decode_avi_real`, a
-# chunk-walking parser that knows nothing about stage 1's layout.
-# Scale shape: two chained mapInPandas stages, Arrow-batched, zero
-# shuffle; blob bytes never pass through the driver.
+# decoders above); only DCT/entropy-coded codecs (H.264-class video)
+# remain environmental (module docstring). The fixture encoder packs each
+# document into a complete AVI: LIST/hdrl (avih main header + LIST/strl
+# with a 'vids' stream header and a BITMAPINFOHEADER strf), LIST/movi
+# with one '00db' uncompressed 8x8 24-bit bottom-up DIB frame per 64
+# characters of text (grayscale: B=G=R=codepoint%256, zero-padded final
+# frame), and an idx1 index with one entry per frame. `decode_avi_real`
+# is a chunk-walking parser that knows nothing about the encoder's
+# layout. Scale shape: one map_rows stage, Arrow-batched, zero shuffle;
+# blob bytes never pass through the driver.
 # ---------------------------------------------------------------------------
 AVI_W = 8
 AVI_H = 8
 AVI_FRAME_CHARS = AVI_W * AVI_H
 AVI_BASE_FPS = 10  # per-doc fps: 10 + (doc_id % 3) * 5
+_AVI_STATS_SCHEMA = _schema(
+    "doc_id long, n_frames long, width long, height long, "
+    "us_per_frame long, channel_sum long"
+)
 
 
 def decode_avi_real(payload: bytes) -> dict:
@@ -2553,82 +2356,72 @@ def decode_avi_real(payload: bytes) -> dict:
     }
 
 
-def _avi_encode_batches(batches):
+def _avi_dib_frame(vals: list) -> bytes:
+    """One 8x8 grayscale frame as bottom-up BGR rows (8 px * 3 B = 24 B
+    per row, already 4-aligned)."""
+    rows = []
+    for y in range(AVI_H - 1, -1, -1):
+        rows.append(
+            b"".join(bytes((v, v, v)) for v in vals[y * AVI_W : (y + 1) * AVI_W])
+        )
+    return b"".join(rows)
+
+
+def _avi_encode(doc_id: int, text: str) -> bytes:
     import struct
 
-    import pandas as pd
-
-    def dib_frame(vals):
-        # bottom-up BGR rows; 8 px * 3 B = 24 B/row, already 4-aligned
-        rows = []
-        for y in range(AVI_H - 1, -1, -1):
-            rows.append(
-                b"".join(
-                    bytes((v, v, v))
-                    for v in vals[y * AVI_W : (y + 1) * AVI_W]
-                )
-            )
-        return b"".join(rows)
-
     frame_bytes = AVI_W * AVI_H * 3
-
-    for pdf in batches:
-        payloads = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            fps = AVI_BASE_FPS + (int(doc_id) % 3) * 5
-            us = 1_000_000 // fps
-            vals = [ord(c) % 256 for c in text]
-            n_frames = (len(vals) + AVI_FRAME_CHARS - 1) // AVI_FRAME_CHARS
-            vals += [0] * (n_frames * AVI_FRAME_CHARS - len(vals))
-            frames = [
-                dib_frame(vals[k * AVI_FRAME_CHARS : (k + 1) * AVI_FRAME_CHARS])
-                for k in range(n_frames)
-            ]
-            # 56-byte avih body = 10 dwords + 4 reserved dwords
-            avih = (
-                b"avih"
-                + struct.pack("<I", 56)
-                + struct.pack(
-                    "<10I", us, frame_bytes * fps, 0, 0x10, n_frames,
-                    0, 1, frame_bytes, AVI_W, AVI_H,
-                )
-                + b"\x00" * 16
-            )
-            strh = (
-                b"strh"
-                + struct.pack("<I", 56)
-                + b"vids"
-                + b"DIB "
-                + struct.pack("<IHHIIIIIII", 0, 0, 0, 0, 1, fps, 0,
-                              n_frames, frame_bytes, 0)
-                + struct.pack("<IHHHH", 0, 0, 0, AVI_W, AVI_H)
-            )
-            strf = b"strf" + struct.pack("<I", 40) + struct.pack(
-                "<IiiHHIIiiII", 40, AVI_W, AVI_H, 1, 24, 0,
-                frame_bytes, 0, 0, 0, 0,
-            )
-            strl_body = b"strl" + strh + strf
-            strl = b"LIST" + struct.pack("<I", len(strl_body)) + strl_body
-            hdrl_body = b"hdrl" + avih + strl
-            hdrl = b"LIST" + struct.pack("<I", len(hdrl_body)) + hdrl_body
-            movi_body = b"movi" + b"".join(
-                b"00db" + struct.pack("<I", frame_bytes) + fr
-                for fr in frames
-            )
-            movi = b"LIST" + struct.pack("<I", len(movi_body)) + movi_body
-            idx_entries = b""
-            offset = 4  # movi-relative: first chunk follows 'movi'
-            for _ in frames:
-                idx_entries += b"00db" + struct.pack(
-                    "<III", 0x10, offset, frame_bytes
-                )
-                offset += 8 + frame_bytes
-            idx1 = b"idx1" + struct.pack("<I", len(idx_entries)) + idx_entries
-            riff_body = b"AVI " + hdrl + movi + idx1
-            payloads.append(
-                b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
-            )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    fps = AVI_BASE_FPS + (doc_id % 3) * 5
+    us = 1_000_000 // fps
+    vals = [ord(c) % 256 for c in text]
+    n_frames = (len(vals) + AVI_FRAME_CHARS - 1) // AVI_FRAME_CHARS
+    vals += [0] * (n_frames * AVI_FRAME_CHARS - len(vals))
+    frames = [
+        _avi_dib_frame(vals[k * AVI_FRAME_CHARS : (k + 1) * AVI_FRAME_CHARS])
+        for k in range(n_frames)
+    ]
+    # 56-byte avih body = 10 dwords + 4 reserved dwords
+    avih = (
+        b"avih"
+        + struct.pack("<I", 56)
+        + struct.pack(
+            "<10I", us, frame_bytes * fps, 0, 0x10, n_frames,
+            0, 1, frame_bytes, AVI_W, AVI_H,
+        )
+        + b"\x00" * 16
+    )
+    strh = (
+        b"strh"
+        + struct.pack("<I", 56)
+        + b"vids"
+        + b"DIB "
+        + struct.pack("<IHHIIIIIII", 0, 0, 0, 0, 1, fps, 0,
+                      n_frames, frame_bytes, 0)
+        + struct.pack("<IHHHH", 0, 0, 0, AVI_W, AVI_H)
+    )
+    strf = b"strf" + struct.pack("<I", 40) + struct.pack(
+        "<IiiHHIIiiII", 40, AVI_W, AVI_H, 1, 24, 0,
+        frame_bytes, 0, 0, 0, 0,
+    )
+    strl_body = b"strl" + strh + strf
+    strl = b"LIST" + struct.pack("<I", len(strl_body)) + strl_body
+    hdrl_body = b"hdrl" + avih + strl
+    hdrl = b"LIST" + struct.pack("<I", len(hdrl_body)) + hdrl_body
+    movi_body = b"movi" + b"".join(
+        b"00db" + struct.pack("<I", frame_bytes) + fr
+        for fr in frames
+    )
+    movi = b"LIST" + struct.pack("<I", len(movi_body)) + movi_body
+    idx_entries = b""
+    offset = 4  # movi-relative: first chunk follows 'movi'
+    for _ in frames:
+        idx_entries += b"00db" + struct.pack(
+            "<III", 0x10, offset, frame_bytes
+        )
+        offset += 8 + frame_bytes
+    idx1 = b"idx1" + struct.pack("<I", len(idx_entries)) + idx_entries
+    riff_body = b"AVI " + hdrl + movi + idx1
+    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
 
 
 @register(
@@ -2672,34 +2465,12 @@ def multimodal_avi_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length("text") > 0)
     )
 
-    def decode_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "n_frames": [],
-                "width": [],
-                "height": [],
-                "us_per_frame": [],
-                "channel_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                parsed = decode_avi_real(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                rows["n_frames"].append(parsed["n_frames"])
-                rows["width"].append(parsed["width"])
-                rows["height"].append(parsed["height"])
-                rows["us_per_frame"].append(parsed["us_per_frame"])
-                rows["channel_sum"].append(parsed["channel_sum"])
-            yield pd.DataFrame(rows)
-
-    parsed = fused_encode_decode(
+    parsed = map_rows(
         docs,
-        _avi_encode_batches,
-        decode_batches,
-        "doc_id long, n_frames long, width long, height long, "
-        "us_per_frame long, channel_sum long",
+        lambda doc_id, text: _decoded_row(
+            doc_id, decode_avi_real(_avi_encode(doc_id, text)), _AVI_STATS_SCHEMA
+        ),
+        _AVI_STATS_SCHEMA,
     )
     return parsed.select(
         "doc_id",
@@ -2718,14 +2489,17 @@ def multimodal_avi_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SHOT BOUNDARIES FROM REAL DECODED PIXELS — the AVI twin of
 # multimodal_shot_boundaries: where that op fingerprints character
 # frames, this one demuxes the actual AVI container (shared
-# _avi_encode_batches fixture + decode_avi_real parser) and segments on
+# _avi_encode fixture + decode_avi_real parser) and segments on
 # the DECODED per-frame channel-sum series — a boundary wherever the
 # absolute frame-to-frame intensity delta exceeds AVI_SHOT_DELTA. All
-# segmentation runs inside the decode UDF per document (linear, zero
+# segmentation runs inside the decode row function per document (linear, zero
 # shuffle); the oracle reproduces the series closed-form from the
 # generative model.
 # ---------------------------------------------------------------------------
 AVI_SHOT_DELTA = 1_200  # abs channel-sum delta between consecutive frames
+_AVI_SHOT_SCHEMA = _schema(
+    "doc_id long, n_frames long, n_shots long, longest_shot long"
+)
 
 
 @register(
@@ -2799,58 +2573,42 @@ def multimodal_avi_shot_boundaries(
         .filter(F.length("text") > 0)
     )
 
-    def segment_batches(batches):
-        import pandas as pd
+    def segment_row(doc_id, payload):
+        sums = decode_avi_real(payload)["frame_sums"]
+        n_shots = 0
+        longest = 0
+        run = 0
+        prev = None
+        for s in sums:
+            if prev is None or abs(s - prev) > AVI_SHOT_DELTA:
+                n_shots += 1
+                run = 1
+            else:
+                run += 1
+            longest = max(longest, run)
+            prev = s
+        return [(doc_id, len(sums), n_shots, longest)]
 
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "n_frames": [],
-                "n_shots": [],
-                "longest_shot": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                parsed = decode_avi_real(bytes(payload))
-                sums = parsed["frame_sums"]
-                n_shots = 0
-                longest = 0
-                run = 0
-                prev = None
-                for s in sums:
-                    if prev is None or abs(s - prev) > AVI_SHOT_DELTA:
-                        n_shots += 1
-                        run = 1
-                    else:
-                        run += 1
-                    longest = max(longest, run)
-                    prev = s
-                rows["doc_id"].append(int(doc_id))
-                rows["n_frames"].append(len(sums))
-                rows["n_shots"].append(n_shots)
-                rows["longest_shot"].append(longest)
-            yield pd.DataFrame(rows)
-
-    return fused_encode_decode(
+    return map_rows(
         docs,
-        _avi_encode_batches,
-        segment_batches,
-        "doc_id long, n_frames long, n_shots long, longest_shot long",
+        lambda doc_id, text: segment_row(doc_id, _avi_encode(doc_id, text)),
+        _AVI_SHOT_SCHEMA,
     )
 
 
 # ---------------------------------------------------------------------------
 # HAAR WAVELET ENERGY OVER REAL DECODED PCM — the per-timescale energy
 # decomposition (events_haar_wavelet_energy's DSP shape) applied to the
-# audio modality: stage 1 packs each document into a complete RIFF/WAVE
-# container (the multimodal_wav_stats generative model), the payload
+# audio modality: the fixture encoder packs each document into a complete
+# RIFF/WAVE container (the multimodal_wav_stats generative model), the payload
 # passes through `decode_wav_real` for full container validation, and a
 # 3-level UNNORMALIZED Haar transform runs over each 8-sample frame of
 # the ACTUAL little-endian int16 data-chunk samples — detail energies
 # are exact int64 sums of squared integer differences, so the
 # per-timescale split (transients vs slow envelope) is engine-exact
-# against the character-model oracle. Scale shape: two chained
-# mapInPandas stages (Arrow-batched, numpy-vectorized Haar), zero
-# shuffle; blob bytes never pass through the driver.
+# against the character-model oracle. Scale shape: one map_rows stage
+# (Arrow-batched, numpy-vectorized Haar), zero shuffle; blob bytes never
+# pass through the driver.
 # ---------------------------------------------------------------------------
 HAARW_FRAME = 8  # samples per Haar frame (3 levels)
 
@@ -2905,71 +2663,29 @@ def _haarw_oracle() -> str:
     """
 
 
-def _wav_haar_encode_batches(batches):
-    """(doc_id, lang, text) -> (doc_id, lang, payload): pack each doc
-    into a complete RIFF/WAVE container (the multimodal_wav_stats
-    generative model). lang rides along so the streaming per-lang
-    rollup shares this stage verbatim; the per-doc batch op ignores it."""
-    import struct
-
-    import pandas as pd
-
-    for pdf in batches:
-        payloads = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            rate = WAV_BASE_RATE + (int(doc_id) % 3) * 4000
-            samples = [((ord(c) % 256) - 128) * 256 for c in text]
-            data = struct.pack(f"<{len(samples)}h", *samples)
-            chunks = (
-                b"fmt "
-                + struct.pack("<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16)
-                + b"data"
-                + struct.pack("<I", len(data))
-                + data
-                + (b"\x00" if len(data) & 1 else b"")
-            )
-            payloads.append(
-                b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-            )
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "lang": pdf["lang"], "payload": payloads}
-        )
+def _wav_haar_energies(payload: bytes) -> tuple:
+    """WAV payload -> (n_frames, e1, e2, e3): 3-level Haar detail
+    energies over the REAL decoded int16 PCM (numpy-vectorized;
+    decode_wav_real validates the container first). The batch op and
+    its streaming per-lang twin both call it."""
+    meta = decode_wav_real(payload)  # full container validation
+    samples = _wav_pcm_samples(payload, meta)
+    n_frames = len(samples) // HAARW_FRAME
+    x = samples[: n_frames * HAARW_FRAME].reshape(-1, HAARW_FRAME)
+    d1 = x[:, 0::2] - x[:, 1::2]
+    a1 = x[:, 0::2] + x[:, 1::2]
+    d2 = a1[:, 0::2] - a1[:, 1::2]
+    a2 = a1[:, 0::2] + a1[:, 1::2]
+    d3 = a2[:, 0] - a2[:, 1]
+    return (
+        n_frames,
+        int((d1 * d1).sum()),
+        int((d2 * d2).sum()),
+        int((d3 * d3).sum()),
+    )
 
 
-def _wav_haar_batches(batches):
-    """(doc_id, lang, payload) -> per-doc 3-level Haar detail energies
-    over the REAL decoded int16 PCM (numpy-vectorized; decode_wav_real
-    validates the container first)."""
-    import pandas as pd
-
-    for pdf in batches:
-        rows = {"doc_id": [], "lang": [], "n_frames": [],
-                "e1": [], "e2": [], "e3": []}
-        for doc_id, lang, payload in zip(
-            pdf["doc_id"], pdf["lang"], pdf["payload"]
-        ):
-            blob = bytes(payload)
-            meta = decode_wav_real(blob)  # full container validation
-            samples = _wav_pcm_samples(blob, meta)
-            n_frames = len(samples) // HAARW_FRAME
-            x = samples[: n_frames * HAARW_FRAME].reshape(-1, HAARW_FRAME)
-            d1 = x[:, 0::2] - x[:, 1::2]
-            a1 = x[:, 0::2] + x[:, 1::2]
-            d2 = a1[:, 0::2] - a1[:, 1::2]
-            a2 = a1[:, 0::2] + a1[:, 1::2]
-            d3 = a2[:, 0] - a2[:, 1]
-            rows["doc_id"].append(int(doc_id))
-            rows["lang"].append(lang)
-            rows["n_frames"].append(n_frames)
-            rows["e1"].append(int((d1 * d1).sum()))
-            rows["e2"].append(int((d2 * d2).sum()))
-            rows["e3"].append(int((d3 * d3).sum()))
-        yield pd.DataFrame(rows)
-
-
-_WAV_HAAR_SCHEMA = (
-    "doc_id long, lang string, n_frames long, e1 long, e2 long, e3 long"
-)
+_WAV_HAAR_SCHEMA = _schema("doc_id long, n_frames long, e1 long, e2 long, e3 long")
 
 
 @register(
@@ -2981,12 +2697,14 @@ _WAV_HAAR_SCHEMA = (
 def multimodal_wav_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (
         load_table(spark, sf_dir, "documents", rebalance=True)
-        .select("doc_id", "lang", "text")
+        .select("doc_id", "text")
         .filter(F.length("text") >= HAARW_FRAME)
     )
-    return fused_encode_decode(
-        docs, _wav_haar_encode_batches, _wav_haar_batches, _WAV_HAAR_SCHEMA
-    ).select("doc_id", "n_frames", "e1", "e2", "e3")
+    return map_rows(
+        docs,
+        lambda doc_id, text: [(doc_id, *_wav_haar_energies(_wav_encode(doc_id, text)))],
+        _WAV_HAAR_SCHEMA,
+    )
 
 
 def _haarw_lang_oracle() -> str:
@@ -3024,36 +2742,23 @@ def _haarw_lang_oracle() -> str:
 # data chunk. A crossing is a strictly negative product of adjacent
 # samples (a zero sample breaks the run — the common strict definition),
 # so everything is exact integer arithmetic and the DuckDB oracle can
-# recompute it independently from the text character model. Encode and
-# ZCR stages are module-level so the streaming per-lang monitor shares
-# them verbatim (the streaming_wav_haar_monitor pattern).
+# recompute it independently from the text character model. The encoder
+# and the ZCR row function are module-level so the streaming per-lang
+# monitor shares them verbatim (the streaming_wav_haar_monitor pattern).
 # Reference parity: none (SURVEY.md §2.7 multimodal mandate).
 # ---------------------------------------------------------------------------
-def _wav_zcr_batches(batches):
-    """(doc_id, lang, payload) -> per-doc sample & zero-crossing counts
-    over the REAL decoded int16 PCM (numpy-vectorized; decode_wav_real
-    validates the container first)."""
+def _wav_zcr_counts(payload: bytes) -> tuple:
+    """WAV payload -> (n_samples, n_crossings) over the REAL decoded
+    int16 PCM (numpy-vectorized; decode_wav_real validates the
+    container first)."""
     import numpy as np
-    import pandas as pd
 
-    for pdf in batches:
-        rows = {"doc_id": [], "lang": [], "n_samples": [], "n_crossings": []}
-        for doc_id, lang, payload in zip(
-            pdf["doc_id"], pdf["lang"], pdf["payload"]
-        ):
-            blob = bytes(payload)
-            meta = decode_wav_real(blob)  # full container validation
-            samples = _wav_pcm_samples(blob, meta)
-            rows["doc_id"].append(int(doc_id))
-            rows["lang"].append(lang)
-            rows["n_samples"].append(len(samples))
-            rows["n_crossings"].append(
-                int(np.count_nonzero(samples[:-1] * samples[1:] < 0))
-            )
-        yield pd.DataFrame(rows)
+    meta = decode_wav_real(payload)  # full container validation
+    samples = _wav_pcm_samples(payload, meta)
+    return len(samples), int(np.count_nonzero(samples[:-1] * samples[1:] < 0))
 
 
-_WAV_ZCR_SCHEMA = "doc_id long, lang string, n_samples long, n_crossings long"
+_WAV_ZCR_SCHEMA = _schema("doc_id long, n_samples long, n_crossings long")
 
 # the oracle's independent recomputation: sample j of a doc is
 # ((ascii(char_j) % 256) - 128) * 256 — the multimodal_wav_stats
@@ -3091,11 +2796,13 @@ def multimodal_wav_zcr_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = (
         load_table(spark, sf_dir, "documents", rebalance=True)
-        .select("doc_id", "lang", "text")
+        .select("doc_id", "text")
         .filter(F.length("text") >= 2)
     )
-    per_doc = fused_encode_decode(
-        docs, _wav_haar_encode_batches, _wav_zcr_batches, _WAV_ZCR_SCHEMA
+    per_doc = map_rows(
+        docs,
+        lambda doc_id, text: [(doc_id, *_wav_zcr_counts(_wav_encode(doc_id, text)))],
+        _WAV_ZCR_SCHEMA,
     )
     return per_doc.select(
         "doc_id",
@@ -3140,6 +2847,9 @@ def _zcr_lang_oracle() -> str:
 # dHash catches crop/brightness variants. Rollup by 14-bit prefix
 # bucket, the LSH shape shared with multimodal_bmp_ahash.
 # ---------------------------------------------------------------------------
+_BMP_DHASH_SCHEMA = _schema("doc_id long, dhash56 string")
+
+
 @register(
     "multimodal_bmp_dhash",
     oracle=f"""
@@ -3174,24 +2884,19 @@ def multimodal_bmp_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length("text") > 0)
     )
 
-    def dhash_batches(batches):
-        import pandas as pd
+    def dhash_row(doc_id, payload):
+        lumas = decode_bmp_luma_grid(payload)["lumas"]
+        bits = "".join(
+            "1" if lumas[r * 8 + c] > lumas[r * 8 + c + 1] else "0"
+            for r in range(8)
+            for c in range(7)
+        )
+        return [(doc_id, bits)]
 
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                lumas = decode_bmp_luma_grid(bytes(payload))["lumas"]
-                bits = "".join(
-                    "1" if lumas[r * 8 + c] > lumas[r * 8 + c + 1] else "0"
-                    for r in range(8)
-                    for c in range(7)
-                )
-                ids.append(int(doc_id))
-                hashes.append(bits)
-            yield pd.DataFrame({"doc_id": ids, "dhash56": hashes})
-
-    hashed = fused_encode_decode(
-        docs, _bmp_encode_batches, dhash_batches, "doc_id long, dhash56 string"
+    hashed = map_rows(
+        docs,
+        lambda doc_id, text: dhash_row(doc_id, _bmp_encode(doc_id, text)),
+        _BMP_DHASH_SCHEMA,
     )
     return hashed.groupBy(
         F.substring("dhash56", 1, 14).alias("bucket14")

@@ -74,22 +74,16 @@ from kafka_stream_job_spark.operators.formats import (
     _stage_txn_log,
 )
 from kafka_stream_job_spark.operators.multimodal import (
-    _WAV_HAAR_SCHEMA,
-    _WAV_ZCR_SCHEMA,
     HAARW_FRAME,
-    PNG_SIG,
-    _bmp_encode_batches,
-    _gif_encode_batches,
+    MAGIC_SNIFFER_SCHEMA,
     _haarw_lang_oracle,
-    _png_encode_batches,
-    _wav_haar_batches,
-    _wav_haar_encode_batches,
-    _wav_zcr_batches,
+    _schema,
+    _wav_encode,
+    _wav_haar_energies,
+    _wav_zcr_counts,
     _zcr_lang_oracle,
-    decode_bmp_real,
-    decode_gif_real,
-    decode_png_real,
-    fused_encode_decode,
+    magic_sniffer_rows,
+    map_rows,
 )
 from kafka_stream_job_spark.operators.pipeline import (
     BOOT_B,
@@ -3942,12 +3936,12 @@ def streaming_seasonality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 # STREAMING MAGIC-SNIFFER INGEST — the live twin of
 # multimodal_magic_sniffer: mixed-format blobs arrive as a stream, the
-# two Arrow-batched mapInPandas stages (encode fixture → sniff-and-
-# decode by magic bytes) run STATELESSLY inside the micro-batch, and
-# the per-format rollup is the only stateful op (complete mode, state =
-# |formats| rows). This is the production multimodal-lake ingest shape:
-# decode work scales with the batch, state does not. Oracle SHARED
-# verbatim with the batch twin.
+# batch op's row function (encode fixture → sniff-and-decode by magic
+# bytes) runs STATELESSLY in one map_rows stage inside the micro-batch,
+# and the per-format rollup is the only stateful op (complete mode,
+# state = |formats| rows). This is the production multimodal-lake
+# ingest shape: decode work scales with the batch, state does not.
+# Oracle SHARED verbatim with the batch twin.
 # ---------------------------------------------------------------------------
 @register(
     "streaming_magic_sniffer",
@@ -3961,57 +3955,7 @@ def streaming_magic_sniffer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .filter(F.length("text") > 0)
     )
-
-    def encode_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            outs = []
-            for residue, enc in (
-                (0, _bmp_encode_batches),
-                (1, _png_encode_batches),
-                (2, _gif_encode_batches),
-            ):
-                sub = pdf[pdf["doc_id"] % 3 == residue]
-                if len(sub):
-                    outs.extend(enc(iter([sub])))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    def decode_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"fmt": [], "n_pixels": [], "luma_milli": []}
-            for payload in pdf["payload"]:
-                blob = bytes(payload)
-                if blob[:2] == b"BM":
-                    got = decode_bmp_real(blob)
-                    fmt = "bmp"
-                    luma = (
-                        got["sum_r"] * 299
-                        + got["sum_g"] * 587
-                        + got["sum_b"] * 114
-                    )
-                elif blob[:8] == PNG_SIG:
-                    got = decode_png_real(blob)
-                    fmt = "png"
-                    luma = got["sum_luma"] * 1000
-                elif blob[:6] in (b"GIF87a", b"GIF89a"):
-                    got = decode_gif_real(blob)
-                    fmt = "gif"
-                    luma = got["sum_luma"] * 1000
-                else:
-                    raise ValueError(f"unknown magic {blob[:8]!r}")
-                rows["fmt"].append(fmt)
-                rows["n_pixels"].append(got["n_pixels"])
-                rows["luma_milli"].append(luma)
-            yield pd.DataFrame(rows)
-
-    blobs = docs.mapInPandas(encode_batches, "doc_id long, payload binary")
-    parsed = blobs.mapInPandas(
-        decode_batches, "fmt string, n_pixels long, luma_milli long"
-    )
+    parsed = map_rows(docs, magic_sniffer_rows, MAGIC_SNIFFER_SCHEMA)
     agg = parsed.groupBy("fmt").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_pixels").cast("long").alias("total_pixels"),
@@ -4764,9 +4708,9 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # STREAMING WAV-HAAR DRIFT MONITOR — real media decode INSIDE the
-# stream: each micro-batch's documents pass through the SAME two
-# Arrow-batched mapInPandas stages as the batch op (RIFF/WAVE pack ->
-# decode_wav_real -> numpy 3-level Haar), entirely STATELESS, and the
+# stream: each micro-batch's documents pass through the SAME encoder and
+# row function as the batch op (RIFF/WAVE pack -> decode_wav_real ->
+# numpy 3-level Haar) in one map_rows stage, entirely STATELESS, and the
 # only state is the per-lang (n_docs, n_frames, e1, e2, e3) int64 sums
 # in BUILT-IN JVM aggregation — five longs per language. A per-lang
 # transient-energy mix that shifts mid-ingest flags an audio pipeline
@@ -4774,6 +4718,9 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # job would ever see it. Oracle composed from the same
 # _haarw_level_sql pieces as the per-doc batch oracle.
 # ---------------------------------------------------------------------------
+_LANG_HAAR_SCHEMA = _schema("lang string, n_frames long, e1 long, e2 long, e3 long")
+
+
 @register(
     "streaming_wav_haar_monitor",
     oracle=_haarw_lang_oracle(),
@@ -4788,8 +4735,12 @@ def streaming_wav_haar_monitor(
         .select("doc_id", "lang", "text")
         .filter(F.length("text") >= HAARW_FRAME)
     )
-    per_doc = fused_encode_decode(
-        docs, _wav_haar_encode_batches, _wav_haar_batches, _WAV_HAAR_SCHEMA
+    per_doc = map_rows(
+        docs,
+        lambda doc_id, lang, text: [
+            (lang, *_wav_haar_energies(_wav_encode(doc_id, text)))
+        ],
+        _LANG_HAAR_SCHEMA,
     )
     rollup = per_doc.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -4804,11 +4755,14 @@ def streaming_wav_haar_monitor(
 # ---------------------------------------------------------------------------
 # STREAMING WAV ZERO-CROSSING MONITOR — the live twin of
 # multimodal_wav_zcr_real: real WAV decode inside the stream (the SAME
-# module-level encode/ZCR mapInPandas stages as the batch op), then
+# module-level encoder and ZCR row function as the batch op), then
 # per-lang (n_docs, n_samples, n_crossings) sums in complete-mode JVM agg
 # state. The rate is computed on the CONVERGED totals (summed pair
 # counts, not a mean of per-doc rates), exactly like the batch rollup.
 # ---------------------------------------------------------------------------
+_LANG_ZCR_SCHEMA = _schema("lang string, n_samples long, n_crossings long")
+
+
 @register(
     "streaming_wav_zcr_monitor",
     oracle=_zcr_lang_oracle(),
@@ -4823,8 +4777,12 @@ def streaming_wav_zcr_monitor(
         .select("doc_id", "lang", "text")
         .filter(F.length("text") >= 2)
     )
-    per_doc = fused_encode_decode(
-        docs, _wav_haar_encode_batches, _wav_zcr_batches, _WAV_ZCR_SCHEMA
+    per_doc = map_rows(
+        docs,
+        lambda doc_id, lang, text: [
+            (lang, *_wav_zcr_counts(_wav_encode(doc_id, text)))
+        ],
+        _LANG_ZCR_SCHEMA,
     )
     rollup = per_doc.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

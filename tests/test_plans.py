@@ -1013,27 +1013,43 @@ def test_power_iteration_broadcast_matvecs(spark):
 
 
 def test_ahash_arrow_decode_seam_banded_join(spark):
-    """The perceptual hash runs inside a MapInPandas (Arrow) stage —
+    """The perceptual hash runs inside a MapInArrow stage (map_rows) —
     the real-decoder seam — and candidates come from a banded equi-join,
     never an all-pairs product."""
     from kafka_stream_job_spark.operators.multimodal import (
         AHASH_SCHEMA,
-        ahash_batches,
+        ahash_rows,
+        map_rows,
         with_binary_payload,
     )
     from kafka_stream_job_spark.tables import load_table
 
     # the full query pins the hash stage behind a localCheckpoint, so the
     # Arrow seam is asserted on the stage itself
-    stage = (
-        with_binary_payload(load_table(spark, SF_SMOKE, "documents"))
-        .select("doc_id", "payload")
-        .mapInPandas(ahash_batches, AHASH_SCHEMA)
+    stage = map_rows(
+        with_binary_payload(load_table(spark, SF_SMOKE, "documents")).select(
+            "doc_id", "payload"
+        ),
+        ahash_rows,
+        AHASH_SCHEMA,
     )
-    assert "MapInPandas" in stage._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in stage._jdf.queryExecution().executedPlan().toString()
     plan = plan_of(spark, "multimodal_ahash_neardup")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_multimodal_batch_specs_never_plan_map_in_pandas(spark):
+    """Every batch op of operators/multimodal.py crosses the Arrow
+    boundary through map_rows (MapInArrow, no pandas object arrays);
+    none plans a MapInPandas stage."""
+    offenders = [
+        s.name
+        for s in SPECS.values()
+        if s.fn.__module__ == "kafka_stream_job_spark.operators.multimodal"
+        and "MapInPandas" in plan_of(spark, s.name)
+    ]
+    assert offenders == []
 
 
 def test_join_cardinality_audit_never_materializes_joins(spark):

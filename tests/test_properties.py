@@ -4946,26 +4946,22 @@ def test_lzw_width_growth_and_clear_boundaries():
 
 
 def test_gif_parser_roundtrip_and_rejects_malformed():
-    import pandas as pd
     import pytest
 
     from kafka_stream_job_spark.operators.multimodal import (
-        _gif_encode_batches,
+        _gif_encode,
         decode_gif_real,
     )
 
-    pdf = pd.DataFrame({"doc_id": [3, 11], "text": ["hello world", "spark"]})
-    out = list(_gif_encode_batches(iter([pdf])))[0]
-    for doc_id, payload in zip(out["doc_id"], out["payload"]):
+    for doc_id, text in ((3, "hello world"), (11, "spark")):
         w, h = 6 + doc_id % 5, 4 + doc_id % 4
-        text = pdf[pdf["doc_id"] == doc_id]["text"].iloc[0]
         tb = [ord(c) % 256 for c in text]
-        got = decode_gif_real(bytes(payload))
+        got = decode_gif_real(_gif_encode(doc_id, text))
         assert got["width"] == w and got["height"] == h
         assert got["sum_luma"] == sum(
             tb[j % len(tb)] for j in range(w * h)
         )
-    good = bytes(out["payload"][0])
+    good = _gif_encode(3, "hello world")
     with pytest.raises(ValueError, match="not a GIF"):
         decode_gif_real(b"JIF87a" + good[6:])
     with pytest.raises(ValueError, match="trailer"):
@@ -5451,3 +5447,41 @@ def test_simhash_arrow_fp_match_jvm(spark):
         for r in votes.select("doc_id", fp.cast("long").alias("fp")).collect()
     }
     assert got == jvm
+
+
+def test_multimodal_null_text_matches_oracle(spark, tmp_path):
+    """The five multimodal ops whose row functions read documents.text
+    unfiltered, on SF_SMOKE plus the `_with_null_text` document: each
+    returns exactly its DuckDB oracle's rows (NULL size and hash columns,
+    no sampled frame, an all-zero aHash) instead of failing the task."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from tests.conftest import SF_SMOKE, assert_matches_oracle
+
+    from kafka_stream_job_spark.registry import all_specs
+    from kafka_stream_job_spark.tables import TABLE_NAMES
+
+    docs = pq.read_table(f"{SF_SMOKE}/documents.parquet")
+    null_doc = pa.table(
+        {f.name: [None] for f in docs.schema} | {"doc_id": [900007]},
+        schema=docs.schema,
+    )
+    pq.write_table(
+        pa.concat_tables([docs, null_doc]), tmp_path / "documents.parquet"
+    )
+    for name in TABLE_NAMES:
+        if name != "documents":
+            os.symlink(f"{SF_SMOKE}/{name}.parquet", tmp_path / f"{name}.parquet")
+    sf = str(tmp_path)
+    specs = all_specs()
+    for name in (
+        "multimodal_decode_features",
+        "multimodal_resize",
+        "multimodal_frame_sample",
+        "multimodal_ahash_neardup",
+        "multimodal_ahash_cluster_reps",
+    ):
+        spec = specs[name]
+        assert_matches_oracle(spark, sf, spec.fn(spark, sf), spec.oracle, name)

@@ -1280,32 +1280,42 @@ def test_wav_pcm_samples_guards(spark):
         _wav_pcm_samples(mono, {**meta, "n_samples": 99})
 
 
-def test_fused_encode_decode_rejects_frame_without_payload(spark):
-    """fused_encode_decode hands the decoder (doc_id, payload) frames: an
-    encoder frame missing either column fails with a ValueError naming it,
-    and a well-formed frame passes through untouched."""
-    import pandas as pd
+def test_map_rows_emits_any_row_count_with_declared_types(spark):
+    """map_rows runs a per-row function in ONE MapInArrow stage: a row
+    may emit 0, 1 or 8 output rows, an empty input partition (and an
+    empty input) yields none, and int / long / string / binary /
+    array<int> columns arrive with their declared types."""
+    from pyspark.sql import types as T
 
-    from kafka_stream_job_spark.operators.multimodal import fused_encode_decode
+    from kafka_stream_job_spark.operators.multimodal import map_rows
 
-    docs = spark.range(3).withColumnRenamed("id", "doc_id")
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("k", T.IntegerType()),
+            T.StructField("tag", T.StringType()),
+            T.StructField("blob", T.BinaryType()),
+            T.StructField("ks", T.ArrayType(T.IntegerType())),
+        ]
+    )
 
-    def encode_ok(batches):
-        for pdf in batches:
-            yield pdf.assign(payload=[b"x"] * len(pdf))
+    def fan_out(doc_id):
+        return [
+            (doc_id, k, f"d{doc_id}", bytes([k]) * k, list(range(k)))
+            for k in range((0, 1, 8)[doc_id % 3])
+        ]
 
-    def encode_bad(batches):
-        for pdf in batches:
-            yield pdf.assign(blob=[b"x"] * len(pdf))
-
-    def decode(frames):
-        for pdf in frames:
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "n": pdf["payload"].map(len)})
-
-    ok = fused_encode_decode(docs, encode_ok, decode, "doc_id long, n long")
-    assert sorted(r["n"] for r in ok.collect()) == [1, 1, 1]
-    with pytest.raises(Exception, match=r"encode frame lacks \['payload'\]"):
-        fused_encode_decode(docs, encode_bad, decode, "doc_id long, n long").collect()
+    # 6 rows over 8 partitions: at least two partitions are empty
+    docs = spark.range(0, 6, numPartitions=8).withColumnRenamed("id", "doc_id")
+    out = map_rows(docs, fan_out, schema)
+    assert "MapInArrow" in out._jdf.queryExecution().executedPlan().toString()
+    got = sorted(
+        (r["doc_id"], r["k"], r["tag"], bytes(r["blob"]), r["ks"])
+        for r in out.collect()
+    )
+    assert got == sorted(r for d in range(6) for r in fan_out(d))
+    assert len(got) == 2 * (0 + 1 + 8)
+    assert map_rows(docs.where("doc_id < 0"), fan_out, schema).collect() == []
 
 
 def _mk_emb_dir(tmp_path, vecs, labels):
