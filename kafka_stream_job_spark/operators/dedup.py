@@ -366,6 +366,21 @@ _BANDS_SQL = " UNION ALL ".join(
 )
 
 
+_SIG_SCHEMA = "doc_id long, " + ", ".join(f"h{s} long" for s in range(NUM_HASHES))
+
+
+def signature_stage(docs: DataFrame) -> DataFrame:
+    """(doc_id, h0..h{k-1}) for the non-NULL-text rows of any documents
+    frame, batch or stream: ONE ``mapInArrow`` stage
+    (_minhash_sig_batches), stateless, so a stream keeps its semantics.
+    Every MinHash signature in the package is built here."""
+    return (
+        docs.where(F.col("text").isNotNull())
+        .select("doc_id", "text")
+        .mapInArrow(_minhash_sig_batches, _SIG_SCHEMA)
+    )
+
+
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, h0..h{k-1}) — per-doc MinHash signature (bigint columns).
 
@@ -380,23 +395,10 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-thread for the Python/numpy body — guide §4.2's "do the
     heavy lifting in native code inside the batch" beats per-element
     interpreted JVM eval by far more than the Arrow crossing costs.
+    The rebalance is round-robin (no key): there is no exchange left to
+    share, and round-robin balances the Python CPU best.
     """
-    # r13: the whole signature is computed per document inside ONE Arrow
-    # stage (_minhash_sig_batches) — no shingle explode, no groupBy
-    # exchange, and the interpreted shingling HOF is gone (its ~22 s of
-    # executor CPU at sf0.1 was the query's hot spot). The rebalance is
-    # round-robin now (no key): with the aggregation deleted there is no
-    # exchange left to share, and round-robin balances the Python CPU
-    # best; at 100 TB the rebalance is a no-op as before.
-    docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    return (
-        docs.where(F.col("text").isNotNull())
-        .select("doc_id", "text")
-        .mapInArrow(
-            _minhash_sig_batches,
-            "doc_id long, " + ", ".join(f"h{s} long" for s in range(NUM_HASHES)),
-        )
-    )
+    return signature_stage(load_table(spark, sf_dir, "documents", rebalance=True))
 
 
 # ---------------------------------------------------------------------------
@@ -419,6 +421,50 @@ def _band_sig_cols():
     ]
 
 
+def minhash_bands(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band_idx INT, band_sig) — the NUM_BANDS band rows of each
+    signature row, the Spark twin of ``_BANDS_SQL``. Stateless, so it
+    bands a stream too; outputs that report band_idx cast it to BIGINT."""
+    return sigs.select(
+        "doc_id",
+        F.explode(
+            F.map_from_arrays(
+                F.array(*[F.lit(b) for b in range(NUM_BANDS)]),
+                F.array(*_band_sig_cols()),
+            )
+        ).alias("band_idx", "band_sig"),
+    )
+
+
+def candidate_pairs(sigs: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b), doc_a < doc_b, sharing at least one band
+    of ``sigs`` — the band self-join of ``_PAIRS_SQL``.
+
+    Scale design: the self-join is pinned to a sort-merge join (``merge``
+    hint). At 100 TB both sides are the full banded corpus, so a
+    broadcast is impossible and a shuffled-hash build risks OOM on hot
+    buckets — SMJ spills. Pinning the strategy has a second payoff: both
+    join children are canonically identical plans shuffled on the same
+    (band_idx, band_sig) keys, so Spark's ReusedExchange kicks in and the
+    signature pipeline (scan → shingle → md5 → minhash → band) runs ONCE,
+    not once per side (AQE's broadcast conversion would break the reuse
+    and double the scan).
+    """
+    banded = minhash_bands(sigs)
+    return (
+        banded.alias("a")
+        .hint("merge")
+        .join(
+            banded.alias("b"),
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_sig") == F.col("b.band_sig"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
 @register(
     "dedup_minhash_lsh",
     oracle=f"""
@@ -436,44 +482,46 @@ def _band_sig_cols():
     bench=True,
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH candidate pairs via band self-join.
+    """LSH candidate pairs via band self-join (see candidate_pairs)."""
+    return candidate_pairs(minhash_signatures(spark, sf_dir))
 
-    Scale design: the self-join is pinned to a sort-merge join (``merge``
-    hint). At 100 TB both sides are the full banded corpus, so a
-    broadcast is impossible and a shuffled-hash build risks OOM on hot
-    buckets — SMJ spills. Pinning the strategy has a second payoff: both
-    join children are canonically identical plans shuffled on the same
-    (band_idx, band_sig) keys, so Spark's ReusedExchange kicks in and the
-    signature pipeline (scan → shingle → md5 → minhash → band) runs ONCE,
-    not once per side (AQE's broadcast conversion would break the reuse
-    and double the scan).
-    """
-    sigs = minhash_signatures(spark, sf_dir)
-    banded = sigs.select(
-        "doc_id",
-        F.explode(
-            F.map_from_arrays(
-                F.array(*[F.lit(b) for b in range(NUM_BANDS)]),
-                F.array(*_band_sig_cols()),
-            )
-        ).alias("band_idx", "band_sig"),
+
+def shingle_overlap(pairs: DataFrame, sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_common, n_a, n_b) for the (doc_a, doc_b) rows of
+    ``pairs``: distinct shingles the two documents share, and each one's
+    distinct-shingle count, from the ``_shingles`` rows ``sh``. An inner
+    join, like every oracle's ``inter`` CTE: a pair sharing no shingle
+    has no row. ``sh`` is read three times (counts and both join sides);
+    a caller that wants it computed once pins it first."""
+    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    sb = sh.select(
+        F.col("doc_id").alias("_sb_doc"), F.col("shingle").alias("_sb_shingle")
     )
-    left = banded.alias("a").hint("merge")
-    right = banded.alias("b")
-    pairs = (
-        left.join(
-            right,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    inter = (
+        pairs.join(sa, "doc_a")
+        .join(
+            sb,
+            (F.col("doc_b") == F.col("_sb_doc"))
+            & (F.col("shingle") == F.col("_sb_shingle")),
         )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    return pairs
+    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
+    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
+    return (
+        inter.join(ca, "doc_a")
+        .join(cb, "doc_b")
+        .select("doc_a", "doc_b", "n_common", "n_a", "n_b")
+    )
+
+
+def _exact_jaccard():
+    """|A∩B| / |A∪B| over shingle_overlap's columns (as a double)."""
+    return F.col("n_common") * F.lit(1.0) / (
+        F.col("n_a") + F.col("n_b") - F.col("n_common")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -522,27 +570,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key="doc_id": the shingle distinct + per-doc counts ride the
     # under-split rebalance exchange locally (no-op at 100 TB scan widths)
     docs = load_table(spark, sf_dir, "documents", rebalance=True, key="doc_id")
-    sh = _shingles(docs)
-    pairs = dedup_minhash_lsh(spark, sf_dir)
-    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sb = sh.select(F.col("doc_id").alias("_sb_doc"), F.col("shingle").alias("_sb_shingle"))
-    inter = (
-        pairs.join(sa, "doc_a")
-        .join(
-            sb,
-            (F.col("doc_b") == F.col("_sb_doc")) & (F.col("shingle") == F.col("_sb_shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    jac = pround(F.col("n_common") * F.lit(1.0) / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 4)
+    overlap = shingle_overlap(dedup_minhash_lsh(spark, sf_dir), _shingles(docs))
     return (
-        inter.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        overlap.select("doc_a", "doc_b", pround(_exact_jaccard(), 4).alias("jaccard"))
         .filter(F.col("jaccard") >= 0.2)
     )
 
@@ -1110,6 +1140,32 @@ _agree_sql = " + ".join(
 _exact_raw_sql = "n_common * 1.0 / (ca.n + cb.n - n_common)"
 
 
+def _paired_sigs(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
+    """``pairs`` (doc_a, doc_b) with doc_a's signature as a0..a{k-1} and
+    doc_b's as b0..b{k-1}."""
+    sa = sigs.select(
+        F.col("doc_id").alias("doc_a"),
+        *[F.col(f"h{s}").alias(f"a{s}") for s in range(NUM_HASHES)],
+    )
+    sb = sigs.select(
+        F.col("doc_id").alias("doc_b"),
+        *[F.col(f"h{s}").alias(f"b{s}") for s in range(NUM_HASHES)],
+    )
+    return pairs.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def _n_agree(parity: bool = False):
+    """BIGINT count of seeds s where a{s} equals b{s} (in parity only,
+    the b = 1 bit, when ``parity``) over _paired_sigs' columns."""
+    def v(c):
+        return c % 2 if parity else c
+
+    return sum(
+        F.when(v(F.col(f"a{s}")) == v(F.col(f"b{s}")), 1).otherwise(0)
+        for s in range(NUM_HASHES)
+    ).cast("long")
+
+
 @register(
     "minhash_jaccard_calibration",
     oracle=f"""
@@ -1157,72 +1213,14 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bpe_learn_merges; at 100 TB this is "compute signatures once,
     # reuse", which is how a real dedup run is staged.
     sigs = minhash_signatures(spark, sf_dir).localCheckpoint(eager=False)
-    banded = sigs.select(
-        "doc_id",
-        F.explode(
-            F.map_from_arrays(
-                F.array(*[F.lit(b) for b in range(NUM_BANDS)]),
-                F.array(*_band_sig_cols()),
-            )
-        ).alias("band_idx", "band_sig"),
-    )
-    pairs = (
-        banded.alias("a")
-        .hint("merge")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{s}").alias(f"a{s}") for s in range(NUM_HASHES)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{s}").alias(f"b{s}") for s in range(NUM_HASHES)],
-    )
-    n_equal = sum(
-        F.when(F.col(f"a{s}") == F.col(f"b{s}"), 1).otherwise(0)
-        for s in range(NUM_HASHES)
-    ).cast("long")
-
-    sh = _shingles(docs).localCheckpoint(eager=False)
-    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    sha = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    shb = sh.select(
-        F.col("doc_id").alias("_sb_doc"), F.col("shingle").alias("_sb_shingle")
-    )
-    inter = (
-        pairs.join(sha, "doc_a")
-        .join(
-            shb,
-            (F.col("doc_b") == F.col("_sb_doc"))
-            & (F.col("shingle") == F.col("_sb_shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-
+    pairs = candidate_pairs(sigs)
+    overlap = shingle_overlap(pairs, _shingles(docs).localCheckpoint(eager=False))
     est = F.col("n_equal") / F.lit(float(NUM_HASHES))
-    exact_raw = F.col("n_common") * F.lit(1.0) / (
-        F.col("n_a") + F.col("n_b") - F.col("n_common")
-    )
+    exact_raw = _exact_jaccard()
     return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", n_equal.alias("n_equal"))
-        .join(inter, ["doc_a", "doc_b"])
-        .join(ca, "doc_a")
-        .join(cb, "doc_b")
+        _paired_sigs(pairs, sigs)
+        .select("doc_a", "doc_b", _n_agree().alias("n_equal"))
+        .join(overlap, ["doc_a", "doc_b"])
         .select(
             "doc_a",
             "doc_b",
@@ -1260,6 +1258,20 @@ def _incr_hash_sql() -> str:
     )
 
 
+def _incr_hash():
+    """Spark twin of _incr_hash_sql: 0 marks an incoming doc_id."""
+    return (
+        F.conv(
+            F.substring(
+                F.md5(F.concat(F.lit("incr:"), F.col("doc_id").cast("string"))), 1, 7
+            ),
+            16,
+            10,
+        ).cast("long")
+        % INCR_MOD
+    )
+
+
 @register(
     "dedup_incremental_delta",
     oracle=f"""
@@ -1289,29 +1301,12 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingestion extension.
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    incr = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("incr:"), F.col("doc_id").cast("string"))), 1, 7
-            ),
-            16,
-            10,
-        ).cast("long")
-        % INCR_MOD
-    )
+    incr = _incr_hash()
     incoming_ids = docs.filter(incr == 0)
     corpus_ids = docs.filter(incr != 0)
 
     sigs = minhash_signatures(spark, sf_dir).localCheckpoint(eager=False)
-    banded = sigs.select(
-        "doc_id",
-        F.explode(
-            F.map_from_arrays(
-                F.array(*[F.lit(b) for b in range(NUM_BANDS)]),
-                F.array(*_band_sig_cols()),
-            )
-        ).alias("band_idx", "band_sig"),
-    ).localCheckpoint(eager=False)
+    banded = minhash_bands(sigs).localCheckpoint(eager=False)
     in_bands = banded.join(incoming_ids, "doc_id", "left_semi")
     corpus_bands = banded.join(corpus_ids, "doc_id", "left_semi").select(
         F.col("doc_id").alias("c_doc"), "band_idx", "band_sig"
@@ -1603,31 +1598,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     under-scores).
     """
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    sh = _shingles(docs)
-    pairs = dedup_minhash_lsh(spark, sf_dir)
-    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sb = sh.select(
-        F.col("doc_id").alias("_sb_doc"), F.col("shingle").alias("_sb_shingle")
-    )
-    inter = (
-        pairs.join(sa, "doc_a")
-        .join(
-            sb,
-            (F.col("doc_b") == F.col("_sb_doc"))
-            & (F.col("shingle") == F.col("_sb_shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
+    overlap = shingle_overlap(dedup_minhash_lsh(spark, sf_dir), _shingles(docs))
     cont_ab = pround(F.col("n_common") * F.lit(1.0) / F.col("n_a"), 4)
     cont_ba = pround(F.col("n_common") * F.lit(1.0) / F.col("n_b"), 4)
     return (
-        inter.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .select(
+        overlap.select(
             "doc_a",
             "doc_b",
             cont_ab.alias("cont_a_in_b"),
@@ -1863,87 +1838,27 @@ _bit_agree_sql = " + ".join(
 def minhash_bbit_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
     sigs = minhash_signatures(spark, sf_dir).localCheckpoint(eager=False)
-    banded = sigs.select(
-        "doc_id",
-        F.explode(
-            F.map_from_arrays(
-                F.array(*[F.lit(b) for b in range(NUM_BANDS)]),
-                F.array(*_band_sig_cols()),
-            )
-        ).alias("band_idx", "band_sig"),
+    pairs = candidate_pairs(sigs)
+    scored = _paired_sigs(pairs, sigs).select(
+        "doc_a",
+        "doc_b",
+        _n_agree().alias("n_equal"),
+        _n_agree(parity=True).alias("n_bit_equal"),
     )
-    pairs = (
-        banded.alias("a")
-        .hint("merge")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{s}").alias(f"a{s}") for s in range(NUM_HASHES)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{s}").alias(f"b{s}") for s in range(NUM_HASHES)],
-    )
-    n_equal = sum(
-        F.when(F.col(f"a{s}") == F.col(f"b{s}"), 1).otherwise(0)
-        for s in range(NUM_HASHES)
-    ).cast("long")
-    n_bit_equal = sum(
-        F.when(F.col(f"a{s}") % 2 == F.col(f"b{s}") % 2, 1).otherwise(0)
-        for s in range(NUM_HASHES)
-    ).cast("long")
-    scored = (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", n_equal.alias("n_equal"),
-                n_bit_equal.alias("n_bit_equal"))
-    )
-    shingled = _shingles(docs).localCheckpoint(eager=False)
-    counts = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        scored.select("doc_a", "doc_b")
-        .join(
-            shingled.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a"
-        )
-        .join(
-            shingled.select(F.col("doc_id").alias("doc_b"), "shingle"),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    exact = (
-        F.col("n_common")
-        * F.lit(1.0)
-        / (F.col("na") + F.col("nb") - F.col("n_common"))
-    )
+    overlap = shingle_overlap(pairs, _shingles(docs).localCheckpoint(eager=False))
+    exact = _exact_jaccard()
     est_bbit = (
         F.lit(2.0) * (F.col("n_bit_equal") / F.lit(float(NUM_HASHES)))
         - F.lit(1.0)
     )
-    return (
-        scored.join(inter, ["doc_a", "doc_b"])
-        .join(counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
-        .join(counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_bit_equal",
-            pround(est_bbit, 4).alias("est_bbit"),
-            (F.col("n_equal") / F.lit(float(NUM_HASHES))).alias("est_full"),
-            pround(exact, 4).alias("exact_jaccard"),
-            pround(F.abs(est_bbit - exact), 4).alias("abs_err_bbit"),
-        )
+    return scored.join(overlap, ["doc_a", "doc_b"]).select(
+        "doc_a",
+        "doc_b",
+        "n_bit_equal",
+        pround(est_bbit, 4).alias("est_bbit"),
+        (F.col("n_equal") / F.lit(float(NUM_HASHES))).alias("est_full"),
+        pround(exact, 4).alias("exact_jaccard"),
+        pround(F.abs(est_bbit - exact), 4).alias("abs_err_bbit"),
     )
 
 
@@ -2505,45 +2420,20 @@ def dedup_band_sweep_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    sh = _shingles(docs).localCheckpoint(eager=False)
-    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    sha = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    shb = sh.select(
-        F.col("doc_id").alias("_sb_doc"), F.col("shingle").alias("_sb_shingle")
+    overlap = shingle_overlap(universe, _shingles(docs).localCheckpoint(eager=False))
+    # a pair sharing no shingle has no overlap row and is never a true
+    # pair (every non-NULL text has at least one shingle, so the
+    # oracle's 0 >= TAU·(n_a + n_b) is false)
+    is_true = F.col("n_common") * 100 >= SWEEP_TAU_PCT * (
+        F.col("n_a") + F.col("n_b") - F.col("n_common")
     )
-    inter = (
-        universe.join(sha, "doc_a")
-        .join(
-            shb,
-            (F.col("doc_b") == F.col("_sb_doc"))
-            & (F.col("shingle") == F.col("_sb_shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{s}").alias(f"a{s}") for s in range(NUM_HASHES)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{s}").alias(f"b{s}") for s in range(NUM_HASHES)],
-    )
-    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    nc = F.coalesce(F.col("n_common"), F.lit(0))
     pairs = (
-        universe.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .join(inter, ["doc_a", "doc_b"], "left")
+        _paired_sigs(universe, sigs)
+        .join(overlap, ["doc_a", "doc_b"], "left")
         .select(
             *[F.col(f"a{s}") for s in range(NUM_HASHES)],
             *[F.col(f"b{s}") for s in range(NUM_HASHES)],
-            (
-                nc * 100 >= SWEEP_TAU_PCT * (F.col("n_a") + F.col("n_b") - nc)
-            ).alias("is_true_pair"),
+            F.coalesce(is_true, F.lit(False)).alias("is_true_pair"),
         )
         .localCheckpoint(eager=False)  # 4 config aggregates read it
     )
@@ -3398,32 +3288,10 @@ def lsh_index_report(sigs: DataFrame, docs: DataFrame) -> DataFrame:
     plus the doc_id universe — shared verbatim by the batch query and
     its streaming twin (which drains the per-doc signature mins in
     complete mode; this assembles post-stream)."""
-    incr = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("incr:"), F.col("doc_id").cast("string"))
-                ),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % INCR_MOD
-    )
+    incr = _incr_hash()
     incoming_ids = docs.filter(incr == 0)
     corpus_ids = docs.filter(incr != 0)
-    sigs = sigs.localCheckpoint(eager=False)
-    banded = sigs.select(
-        "doc_id",
-        F.explode(
-            F.map_from_arrays(
-                F.array(*[F.lit(b) for b in range(NUM_BANDS)]),
-                F.array(*_band_sig_cols()),
-            )
-        ).alias("band_idx", "band_sig"),
-    )
+    banded = minhash_bands(sigs.localCheckpoint(eager=False))
     index_b = (
         banded.join(corpus_ids, "doc_id", "left_semi")
         .groupBy("band_idx", "band_sig")

@@ -735,9 +735,12 @@ def ahash_rows(doc_id: int, payload: bytes | None) -> list:
     at sf0.1) → 8 banded rows per document. Pure-integer arithmetic —
     engine-portable. A NULL payload (NULL text) hashes to 0: every
     ``sample·n >= tot`` compare is NULL in SQL, so the oracle sets no
-    bit."""
+    bit. An empty payload sets all 64: the oracle's ``ascii('')`` is 0,
+    and ``0·0 >= 0`` holds."""
     if payload is None:
         bits = [0] * AHASH_BITS
+    elif not payload:
+        bits = [1] * AHASH_BITS
     else:
         n = len(payload)
         tot = sum(payload)
@@ -807,6 +810,13 @@ def multimodal_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = map_rows(
         with_binary_payload(docs).select("doc_id", "payload"), ahash_rows, AHASH_SCHEMA
     ).localCheckpoint(eager=False)  # band join + two verify probes
+    return ahash_near_pairs(hashed)
+
+
+def ahash_near_pairs(hashed: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b, hamming), doc_a < doc_b, hamming ≤
+    AHASH_HAM_T, over the ``ahash_rows`` band rows ``hashed``: the band
+    equi-join, then the exact Hamming verify."""
     a = hashed.select(
         F.col("doc_id").alias("doc_a"),
         F.col("bits64").alias("bits_a"),
@@ -920,26 +930,10 @@ def multimodal_ahash_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame
     hashed = map_rows(
         with_binary_payload(docs).select("doc_id", "payload"), ahash_rows, AHASH_SCHEMA
     ).localCheckpoint(eager=False)
-    a = hashed.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("bits64").alias("bits_a"),
-        "band_idx",
-        "band_val",
-    )
-    b = hashed.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("bits64").alias("bits_b"),
-        "band_idx",
-        "band_val",
-    )
-    ham = F.bit_count(F.col("bits_a").bitwiseXOR(F.col("bits_b"))).cast("long")
+    # hamming is a function of the pair, so the pairs are already distinct
     edges = (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= AHASH_HAM_T)
+        ahash_near_pairs(hashed)
         .select("doc_a", "doc_b")
-        .distinct()
         .localCheckpoint(eager=False)  # reused 2x per round x 2 rounds
     )
     labels = hashed.select("doc_id").distinct().select(

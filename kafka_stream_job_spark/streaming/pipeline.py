@@ -62,11 +62,10 @@ from kafka_stream_job_spark.operators.dedup import (
     _FRONTIER_ORACLE_SQL,
     _SHINGLES_SQL,
     _SIGS_SQL,
-    NUM_BANDS,
     NUM_HASHES,
-    ROWS_PER_BAND,
-    _minhash_sig_batches,
     lsh_index_report,
+    minhash_bands,
+    signature_stage,
 )
 from kafka_stream_job_spark.operators.formats import (
     TXN_VERSIONS,
@@ -647,9 +646,7 @@ def run_stream_to_memory(
 
     The returned frame keeps the sink's rows alive; its temp view is
     dropped, so the session catalog does not hold every drain's rows for
-    the life of the session. The sink's plan is not re-instanced, so a
-    self-join of the result fails with conflicting references: a caller
-    that self-joins it pins it first with a lazy ``localCheckpoint``.
+    the life of the session.
     """
     name = name or f"drain_{uuid.uuid4().hex[:8]}"
     writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
@@ -659,10 +656,15 @@ def run_stream_to_memory(
 
 def _detached_table(spark: SparkSession, name: str) -> DataFrame:
     """The memory-sink table ``name`` as a frame, with its temp view
-    dropped from the session catalog (the frame still reads the rows)."""
+    dropped from the session catalog (the frame still reads the rows).
+
+    The sink's plan is not re-instanced by the analyzer, so a bare
+    ``spark.table(name)`` fails a self-join with conflicting references;
+    the identity projection gives the frame fresh attribute ids, so a
+    caller self-joins it (or joins its own aggregates) with no pin."""
     df = spark.table(name)
     spark.catalog.dropTempView(name)
-    return df
+    return df.select(*[F.col(c).alias(c) for c in df.columns])
 
 
 @contextlib.contextmanager
@@ -3562,37 +3564,13 @@ def streaming_lsh_candidate_buckets(
     # under-split rebalance (guide §2.5 input skew: "one huge
     # unsplittable file — repartition immediately after the read");
     # the extra exchange moves only raw doc rows once.
-    docs = (
-        stream_table(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull())
-        .repartition(spark.sparkContext.defaultParallelism)
+    docs = stream_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
     )
-    # r13: signatures come whole from the shared Arrow body (same
-    # stage the batch minhash_signatures runs — one Python pass per
-    # doc instead of 16 interpreted array_min(transform(...)) HOF
-    # evaluations per row; stateless, so streaming semantics and the
-    # bucket-state exchange are untouched).
-    staged = docs.select("doc_id", "text").mapInArrow(
-        _minhash_sig_batches,
-        "doc_id long, "
-        + ", ".join(
-            f"h{s} long" for s in range(NUM_BANDS * ROWS_PER_BAND)
-        ),
-    )
-    band_structs = ", ".join(
-        "struct(CAST({b} AS BIGINT) AS band_idx, md5(concat_ws('|', {hs})) AS band_sig)".format(
-            b=b,
-            hs=", ".join(
-                f"CAST(h{b * ROWS_PER_BAND + r} AS STRING)"
-                for r in range(ROWS_PER_BAND)
-            ),
-        )
-        for b in range(NUM_BANDS)
-    )
-    banded = staged.select(
-        "doc_id",
-        F.expr(f"explode(array({band_structs}))").alias("bs"),
-    ).select("doc_id", "bs.band_idx", "bs.band_sig")
+    # signatures and bands are the batch dedup_minhash_lsh's own
+    # (signature_stage, minhash_bands) — both stateless, so streaming
+    # semantics and the bucket-state exchange are untouched.
+    banded = minhash_bands(signature_stage(docs))
 
     # Bucket state is (count, min) — both BUILT-IN streaming
     # aggregates, so the state lives in the JVM state store, not in
@@ -3602,7 +3580,9 @@ def streaming_lsh_candidate_buckets(
     # bucket per batch (the r9 extended bench measured it at 12 s —
     # 5x this plan). Complete mode: the drained table is the converged
     # state, one row per bucket.
-    emitted_stream = banded.groupBy("band_idx", "band_sig").agg(
+    emitted_stream = banded.groupBy(
+        F.col("band_idx").cast("long").alias("band_idx"), "band_sig"
+    ).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.min("doc_id").cast("long").alias("min_doc"),
     )
@@ -3842,10 +3822,7 @@ def streaming_type_entropy_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", "ts").cast("string").alias("hour_ts"),
         "event_type",
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    # pinned: tot and cw, both branches of c, join (conflicting references)
-    c = run_stream_to_memory(
-        spark, counted, output_mode="complete"
-    ).localCheckpoint(eager=False)
+    c = run_stream_to_memory(spark, counted, output_mode="complete")
     tot = c.groupBy("hour_ts").agg(
         F.sum("c").cast("long").alias("n"),
         F.count(F.lit(1)).cast("long").alias("n_types"),
@@ -4235,10 +4212,7 @@ def streaming_brand_mi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token", "p_brand")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    # pinned: the MI assembly self-joins c_tb (conflicting references)
-    c_tb = run_stream_to_memory(
-        spark, counted, output_mode="complete"
-    ).localCheckpoint(eager=False)
+    c_tb = run_stream_to_memory(spark, counted, output_mode="complete")
     return name_brand_mi_assemble(spark, c_tb)
 
 
@@ -4386,10 +4360,7 @@ def streaming_ess_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted = fp.groupBy("fingerprint", "source").agg(
         F.count(F.lit(1)).cast("long").alias("c_fs")
     )
-    # pinned: c_fs joins its own per-fingerprint sizes (conflicting refs)
-    c_fs = run_stream_to_memory(
-        spark, counted, output_mode="complete"
-    ).localCheckpoint(eager=False)
+    c_fs = run_stream_to_memory(spark, counted, output_mode="complete")
     sizes = c_fs.groupBy("fingerprint").agg(
         F.sum("c_fs").cast("long").alias("c")
     )
@@ -4464,10 +4435,7 @@ def streaming_unigram_fertility(
             .alias("c_tok"),
         )
     )
-    # pinned: blc joins its own rollups below (conflicting references)
-    blc = run_stream_to_memory(
-        spark, blc_stream, output_mode="complete"
-    ).localCheckpoint(eager=False)
+    blc = run_stream_to_memory(spark, blc_stream, output_mode="complete")
     bcnt = blc.groupBy("block").agg(F.sum("c").cast("long").alias("c"))
     spine = _uni_spine_df(spark)
     _cands, _v0, best2 = _uni_best2(spark, bcnt, spine)
@@ -4890,10 +4858,7 @@ def streaming_mann_kendall_monitor(
                 "date'1970-01-01')"
         ).alias("d"),
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    # pinned: the Mann-Kendall assembly self-joins daily (conflicting refs)
-    daily = run_stream_to_memory(
-        spark, daily_stream, output_mode="complete"
-    ).localCheckpoint(eager=False)
+    daily = run_stream_to_memory(spark, daily_stream, output_mode="complete")
     return mann_kendall_assemble(daily)
 
 
@@ -5290,28 +5255,19 @@ def streaming_lsh_index_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     # repartition after the single-split replay source: the heavy
-    # shingle→md5 explode otherwise serializes in one task (same fix
-    # as streaming_lsh_candidate_buckets — guide §2.5)
+    # signature stage otherwise serializes in one task (same fix as
+    # streaming_lsh_candidate_buckets — guide §2.5)
     docs = stream_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    # r13: per-doc signatures from the shared Arrow body; the
+    # per-doc signatures from the batch op's signature_stage; the
     # stateful doc-keyed aggregate keeps its replay semantics (min
     # distributes: min across appearances of finished sigs == min
     # over the union of shingle hashes the old explode carried).
-    staged = docs.where(F.col("text").isNotNull()).select(
-        "doc_id", "text"
-    ).mapInArrow(
-        _minhash_sig_batches,
-        "doc_id long, " + ", ".join(f"h{s} long" for s in range(NUM_HASHES)),
-    )
-    per_doc = staged.groupBy("doc_id").agg(
+    per_doc = signature_stage(docs).groupBy("doc_id").agg(
         *[F.min(f"h{s}").alias(f"h{s}") for s in range(NUM_HASHES)]
     )
-    # pinned: lsh_index_report self-joins sigs (conflicting references)
-    sigs = run_stream_to_memory(
-        spark, per_doc, output_mode="complete"
-    ).localCheckpoint(eager=False)
+    sigs = run_stream_to_memory(spark, per_doc, output_mode="complete")
     # null-text docs emit no signature and no postings on either
     # engine, so the signature doc_ids ARE the relevant universe
     return lsh_index_report(sigs, sigs.select("doc_id"))

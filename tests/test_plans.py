@@ -576,16 +576,29 @@ def test_ivf_recall_broadcasts_tiny_sides(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_minhash_calibration_computes_signatures_once(spark):
+# Exchange bound per calibration query: minhash_jaccard_calibration keeps
+# its old bound; the other two are capped at the counts their plans had
+# before they shared candidate_pairs and shingle_overlap.
+_CALIBRATION_MAX_EXCHANGES = {
+    "minhash_jaccard_calibration": 16,
+    "minhash_bbit_calibration": 16,
+    "dedup_band_sweep_calibration": 4,
+}
+
+
+@pytest.mark.parametrize("name", list(_CALIBRATION_MAX_EXCHANGES))
+def test_minhash_calibration_computes_signatures_once(spark, name):
     """Calibration recomputes nothing: signatures and shingles are pinned
     to single physical computations (lazy localCheckpoint → every consumer
     references the same RDD — without it this plan scans documents 10×),
-    and only candidate pairs are ever compared (no cartesian)."""
-    plan = plan_of(spark, "minhash_jaccard_calibration")
+    and only candidate pairs are ever compared (no cartesian). A shared
+    helper that re-derived signatures or shingles instead of reading the
+    caller's pinned frame would bring back a scan or extra exchanges."""
+    plan = plan_of(spark, name)
     assert "Scan parquet" not in plan, "a consumer re-derived the scan pipeline"
-    assert "ExistingRDD" in plan  # the two checkpointed intermediates
+    assert "ExistingRDD" in plan  # the checkpointed intermediates
     assert "CartesianProduct" not in plan
-    assert plan.count("Exchange") <= 16
+    assert plan.count("Exchange") <= _CALIBRATION_MAX_EXCHANGES[name]
 
 
 def test_cdc_chunks_no_shuffle(spark):

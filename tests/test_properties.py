@@ -5451,9 +5451,10 @@ def test_simhash_arrow_fp_match_jvm(spark):
 
 def test_multimodal_null_text_matches_oracle(spark, tmp_path):
     """The five multimodal ops whose row functions read documents.text
-    unfiltered, on SF_SMOKE plus the `_with_null_text` document: each
-    returns exactly its DuckDB oracle's rows (NULL size and hash columns,
-    no sampled frame, an all-zero aHash) instead of failing the task."""
+    unfiltered, on SF_SMOKE plus the `_with_null_text` document and one
+    empty-text document: each returns exactly its DuckDB oracle's rows
+    (for NULL: NULL size and hash columns, no sampled frame, an all-zero
+    aHash; for '': an all-ones aHash) instead of failing the task."""
     import os
 
     import pyarrow as pa
@@ -5464,12 +5465,13 @@ def test_multimodal_null_text_matches_oracle(spark, tmp_path):
     from kafka_stream_job_spark.tables import TABLE_NAMES
 
     docs = pq.read_table(f"{SF_SMOKE}/documents.parquet")
-    null_doc = pa.table(
-        {f.name: [None] for f in docs.schema} | {"doc_id": [900007]},
+    edge_docs = pa.table(
+        {f.name: [None, None] for f in docs.schema}
+        | {"doc_id": [900007, 900008], "text": [None, ""]},
         schema=docs.schema,
     )
     pq.write_table(
-        pa.concat_tables([docs, null_doc]), tmp_path / "documents.parquet"
+        pa.concat_tables([docs, edge_docs]), tmp_path / "documents.parquet"
     )
     for name in TABLE_NAMES:
         if name != "documents":

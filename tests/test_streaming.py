@@ -461,7 +461,8 @@ def test_drains_leave_no_temp_view_behind(spark):
     does not keep every drained row for the life of the session: neither a
     registry twin (``drain_*``), the availableNow rollup (``stream_avnow_*``)
     nor a plain run_stream_to_memory call leaves a view. The returned frame
-    still reads its rows, and self-joins once pinned."""
+    still reads its rows, and self-joins, or cross-joins its own aggregate,
+    with no pin."""
     from kafka_stream_job_spark.registry import REGISTRY
 
     def drain_views():
@@ -481,16 +482,17 @@ def test_drains_leave_no_temp_view_behind(spark):
     )
     assert drain_views() == before
 
-    pinned = counts.localCheckpoint(eager=False)
-    joined = pinned.join(
-        pinned.select("event_type", F.col("count").alias("again")), "event_type"
+    joined = counts.join(
+        counts.select("event_type", F.col("count").alias("again")), "event_type"
     )
+    with_total = counts.crossJoin(counts.agg(F.sum("count").alias("total")))
     want = {
         r["event_type"]: r["count"]
         for r in load_table(spark, SF_SMOKE, "events").groupBy("event_type").count().collect()
     }
     assert {r["event_type"]: r["count"] for r in counts.collect()} == want
     assert {r["event_type"]: r["again"] for r in joined.collect()} == want
+    assert {r["total"] for r in with_total.collect()} == {sum(want.values())}
 
 
 def test_purchase_attribution_stream_equals_batch(spark, tmp_path):
