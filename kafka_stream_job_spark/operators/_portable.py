@@ -1,5 +1,7 @@
-"""Engine-portable rounding.
+"""Engine-portable twins: rounding and the md5 integer hash.
 
+Rounding
+--------
 ``ROUND(x, 2)`` is NOT portable between Spark and DuckDB: Spark's Round on
 doubles goes through ``BigDecimal.valueOf`` (the double's shortest decimal
 repr) with HALF_UP, while DuckDB rounds the binary value — so a true value
@@ -17,6 +19,26 @@ computed with identical double ops on both sides. The trailing ``+ 0.0``
 normalizes IEEE negative zero: DuckDB's ROUND preserves ``-0.0`` where
 Spark's returns ``0.0``, and the driver's value hash distinguishes them;
 ``x + 0.0`` is the identity for every double except ``-0.0 → +0.0``.
+
+Hashing
+-------
+Every split, A/B arm, seed sample, bloom position and sketch register
+hashes a key the same way: the first ``digits`` hex digits of
+``md5(prefix || key)`` read as an integer (``md5_int`` / ``md5_int_sql``).
+Both engines compute md5 over the UTF-8 bytes of the string, so the two
+forms agree bit for bit, which is also what lets lineage recompute a lost
+partition and get the same rows back.
+
+- 7 digits (the default) give 28 bits, always non-negative, so ``%`` and
+  ``//`` agree across the engines whatever their sign conventions.
+- KMV uses 13 digits: its estimator needs a 52-bit uniform hash, still
+  below 2^63 and exactly representable as a double. The skip-gram
+  negative draw uses 12 (48 bits), so its ``% total_weight`` stays
+  near-uniform for any realistic weight total.
+- Keys must be integers or strings. Spark and DuckDB render doubles and
+  timestamps differently as text, so hashing those would split engines.
+- NULL hashes to NULL on both sides (``concat``/``||`` and ``md5``
+  propagate it).
 """
 
 from __future__ import annotations
@@ -37,6 +59,22 @@ def sql_round(expr: str, scale: int) -> str:
     """DuckDB side — identical arithmetic, term for term."""
     factor = float(10**scale)
     return f"ROUND(({expr}) * {factor}) / {factor} + 0.0"
+
+
+def md5_int(key: Column | str, prefix: str = "", digits: int = 7) -> Column:
+    """Spark side of the portable hash. With a ``prefix`` the hashed string
+    is ``prefix`` followed by ``key`` cast to string; without one ``key``
+    must already be the string expression to hash."""
+    if isinstance(key, str):
+        key = F.col(key)
+    s = F.concat(F.lit(prefix), key.cast("string")) if prefix else key
+    return F.conv(F.substring(F.md5(s), 1, digits), 16, 10).cast("long")
+
+
+def md5_int_sql(key: str, prefix: str = "", digits: int = 7) -> str:
+    """DuckDB side of ``md5_int``: the same string, the same digits."""
+    s = f"'{prefix}' || CAST({key} AS VARCHAR)" if prefix else key
+    return f"('0x' || substr(md5({s}), 1, {digits}))::BIGINT"
 
 
 def idiv(a: Column | str, b: Column | int) -> Column:

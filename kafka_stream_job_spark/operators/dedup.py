@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_stream_job_spark.operators._portable import pround
+from kafka_stream_job_spark.operators._portable import md5_int, md5_int_sql, pround
 from kafka_stream_job_spark.registry import register
 from kafka_stream_job_spark.tables import load_table
 
@@ -112,19 +112,16 @@ def _shingle_array():
 
 
 def _hashed_shingle_expr():
-    """Array of 28-bit integer shingle hashes per row — shingling and
-    md5→int hashing fused in one ``transform`` so shingle strings never
-    materialize outside the expression (one md5 per shingle, total)."""
+    """Test reference twin, unused by the ops: the JVM array of 28-bit
+    integer shingle hashes per row (shingling and ``md5_int`` fused in one
+    ``transform``). The tests pin the Arrow bodies' hashlib loops against
+    it bit for bit."""
     toks = F.split(_norm_text(), " ")
     n = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(n - SHINGLE_K, F.lit(0)))
     return F.transform(
         idx,
-        lambda i: F.conv(
-            F.substring(F.md5(F.array_join(F.slice(toks, i + 1, SHINGLE_K), " ")), 1, 7),
-            16,
-            10,
-        ).cast("long"),
+        lambda i: md5_int(F.array_join(F.slice(toks, i + 1, SHINGLE_K), " ")),
     )
 
 
@@ -354,7 +351,7 @@ _SIGS_SQL = (
         f"MIN(({MINHASH_A[s]} * h + {MINHASH_B[s]}) % {MINHASH_P}) AS h{s}"
         for s in range(NUM_HASHES)
     )
-    + " FROM (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 7))::BIGINT AS h"
+    + f" FROM (SELECT doc_id, {md5_int_sql('shingle')} AS h"
     "   FROM shingles) GROUP BY doc_id"
 )
 
@@ -584,8 +581,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (doc_id, h) before voting.
 # ---------------------------------------------------------------------------
 _HASHED_SET_SQL = (
-    "SELECT DISTINCT doc_id, ('0x' || substr(md5(shingle), 1, 7))::BIGINT AS h"
-    " FROM shingles"
+    f"SELECT DISTINCT doc_id, {md5_int_sql('shingle')} AS h FROM shingles"
 )
 
 _VOTES_SQL = (
@@ -1251,27 +1247,6 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 INCR_MOD = 4  # hash % 4 == 0 → incoming (~25%), else corpus
 
 
-def _incr_hash_sql() -> str:
-    return (
-        "('0x' || substr(md5('incr:' || CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT"
-        f" % {INCR_MOD}"
-    )
-
-
-def _incr_hash():
-    """Spark twin of _incr_hash_sql: 0 marks an incoming doc_id."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("incr:"), F.col("doc_id").cast("string"))), 1, 7
-            ),
-            16,
-            10,
-        ).cast("long")
-        % INCR_MOD
-    )
-
-
 @register(
     "dedup_incremental_delta",
     oracle=f"""
@@ -1280,7 +1255,8 @@ def _incr_hash():
         bands AS ({_BANDS_SQL}),
         side AS (
             SELECT doc_id,
-                   CASE WHEN {_incr_hash_sql()} = 0 THEN 'in' ELSE 'corpus' END AS side
+                   CASE WHEN {md5_int_sql("doc_id", "incr:")} % {INCR_MOD} = 0
+                        THEN 'in' ELSE 'corpus' END AS side
             FROM documents
         )
         SELECT i.doc_id AS doc_id,
@@ -1301,7 +1277,7 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingestion extension.
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    incr = _incr_hash()
+    incr = md5_int("doc_id", "incr:") % INCR_MOD
     incoming_ids = docs.filter(incr == 0)
     corpus_ids = docs.filter(incr != 0)
 
@@ -1980,7 +1956,7 @@ def _anchored_gram_batches(it):
       the Unicode whitespace TRIM keeps. ASCII lowercase agrees across
       engines.
     - md5 over UTF-8 bytes, leading 7 hex digits as the anchor integer —
-      identical to conv(substring(md5(g),1,7),16,10). Those 28 bits are
+      identical to md5_int(g). Those 28 bits are
       the digest's first 4 bytes shifted right by 4, so no hex string is
       built.
     - the `seen` set dedups per document over the anchored grams only;
@@ -2032,7 +2008,7 @@ def _anchored_gram_batches(it):
                     WHERE length(norm) >= {GRAM_LEN}
                 )
             )
-            WHERE ('0x' || substr(md5(gram), 1, 7))::BIGINT
+            WHERE {md5_int_sql("gram")}
                   % {GRAM_STRIDE} = 0
         ),
         first_seen AS (
@@ -2570,26 +2546,6 @@ DEDUP_BF_M = 4096
 DEDUP_BF_K = 3
 
 
-def _frontier_pos(col: "F.Column", i: int) -> "F.Column":
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"fr{i}:"), col)), 1, 7
-            ),
-            16,
-            10,
-        ).cast("long")
-        % DEDUP_BF_M
-    )
-
-
-def _frontier_pos_sql(expr: str, i: int) -> str:
-    return (
-        f"(('0x' || substr(md5('fr{i}:' || {expr}), 1, 7))::BIGINT"
-        f" % {DEDUP_BF_M})"
-    )
-
-
 #: Shared by the batch op and its streaming twin
 #: (streaming_frontier_bloom): the streaming state is the same OR-merged
 #: bit array, so both gates run one oracle definition.
@@ -2602,20 +2558,20 @@ _FRONTIER_ORACLE_SQL = f"""
         seen AS (SELECT DISTINCT fingerprint FROM fp WHERE NOT is_frontier),
         bits AS (
             SELECT DISTINCT
-                   CASE i WHEN 0 THEN {_frontier_pos_sql("fingerprint", 0)}
-                          WHEN 1 THEN {_frontier_pos_sql("fingerprint", 1)}
-                          ELSE {_frontier_pos_sql("fingerprint", 2)} END AS pos
+                   CASE i WHEN 0 THEN ({md5_int_sql("fingerprint", "fr0:")} % {DEDUP_BF_M})
+                          WHEN 1 THEN ({md5_int_sql("fingerprint", "fr1:")} % {DEDUP_BF_M})
+                          ELSE ({md5_int_sql("fingerprint", "fr2:")} % {DEDUP_BF_M}) END AS pos
             FROM seen, (SELECT unnest([0, 1, 2]) AS i)
         ),
         probe AS (
             SELECT f.source,
                    (f.fingerprint IN (SELECT fingerprint FROM seen))
                        AS truth_seen,
-                   ({_frontier_pos_sql("f.fingerprint", 0)}
+                   (({md5_int_sql("f.fingerprint", "fr0:")} % {DEDUP_BF_M})
                         IN (SELECT pos FROM bits)
-                    AND {_frontier_pos_sql("f.fingerprint", 1)}
+                    AND ({md5_int_sql("f.fingerprint", "fr1:")} % {DEDUP_BF_M})
                         IN (SELECT pos FROM bits)
-                    AND {_frontier_pos_sql("f.fingerprint", 2)}
+                    AND ({md5_int_sql("f.fingerprint", "fr2:")} % {DEDUP_BF_M})
                         IN (SELECT pos FROM bits)) AS bloom_seen
             FROM fp f WHERE f.is_frontier
         )
@@ -2658,7 +2614,7 @@ def dedup_frontier_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.array(
                 *[
-                    _frontier_pos(F.col("fingerprint"), i)
+                    md5_int("fingerprint", f"fr{i}:") % DEDUP_BF_M
                     for i in range(DEDUP_BF_K)
                 ]
             )
@@ -2679,13 +2635,13 @@ def dedup_frontier_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("truth_seen"), F.lit(False)).alias("truth_seen"),
             (
                 F.array_contains(
-                    F.col("bits"), _frontier_pos(F.col("fingerprint"), 0)
+                    F.col("bits"), md5_int("fingerprint", "fr0:") % DEDUP_BF_M
                 )
                 & F.array_contains(
-                    F.col("bits"), _frontier_pos(F.col("fingerprint"), 1)
+                    F.col("bits"), md5_int("fingerprint", "fr1:") % DEDUP_BF_M
                 )
                 & F.array_contains(
-                    F.col("bits"), _frontier_pos(F.col("fingerprint"), 2)
+                    F.col("bits"), md5_int("fingerprint", "fr2:") % DEDUP_BF_M
                 )
             ).alias("bloom_seen"),
         )
@@ -2799,8 +2755,8 @@ SRC_OVERLAP_TOP = 20
     oracle=f"""
         WITH sh AS (
             SELECT DISTINCT source,
-                   ('0x' || substr(md5(array_to_string(
-                        toks[i + 1 : i + {SHINGLE_K}], ' ')), 1, 7))::BIGINT
+                   {md5_int_sql(f'''array_to_string(
+                        toks[i + 1 : i + {SHINGLE_K}], ' ')''')}
                        AS h
             FROM (
                 SELECT source, toks,
@@ -3227,8 +3183,8 @@ def dedup_pipeline_composition(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands AS ({_BANDS_SQL}),
         side AS (
             SELECT doc_id,
-                   CASE WHEN {_incr_hash_sql()} = 0 THEN 'in' ELSE 'corpus'
-                   END AS side
+                   CASE WHEN {md5_int_sql("doc_id", "incr:")} % {INCR_MOD} = 0
+                        THEN 'in' ELSE 'corpus' END AS side
             FROM documents
         ),
         index_b AS (
@@ -3288,7 +3244,7 @@ def lsh_index_report(sigs: DataFrame, docs: DataFrame) -> DataFrame:
     plus the doc_id universe — shared verbatim by the batch query and
     its streaming twin (which drains the per-doc signature mins in
     complete mode; this assembles post-stream)."""
-    incr = _incr_hash()
+    incr = md5_int("doc_id", "incr:") % INCR_MOD
     incoming_ids = docs.filter(incr == 0)
     corpus_ids = docs.filter(incr != 0)
     banded = minhash_bands(sigs.localCheckpoint(eager=False))

@@ -27,7 +27,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_stream_job_spark.operators._portable import idiv, jvm_values_df, pround
+from kafka_stream_job_spark.operators._portable import (
+    idiv,
+    jvm_values_df,
+    md5_int,
+    md5_int_sql,
+    pround,
+)
 from kafka_stream_job_spark.operators.dedup import (
     _BANDS_SQL as _DEDUP_BANDS_SQL,
     _PAIRS_SQL as _DEDUP_PAIRS_SQL,
@@ -45,25 +51,6 @@ PACK_BUDGET = 2048  # tokens per pack
 PACK_BANDS = 8  # parallel packing streams per language
 
 
-def _doc_hash(prefix: str):
-    """28-bit md5 hash of a prefixed doc_id — the portable deterministic
-    ordering used by split/quota/pack (same construction as
-    ``split_train_eval``)."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(prefix + ":"), F.col("doc_id").cast("string"))), 1, 7
-        ),
-        16,
-        10,
-    ).cast("long")
-
-
-def _doc_hash_sql(prefix: str) -> str:
-    return (
-        f"('0x' || substr(md5('{prefix}:' || CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Decontamination: train docs sharing >=1 word 3-shingle with the eval
 # split. Eval shingles are DISTINCT and broadcast; the count per train doc
@@ -76,7 +63,7 @@ def _doc_hash_sql(prefix: str) -> str:
         WITH sh AS ({_SHINGLES_SQL}),
         splits AS (
             SELECT doc_id,
-                   CASE WHEN {_doc_hash_sql("split")} % 100 < {EVAL_PCT}
+                   CASE WHEN {md5_int_sql("doc_id", "split:")} % 100 < {EVAL_PCT}
                         THEN 'eval' ELSE 'train' END AS split
             FROM documents
         ),
@@ -96,7 +83,7 @@ def _doc_hash_sql(prefix: str) -> str:
 )
 def decontaminate_train_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    is_eval = _doc_hash("split") % 100 < EVAL_PCT
+    is_eval = md5_int("doc_id", "split:") % 100 < EVAL_PCT
     sh = _shingles(docs)
     eval_ids = docs.filter(is_eval).select("doc_id")
     train_ids = docs.filter(~is_eval).select("doc_id")
@@ -121,7 +108,7 @@ def decontaminate_train_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT doc_id, lang,
                    ROW_NUMBER() OVER (
                        PARTITION BY lang
-                       ORDER BY {_doc_hash_sql("quota")}, doc_id
+                       ORDER BY {md5_int_sql("doc_id", "quota:")}, doc_id
                    ) AS rk
             FROM documents
         )
@@ -131,7 +118,7 @@ def decontaminate_train_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def quota_sample_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(_doc_hash("quota"), F.col("doc_id"))
+    w = Window.partitionBy("lang").orderBy(md5_int("doc_id", "quota:"), F.col("doc_id"))
     return (
         docs.select("doc_id", "lang", F.row_number().over(w).alias("rk"))
         .filter(F.col("rk") <= QUOTA_K)
@@ -151,7 +138,7 @@ def quota_sample_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH t AS (
             SELECT doc_id, lang,
                    len(string_split_regex(LOWER(TRIM(text)), '\\s+')) AS n_tok,
-                   {_doc_hash_sql("pack")} AS h
+                   {md5_int_sql("doc_id", "pack:")} AS h
             FROM documents
             WHERE text IS NOT NULL
         ),
@@ -176,7 +163,7 @@ def quota_sample_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pack_sequences_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     n_tok = F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
-    h = _doc_hash("pack")
+    h = md5_int("doc_id", "pack:")
     t = docs.select(
         "doc_id",
         "lang",
@@ -227,7 +214,7 @@ MIX_DENOM = 3  # weight w ∈ {1, 3} → keep when hash % 3 < w
                    len(string_split_regex(TRIM(text), '\\s+')) AS n_tok,
                    CASE WHEN CAST(substr(source, 4) AS BIGINT) % 2 = 0
                         THEN 3 ELSE 1 END AS w,
-                   ('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT
+                   {md5_int_sql("doc_id", "mix:")}
                        % {MIX_DENOM} AS bucket
             FROM documents
         )
@@ -246,16 +233,7 @@ def corpus_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = F.when(
         F.substring("source", 4, 10).cast("long") % 2 == 0, F.lit(3)
     ).otherwise(F.lit(1))
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))), 1, 7
-            ),
-            16,
-            10,
-        ).cast("long")
-        % MIX_DENOM
-    )
+    bucket = md5_int("doc_id", "mix:") % MIX_DENOM
     keep = bucket < w
     return (
         docs.select("source", n_tok.alias("n_tok"), keep.alias("keep"))
@@ -459,12 +437,12 @@ _ES_DENOM = float((1 << 28) + 1)
     "weighted_sample_docs",
     oracle=f"""
         SELECT doc_id, lang, n_chars,
-               ROUND((-ln((('0x' || substr(md5('{_ES_SEED}' || CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT + 1)
+               ROUND((-ln(({md5_int_sql("doc_id", _ES_SEED)} + 1)
                           / {_ES_DENOM})
                       / n_chars) * 1000000000.0) / 1000000000.0 AS es_key
         FROM documents
         WHERE n_chars > 0
-        ORDER BY -ln((('0x' || substr(md5('{_ES_SEED}' || CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT + 1)
+        ORDER BY -ln(({md5_int_sql("doc_id", _ES_SEED)} + 1)
                      / {_ES_DENOM}) / n_chars ASC,
                  doc_id ASC
         LIMIT {SAMPLE_K}
@@ -473,18 +451,7 @@ _ES_DENOM = float((1 << 28) + 1)
 )
 def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(_ES_SEED), F.col("doc_id").cast("string"))),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("long")
-        + F.lit(1)
-    ) / F.lit(_ES_DENOM)
+    u = (md5_int("doc_id", _ES_SEED) + F.lit(1)) / F.lit(_ES_DENOM)
     es_key = -F.log(u) / F.col("n_chars")
     return (
         docs.select("doc_id", "lang", "n_chars", es_key.alias("_k"))
@@ -621,7 +588,7 @@ _CDC_ROLL = (
         WITH h AS (
             SELECT doc_id, toks,
                    list_transform(toks,
-                                  x -> ('0x' || substr(md5(x), 1, 7))::BIGINT) AS hh
+                                  x -> {md5_int_sql("x")}) AS hh
             FROM (SELECT doc_id, string_split({_CDC_NORM}, ' ') AS toks
                   FROM documents)
         ),
@@ -668,7 +635,7 @@ def content_defined_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hh = F.transform(
         F.col("toks"),
-        lambda x: F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast("long"),
+        lambda x: md5_int(x),
     )
     n = F.size(F.col("toks")).cast("long")
 
@@ -900,7 +867,7 @@ NEG_BUCKETS = 64
         bands AS ({_DEDUP_BANDS_SQL}),
         pairs AS ({_DEDUP_PAIRS_SQL}),
         reps AS (
-            SELECT ('0x' || substr(md5('nbk:' || CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT
+            SELECT {md5_int_sql("doc_id", "nbk:")}
                        % {NEG_BUCKETS} AS bucket,
                    MIN(doc_id) AS neg_id
             FROM documents
@@ -912,9 +879,9 @@ NEG_BUCKETS = 64
             FROM pairs p
             CROSS JOIN (SELECT UNNEST(range(1, {NEG_K} + 1)) AS k) k
             JOIN reps r
-              ON r.bucket = ('0x' || substr(md5('neg:' || CAST(k.k AS VARCHAR)
-                                             || ':' || CAST(p.doc_a AS VARCHAR)),
-                                            1, 7))::BIGINT % {NEG_BUCKETS}
+              ON r.bucket = {md5_int_sql(
+                  "'neg:' || CAST(k.k AS VARCHAR) || ':' || CAST(p.doc_a AS VARCHAR)"
+              )} % {NEG_BUCKETS}
         )
         SELECT anchor_id, positive_id, neg_k, negative_id
         FROM cand c
@@ -937,15 +904,9 @@ def contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_stream_job_spark.operators.dedup import dedup_minhash_lsh
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    bucket_of = lambda col: (  # noqa: E731
-        F.conv(F.substring(F.md5(col), 1, 7), 16, 10).cast("long") % NEG_BUCKETS
-    )
     reps = (
         docs.select(
-            bucket_of(
-                F.concat(F.lit("nbk:"), F.col("doc_id").cast("string"))
-            ).alias("bucket"),
-            "doc_id",
+            (md5_int("doc_id", "nbk:") % NEG_BUCKETS).alias("bucket"), "doc_id"
         )
         .groupBy("bucket")
         .agg(F.min("doc_id").alias("negative_id"))
@@ -957,13 +918,16 @@ def contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_k = anchors.select(
         "*", F.explode(F.sequence(F.lit(1).cast("long"), F.lit(NEG_K))).alias("neg_k")
     )
-    target_bucket = bucket_of(
-        F.concat(
-            F.lit("neg:"),
-            F.col("neg_k").cast("string"),
-            F.lit(":"),
-            F.col("anchor_id").cast("string"),
+    target_bucket = (
+        md5_int(
+            F.concat(
+                F.lit("neg:"),
+                F.col("neg_k").cast("string"),
+                F.lit(":"),
+                F.col("anchor_id").cast("string"),
+            )
         )
+        % NEG_BUCKETS
     )
     cand = with_k.join(
         F.broadcast(reps), target_bucket == F.col("bucket")
@@ -1353,7 +1317,7 @@ CV_FOLDS = 5
     "cv_fold_manifest",
     oracle=f"""
         WITH assigned AS (
-            SELECT ('0x' || substr(md5('cv:' || CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT
+            SELECT {md5_int_sql("doc_id", "cv:")}
                        % {CV_FOLDS} AS fold,
                    lang,
                    len(string_split_regex(trim(text), '\\s+')) AS n_toks
@@ -1380,16 +1344,7 @@ CV_FOLDS = 5
 )
 def cv_fold_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    fold = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("cv:"), F.col("doc_id").cast("string"))), 1, 7
-            ),
-            16,
-            10,
-        ).cast("long")
-        % CV_FOLDS
-    )
+    fold = md5_int("doc_id", "cv:") % CV_FOLDS
     assigned = docs.select(
         fold.alias("fold"),
         "lang",
@@ -2701,19 +2656,14 @@ def _boot_weight_sql(u: str) -> str:
 
 
 def _boot_oracle() -> str:
-    def u(b: int) -> str:
-        return (
-            f"('0x' || substr(md5('boot{b}:'"
-            f" || CAST(o_orderkey AS VARCHAR)), 1, 7))::BIGINT"
-        )
-
     pairs = ",\n".join(
         f"                   CAST(SUM(w_{b}) AS BIGINT) AS sw_{b},"
         f" CAST(SUM(w_{b} * cents) AS BIGINT) AS swx_{b}"
         for b in range(BOOT_B)
     )
     ws = ",\n".join(
-        f"                   {_boot_weight_sql(u(b))} AS w_{b}"
+        f"                   {_boot_weight_sql(md5_int_sql('o_orderkey', f'boot{b}:'))}"
+        f" AS w_{b}"
         for b in range(BOOT_B)
     )
     means = ", ".join(
@@ -2755,34 +2705,12 @@ def orders_mean_value_bootstrap_ci(
 ) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-
-    def weight(b: int):
-        u = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"boot{b}:"), F.col("o_orderkey").cast("string")
-                    )
-                ),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("long")
-        return (
-            F.when(u < BOOT_T[0], 0)
-            .when(u < BOOT_T[1], 1)
-            .when(u < BOOT_T[2], 2)
-            .when(u < BOOT_T[3], 3)
-            .when(u < BOOT_T[4], 4)
-            .otherwise(5)
-            .cast("long")
-        )
-
     r = orders.select(
         cents.alias("cents"),
-        *[weight(b).alias(f"w_{b}") for b in range(BOOT_B)],
+        *[
+            boot_weight_col(b, F.col("o_orderkey")).alias(f"w_{b}")
+            for b in range(BOOT_B)
+        ],
     )
     agg = r.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -2835,13 +2763,7 @@ def boot_ci_assemble(agg: DataFrame) -> DataFrame:
 def boot_weight_col(b: int, key: "F.Column") -> "F.Column":
     """Deterministic pseudo-Poisson(1) replica-b weight for a key column
     — the same frozen thresholds both engines use."""
-    u = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(f"boot{b}:"), key.cast("string"))), 1, 7
-        ),
-        16,
-        10,
-    ).cast("long")
+    u = md5_int(key, f"boot{b}:")
     return (
         F.when(u < BOOT_T[0], 0)
         .when(u < BOOT_T[1], 1)
@@ -2918,8 +2840,8 @@ RATER_DRIFT_ORACLE = f"""
     oracle=rf"""
         WITH d AS (
             SELECT doc_id,
-                   CASE WHEN {_doc_hash_sql("leak")} % 10 < 8 THEN 'train'
-                        WHEN {_doc_hash_sql("leak")} % 10 = 8 THEN 'val'
+                   CASE WHEN {md5_int_sql("doc_id", "leak:")} % 10 < 8 THEN 'train'
+                        WHEN {md5_int_sql("doc_id", "leak:")} % 10 = 8 THEN 'val'
                         ELSE 'test' END AS split,
                    md5(array_to_string(
                        string_split_regex(LOWER(TRIM(text)), '\s+'), ' '))
@@ -2959,7 +2881,7 @@ def leakage_counters(docs: DataFrame) -> DataFrame:
     fp = F.md5(
         F.array_join(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), " ")
     )
-    h = _doc_hash("leak") % 10
+    h = md5_int("doc_id", "leak:") % 10
     d = docs.select(
         F.when(h < 8, "train").when(h == 8, "val").otherwise("test")
         .alias("split"),
@@ -3212,8 +3134,8 @@ def _funnel_oracle() -> str:
                         THEN 0 ELSE 1 END AS q_loser,
                    {marker_counts},
                    md5({_NORM_SQL}) AS fp,
-                   {_doc_hash_sql("quota")} AS qh,
-                   CASE WHEN {_doc_hash_sql("split")} % 100 < {EVAL_PCT}
+                   {md5_int_sql("doc_id", "quota:")} AS qh,
+                   CASE WHEN {md5_int_sql("doc_id", "split:")} % 100 < {EVAL_PCT}
                         THEN 1 ELSE 0 END AS is_eval
             FROM documents
         ),
@@ -3313,8 +3235,8 @@ def curation_funnel_report(docs: DataFrame) -> DataFrame:
         .alias("q_loser"),
         (F.greatest(*counts.values()) == 0).cast("int").alias("l_loser"),
         F.md5(_norm_text()).alias("fp"),
-        _doc_hash("quota").alias("qh"),
-        (_doc_hash("split") % 100 < EVAL_PCT).cast("int").alias("is_eval"),
+        md5_int("doc_id", "quota:").alias("qh"),
+        (md5_int("doc_id", "split:") % 100 < EVAL_PCT).cast("int").alias("is_eval"),
     ).localCheckpoint(eager=False)  # flags feed 3 downstream joins
     dup = base.select(
         "doc_id",

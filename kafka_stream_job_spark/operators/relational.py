@@ -35,7 +35,14 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_stream_job_spark.operators._portable import idiv, jvm_values_df, pround, sql_round
+from kafka_stream_job_spark.operators._portable import (
+    idiv,
+    jvm_values_df,
+    md5_int,
+    md5_int_sql,
+    pround,
+    sql_round,
+)
 from kafka_stream_job_spark.registry import register
 from kafka_stream_job_spark.tables import load_table
 
@@ -3861,32 +3868,14 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and the report is a 3-group partial agg. At real scale you'd feed this
 # with two Iceberg snapshot scans instead of the hash filters.
 # ---------------------------------------------------------------------------
-def _snap_hash_sql(prefix: str, col: str = "doc_id") -> str:
-    return (
-        f"('0x' || substr(md5('{prefix}:' || CAST({col} AS VARCHAR)), 1, 7))::BIGINT"
-    )
-
-
-def _snap_hash(prefix: str, col: str = "doc_id"):
-    return F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(prefix + ":"), F.col(col).cast("string"))),
-            1,
-            7,
-        ),
-        16,
-        10,
-    ).cast("long")
-
-
 @register(
     "snapshot_diff_report",
     oracle=f"""
         WITH snap_old AS (
-            SELECT doc_id FROM documents WHERE {_snap_hash_sql("snap")} % 3 <> 0
+            SELECT doc_id FROM documents WHERE {md5_int_sql("doc_id", "snap:")} % 3 <> 0
         ),
         snap_new AS (
-            SELECT doc_id FROM documents WHERE {_snap_hash_sql("snap")} % 5 <> 0
+            SELECT doc_id FROM documents WHERE {md5_int_sql("doc_id", "snap:")} % 5 <> 0
         )
         SELECT
             CASE WHEN o.doc_id IS NULL THEN 'added'
@@ -3908,7 +3897,7 @@ def snapshot_diff_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     north-star CDC/maintenance extension.
     """
     docs = load_table(spark, sf_dir, "documents")
-    h = _snap_hash("snap")
+    h = md5_int("doc_id", "snap:")
     old = docs.filter(h % 3 != 0).select(F.col("doc_id").alias("o_id"))
     new = docs.filter(h % 5 != 0).select(F.col("doc_id").alias("n_id"))
     status = (
@@ -6930,10 +6919,10 @@ def join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "events_ab_uplift_test",
-    oracle="""
+    oracle=f"""
         WITH assign AS (
             SELECT user_id,
-                   ('0x' || substr(md5('ab:' || CAST(user_id AS VARCHAR)), 1, 7))::BIGINT % 2
+                   {md5_int_sql("user_id", "ab:")} % 2
                        AS arm,
                    MAX(CASE WHEN event_type = 'purchase' AND value > 150.0
                             THEN 1 ELSE 0 END) AS converted
@@ -6966,16 +6955,7 @@ def join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_ab_uplift_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 7
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    arm = md5_int("user_id", "ab:") % 2
     assign = events.groupBy("user_id").agg(
         F.max(
             F.when(
@@ -9430,7 +9410,7 @@ def execute_immediate_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH base AS (
             SELECT c_custkey,
                    CAST(ROUND(c_acctbal * 100.0) AS BIGINT) AS cents,
-                   {_snap_hash_sql("cdf", "c_custkey")} AS h
+                   {md5_int_sql("c_custkey", "cdf:")} AS h
             FROM customer
         ),
         old AS (
@@ -9466,7 +9446,7 @@ def change_data_feed_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = cust.select(
         "c_custkey",
         F.round(F.col("c_acctbal") * 100.0, 0).cast("long").alias("cents"),
-        _snap_hash("cdf", "c_custkey").alias("h"),
+        md5_int("c_custkey", "cdf:").alias("h"),
     ).localCheckpoint(eager=False)  # both snapshots derive from one scan
     old = base.filter(F.col("h") % 3 != 0).select(
         F.col("c_custkey").alias("o_key"), F.col("cents").alias("o_cents")
@@ -15904,7 +15884,7 @@ CUPED_SPLIT = "1998-07-01"
             FROM orders GROUP BY 1
         ),
         u AS (
-            SELECT {_snap_hash_sql("cuped", "c.c_custkey")} % 2
+            SELECT {md5_int_sql("c.c_custkey", "cuped:")} % 2
                        AS arm,
                    COALESCE(s.x, 0) AS x, COALESCE(s.y, 0) AS y
             FROM customer c LEFT JOIN spend s ON s.k = c.c_custkey
@@ -15994,8 +15974,8 @@ def orders_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cuped_arm_col() -> "F.Column":
     """Deterministic hash arm assignment over c_custkey — one definition
     for the batch query and the streaming twin, riding the same
-    _snap_hash md5-prefix idiom as every other hash split here."""
-    return _snap_hash("cuped", "c_custkey") % 2
+    md5_int prefix idiom as every other hash split here."""
+    return md5_int("c_custkey", "cuped:") % 2
 
 
 def cuped_assemble(u: DataFrame) -> DataFrame:
@@ -16082,7 +16062,7 @@ def cuped_assemble(u: DataFrame) -> DataFrame:
 # whose |uplift| reaches the observed |uplift|; the only floats are the
 # per-replica rate differences — identical IEEE dags on both engines.
 # ---------------------------------------------------------------------------
-_PERM_K = 28  # replicas = bits of the 28-bit _snap_hash
+_PERM_K = 28  # replicas = bits of the 28-bit md5_int
 
 
 @register(
@@ -16093,8 +16073,8 @@ _PERM_K = 28  # replicas = bits of the 28-bit _snap_hash
                    CAST(COUNT(*) AS BIGINT) AS e,
                    CAST(SUM(CASE WHEN event_type = 'purchase'
                                  THEN 1 ELSE 0 END) AS BIGINT) AS p,
-                   {_snap_hash_sql("perm", "user_id")} % 2 AS arm,
-                   {_snap_hash_sql("permbits", "user_id")} AS bits
+                   {md5_int_sql("user_id", "perm:")} % 2 AS arm,
+                   {md5_int_sql("user_id", "permbits:")} AS bits
             FROM events GROUP BY user_id
         ),
         g AS (
@@ -16173,8 +16153,8 @@ def permutation_assemble(per_user: DataFrame) -> DataFrame:
     per_user = per_user.select(
         "e",
         "p",
-        (_snap_hash("perm", "user_id") % 2).alias("arm"),
-        _snap_hash("permbits", "user_id").alias("bits"),
+        (md5_int("user_id", "perm:") % 2).alias("arm"),
+        md5_int("user_id", "permbits:").alias("bits"),
     )
     aggs = [
         F.count(F.lit(1)).cast("long").alias("n_users"),
@@ -16252,7 +16232,7 @@ def srm_assemble(users: DataFrame) -> DataFrame:
     """SRM report from per-user 1-row-per-user (user_id) rows — shared
     verbatim by the batch query and its streaming twin."""
     arms = users.groupBy(
-        (_snap_hash("srm", "user_id") % 2).alias("arm")
+        (md5_int("user_id", "srm:") % 2).alias("arm")
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
     g = arms.agg(
         F.sum("n").cast("long").alias("n_users"),
@@ -16283,7 +16263,7 @@ def _srm_oracle(users_sql: str) -> str:
     return f"""
         WITH users AS ({users_sql}),
         arms AS (
-            SELECT {_snap_hash_sql("srm", "user_id")} % 2 AS arm,
+            SELECT {md5_int_sql("user_id", "srm:")} % 2 AS arm,
                    CAST(COUNT(*) AS BIGINT) AS n
             FROM users GROUP BY 1
         ),
@@ -16438,7 +16418,7 @@ DID_SPLIT = CUPED_SPLIT  # shared pre/post boundary
 def did_arm_col() -> "F.Column":
     """Deterministic hash arm over o_custkey (prefix 'did' — an
     experiment distinct from CUPED's), shared by batch and stream."""
-    return _snap_hash("did", "o_custkey") % 2
+    return md5_int("o_custkey", "did:") % 2
 
 
 def did_assemble(cells: DataFrame) -> DataFrame:
@@ -16517,7 +16497,7 @@ def did_assemble(cells: DataFrame) -> DataFrame:
     "orders_did_estimator",
     oracle=f"""
         WITH per_order AS (
-            SELECT {_snap_hash_sql("did", "o_custkey")} % 2 AS arm,
+            SELECT {md5_int_sql("o_custkey", "did:")} % 2 AS arm,
                    CASE WHEN o_orderdate < TIMESTAMP '{DID_SPLIT}'
                         THEN 'pre' ELSE 'post' END AS period,
                    CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
@@ -16783,7 +16763,7 @@ QTE_QS = (25, 50, 75)
         WITH e AS (
             SELECT event_id,
                    CAST(ROUND(value * 100.0) AS BIGINT) AS cents,
-                   {_snap_hash_sql("qte", "user_id")} % 2 AS arm
+                   {md5_int_sql("user_id", "qte:")} % 2 AS arm
             FROM events
         ),
         r AS (
@@ -16834,7 +16814,7 @@ def events_quantile_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = events.select(
         "event_id",
         F.round(F.col("value") * 100.0, 0).cast("long").alias("cents"),
-        (_snap_hash("qte", "user_id") % 2).alias("arm"),
+        (md5_int("user_id", "qte:") % 2).alias("arm"),
     )
 
     # GROUPED-COUNT rank selection (r12, replacing two full-row

@@ -21,7 +21,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_stream_job_spark.operators._portable import idiv, jvm_values_df, pround
+from kafka_stream_job_spark.operators._portable import (
+    idiv,
+    jvm_values_df,
+    md5_int,
+    md5_int_sql,
+    pround,
+)
 from kafka_stream_job_spark.registry import register
 from kafka_stream_job_spark.tables import load_table
 
@@ -450,16 +456,13 @@ def _l2sq(a, b):
     )
 
 
-_IVF_HASH_SQL = "('0x' || substr(md5('ivf:' || CAST(vec_id AS VARCHAR)), 1, 7))::BIGINT"
-
-
 @register(
     "similarity_topk_ivf",
     oracle=f"""
         WITH centroids AS (
             SELECT vec_id AS cent_id, embedding AS c_emb
             FROM embeddings
-            WHERE {_IVF_HASH_SQL} % {IVF_SAMPLE_MOD} = 0
+            WHERE {md5_int_sql("vec_id", "ivf:")} % {IVF_SAMPLE_MOD} = 0
         ),
         assign AS (
             SELECT vec_id, embedding, cent_id AS cell FROM (
@@ -508,11 +511,7 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings", rebalance=True)
-    ivf_hash = F.conv(
-        F.substring(F.md5(F.concat(F.lit("ivf:"), F.col("vec_id").cast("string"))), 1, 7),
-        16,
-        10,
-    ).cast("long")
+    ivf_hash = md5_int("vec_id", "ivf:")
     centroids = (
         emb.filter(ivf_hash % IVF_SAMPLE_MOD == 0)
         .select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb"))
@@ -598,7 +597,7 @@ def _kmeans_oracle() -> str:
         ),
         c0 AS (
             SELECT vec_id AS cent_id, emb AS c_emb FROM e
-            WHERE ('0x' || substr(md5('kmeans:' || CAST(vec_id AS VARCHAR)), 1, 7))::BIGINT
+            WHERE {md5_int_sql("vec_id", "kmeans:")}
                   % {KMEANS_SAMPLE_MOD} = 0
         )"""
     for i in range(KMEANS_ITERS + 1):  # +1: final assignment after last update
@@ -648,13 +647,7 @@ def cluster_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding", lambda x: F.round(x.cast("double") * KMEANS_SCALE, 0)
         ).alias("emb"),
     )
-    seed_hash = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("kmeans:"), F.col("vec_id").cast("string"))), 1, 7
-        ),
-        16,
-        10,
-    ).cast("long")
+    seed_hash = md5_int("vec_id", "kmeans:")
     cent = emb.filter(seed_hash % KMEANS_SAMPLE_MOD == 0).select(
         F.col("vec_id").alias("cent_id"), F.col("emb").alias("c_emb")
     )
@@ -978,10 +971,6 @@ def ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 IVF_INCR_MOD = 4  # md5('ivfincr:'||vec_id) % 4 == 0 → incoming delta (~25%)
 
-_IVF_INCR_HASH_SQL = (
-    "('0x' || substr(md5('ivfincr:' || CAST(vec_id AS VARCHAR)), 1, 7))::BIGINT"
-    f" % {IVF_INCR_MOD}"
-)
 _IVF_INCR_DIST_SQL = (
     f"list_sum(list_transform(range(1, {DIM} + 1), "
     "i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
@@ -1015,22 +1004,10 @@ def _ivf_incr_sides(spark: SparkSession, sf_dir: str):
             "embedding", lambda x: F.round(x.cast("double") * KMEANS_SCALE, 0)
         ).alias("emb"),
     )
-    incr_hash = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("ivfincr:"), F.col("vec_id").cast("string"))), 1, 7
-        ),
-        16,
-        10,
-    ).cast("long")
+    incr_hash = md5_int("vec_id", "ivfincr:")
     base = emb.filter(incr_hash % IVF_INCR_MOD != 0)
     delta = emb.filter(incr_hash % IVF_INCR_MOD == 0)
-    ivf_hash = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("ivf:"), F.col("vec_id").cast("string"))), 1, 7
-        ),
-        16,
-        10,
-    ).cast("long")
+    ivf_hash = md5_int("vec_id", "ivf:")
     cents = base.filter(ivf_hash % IVF_SAMPLE_MOD == 0).select(
         F.col("vec_id").alias("cent_id"), F.col("emb").alias("c_emb")
     )
@@ -1063,11 +1040,13 @@ _IVF_INCR_ORACLE_SQL = f"""
                        x -> ROUND(x::DOUBLE * {KMEANS_SCALE}.0)) AS emb
             FROM embeddings
         ),
-        b AS (SELECT e.* FROM e WHERE {_IVF_INCR_HASH_SQL} <> 0),
-        d AS (SELECT e.* FROM e WHERE {_IVF_INCR_HASH_SQL} = 0),
+        b AS (SELECT e.* FROM e
+              WHERE {md5_int_sql("vec_id", "ivfincr:")} % {IVF_INCR_MOD} <> 0),
+        d AS (SELECT e.* FROM e
+              WHERE {md5_int_sql("vec_id", "ivfincr:")} % {IVF_INCR_MOD} = 0),
         cents AS (
             SELECT vec_id AS cent_id, emb AS c_emb FROM b
-            WHERE ('0x' || substr(md5('ivf:' || CAST(vec_id AS VARCHAR)), 1, 7))::BIGINT
+            WHERE {md5_int_sql("vec_id", "ivf:")}
                   % {IVF_SAMPLE_MOD} = 0
         ),
         a_base AS ({_ivf_incr_argmin_sql("b", "cents")}),
@@ -1575,7 +1554,7 @@ def _pq_oracle() -> str:
         cents AS (
             SELECT vec_id AS cent_id, s, sub AS csub
             FROM subs
-            WHERE ('0x' || substr(md5('pq:' || CAST(vec_id AS VARCHAR)), 1, 7))::BIGINT
+            WHERE {md5_int_sql("vec_id", "pq:")}
                   % {PQ_SEED_MOD} = 0
         ),
         scored AS (
@@ -1608,13 +1587,7 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.slice("emb", PQ_WIDTH * s + 1, PQ_WIDTH) for s in range(PQ_SUBSPACES)]
     )
     subs = emb.select("vec_id", F.posexplode(slices).alias("s", "sub"))
-    seed_hash = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("pq:"), F.col("vec_id").cast("string"))), 1, 7
-        ),
-        16,
-        10,
-    ).cast("long")
+    seed_hash = md5_int("vec_id", "pq:")
     cents = (
         emb.filter(seed_hash % PQ_SEED_MOD == 0)
         .select(F.col("vec_id").alias("cent_id"), F.posexplode(slices).alias("s", "csub"))
@@ -1675,7 +1648,7 @@ def _pq_adc_oracle() -> str:
         cents AS (
             SELECT vec_id AS cent_id, s, sub AS csub
             FROM subs
-            WHERE ('0x' || substr(md5('pq:' || CAST(vec_id AS VARCHAR)), 1, 7))::BIGINT
+            WHERE {md5_int_sql("vec_id", "pq:")}
                   % {PQ_SEED_MOD} = 0
         ),
         codes AS (
@@ -1726,13 +1699,7 @@ def similarity_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.slice("emb", PQ_WIDTH * s + 1, PQ_WIDTH) for s in range(PQ_SUBSPACES)]
     )
     subs = emb.select("vec_id", F.posexplode(slices).alias("s", "sub"))
-    seed_hash = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("pq:"), F.col("vec_id").cast("string"))), 1, 7
-        ),
-        16,
-        10,
-    ).cast("long")
+    seed_hash = md5_int("vec_id", "pq:")
     cents = (
         emb.filter(seed_hash % PQ_SEED_MOD == 0)
         .select(
@@ -2793,7 +2760,7 @@ def embedding_cluster_label_purity(spark: SparkSession, sf_dir: str) -> DataFram
         ),
         cents AS (
             SELECT vec_id AS cent_id, emb AS c_emb FROM e
-            WHERE {_IVF_HASH_SQL} % {IVF_SAMPLE_MOD} = 0
+            WHERE {md5_int_sql("vec_id", "ivf:")} % {IVF_SAMPLE_MOD} = 0
         ),
         assigned AS ({_ivf_incr_argmin_sql("e", "cents")}),
         sizes AS (
@@ -2822,13 +2789,7 @@ def ivf_cell_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding", lambda x: F.round(x.cast("double") * KMEANS_SCALE, 0)
         ).alias("emb"),
     )
-    ivf_hash = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("ivf:"), F.col("vec_id").cast("string"))), 1, 7
-        ),
-        16,
-        10,
-    ).cast("long")
+    ivf_hash = md5_int("vec_id", "ivf:")
     cents = emb.filter(ivf_hash % IVF_SAMPLE_MOD == 0).select(
         F.col("vec_id").alias("cent_id"), F.col("emb").alias("c_emb")
     )
@@ -3530,7 +3491,7 @@ def _nprobe_sweep_oracle() -> str:
         WITH centroids AS (
             SELECT vec_id AS cent_id, embedding AS c_emb
             FROM embeddings
-            WHERE {_IVF_HASH_SQL} % {IVF_SAMPLE_MOD} = 0
+            WHERE {md5_int_sql("vec_id", "ivf:")} % {IVF_SAMPLE_MOD} = 0
         ),
         assign AS (
             SELECT vec_id, embedding, cent_id AS cell FROM (
@@ -3624,13 +3585,7 @@ def _nprobe_sweep_parts(spark: SparkSession, sf_dir: str) -> dict:
     from kafka_stream_job_spark.operators._portable import idiv
 
     emb = load_table(spark, sf_dir, "embeddings", rebalance=True)
-    ivf_hash = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("ivf:"), F.col("vec_id").cast("string"))), 1, 7
-        ),
-        16,
-        10,
-    ).cast("long")
+    ivf_hash = md5_int("vec_id", "ivf:")
     centroids = emb.filter(ivf_hash % IVF_SAMPLE_MOD == 0).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
@@ -4261,7 +4216,7 @@ def _ann_composition_oracle() -> str:
         WITH centroids AS MATERIALIZED (
             SELECT vec_id AS cent_id, embedding AS c_emb
             FROM embeddings
-            WHERE {_IVF_HASH_SQL} % {IVF_SAMPLE_MOD} = 0
+            WHERE {md5_int_sql("vec_id", "ivf:")} % {IVF_SAMPLE_MOD} = 0
         ),
         assign AS MATERIALIZED (
             SELECT vec_id, embedding, cent_id AS cell FROM (

@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_stream_job_spark.operators._portable import pround
+from kafka_stream_job_spark.operators._portable import md5_int, md5_int_sql, pround
 from kafka_stream_job_spark.registry import register
 from kafka_stream_job_spark.tables import load_table
 
@@ -130,13 +130,7 @@ def hll_register_ranks(df: DataFrame, key_col: str) -> DataFrame:
     shared construction behind hll_distinct_users / hll_merge_event_types
     and the streaming merge in streaming/hll.py. Map-side partial max
     means at most HLL_M rows per partition reach the exchange."""
-    hv = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("hll:"), F.col(key_col).cast("string"))), 1, 7
-        ),
-        16,
-        10,
-    ).cast("long")
+    hv = md5_int(key_col, "hll:")
     staged = df.select(F.explode(F.array(hv)).alias("hv")).select(
         (F.col("hv") % HLL_M).alias("register"),
         (F.col("hv") / F.lit(HLL_M)).cast("long").alias("w"),
@@ -170,7 +164,7 @@ def hll_estimate_from_registers(ranks: dict[int, int], m: int = HLL_M) -> float:
     "hll_distinct_users",
     oracle=f"""
         WITH h AS (
-            SELECT ('0x' || substr(md5('hll:' || CAST(user_id AS VARCHAR)), 1, 7))::BIGINT
+            SELECT {md5_int_sql("user_id", "hll:")}
                        AS hv
             FROM events
         ),
@@ -273,7 +267,7 @@ _HLL_EST_SQL = f"""
     oracle=f"""
         WITH h AS (
             SELECT event_type, user_id,
-                   ('0x' || substr(md5('hll:' || CAST(user_id AS VARCHAR)), 1, 7))::BIGINT
+                   {md5_int_sql("user_id", "hll:")}
                        AS hv
             FROM events
         ),
@@ -314,13 +308,7 @@ _HLL_EST_SQL = f"""
 )
 def hll_merge_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    hv = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("hll:"), F.col("user_id").cast("string"))), 1, 7
-        ),
-        16,
-        10,
-    ).cast("long")
+    hv = md5_int("user_id", "hll:")
     staged = events.select(
         "event_type", "user_id", F.explode(F.array(hv)).alias("hv")
     ).select(
@@ -408,19 +396,6 @@ CMS_WIDTH = 256
 CMS_REPORT_K = 10
 
 
-def _cms_col(d: int, tok_expr):
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"cms{d}:"), tok_expr)), 1, 7), 16, 10
-        ).cast("long")
-        % CMS_WIDTH
-    )
-
-
-def _cms_col_sql(d: int, tok: str) -> str:
-    return f"('0x' || substr(md5('cms{d}:' || {tok}), 1, 7))::BIGINT % {CMS_WIDTH}"
-
-
 @register(
     "cms_token_counts",
     oracle=f"""
@@ -436,7 +411,7 @@ def _cms_col_sql(d: int, tok: str) -> str:
                 FROM tok
             ) t
             CROSS JOIN LATERAL (SELECT CASE
-                {" ".join(f"WHEN d = {d} THEN {_cms_col_sql(d, 'tok')}" for d in range(CMS_DEPTH))}
+                {" ".join(f"WHEN d = {d} THEN {md5_int_sql('tok', f'cms{d}:')} % {CMS_WIDTH}" for d in range(CMS_DEPTH))}
                 END AS col) cc
             GROUP BY d, col
         ),
@@ -454,7 +429,7 @@ def _cms_col_sql(d: int, tok: str) -> str:
             JOIN cells c
               ON c.d = x.d
              AND c.col = (CASE
-                {" ".join(f"WHEN x.d = {d} THEN {_cms_col_sql(d, 'e.tok')}" for d in range(CMS_DEPTH))}
+                {" ".join(f"WHEN x.d = {d} THEN {md5_int_sql('e.tok', f'cms{d}:')} % {CMS_WIDTH}" for d in range(CMS_DEPTH))}
                 END)
             GROUP BY e.tok, e.exact_cnt
         )
@@ -476,7 +451,10 @@ def cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
     cell_structs = F.array(
         *[
-            F.struct(F.lit(d).alias("d"), _cms_col(d, F.col("tok")).alias("col"))
+            F.struct(
+                F.lit(d).alias("d"),
+                (md5_int("tok", f"cms{d}:") % CMS_WIDTH).alias("col"),
+            )
             for d in range(CMS_DEPTH)
         ]
     )
@@ -656,7 +634,7 @@ def _hll_ix_oracle() -> str:
     sql = f"""
         WITH h AS (
             SELECT event_type, user_id,
-                   ('0x' || substr(md5('hll:' || CAST(user_id AS VARCHAR)), 1, 7))::BIGINT
+                   {md5_int_sql("user_id", "hll:")}
                        AS hv
             FROM events
         ),
@@ -700,13 +678,7 @@ def _hll_ix_oracle() -> str:
 )
 def hll_intersection_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    hv = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("hll:"), F.col("user_id").cast("string"))), 1, 7
-        ),
-        16,
-        10,
-    ).cast("long")
+    hv = md5_int("user_id", "hll:")
     staged = events.select("event_type", hv.alias("hv")).select(
         "event_type",
         (F.col("hv") % HLL_M).alias("register"),
@@ -806,27 +778,14 @@ KMV_K = 64
 # (13 md5 hex digits), so hv/2^52 ∈ (0,1) and (K-1)/u_K = KMV_NUM/hv_K;
 # both factors are exactly representable doubles.
 KMV_NUM = 283726776524341248.0
-_KMV_HEX = 13
-
-
-def _kmv_hash(col) -> F.Column:
-    """52-bit uniform hash, engine-portable (md5 prefix → integer)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit("kmv:"), col.cast("string"))), 1, _KMV_HEX),
-        16,
-        10,
-    ).cast("long")
-
-
-def _kmv_hash_sql(expr: str) -> str:
-    return f"('0x' || substr(md5('kmv:' || CAST({expr} AS VARCHAR)), 1, {_KMV_HEX}))::BIGINT"
+KMV_HEX = 13
 
 
 @register(
     "kmv_distinct_users",
     oracle=f"""
         WITH hv AS (
-            SELECT DISTINCT {_kmv_hash_sql("user_id")} AS hv FROM events
+            SELECT DISTINCT {md5_int_sql("user_id", "kmv:", KMV_HEX)} AS hv FROM events
         ),
         sk AS (SELECT hv FROM hv ORDER BY hv LIMIT {KMV_K}),
         agg AS (
@@ -850,7 +809,7 @@ def kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact count. n < K degenerates to the exact count (the sketch IS the
     value set) — sf0.001 exercises that branch, sf0.01+ the estimator."""
     events = load_table(spark, sf_dir, "events")
-    hvs = events.select(_kmv_hash(F.col("user_id")).alias("hv")).distinct()
+    hvs = events.select(md5_int("user_id", "kmv:", KMV_HEX).alias("hv")).distinct()
     sk = (
         hvs.orderBy("hv")
         .limit(KMV_K)  # TakeOrderedAndProject: ≤K rows leave each partition
@@ -877,7 +836,7 @@ def kmv_type_sketches(events: DataFrame) -> DataFrame:
     from pyspark.sql import Window
 
     hv_rows = events.select(
-        "event_type", _kmv_hash(F.col("user_id")).alias("hv")
+        "event_type", md5_int("user_id", "kmv:", KMV_HEX).alias("hv")
     ).distinct()
     w = Window.partitionBy("event_type").orderBy("hv")
     return (
@@ -892,7 +851,7 @@ def _kmv_setops_oracle() -> str:
         f"""
         WITH hv AS (
             SELECT DISTINCT event_type,
-                   {_kmv_hash_sql("user_id")} AS hv
+                   {md5_int_sql("user_id", "kmv:", KMV_HEX)} AS hv
             FROM events
         ),
         sk AS (
@@ -1029,26 +988,6 @@ BF_K = 3
 BF_PRICE = 490000.0
 
 
-def _bf_pos(col, i: int) -> F.Column:
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"bf{i}:"), col.cast("string"))), 1, 7
-            ),
-            16,
-            10,
-        ).cast("long")
-        % BF_M
-    )
-
-
-def _bf_pos_sql(expr: str, i: int) -> str:
-    return (
-        f"(('0x' || substr(md5('bf{i}:' || CAST({expr} AS VARCHAR)), 1, 7))"
-        f"::BIGINT % {BF_M})"
-    )
-
-
 @register(
     "bloom_filter_membership",
     oracle=f"""
@@ -1058,17 +997,17 @@ def _bf_pos_sql(expr: str, i: int) -> str:
         ),
         bits AS (
             SELECT DISTINCT
-                   CASE i WHEN 0 THEN {_bf_pos_sql("custkey", 0)}
-                          WHEN 1 THEN {_bf_pos_sql("custkey", 1)}
-                          ELSE {_bf_pos_sql("custkey", 2)} END AS pos
+                   CASE i WHEN 0 THEN ({md5_int_sql("custkey", "bf0:")} % {BF_M})
+                          WHEN 1 THEN ({md5_int_sql("custkey", "bf1:")} % {BF_M})
+                          ELSE ({md5_int_sql("custkey", "bf2:")} % {BF_M}) END AS pos
             FROM members, (SELECT unnest([0, 1, 2]) AS i)
         ),
         probe AS (
             SELECT c_mktsegment,
                    (c_custkey IN (SELECT custkey FROM members)) AS is_member,
-                   ({_bf_pos_sql("c_custkey", 0)} IN (SELECT pos FROM bits)
-                    AND {_bf_pos_sql("c_custkey", 1)} IN (SELECT pos FROM bits)
-                    AND {_bf_pos_sql("c_custkey", 2)} IN (SELECT pos FROM bits))
+                   (({md5_int_sql("c_custkey", "bf0:")} % {BF_M}) IN (SELECT pos FROM bits)
+                    AND ({md5_int_sql("c_custkey", "bf1:")} % {BF_M}) IN (SELECT pos FROM bits)
+                    AND ({md5_int_sql("c_custkey", "bf2:")} % {BF_M}) IN (SELECT pos FROM bits))
                        AS bloom_pos
             FROM customer
         )
@@ -1096,7 +1035,7 @@ def bloom_filter_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits = (
         members.select(
             F.explode(
-                F.array(*[_bf_pos(F.col("custkey"), i) for i in range(BF_K)])
+                F.array(*[md5_int("custkey", f"bf{i}:") % BF_M for i in range(BF_K)])
             ).alias("pos")
         )
         # collect_set dedups; a pre-distinct would just add a shuffle
@@ -1117,7 +1056,7 @@ def bloom_filter_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_mktsegment",
             F.coalesce("is_member", F.lit(False)).alias("is_member"),
             F.forall(
-                F.array(*[_bf_pos(F.col("c_custkey"), i) for i in range(BF_K)]),
+                F.array(*[md5_int("c_custkey", f"bf{i}:") % BF_M for i in range(BF_K)]),
                 lambda p: F.array_contains(F.col("bits"), p),
             ).alias("bloom_pos"),
         )

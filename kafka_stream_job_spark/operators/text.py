@@ -12,7 +12,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_stream_job_spark.operators._portable import idiv, jvm_values_df, pround
+from kafka_stream_job_spark.operators._portable import (
+    idiv,
+    jvm_values_df,
+    md5_int,
+    md5_int_sql,
+    pround,
+)
 from kafka_stream_job_spark.registry import register
 from kafka_stream_job_spark.tables import load_table
 
@@ -336,7 +342,7 @@ ROLL_P = 2_147_483_647  # 2^31 - 1; Horner steps stay < 2^52 (no int64 overflow)
         ),
         hashed AS (
             SELECT doc_id,
-                   list_transform(t, x -> ('0x' || substr(md5(x), 1, 7))::BIGINT) AS h
+                   list_transform(t, x -> {md5_int_sql("x")}) AS h
             FROM toks
         ),
         windows AS (
@@ -365,7 +371,7 @@ def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     h = F.transform(
         toks,
-        lambda x: F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast("long"),
+        lambda x: md5_int(x),
     )
     n = F.size(h)
     idx = F.sequence(F.lit(0), F.greatest(n - ROLL_W, F.lit(0)))
@@ -403,7 +409,8 @@ def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # way real training pipelines split corpora (NOT rand(): a hash of the
 # stable doc key gives the same split on every run, on any cluster, after
 # any repartition, and lets late-arriving docs join the right side).
-# Eval rate 5%; the hash is the same 28-bit md5-int used everywhere else.
+# Eval rate 5%; the hash is _portable.md5_int / md5_int_sql, the one
+# 28-bit md5 integer every split and sketch uses.
 # ---------------------------------------------------------------------------
 EVAL_PCT = 5  # percent of docs routed to eval
 
@@ -418,7 +425,7 @@ EVAL_PCT = 5  # percent of docs routed to eval
             MIN(doc_id) AS min_doc_id
         FROM (
             SELECT doc_id, n_chars,
-                   CASE WHEN ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT
+                   CASE WHEN {md5_int_sql("doc_id", "split:")}
                              % 100 < {EVAL_PCT}
                         THEN 'eval' ELSE 'train' END AS split
             FROM documents
@@ -429,14 +436,7 @@ EVAL_PCT = 5  # percent of docs routed to eval
 )
 def split_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 7),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    bucket = md5_int("doc_id", "split:") % 100
     split = F.when(bucket < EVAL_PCT, "eval").otherwise("train")
     return (
         docs.select("doc_id", "n_chars", split.alias("split"))
@@ -1725,8 +1725,9 @@ MLM_MASK_PCT = 15
         masked AS (
             SELECT doc_id, i, length(w) AS wl
             FROM pos
-            WHERE ('0x' || substr(md5('mlm:' || CAST(doc_id AS VARCHAR) || ':'
-                                      || CAST(i AS VARCHAR)), 1, 7))::BIGINT
+            WHERE {md5_int_sql(
+                "'mlm:' || CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)"
+            )}
                   % 100 < {MLM_MASK_PCT}
         )
         SELECT t.doc_id,
@@ -1755,22 +1756,14 @@ def mlm_masking_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos = toks.select(
         "doc_id", F.posexplode("ws").alias("pos0", "w")
     ).select("doc_id", (F.col("pos0") + 1).alias("i"), "w")
-    hv = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("mlm:"),
-                    F.col("doc_id").cast("string"),
-                    F.lit(":"),
-                    F.col("i").cast("string"),
-                )
-            ),
-            1,
-            7,
-        ),
-        16,
-        10,
-    ).cast("long")
+    hv = md5_int(
+        F.concat(
+            F.lit("mlm:"),
+            F.col("doc_id").cast("string"),
+            F.lit(":"),
+            F.col("i").cast("string"),
+        )
+    )
     masked = (
         pos.filter(hv % 100 < MLM_MASK_PCT)
         .groupBy("doc_id")
@@ -2277,7 +2270,7 @@ SG_NEG_VOCAB = 64
         ),
         sampled AS (
             SELECT * FROM pc
-            WHERE ('0x' || substr(md5('sg:' || center || ':' || context), 1, 7))::BIGINT
+            WHERE {md5_int_sql("'sg:' || center || ':' || context")}
                   % {SG_SAMPLE_MOD} = 0
         ),
         vocab AS (
@@ -2303,8 +2296,11 @@ SG_NEG_VOCAB = 64
         tot AS (SELECT CAST(SUM(wgt) AS BIGINT) AS t FROM wt),
         draws AS (
             SELECT s.center, s.context, s.n_occ, k.k,
-                   ('0x' || substr(md5('neg:' || s.center || ':' || s.context
-                                       || ':' || CAST(k.k AS VARCHAR)), 1, 12))::BIGINT
+                   {md5_int_sql(
+                       "'neg:' || s.center || ':' || s.context"
+                       " || ':' || CAST(k.k AS VARCHAR)",
+                       digits=12,
+                   )}
                        % tot.t AS pos
             FROM sampled s, (SELECT unnest(range(1, {SG_K_NEG} + 1)) AS k) k,
                  tot
@@ -2342,19 +2338,7 @@ def skipgram_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_occ")
     )
     gate = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("sg:"), F.col("center"), F.lit(":"), F.col("context")
-                    )
-                ),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_int(F.concat(F.lit("sg:"), F.col("center"), F.lit(":"), F.col("context")))
         % SG_SAMPLE_MOD
     )
     sampled = pc.filter(gate == 0)
@@ -2381,24 +2365,17 @@ def skipgram_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = wt.agg(F.sum("wgt").cast("long").alias("t"))
     ks = spark.range(1, SG_K_NEG + 1).select(F.col("id").cast("int").alias("k"))
     pos = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("neg:"),
-                        F.col("center"),
-                        F.lit(":"),
-                        F.col("context"),
-                        F.lit(":"),
-                        F.col("k").cast("string"),
-                    )
-                ),
-                1,
-                12,
+        md5_int(
+            F.concat(
+                F.lit("neg:"),
+                F.col("center"),
+                F.lit(":"),
+                F.col("context"),
+                F.lit(":"),
+                F.col("k").cast("string"),
             ),
-            16,
-            10,
-        ).cast("long")
+            digits=12,
+        )
         % F.col("t")
     )
     draws = (
@@ -4230,7 +4207,7 @@ FH_TOP = 3
         ),
         b AS (
             SELECT lang, doc_id,
-                   ('0x' || substr(md5(token), 1, 7))::BIGINT % {FH_BUCKETS}
+                   {md5_int_sql("token")} % {FH_BUCKETS}
                        AS bucket
             FROM toks
         ),
@@ -4267,8 +4244,7 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "doc_id",
         (
-            F.conv(F.substring(F.md5("token"), 1, 7), 16, 10).cast("long")
-            % FH_BUCKETS
+            md5_int("token") % FH_BUCKETS
         ).alias("bucket"),
     )
     agg = bucketed.groupBy("lang", "bucket").agg(

@@ -19,9 +19,9 @@ foreachBatch architecture.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from kafka_stream_job_spark.operators.sketches import KMV_K, _kmv_hash
+from kafka_stream_job_spark.operators._portable import md5_int
+from kafka_stream_job_spark.operators.sketches import KMV_HEX, KMV_K
 
 
 class StreamingKMV:
@@ -38,7 +38,7 @@ class StreamingKMV:
         batch_vals = [
             int(r["hv"])
             for r in (
-                batch_df.select(_kmv_hash(F.col(self.key_col)).alias("hv"))
+                batch_df.select(md5_int(self.key_col, "kmv:", KMV_HEX).alias("hv"))
                 .distinct()
                 .orderBy("hv")
                 .limit(self.k)

@@ -56,13 +56,20 @@ from pyspark.sql.streaming import DataStreamWriter
 # collecting one test file, a user importing only the streaming surface).
 # No cycle: no batch operator module imports this one at top level
 # (formats.py does so lazily, inside functions).
-from kafka_stream_job_spark.operators._portable import idiv, jvm_values_df, pround
+from kafka_stream_job_spark.operators._portable import (
+    idiv,
+    jvm_values_df,
+    md5_int,
+    md5_int_sql,
+    pround,
+)
 from kafka_stream_job_spark.operators.dedup import (
     _BANDS_SQL,
     _FRONTIER_ORACLE_SQL,
     _SHINGLES_SQL,
     _SIGS_SQL,
     NUM_HASHES,
+    _norm_text,
     lsh_index_report,
     minhash_bands,
     signature_stage,
@@ -151,9 +158,9 @@ from kafka_stream_job_spark.operators.similarity import (
 )
 from kafka_stream_job_spark.operators.sketches import (
     HLL_M,
+    KMV_HEX,
     KMV_K,
     KMV_NUM,
-    _kmv_hash_sql,
 )
 from kafka_stream_job_spark.operators.text import (
     _FERTILITY_ORACLE_SQL,
@@ -1941,7 +1948,7 @@ def streaming_available_now_rollup(
     "streaming_hll_distinct_users",
     oracle=f"""
             WITH h AS (
-                SELECT ('0x' || substr(md5('hll:' || CAST(user_id AS VARCHAR)), 1, 7))::BIGINT
+                SELECT {md5_int_sql("user_id", "hll:")}
                            AS hv
                 FROM events
             ),
@@ -2071,7 +2078,7 @@ def streaming_heavy_hitter_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming_kmv_distinct_users",
     oracle=f"""
             WITH hv AS (
-                SELECT DISTINCT {_kmv_hash_sql("user_id")} AS hv FROM events
+                SELECT DISTINCT {md5_int_sql("user_id", "kmv:", KMV_HEX)} AS hv FROM events
             ),
             sk AS (SELECT hv FROM hv ORDER BY hv LIMIT {KMV_K}),
             agg AS (
@@ -2762,17 +2769,7 @@ def streaming_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_ids = [int(r["cent_id"]) for r in cent_rows]
     cent_embs = [[int(x) for x in r["c_emb"]] for r in cent_rows]
 
-    incr_hash = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(F.lit("ivfincr:"), F.col("vec_id").cast("string"))
-            ),
-            1,
-            7,
-        ),
-        16,
-        10,
-    ).cast("long")
+    incr_hash = md5_int("vec_id", "ivfincr:")
     quantized = F.transform(
         "embedding",
         lambda x: F.round(x.cast("double") * 10000.0, 0),  # KMEANS_SCALE
@@ -3168,8 +3165,6 @@ def frontier_bloom_emissions(docs_stream: DataFrame) -> DataFrame:
     from kafka_stream_job_spark.operators.dedup import (
         DEDUP_BF_K,
         DEDUP_BF_M,
-        _frontier_pos,
-        _norm_text,
     )
 
     n_words = DEDUP_BF_M // 64
@@ -3178,7 +3173,10 @@ def frontier_bloom_emissions(docs_stream: DataFrame) -> DataFrame:
         docs_stream.filter(F.col("doc_id") % 5 != 0)  # SEEN slice streams in
         .select(
             F.lit(0).alias("shard"),  # one global filter: single key
-            *[_frontier_pos(fp_col, i).alias(f"p{i}") for i in range(DEDUP_BF_K)],
+            *[
+                (md5_int(fp_col, f"fr{i}:") % DEDUP_BF_M).alias(f"p{i}")
+                for i in range(DEDUP_BF_K)
+            ],
         )
     )
 
@@ -3217,8 +3215,7 @@ def frontier_bloom_report(
     from kafka_stream_job_spark.operators._portable import idiv
     from kafka_stream_job_spark.operators.dedup import (
         DEDUP_BF_K,
-        _frontier_pos,
-        _norm_text,
+        DEDUP_BF_M,
     )
     from kafka_stream_job_spark.tables import load_table
 
@@ -3264,7 +3261,7 @@ def frontier_bloom_report(
             ),
             F.col("words"),
             *[
-                _frontier_pos(F.col("fingerprint"), i).alias(f"pos{i}")
+                (md5_int("fingerprint", f"fr{i}:") % DEDUP_BF_M).alias(f"pos{i}")
                 for i in range(DEDUP_BF_K)
             ],
         )
@@ -3729,11 +3726,8 @@ def streaming_feature_hashing_monitor(
     # per-doc bucket counts.
     hashed = docs.select(
         "lang",
-        F.expr(
-            "transform(split(lower(trim(regexp_replace(text,"
-                " '\\\\s+', ' '))), ' '),"
-                " t -> CAST(conv(substring(md5(t), 1, 7), 16, 10) AS BIGINT)"
-                f" % {FH_BUCKETS})"
+        F.transform(
+            F.split(_norm_text(), " "), lambda t: md5_int(t) % FH_BUCKETS
         ).alias("hb"),
     )
     bucket_counts = (

@@ -336,6 +336,7 @@ def test_minhash_lsh_oracle_sql_matches_reference(docs):
         SHINGLE_K,
     )
     from kafka_stream_job_spark.registry import all_specs
+    from .test_reference_impl import _md5_28
 
     oracle = all_specs()["dedup_minhash_lsh"].oracle
     con = duckdb.connect()
@@ -343,9 +344,6 @@ def test_minhash_lsh_oracle_sql_matches_reference(docs):
     con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
     got = {(r[0], r[1]) for r in con.sql(oracle).fetchall()}
-
-    def md5_28(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:7], 16)
 
     bands_of = {}
     for doc_id, text in rows:
@@ -356,7 +354,7 @@ def test_minhash_lsh_oracle_sql_matches_reference(docs):
         n = len(toks)
         upper = max(n - SHINGLE_K, 0)
         shingles = {" ".join(toks[i : i + SHINGLE_K]) for i in range(upper + 1)}
-        hs = [md5_28(s) for s in shingles]
+        hs = [_md5_28(s) for s in shingles]
         sig = [
             min((MINHASH_A[s] * h + MINHASH_B[s]) % MINHASH_P for h in hs)
             for s in range(NUM_HASHES)
@@ -518,6 +516,7 @@ def test_connected_components_oracle_matches_union_find(docs):
         SHINGLE_K,
     )
     from kafka_stream_job_spark.registry import all_specs
+    from .test_reference_impl import _md5_28
 
     oracle = all_specs()["dedup_connected_components"].oracle
     con = duckdb.connect()
@@ -526,15 +525,12 @@ def test_connected_components_oracle_matches_union_find(docs):
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
     got = {tuple(r) for r in con.sql(oracle).fetchall()}
 
-    def md5_28(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:7], 16)
-
     bands_of = {}
     for doc_id, text in rows:
         toks = text.lower().split() if text.strip() else [""]
         upper = max(len(toks) - SHINGLE_K, 0)
         hs = [
-            md5_28(s)
+            _md5_28(s)
             for s in {" ".join(toks[i : i + SHINGLE_K]) for i in range(upper + 1)}
         ]
         sig = [
@@ -928,7 +924,7 @@ def test_containment_oracle_matches_reference(docs):
         SHINGLE_K,
     )
     from kafka_stream_job_spark.registry import all_specs
-    from .test_reference_impl import _pround
+    from .test_reference_impl import _md5_28, _pround
 
     oracle = all_specs()["dedup_containment"].oracle
     con = duckdb.connect()
@@ -937,16 +933,13 @@ def test_containment_oracle_matches_reference(docs):
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
     got = {(r[0], r[1], r[2], r[3]) for r in con.sql(oracle).fetchall()}
 
-    def md5_28(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:7], 16)
-
     shingles_of, bands_of = {}, {}
     for doc_id, text in rows:
         toks = text.lower().split() if text.strip() else [""]
         upper = max(len(toks) - SHINGLE_K, 0)
         sh = {" ".join(toks[i : i + SHINGLE_K]) for i in range(upper + 1)}
         shingles_of[doc_id] = sh
-        hs = [md5_28(s) for s in sh]
+        hs = [_md5_28(s) for s in sh]
         sig = [
             min((MINHASH_A[s] * h + MINHASH_B[s]) % MINHASH_P for h in hs)
             for s in range(NUM_HASHES)
@@ -5487,3 +5480,66 @@ def test_multimodal_null_text_matches_oracle(spark, tmp_path):
     ):
         spec = specs[name]
         assert_matches_oracle(spark, sf, spec.fn(spark, sf), spec.oracle, name)
+
+
+def test_md5_int_pair_matches_hashlib(spark):
+    """md5_int (Spark), md5_int_sql (DuckDB) and hashlib agree bit for bit
+    on long and string keys, with and without a prefix, at 7 and 13
+    digits; a NULL key hashes to NULL on both engines."""
+    import hashlib
+
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from kafka_stream_job_spark.operators._portable import md5_int, md5_int_sql
+
+    rows = [
+        (0, 0, "plain ascii"),
+        (1, 1, "naïve 日本語 ✓"),
+        (2, -1, ""),
+        (3, 1 << 40, None),
+        (4, None, "x"),
+    ]
+    cases = [
+        (col, prefix, digits)
+        for col in ("n", "s")
+        for prefix in ("", "split:")
+        for digits in (7, 13)
+    ]
+    spark_cols = [
+        md5_int(
+            F.col(col).cast("string") if not prefix else col, prefix, digits
+        ).alias(f"h{j}")
+        for j, (col, prefix, digits) in enumerate(cases)
+    ]
+    sql_cols = ", ".join(
+        md5_int_sql(f"CAST({col} AS VARCHAR)" if not prefix else col, prefix, digits)
+        + f" AS h{j}"
+        for j, (col, prefix, digits) in enumerate(cases)
+    )
+    got_spark = [
+        tuple(r)
+        for r in spark.createDataFrame(rows, "i bigint, n bigint, s string")
+        .orderBy("i")
+        .select(*spark_cols)
+        .collect()
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i BIGINT, n BIGINT, s VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+    got_sql = con.sql(f"SELECT {sql_cols} FROM t ORDER BY i").fetchall()
+
+    def ref(key, prefix, digits):
+        if key is None:
+            return None
+        return int(hashlib.md5((prefix + str(key)).encode()).hexdigest()[:digits], 16)
+
+    want = [
+        tuple(
+            ref(n if col == "n" else s, prefix, digits)
+            for col, prefix, digits in cases
+        )
+        for _, n, s in rows
+    ]
+    assert got_spark == want
+    assert got_sql == want

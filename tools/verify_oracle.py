@@ -8,7 +8,7 @@ Usage:
     python tools/verify_oracle.py                 # all queries at sf0.01
     python tools/verify_oracle.py q1_pricing_summary dedup_exact   # subset
     SIM_SF=/root/testdata/sf0.1 python tools/verify_oracle.py      # other SF
-    SIM_PAR=1 python tools/verify_oracle.py       # serial (default 6 threads)
+    SIM_PAR=1 python tools/verify_oracle.py       # serial (default min(6, cores))
 
 Exit code 1 on any mismatch. Queries run CONCURRENTLY from SIM_PAR
 threads on the one SparkSession (Spark schedules concurrent jobs fine;
@@ -18,6 +18,12 @@ its own duckdb cursor. Set SIM_PAR=1 to bisect any suspected
 interference — results must be identical either way (staged /tmp inputs
 are content-keyed + immutable, memory-sink names are uuid-unique, and
 the drain clamp serializes behind its own lock).
+
+Sized to the host: the master gets ``SPARK_GRAFT_CPUS`` cores (else the
+cores this process may run on), SIM_PAR is capped at that count, and the
+driver heap and DuckDB's ``memory_limit`` each get a quarter of physical
+memory (heap capped at 8g), because DuckDB runs inside this Python
+process and its default limit alone is 80% of RAM.
 """
 import os, sys, time
 sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
@@ -29,17 +35,19 @@ import duckdb
 
 sf = os.environ.get("SIM_SF", "/root/testdata/sf0.01")
 only = sys.argv[1:] or None
-n_par = int(os.environ.get("SIM_PAR", "6"))
-spark = (SparkSession.builder.master("local[8]").appName("driver-sim")
+n_cpu = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+n_par = min(int(os.environ.get("SIM_PAR", "6")), n_cpu)
+quarter_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // (4 << 20)
+spark = (SparkSession.builder.master(f"local[{n_cpu}]").appName("driver-sim")
          # SIM_PAR concurrent queries share one driver heap; the 1g
          # default is where "looks small" broadcast builds OOM first.
-         .config("spark.driver.memory", "8g")
+         .config("spark.driver.memory", f"{min(quarter_mb, 8192)}m")
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as e
 qs, oracles = e.queries(), e.oracle_sql()
 
-con = duckdb.connect()
+con = duckdb.connect(config={"memory_limit": f"{quarter_mb}MB", "threads": n_cpu})
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
 
