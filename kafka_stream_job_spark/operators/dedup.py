@@ -26,7 +26,7 @@ pathological repeated-text skew is handled by AQE skew-join splitting.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_job_spark.operators._portable import md5_int, md5_int_sql, pround
@@ -69,6 +69,14 @@ def _norm_text(col: str = "text"):
 
 
 _NORM_SQL = "LOWER(TRIM(regexp_replace(text, '\\s+', ' ', 'g')))"
+
+
+def seen_before(key: str):
+    """1 when a smaller ``doc_id`` holds the same ``key`` value, else 0
+    (long): the first-occurrence test as one keyed window, no aggregate
+    joined back to the rows it came from."""
+    first = F.min("doc_id").over(Window.partitionBy(key))
+    return (first < F.col("doc_id")).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -1849,10 +1857,11 @@ def minhash_bbit_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Complements dedup_incremental_delta (which answers "is THIS batch
 # duplicated" against a band index) by measuring the corpus's own
 # marginal-novelty curve in one pass.
-# Scale shape: one shingle-keyed shuffle for the first-occurrence
-# aggregate, re-joined to the shingle set on the same key (exchange
-# reuse), then a doc-keyed partial agg and a vocabulary-bounded lang
-# rollup. Integer basis points via div — no float drift in the hash.
+# Scale shape: one Arrow shingling, one shingle-keyed window
+# (seen_before) flagging shingles a smaller doc_id holds, a doc-keyed
+# partial agg, a small documents join for lang and a vocabulary-bounded
+# rollup; no pin (hot-key trade-off: see dedup_exact_substring).
+# Integer basis points via div — no float drift in the hash.
 # Reference parity: none (SURVEY.md §2.7) — north-star dedup extension.
 # ---------------------------------------------------------------------------
 @register(
@@ -1886,21 +1895,13 @@ def corpus_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_stream_job_spark.operators._portable import idiv
 
     docs = load_table(spark, sf_dir, "documents")
-    # one materialization of the distinct shingle set — the
-    # first-occurrence aggregate AND the join back both read it, so the
-    # corpus is shingled once, not twice
-    shingles = _shingles(docs).localCheckpoint(eager=False)
-    first_seen = shingles.groupBy("shingle").agg(
-        F.min("doc_id").alias("first_doc")
-    )
     per_doc = (
-        shingles.join(first_seen, "shingle")
+        _shingles(docs)
+        .select("doc_id", seen_before("shingle").alias("seen"))
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_sh"),
-            F.sum((F.col("first_doc") < F.col("doc_id")).cast("long"))
-            .cast("long")
-            .alias("n_seen"),
+            F.sum("seen").cast("long").alias("n_seen"),
         )
     )
     return (
@@ -1930,22 +1931,28 @@ def corpus_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 # finding this rewrite fixes.) Expected 1-in-GRAM_STRIDE positions
 # survive, so the explode stays ~len/16 rows per doc. A full suffix
 # array is sequential by construction; the anchored-gram relaxation is
-# the distributed form: grams explode inside scan tasks, the first-seen
-# aggregate does map-side partial MIN, and the flag join is gram-keyed —
-# never doc×doc. Report per source: fraction of docs containing a
-# substring first seen in an EARLIER doc. A copied run is caught iff it
-# contains an anchored gram — expected once per GRAM_STRIDE chars of
-# run length, alignment-free (probabilistic, not the false fixed-stride
-# "guarantee").
+# the distributed form: grams are cut inside scan tasks and one
+# gram-keyed window (seen_before) flags a gram a smaller doc_id holds —
+# never doc×doc. All rows of a hot gram meet in one window task, in a
+# spillable buffer; the former min-aggregate joined back could be
+# skew-split by AQE, but needed a localCheckpoint pin that held every
+# gram row in block managers and cut lineage. Report per source:
+# fraction of docs containing a substring first seen in an EARLIER doc.
+# A copied run is caught iff it contains an anchored gram — expected
+# once per GRAM_STRIDE chars of run length, alignment-free
+# (probabilistic, not the false fixed-stride "guarantee").
 # Reference parity: none (SURVEY.md §2.7) — north-star dedup extension.
 # ---------------------------------------------------------------------------
 GRAM_LEN = 32
-GRAM_STRIDE = 16
+GRAM_STRIDE = 16  # _anchored_gram_batches tests one hex digit
 
 
 def _anchored_gram_batches(it):
     """mapInArrow body for dedup_exact_substring: per document, emit the
-    DISTINCT content-anchored 32-grams (md5(gram) % GRAM_STRIDE == 0).
+    DISTINCT content-anchored 32-grams (md5(gram) % GRAM_STRIDE == 0),
+    one output row per gram carrying every input column except ``text``
+    (an Arrow ``take`` on the emitting rows) plus ``gram``. A NULL text
+    emits nothing, as the oracle's UNNEST does.
 
     Mirrors the engine's former JVM expression exactly:
     - normalization = lower(trim(regexp_replace(text, '\\s+', ' '))):
@@ -1955,10 +1962,10 @@ def _anchored_gram_batches(it):
       spaces — so strip(" "), never bare strip(), which would also eat
       the Unicode whitespace TRIM keeps. ASCII lowercase agrees across
       engines.
-    - md5 over UTF-8 bytes, leading 7 hex digits as the anchor integer —
-      identical to md5_int(g). Those 28 bits are
-      the digest's first 4 bytes shifted right by 4, so no hex string is
-      built.
+    - md5 over UTF-8 bytes; md5_int(g) % 16 == 0 says the 7th hex digit,
+      the high nibble of digest byte 3, is 0: ``digest()[3] < 16``. An
+      ASCII text is encoded once and hashed in byte slices; any other
+      text encodes gram by gram (a character slice is no byte slice).
     - the `seen` set dedups per document over the anchored grams only;
       selection is a deterministic function of the gram, so that equals
       the former filter-then-array_distinct (duplicates select alike),
@@ -1972,25 +1979,29 @@ def _anchored_gram_batches(it):
     ws = re.compile(r"[ \t\n\x0b\f\r]+")
     md5 = hashlib.md5
     for batch in it:
-        ids = batch.column("doc_id").to_pylist()
-        texts = batch.column("text").to_pylist()
-        o_id, o_gram = [], []
-        for did, text in zip(ids, texts):
-            norm = ws.sub(" ", text).strip(" ").lower()
-            length = len(norm)
-            if length < GRAM_LEN:
+        rows, o_gram = [], []
+        for r, text in enumerate(batch.column("text").to_pylist()):
+            if text is None:
                 continue
+            norm = ws.sub(" ", text).strip(" ").lower()
+            n = len(norm) - GRAM_LEN + 1
+            if norm.isascii():
+                b = norm.encode("ascii")
+                grams = (b[i : i + GRAM_LEN] for i in range(n))
+            else:
+                grams = (norm[i : i + GRAM_LEN].encode() for i in range(n))
             seen = set()
-            for i in range(length - GRAM_LEN + 1):
-                g = norm[i : i + GRAM_LEN]
-                anchor = int.from_bytes(md5(g.encode("utf-8")).digest()[:4], "big") >> 4
-                if anchor % GRAM_STRIDE == 0 and g not in seen:
+            for g in grams:
+                if md5(g).digest()[3] < 16 and g not in seen:
                     seen.add(g)
-                    o_id.append(did)
+                    rows.append(r)
                     o_gram.append(g)
+        idx = pa.array(rows, pa.int32())
+        keep = [c for c in batch.schema.names if c != "text"]
         yield pa.RecordBatch.from_arrays(
-            [pa.array(o_id, pa.int64()), pa.array(o_gram, pa.string())],
-            ["doc_id", "gram"],
+            [batch.column(c).take(idx) for c in keep]
+            + [pa.array(o_gram, pa.string())],
+            keep + ["gram"],
         )
 
 
@@ -2036,34 +2047,22 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_stream_job_spark.operators._portable import idiv
 
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    # Gram extraction runs as mapInArrow (guide §4.2): every POSITION of
-    # every document allocates a 32-char gram and md5s it, and the former
-    # transform/filter HOF pair evaluated that interpreted per element —
-    # r12 measured 1.85 s → 1.16 s at sf0.1 moving the loop to Python
-    # batches (hashlib md5 over UTF-8 bytes is the same hash; the
-    # whitespace class [ \t\n\x0b\f\r] is exactly Java's \s, so the
-    # normalization is byte-identical; per-doc `seen` set = the former
-    # per-row array_distinct). Only (doc_id, text) crosses the boundary,
-    # and only the ~1-in-GRAM_STRIDE anchored grams come back.
-    grams = (
-        docs.where(F.col("text").isNotNull())
-        .select("doc_id", "text")
-        .mapInArrow(_anchored_gram_batches, "doc_id bigint, gram string")
-        .localCheckpoint(eager=False)  # first-seen agg AND flag join read it
-    )
-    first_seen = grams.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
+    # Gram extraction runs as mapInArrow (guide §4.2): r12 measured
+    # 1.85 s → 1.16 s at sf0.1 against the interpreted transform/filter
+    # HOF pair it replaced (same hash and normalization, see
+    # _anchored_gram_batches). Only the ~1-in-GRAM_STRIDE anchored grams
+    # come back, each with its doc's doc_id and source.
     flags = (
-        grams.join(first_seen, "gram")
-        .groupBy("doc_id")
-        .agg(
-            F.max((F.col("first_doc") < F.col("doc_id")).cast("long")).alias(
-                "flagged"
-            )
+        docs.select("doc_id", "source", "text")
+        .mapInArrow(
+            _anchored_gram_batches, "doc_id bigint, source string, gram string"
         )
+        .select("doc_id", "source", seen_before("gram").alias("seen"))
+        .groupBy("doc_id", "source")
+        .agg(F.max("seen").alias("flagged"))
     )
     return (
-        flags.join(docs.select("doc_id", "source"), "doc_id")
-        .groupBy("source")
+        flags.groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("flagged").cast("long").alias("n_flagged"),

@@ -275,3 +275,29 @@ def test_bench_trend_tool_runs_on_committed_artifacts():
         assert mod.main() == 0
     finally:
         sys.argv = old_argv
+
+
+def test_capture_plans_masks_process_wide_ids():
+    """tools/capture_plans.py renumbers lambda variables, expression ids,
+    plan ids and RDD ids by first appearance, so one plan captured after
+    different predecessors (shifted counters) gives the same text."""
+    import importlib.util
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "capture_plans", os.path.join(root, "tools", "capture_plans.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    plan = (
+        "Project [transform(xs#{a}, lambdafunction(lambda x_{l}#{b} + "
+        "lambda y_{m}#{c}, lambda x_{l}#{b}, lambda y_{m}#{c})) AS h_3#{d}L]\n"
+        "+- Exchange hashpartitioning(xs#{a}, 4), [plan_id={p}]\n"
+        "   +- Scan ExistingRDD MapPartitionsRDD[{r}] at localCheckpoint\n"
+    )
+    early = plan.format(a=5, b=9, c=10, d=11, l=3, m=4, p=20, r=7)
+    late = plan.format(a=2005, b=2009, c=2010, d=2011, l=283, m=284, p=420, r=77)
+    masked = mod.mask_process_ids(early)
+    assert masked == mod.mask_process_ids(late)
+    assert "lambda x_1#2 + lambda y_2#3" in masked and "h_3#4L" in masked

@@ -1315,12 +1315,23 @@ def test_fd_profile_prunes_to_two_columns_per_candidate(spark):
     assert "Window" not in plan
 
 
-def test_novelty_shingles_corpus_once(spark):
-    """The first-occurrence aggregate and the join back both read the
-    ONE checkpointed shingle set — the explode/shingle pipeline must
-    appear at most once in the executed plan, not once per branch."""
-    plan = plan_of(spark, "corpus_shingle_novelty")
-    assert plan.count("Generate explode") <= 1
+_FIRST_SEEN_KEY = {"dedup_exact_substring": "gram", "corpus_shingle_novelty": "shingle"}
+
+
+@pytest.mark.parametrize("name", sorted(_FIRST_SEEN_KEY))
+def test_first_occurrence_is_one_keyed_window_over_one_arrow_stage(spark, name):
+    """The first-occurrence test (does a smaller doc_id hold the same
+    gram/shingle?) is one window keyed by that value over the ONE Arrow
+    stage that cuts the corpus: no localCheckpoint pin (ExistingRDD) and
+    no aggregate joined back to its rows. dedup_exact_substring carries
+    ``source`` through the Arrow stage, so it joins nothing at all."""
+    plan = plan_of(spark, name)
+    key = _FIRST_SEEN_KEY[name]
+    assert plan.count("MapInArrow") == 1
+    assert "ExistingRDD" not in plan
+    assert re.search(rf"Window \[min\(doc_id#\d+L\) windowspecdefinition\({key}#", plan)
+    if name == "dedup_exact_substring":
+        assert "Join" not in plan
     assert "CartesianProduct" not in plan
 
 

@@ -5232,6 +5232,9 @@ def test_bootstrap_thresholds_mean_one():
 # \x0b, so the DuckDB oracle is NOT the reference for these edge chars;
 # the fixture corpus contains none, which is why the declared query
 # matches the oracle — the contract pinned here is Arrow ≡ JVM.)
+# Docs 6 and 7 are longer than GRAM_LEN with multi-byte characters, so
+# the per-gram encode path is pinned beside the ASCII byte-slice path;
+# the `tag` column must come back row-aligned with its doc.
 # ---------------------------------------------------------------------------
 def test_anchored_grams_match_jvm_norm_on_unicode_edges(spark):
     import pyarrow as pa
@@ -5249,19 +5252,25 @@ def test_anchored_grams_match_jvm_norm_on_unicode_edges(spark):
         (3, "  plain ascii edges  " + "abcdefgh " * 8),
         (4, "\x0bvertical tab collapses\x0b" + "y" * 40),
         (5, "\xa0" * 5 + "short"),  # under GRAM_LEN after norm
+        (6, "Café Crème brûlée, DÉJÀ VU " * 4),
+        (7, "日本語のテキスト 東京 " * 6 + "mixed ascii tail é"),
+        (8, None),
     ]
+    tags = {d: (None if d == 3 else f"t{d}") for d, _ in docs}
     batch = pa.RecordBatch.from_arrays(
         [
             pa.array([d for d, _ in docs], pa.int64()),
             pa.array([t for _, t in docs], pa.string()),
+            pa.array([tags[d] for d, _ in docs], pa.string()),
         ],
-        ["doc_id", "text"],
+        ["doc_id", "text", "tag"],
     )
     got = set()
     for out in _anchored_gram_batches(iter([batch])):
-        got.update(
-            zip(out.column("doc_id").to_pylist(), out.column("gram").to_pylist())
-        )
+        assert out.schema.names == ["doc_id", "tag", "gram"]
+        ids = out.column("doc_id").to_pylist()
+        assert out.column("tag").to_pylist() == [tags[d] for d in ids]
+        got.update(zip(ids, out.column("gram").to_pylist()))
 
     df = spark.createDataFrame(docs, "doc_id long, text string")
     jvm = (
@@ -5292,8 +5301,70 @@ def test_anchored_grams_match_jvm_norm_on_unicode_edges(spark):
         f"only_jvm={sorted(expected - got)[:3]}"
     )
     # the \xa0-edged doc must have produced a gram containing the
-    # preserved non-ASCII whitespace, otherwise the test is vacuous
+    # preserved non-ASCII whitespace, and both multi-byte docs anchored
+    # grams, otherwise the test is vacuous
     assert any("\xa0" in g or "\x85" in g for _, g in expected)
+    assert {6, 7} <= {d for d, _ in expected}
+
+
+def test_first_occurrence_ops_match_oracle_on_hot_run_and_edges(spark, tmp_path):
+    """dedup_exact_substring and corpus_shingle_novelty against their
+    DuckDB oracles on one small documents file: an anchored 32-char run
+    copied into 40 docs (the minimum doc_id among them, so its gram and
+    shingles are one hot window key whose first holder is doc 0), a
+    NULL text, a text under GRAM_LEN after normalization, a non-ASCII
+    doc holding the run, and a doc with a NULL source."""
+    import hashlib
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from tests.conftest import SF_SMOKE, assert_matches_oracle
+
+    from kafka_stream_job_spark.operators.dedup import GRAM_LEN
+    from kafka_stream_job_spark.registry import all_specs
+    from kafka_stream_job_spark.tables import TABLE_NAMES
+
+    run = next(
+        r
+        for k in range(1000)
+        if hashlib.md5((r := f"copied boilerplate run no {k:06d}").encode()).digest()[3] < 16
+    )
+    assert len(run) == GRAM_LEN
+    texts = [f"doc {i} opens with words {i * 7} then {run} and closes {i}" for i in range(40)]
+    texts += [
+        None,
+        "  Short   text  ",
+        f"déjà vu 日本語のテキスト {run} ünïcödé tail",
+        "a unique document with no copied run at all, long enough to gram",
+        f"null source holds {run} too",
+    ]
+    n = len(texts)
+    docs = pa.table(
+        {
+            "doc_id": list(range(n)),
+            "text": texts,
+            "lang": [("en", "de", "fr")[i % 3] for i in range(n)],
+            "source": [f"src{i % 4}" for i in range(n - 1)] + [None],
+            "n_chars": [len(t or "") for t in texts],
+        },
+        schema=pq.read_schema(f"{SF_SMOKE}/documents.parquet"),
+    )
+    pq.write_table(docs, tmp_path / "documents.parquet")
+    for name in TABLE_NAMES:
+        if name != "documents":
+            os.symlink(f"{SF_SMOKE}/{name}.parquet", tmp_path / f"{name}.parquet")
+    sf = str(tmp_path)
+    specs = all_specs()
+    for name in ("dedup_exact_substring", "corpus_shingle_novelty"):
+        spec = specs[name]
+        assert_matches_oracle(spark, sf, spec.fn(spark, sf), spec.oracle, name)
+    flagged = {
+        r["source"]: r["n_flagged"]
+        for r in specs["dedup_exact_substring"].fn(spark, sf).collect()
+    }
+    # every run holder after doc 0 is flagged, whatever its source
+    assert sum(flagged.values()) == 41 and flagged[None] == 1
 
 
 # ---------------------------------------------------------------------------

@@ -9,6 +9,13 @@ all bench + bench_ext queries). The optimization judge reads these files
 to check plan claims (Exchange count, join strategy, PushedFilters,
 BatchEvalPython nodes) without running Spark.
 
+Spark numbers lambda variables (``x_279``), expression ids (``#2084``),
+exchange plan ids (``plan_id=67``) and RDDs (``MapPartitionsRDD[8]``)
+from process-wide counters, so the raw text of one spec depends on what
+the specs captured before it built. Each counter is renumbered by first
+appearance within the file, so a spec's file is the same whatever the
+spec list and its order.
+
 Streaming queries build a real streaming pipeline inside ``fn``; those
 are captured by explaining the RESULT DataFrame the function returns
 (the post-stream batch plan) — the streaming micro-batch plan itself is
@@ -19,10 +26,26 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# (prefix, number) of each process-wide counter in explain output
+_PROCESS_IDS = re.compile(r"(lambda [A-Za-z]\w*?_|#|plan_id=|RDD\[)(\d+)")
+
+
+def mask_process_ids(text: str) -> str:
+    """Renumber every process-wide id by first appearance, per kind."""
+    seen: dict[str, dict[str, int]] = {}
+
+    def renumber(m: re.Match) -> str:
+        prefix, n = m.groups()
+        kind = seen.setdefault("lambda" if prefix.startswith("lambda") else prefix, {})
+        return f"{prefix}{kind.setdefault(n, len(kind) + 1)}"
+
+    return _PROCESS_IDS.sub(renumber, text)
 
 
 def main() -> int:
@@ -49,7 +72,7 @@ def main() -> int:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            text = buf.getvalue()
+            text = mask_process_ids(buf.getvalue())
         except Exception as exc:  # noqa: BLE001 — record, keep capturing
             text = f"EXPLAIN FAILED: {exc!r}\n"
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
